@@ -39,7 +39,13 @@ def domain_suffixes(host: Column) -> Column:
     Empty labels are dropped before the chain is built: a trailing-dot
     FQDN (``bad.example.`` — same host to DNS and browsers) must
     produce the same suffixes as ``bad.example``, not a dot-suffixed
-    chain that walks past every blocklist entry."""
+    chain that walks past every blocklist entry.
+
+    Each suffix keeps at most 127 labels (the DNS label-count
+    ceiling). A host with more labels than that is not a valid DNS
+    name; every suffix of it longer than 127 labels comes out
+    truncated to its first 127 labels, so it no longer ends at the
+    TLD. Suffixes of 127 labels or fewer are exact."""
     # Label array bound as a lambda variable — interpreted HOF lambdas
     # re-evaluate unbound outer expressions per element (here: the
     # host re-split per suffix; hosts are short, but the page-admission

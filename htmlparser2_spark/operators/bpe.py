@@ -211,17 +211,18 @@ def segment_expr(
 
 
 def apply_merges(
-    seg: Column,
+    seg: Column | str,
     merges: list[tuple[int, str, str, int]],
     *,
     max_jvm_merges: int = MAX_JVM_MERGES,
 ) -> Column:
-    """Fold the learned merges over a segmentation column in rank
-    order — n_merges literal ``replace`` expressions, map-only.
-    Refuses tables past ``max_jvm_merges`` (see the module constant:
-    the expression tree falls out of codegen and then out of tractable
-    analysis) — production-depth tables take ``encode_bpe``'s Arrow
-    engine instead."""
+    """Fold the learned merges over a segmentation column (or column
+    name) in rank order — n_merges literal ``replace`` expressions,
+    map-only. Refuses tables past ``max_jvm_merges`` (see the module
+    constant: the expression tree falls out of codegen and then out of
+    tractable analysis) before it builds any Column, so the check needs
+    no SparkContext — production-depth tables take ``encode_bpe``'s
+    Arrow engine instead."""
     if len(merges) > max_jvm_merges:
         raise ValueError(
             f"{len(merges)} merges exceed the literal-replace plan "
@@ -230,7 +231,7 @@ def apply_merges(
             "the analyzer the bottleneck — use encode_bpe(..., "
             "engine='arrow') (or raise max_jvm_merges knowingly)"
         )
-    col = seg
+    col = F.col(seg) if isinstance(seg, str) else seg
     for _rank, lhs, rhs, _cnt in merges:
         col = F.replace(
             col,

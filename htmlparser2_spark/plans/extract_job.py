@@ -7,10 +7,22 @@ per-partition lineage, and checkpoint-resumable bucketed writes.
 
 Scale design notes
 ------------------
+* One Python task per core. Each Arrow-UDF task pays a fixed ~0.25
+  CPU-s in the Python worker whatever its data (Spark 4.1 + CPython
+  3.11: ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
+  which makes every ``zipimporter`` re-read ``pyspark.zip``'s
+  directory, once per task). An identity ``mapInArrow`` over 20k small
+  pages on a 4-core host cost 1.0 Python CPU-s in 4 tasks and 7.7-8.1 s
+  in 32, with the UDF body at ~0.01 s. So the parse runs
+  ``defaultParallelism`` tasks, not a multiple of it: more tasks buy
+  no tail hiding worth their fixed cost.
 * Repartition key is ``xxhash64(url)`` — unique keys, so hash partitioning
-  balances row *counts*; size skew is handled separately by routing
-  oversized documents (> ``jumbo_bytes``) into their own, more numerous
-  partitions so one 100MB page cannot stall a 2048-row Arrow batch.
+  balances row *counts*. A file scan is already spread over its files
+  and is not shuffled unless it has fewer files than cores (one small
+  parquet file can put all its rows into one split). Size skew is
+  handled separately by routing oversized documents (> ``jumbo_bytes``)
+  into their own url-hash-partitioned branch so one 100MB page cannot
+  stall a 2048-row Arrow batch.
 * The parse is a single ``mapInPandas`` over Arrow batches: one
   JVM->Python transfer per batch, no per-row dispatch, no collect().
 * Output is written bucketed by ``pmod(xxhash64(url), n_buckets)``; a
@@ -185,25 +197,34 @@ def parse_pages(
 ) -> DataFrame:
     """Parse a pages DataFrame with one ``mapInPandas`` pass.
 
-    ``repartition=None`` (auto) shuffles by ``xxhash64(url)`` only when
-    the input has fewer partitions than requested — a well-laid-out
-    parquet/Iceberg scan already provides partition parallelism and a
-    shuffle of the full html payload would be pure overhead. Explicit
-    ``repartition=True`` forces the url-hash shuffle (use when the input
-    layout is host-clustered and skewed).
+    ``n_partitions`` (``n``) defaults to ``defaultParallelism``: one
+    Python task per core. Every Arrow-UDF task costs a fixed ~0.25
+    Python CPU-s (see the module notes), so more tasks than cores add
+    that overhead with nothing to show for it.
+
+    ``repartition=None`` (auto) shuffles by ``xxhash64(url)`` into ``n``
+    partitions only when the input reads fewer files than ``n``: a scan
+    over at least ``n`` files already spreads the rows, and a shuffle
+    of the html payload would be pure overhead, while one small file
+    can plan all its rows into one split. A plan that reads no files
+    counts as ``defaultParallelism`` partitions, so it keeps its own
+    partitioning unless ``n_partitions`` asks for more. Explicit
+    ``repartition=True`` forces the url-hash shuffle (use when the
+    input layout is host-clustered and skewed); ``repartition=False``
+    never shuffles.
 
     ``jumbo_bytes`` (size-skew isolation): rows with ``octet_length(html)
     > jumbo_bytes`` (bytes for BINARY, UTF-8 bytes for STRING columns)
-    are routed into their own url-hash-partitioned branch
-    and parsed separately, so one 100MB page never queues behind — or
-    holds up — a partition of ordinary documents. Costs a second pass
-    over the scan (the predicate is not pushable), so it is opt-in;
-    without it, oversized rows are still bounded per-batch by Arrow's
-    maxRecordsPerBatch and hidden by n_partitions >> cores (tail
-    hiding). A row is atomic either way — documents are never split.
+    are routed into their own url-hash-partitioned branch of ``n``
+    partitions and parsed separately, so one 100MB page never queues
+    behind — or holds up — a partition of ordinary documents. Costs a
+    second pass over the scan (the predicate is not pushable), so it is
+    opt-in; without it, oversized rows are still bounded per-batch by
+    Arrow's maxRecordsPerBatch. A row is atomic either way — documents
+    are never split.
     """
     spark = pages.sparkSession
-    n = n_partitions or 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = n_partitions or spark.sparkContext.defaultParallelism
     if jumbo_bytes is not None:
         # octet_length measures bytes for BINARY and UTF-8 bytes for
         # STRING columns; length() would count characters for strings,
@@ -223,17 +244,13 @@ def parse_pages(
             )
         )
     if repartition is None:
-        # Estimate scan parallelism without touching df.rdd (which
+        # Read the file count from the plan rather than df.rdd (which
         # converts the whole logical plan to an RDD on every call just
-        # to read a number). Splittable file scans produce at least
-        # ~defaultParallelism partitions (spark.sql.files.minPartitionNum
-        # defaults to it) and at least one per file, so
-        # max(files, defaultParallelism) is the floor; non-file plans
-        # run at default parallelism. Misestimates only affect the
-        # shuffle-or-not heuristic — callers at scale should pass
-        # `repartition` explicitly (unsplittable .gz inputs especially).
+        # to read a number). Misestimates only affect the shuffle-or-not
+        # heuristic — callers at scale should pass `repartition`
+        # explicitly (unsplittable .gz inputs especially).
         par = spark.sparkContext.defaultParallelism
-        n_in = max(len(pages.inputFiles()), par)
+        n_in = len(pages.inputFiles()) or par
         repartition = n_in < n
     if repartition:
         pages = pages.repartition(n, F.xxhash64("url"))

@@ -86,10 +86,12 @@ def cdx_index(
     grp_hash = F.xxhash64(url) if group_expr is None else group_expr
     grp = F.pmod(grp_hash, F.lit(n_files))
     digest_src = F.col(payload_col if payload_col else record_col)
+    # sha2 takes STRING or BINARY; the Python UDF hashes bytes, so a
+    # STRING column goes in as its UTF-8 bytes (what sha2 hashes too).
     digest = (
         F.sha2(digest_src, 256)
         if digest_format == "sha256-hex"
-        else _sha1_b32_udf()(digest_src)
+        else _sha1_b32_udf()(digest_src.cast("binary"))
     )
     base = records.select(
         surt_key(url).alias("urlkey"),

@@ -257,13 +257,13 @@ def test_priority_encoder_matches_sequential_replace():
 
 
 def test_apply_merges_refuses_past_jvm_bound():
-    from pyspark.sql import functions as F
-
+    """The bound is checked before any Column is built: this runs with
+    no SparkContext (the ``-m "not spark"`` loop)."""
     from htmlparser2_spark.operators.bpe import apply_merges
 
     merges = [(1, "a", "b", 0), (2, "ab", "c", 0), (3, "abc", EOW, 0)]
     with pytest.raises(ValueError, match="literal-replace plan bound"):
-        apply_merges(F.lit("{a}{b}"), merges, max_jvm_merges=2)
+        apply_merges("seg", merges, max_jvm_merges=2)
 
 
 @pytest.mark.spark

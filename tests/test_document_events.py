@@ -13,12 +13,14 @@ import pytest
 from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 
+from .fixture_docs import DOCS, requires_docs
+
 GOLDENS = json.loads(
     (pathlib.Path(__file__).parent / "goldens" / "document_events.json").read_text()
 )
-DOCS = pathlib.Path("/root/reference/src/__fixtures__/Documents")
 
 
+@requires_docs
 @pytest.mark.parametrize("case", GOLDENS, ids=[c["name"] for c in GOLDENS])
 def test_document_events(case):
     body = (DOCS / case["file"]).read_bytes().decode("utf-8")

@@ -13,8 +13,9 @@ from hypothesis import strategies as st
 from htmlparser2_spark.engine.fast_text import FastTextExtractor, fast_text_content
 from htmlparser2_spark.engine.parser import Parser
 
+from .fixture_docs import DOCS, requires_docs
+
 GOLD = pathlib.Path(__file__).parent / "goldens"
-DOCS = pathlib.Path("/root/reference/src/__fixtures__/Documents")
 
 
 def full_text(doc: str) -> str:
@@ -35,13 +36,18 @@ def _default_html_cases():
         for case in json.loads((GOLD / name).read_text()):
             if not case["options"]:  # default HTML options only
                 cases.append(case["input"])
-    for f in ("Basic.html", "Attributes.html", "Svg.html"):
-        cases.append((DOCS / f).read_text())
     return cases
 
 
 @pytest.mark.parametrize("doc", _default_html_cases(), ids=range(len(_default_html_cases())))
 def test_fast_matches_full_on_goldens(doc):
+    assert fast_text_content(doc) == full_text(doc)
+
+
+@requires_docs
+@pytest.mark.parametrize("name", ["Basic.html", "Attributes.html", "Svg.html"])
+def test_fast_matches_full_on_fixture_documents(name):
+    doc = (DOCS / name).read_text()
     assert fast_text_content(doc) == full_text(doc)
 
 

@@ -3,18 +3,18 @@
 
 from __future__ import annotations
 
-import pathlib
 from datetime import datetime, timezone
 
 from htmlparser2_spark.engine.feed import parse_feed
 
-DOCS = pathlib.Path("/root/reference/src/__fixtures__/Documents")
+from .fixture_docs import DOCS, requires_docs
 
 
 def ts(s: str) -> datetime:
     return datetime.fromisoformat(s).replace(tzinfo=timezone.utc)
 
 
+@requires_docs
 def test_rss_feed():
     feed = parse_feed((DOCS / "RSS_Example.xml").read_text())
     assert feed["type"] == "rss"
@@ -43,6 +43,7 @@ def test_rss_feed():
     assert media[0]["height"] == 200 and media[0]["width"] == 200
 
 
+@requires_docs
 def test_atom_feed():
     feed = parse_feed((DOCS / "Atom_Example.xml").read_text())
     assert feed["type"] == "atom"
@@ -63,6 +64,7 @@ def test_atom_feed():
     assert feed["items"][1] == {"media": []}
 
 
+@requires_docs
 def test_rdf_feed():
     feed = parse_feed((DOCS / "RDF_Example.xml").read_text())
     assert feed["type"] == "rdf"

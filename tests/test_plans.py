@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,7 +23,39 @@ def plan(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-def test_parse_pipeline_has_no_shuffle_when_scan_partitioned(spark):
+def url_hash_exchanges(df) -> list[int]:
+    """Partition counts of the plan's url-hash repartitions."""
+    return [
+        int(n)
+        for n in re.findall(
+            r"Exchange hashpartitioning\(xxhash64\(url#\d+, 42\), (\d+)\)",
+            plan(df, "simple"),
+        )
+    ]
+
+
+@pytest.fixture(scope="module")
+def page_scans(spark, tmp_path_factory):
+    """The same 64 pages written as defaultParallelism parquet files
+    (``spread``) and as one file (``single``)."""
+    par = spark.sparkContext.defaultParallelism
+    pages = spark.range(64).select(
+        F.format_string("https://h%d.example/%d", F.col("id") % 3, "id").alias("url"),
+        F.lit("en").alias("lang"),
+        F.encode(F.format_string("<p>page %d</p>", "id"), "utf-8").alias("html"),
+    )
+    root = tmp_path_factory.mktemp("page_scans")
+    spread, single = str(root / "spread"), str(root / "single")
+    pages.repartition(par).write.parquet(spread)
+    pages.coalesce(1).write.parquet(single)
+    assert len(spark.read.parquet(spread).inputFiles()) == par
+    assert len(spark.read.parquet(single).inputFiles()) == 1
+    return spread, single
+
+
+def test_parse_pipeline_has_no_shuffle_when_scan_partitioned(spark, page_scans):
+    """One Python task per core by default, and no html shuffle for a
+    scan that is already spread over at least that many files."""
     from htmlparser2_spark.plans.extract_job import parse_pages
     from htmlparser2_spark.sources.pages import build_pages
 
@@ -31,9 +64,36 @@ def test_parse_pipeline_has_no_shuffle_when_scan_partitioned(spark):
     assert "Exchange" not in p  # scan partitioning carries through
     assert "mapInPandas" in p or "MapInPandas" in p
 
+    par = spark.sparkContext.defaultParallelism
+    parsed = parse_pages(spark.read.parquet(page_scans[0]))
+    assert "Exchange" not in plan(parsed)
+    assert parsed.rdd.getNumPartitions() == par
 
-def test_explicit_repartition_is_single_hash_exchange(spark):
+
+def test_parse_pipeline_shuffles_single_file_scan(spark, page_scans):
+    """A scan with fewer files than cores gets exactly one url-hash
+    repartition into defaultParallelism partitions; repartition=False
+    keeps the scan as it is."""
     from htmlparser2_spark.plans.extract_job import parse_pages
+
+    par = spark.sparkContext.defaultParallelism
+    single = spark.read.parquet(page_scans[1])
+    parsed = parse_pages(single)
+    assert url_hash_exchanges(parsed) == [par]
+    assert plan(parsed).count(") Exchange") == 1
+    assert parsed.rdd.getNumPartitions() == par
+    assert "Exchange" not in plan(parse_pages(single, repartition=False))
+
+
+def test_explicit_repartition_is_single_hash_exchange(spark, page_scans):
+    """repartition=True shuffles even a scan spread over enough files,
+    into defaultParallelism partitions unless n_partitions says more."""
+    from htmlparser2_spark.plans.extract_job import parse_pages
+
+    par = spark.sparkContext.defaultParallelism
+    spread = spark.read.parquet(page_scans[0])
+    assert url_hash_exchanges(parse_pages(spread, repartition=True)) == [par]
+
     from htmlparser2_spark.sources.pages import build_pages
 
     parsed = parse_pages(build_pages(spark, SF), n_partitions=16, repartition=True)
@@ -41,7 +101,7 @@ def test_explicit_repartition_is_single_hash_exchange(spark):
     # Formatted mode lists each node once in the tree and once in the
     # detail section: exactly one Exchange node -> one "(n) Exchange".
     assert p.count(") Exchange") == 1
-    assert "xxhash64" in p
+    assert url_hash_exchanges(parsed) == [16]
 
 
 def test_ann_broadcasts_query_side_with_topk_pushdown(spark):

@@ -7,6 +7,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from .fixture_docs import DOCS, requires_docs
+
 pytestmark = pytest.mark.spark
 
 SF = "/root/testdata/sf0.001"
@@ -81,12 +83,11 @@ def test_parser_events_udf(spark):
     assert ("closetag", "li", True) in names  # implied close of first <li>
 
 
+@requires_docs
 def test_feed_udf(spark):
     from htmlparser2_spark.functions.udfs import feed_udf
 
-    xml = open(
-        "/root/reference/src/__fixtures__/Documents/Atom_Example.xml", "rb"
-    ).read()
+    xml = (DOCS / "Atom_Example.xml").read_bytes()
     df = spark.createDataFrame([(xml,)], "xml binary")
     row = df.select(feed_udf()(F.col("xml")).alias("f")).collect()[0]["f"]
     assert row["type"] == "atom"
@@ -1170,6 +1171,17 @@ def test_blocklist_admission(spark):
         .collect()[0]["s"]
     )
     assert sfx == ["a.b.example.com", "b.example.com", "example.com", "com"]
+    # Past the 127-label DNS ceiling the longest suffixes are truncated
+    # to their first 127 labels (documented in domain_suffixes).
+    deep = ".".join(f"l{i}" for i in range(130))
+    long_sfx = (
+        spark.range(1)
+        .select(domain_suffixes(F.lit(deep)).alias("s"))
+        .collect()[0]["s"]
+    )
+    assert len(long_sfx) == 130
+    assert long_sfx[0] == ".".join(f"l{i}" for i in range(127))
+    assert long_sfx[3] == ".".join(f"l{i}" for i in range(3, 130))
 
     pages = spark.createDataFrame(
         [
@@ -2525,6 +2537,30 @@ def test_cdx_index_offsets_and_digest(spark):
     assert {r["length"] for r in b32} == {r["length"] for r in out}
     with _pytest.raises(ValueError, match="digest_format"):
         cdx_index(df, digest_format="md5")
+
+
+def test_cdx_sha1_b32_digest_of_string_payload(spark):
+    """A STRING payload column hashes as its UTF-8 bytes under
+    sha1-b32, as sha2 does under the default format."""
+    import base64
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from htmlparser2_spark.sources.cdx import cdx_index
+
+    payload = "caf\u00e9 \u65e5\u672c"
+    df = spark.createDataFrame(
+        [("https://h.example/a", "2024-01-01 00:00:00", payload, "REC")],
+        "url string, ts string, payload string, record string",
+    ).withColumn("warc_ts", F.to_timestamp("ts"))
+    row = cdx_index(
+        df, payload_col="payload", n_files=1, digest_format="sha1-b32"
+    ).collect()[0]
+    raw = payload.encode("utf-8")
+    assert row["digest"] == base64.b32encode(hashlib.sha1(raw).digest()).decode()
+    hexrow = cdx_index(df, payload_col="payload", n_files=1).collect()[0]
+    assert hexrow["digest"] == hashlib.sha256(raw).hexdigest()
 
 
 def test_script_profile_functions(spark):
