@@ -3,9 +3,9 @@
 LLM-data pipelines routinely keep *structure* that plain textContent
 (reference DomUtils ``textContent``, README.md:184) throws away —
 headings, lists, links, tables — by converting pages to Markdown. The
-reference has no such operator; this renderer walks the
-DomArrayHandler adjacency list (engine/dom.py) with a small, fixed,
-deterministic rule set so the Spark oracle can predict output exactly:
+reference has no such operator; this renderer walks a compact parse
+tree (below) with a small, fixed, deterministic rule set so the Spark
+oracle can predict output exactly:
 
 * rendered scope: the first ``<body>`` subtree when present, else the
   whole document; ``head``/``script``/``style``/``title`` subtrees,
@@ -24,6 +24,36 @@ deterministic rule set so the Spark oracle can predict output exactly:
 * whitespace in inline content collapses to single spaces (``pre``
   keeps raw text); cell ``|`` is escaped; no other Markdown escaping —
   content fidelity over re-parseability, documented trade-off.
+
+Tree contract
+-------------
+A node is either a ``str`` (text, scrubbed of NUL) or an element tuple
+``(name, attrs, kids)``: ``attrs`` the element's attribute dict,
+``kids`` its child nodes in document order. Comments, directives/PIs
+and CDATA sections are absent — no rule emits them. TreeHandler merges
+adjacent text; the renderer only ever concatenates neighbouring text,
+so a run split in two renders the same. What an element renders as follows from its name alone (a
+``script``/``style`` element is skipped by name, as DomArrayHandler
+types it by name). Two producers build the tree:
+
+* :class:`TreeHandler`, a Parser handler that builds it while parsing.
+  :class:`MarkdownExtractor` pairs it with one reused
+  ``Parser(batch_text=True)``: the one production path, behind
+  ``parse_pages(mode="markdown")`` and ``markdown_udf``.
+* :func:`to_markdown`, which converts a DomArrayHandler adjacency list
+  once, iteratively and in ``idx_in_parent`` order (operators/dommanip
+  renumbers it in place), then runs the same renderer. Tests, the
+  oracle and the engine replays use it.
+
+DomArrayHandler (engine/dom.py) stays the relational DOM contract —
+dom_nodes_udf, the node queries, the serializer. A renderer that needs
+only structure and text consumes TreeHandler instead: the adjacency
+dicts cost more to build than this renderer costs to run.
+
+Recursion: the tree builders are iterative; the renderer recurses once
+per nesting level (``_inline``, ``_raw_text``, ``_blocks``, ``_list``),
+so a page nested deeper than the interpreter's recursion limit still
+raises RecursionError.
 """
 
 from __future__ import annotations
@@ -31,7 +61,9 @@ from __future__ import annotations
 import re
 from operator import itemgetter
 
-__all__ = ["to_markdown"]
+from .parser import Parser, ParserOptions
+
+__all__ = ["MarkdownExtractor", "TreeHandler", "to_markdown"]
 
 _SKIP = {"head", "script", "style", "title"}
 _BLOCK = {
@@ -43,12 +75,6 @@ _BLOCK = {
 }
 _HEADINGS = {f"h{i}": i for i in range(1, 7)}
 _WS = re.compile(r"[ \t\r\n\f]+")
-# Fast-path guard: text needing collapse contains a non-space
-# whitespace char or a double space. search() early-exits and, when
-# clean (the common case for running text), skips the sub's full
-# string rebuild — measured 1.5x on single-spaced paragraphs, ~parity
-# on messy input.
-_WS_NEEDED = re.compile(r"[\t\r\n\f]|  ")
 # Placeholder so <br> survives whitespace collapsing. NUL is a valid
 # parsed-text character (the tokenizer passes it through), so document
 # text is scrubbed of the sentinel before splicing — a literal NUL in
@@ -59,7 +85,19 @@ _BR_RE = re.compile(f" ?{_BR} ?")
 
 
 def _collapse(raw: str) -> str:
-    out = raw if _WS_NEEDED.search(raw) is None else _WS.sub(" ", raw)
+    # Fast-path guard: text needing collapse holds a non-space
+    # whitespace char or a double space; clean text (the common case
+    # for running text) skips the sub's string rebuild. Five substring
+    # tests beat one regex search ("[\t\r\n\f]|  " tries the
+    # alternation at every offset): ~1 us vs ~11 us on a 380-char
+    # paragraph.
+    if (
+        "  " in raw or "\n" in raw or "\t" in raw or "\r" in raw
+        or "\f" in raw
+    ):
+        out = _WS.sub(" ", raw)
+    else:
+        out = raw
     if _BR in out:
         out = _BR_RE.sub("\n", out)
     return out.strip()
@@ -83,196 +121,309 @@ def _wrap(inner: str, mark: str) -> str:
     )
 
 
-class _Renderer:
-    def __init__(self, nodes: list[dict]) -> None:
-        self.children: dict[int, list[dict]] = {}
-        setdefault = self.children.setdefault
-        for n in nodes:
-            setdefault(n["parent_id"], []).append(n)
-        # Parser-built arrays arrive in document order, so each child
-        # list is already sorted by idx_in_parent; manipulated arrays
-        # (operators/dommanip renumbers idx_in_parent in place) may
-        # not be. Timsort on the sorted case is a linear verify, but
-        # the per-element key extraction still costs — skip it with an
-        # O(n) check, and use itemgetter (C-side) when sorting.
-        key = itemgetter("idx_in_parent")
-        for kids in self.children.values():
-            if len(kids) < 2:
-                continue
-            seq = [key(k) for k in kids]
-            if any(a > b for a, b in zip(seq, seq[1:])):
-                kids.sort(key=key)
-        self.body = next(
-            (n for n in nodes
-             if n["type"] == "tag" and n["name"] == "body"),
-            None,
+# ---------------- tree builders ----------------
+class TreeHandler:
+    """Parser handler that builds the renderer's tree directly.
+
+    ``root`` holds the document's top-level nodes, ``body`` the first
+    ``<body>`` element (None if the page has none), ``n_tags`` the
+    number of opened elements — the element count of the
+    DomArrayHandler array for the same parse. Reset on every parse
+    (``on_parser_init``). The per-tag attrs dict is kept, not copied:
+    the Parser makes a fresh one per tag and drops its own reference.
+    """
+
+    __slots__ = ("root", "body", "n_tags", "_kids", "_stack", "_text",
+                 "_in_cdata")
+
+    def __init__(self) -> None:
+        self.on_parser_init(None)
+
+    def on_parser_init(self, parser) -> None:
+        self.root: list = []
+        self.body: tuple | None = None
+        self.n_tags = 0
+        self._kids = self.root  # child list of the innermost open element
+        self._stack: list[list] = []  # child lists of its ancestors
+        # Pending text pieces, joined once when the run ends — a long
+        # run of text events stays linear, unlike repeated str +=.
+        self._text: list[str] = []
+        self._in_cdata = False
+
+    def _flush_text(self) -> None:
+        text = "".join(self._text)
+        self._text.clear()
+        self._kids.append(text.replace(_BR, "") if _BR in text else text)
+
+    def on_open_tag(self, name: str, attrs: dict, is_implied: bool) -> None:
+        if self._text:
+            self._flush_text()
+        kids: list = []
+        element = (name, attrs, kids)
+        self._kids.append(element)
+        self._stack.append(self._kids)
+        self._kids = kids
+        self.n_tags += 1
+        if name == "body" and self.body is None:
+            self.body = element
+
+    def on_close_tag(self, name: str, is_implied: bool) -> None:
+        if self._text:
+            self._flush_text()
+        if self._stack:
+            self._kids = self._stack.pop()
+
+    def on_text(self, data: str) -> None:
+        if not self._in_cdata:
+            self._text.append(data)
+
+    def on_cdata_start(self) -> None:
+        self._in_cdata = True
+
+    def on_cdata_end(self) -> None:
+        self._in_cdata = False
+
+    def on_end(self) -> None:
+        if self._text:
+            self._flush_text()
+
+
+_ELEMENT_TYPES = frozenset(("tag", "script", "style"))
+_NO_ATTRS: dict = {}
+
+
+def _index(nodes: list[dict]) -> tuple[dict, object, bool]:
+    """One pass over an adjacency list: node_id -> child list (root
+    -1), the first ``<body>``'s node_id, and whether every sibling
+    group arrived in ``idx_in_parent`` order."""
+    kids_of: dict = {-1: []}
+    last_idx: dict = {}
+    body_id = None
+    in_order = True
+    for n in nodes:
+        t = n["type"]
+        if t in _ELEMENT_TYPES:
+            nid = n["node_id"]
+            kids = kids_of.get(nid)
+            if kids is None:
+                kids = kids_of[nid] = []
+            name = n["name"]
+            node = (name, n["attrs"] or _NO_ATTRS, kids)
+            if body_id is None and name == "body" and t == "tag":
+                body_id = nid
+        elif t == "text" or t == "cdata":
+            # DomArrayHandler's cdata nodes carry no data (their text
+            # is a child, which no rule reads)
+            node = n["data"] or ""
+            if _BR in node:
+                node = node.replace(_BR, "")
+        else:
+            continue  # comments, directives
+        pid = n["parent_id"]
+        sibs = kids_of.get(pid)
+        if sibs is None:
+            sibs = kids_of[pid] = []
+        sibs.append(node)
+        if in_order:
+            idx = n["idx_in_parent"]
+            if idx < last_idx.get(pid, idx):
+                in_order = False
+            last_idx[pid] = idx
+    return kids_of, body_id, in_order
+
+
+_IDX = itemgetter("idx_in_parent")
+
+
+def _tree_of(nodes: list[dict]) -> list:
+    """Adjacency list -> the child list the renderer starts from: the
+    first ``<body>``'s children, else the document's."""
+    kids_of, body_id, in_order = _index(nodes)
+    if not in_order:
+        # A stable sort by idx_in_parent orders every sibling group and
+        # keeps list order among equal indices. The body stays the
+        # first one in the list as given.
+        kids_of = _index(sorted(nodes, key=_IDX))[0]
+    return kids_of[-1 if body_id is None else body_id]
+
+
+# ---------------- renderer ----------------
+def _inline(node: tuple) -> str:
+    name, attrs, kids = node
+    if name in _SKIP:
+        return ""
+    if name == "br":
+        return _BR
+    if name == "img":
+        return f"![{attrs.get('alt', '')}]({attrs.get('src', '')})"
+    # explicit loop, not a comprehension: one frame per nesting level
+    parts = []
+    for k in kids:
+        parts.append(k if k.__class__ is str else _inline(k))
+    inner = "".join(parts)
+    if name == "a":
+        href = attrs.get("href")
+        if not href:
+            return inner
+        return (
+            _edge_space(inner, 0)
+            + f"[{_collapse(inner)}]({href})"
+            + _edge_space(inner, -1)
+        )
+    if name in ("strong", "b"):
+        return _wrap(inner, "**")
+    if name in ("em", "i"):
+        return _wrap(inner, "*")
+    if name == "code":
+        return _wrap(inner, "`")
+    return inner  # transparent inline (span, u, small, ...)
+
+
+def _inline_text(kids: list) -> str:
+    return _collapse(
+        "".join([k if k.__class__ is str else _inline(k) for k in kids])
+    )
+
+
+def _raw_text(kids: list) -> str:
+    parts = []
+    for k in kids:
+        parts.append(k if k.__class__ is str else _raw_text(k[2]))
+    return "".join(parts)
+
+
+def _blocks(nodes: list, depth: int, out: list[str]) -> list[str]:
+    """Append the non-empty Markdown blocks of ``nodes`` to ``out``;
+    returns ``out``."""
+    run: list[str] = []  # pending inline pieces -> implicit paragraph
+    for node in nodes:
+        if node.__class__ is str:
+            run.append(node)
+            continue
+        name = node[0]
+        if name not in _BLOCK:
+            run.append(_inline(node))
+            continue
+        if run:
+            text = _collapse("".join(run))
+            run.clear()
+            if text:
+                out.append(text)
+        kids = node[2]
+        if name in _HEADINGS:
+            out.append(f"{'#' * _HEADINGS[name]} {_inline_text(kids)}".rstrip())
+        elif name == "ul" or name == "ol":
+            text = _list(node, depth)
+            if text:
+                out.append(text)
+        elif name == "table":
+            text = _table(kids)
+            if text:
+                out.append(text)
+        elif name == "pre":
+            out.append(f"```\n{_raw_text(kids)}\n```")
+        elif name == "blockquote":
+            inner = "\n\n".join(_blocks(kids, depth, []))
+            out.append(
+                "\n".join(f"> {line}" if line else ">"
+                          for line in inner.split("\n"))
+            )
+        elif name == "hr":
+            out.append("---")
+        elif name == "textarea":
+            text = _collapse(_raw_text(kids))
+            if text:
+                out.append(text)
+        elif name == "p":
+            text = _inline_text(kids)
+            if text:
+                out.append(text)
+        else:  # transparent containers: div/section/tbody/...
+            _blocks(kids, depth, out)
+    if run:
+        text = _collapse("".join(run))
+        if text:
+            out.append(text)
+    return out
+
+
+def _list(node: tuple, depth: int) -> str:
+    ordered = node[0] == "ol"
+    pad = "  " * depth
+    lines: list[str] = []
+    i = 0
+    for li in node[2]:
+        if li.__class__ is str or li[0] != "li":
+            continue
+        i += 1
+        head: list[str] = []
+        tail: list[str] = []
+        for k in li[2]:
+            if k.__class__ is str:
+                head.append(k)
+            elif k[0] == "ul" or k[0] == "ol":
+                # nested lists carry their own depth-based indent
+                tail.append(_list(k, depth + 1))
+            elif k[0] in _BLOCK:
+                tail.extend(
+                    "\n".join(pad + "  " + line for line in block.split("\n"))
+                    for block in _blocks([k], depth + 1, [])
+                )
+            else:
+                head.append(_inline(k))
+        marker = f"{i}. " if ordered else "- "
+        lines.append(pad + marker + _collapse("".join(head)))
+        lines.extend(tail)
+    return "\n".join(lines)
+
+
+def _rows(kids: list, rows: list[list[str]]) -> None:
+    for k in kids:
+        if k.__class__ is str:
+            continue
+        if k[0] == "tr":
+            rows.append([
+                _inline_text(cell[2]).replace("|", "\\|")
+                for cell in k[2]
+                if cell.__class__ is not str and cell[0] in ("td", "th")
+            ])
+        elif k[0] in ("thead", "tbody", "tfoot"):
+            _rows(k[2], rows)
+
+
+def _table(kids: list) -> str:
+    rows: list[list[str]] = []
+    _rows(kids, rows)
+    if not rows:
+        return ""
+    lines = ["| " + " | ".join(rows[0]) + " |"]
+    lines.append("| " + " | ".join("---" for _ in rows[0]) + " |")
+    for row in rows[1:]:
+        lines.append("| " + " | ".join(row) + " |")
+    return "\n".join(lines)
+
+
+# ---------------- entry points ----------------
+class MarkdownExtractor:
+    """Reusable HTML -> Markdown extractor: one Parser (batched text)
+    feeding a :class:`TreeHandler`, reset per document. ``options``
+    are ParserOptions keywords."""
+
+    def __init__(self, **options) -> None:
+        self._tree = TreeHandler()
+        self._parser = Parser(
+            self._tree, ParserOptions(**options), batch_text=True
         )
 
-    def kids(self, node: dict | None) -> list[dict]:
-        return self.children.get(-1 if node is None else node["node_id"], [])
-
-    # ---------------- inline ----------------
-    def inline(self, node: dict) -> str:
-        t = node["type"]
-        if t in ("text", "cdata"):
-            return (node["data"] or "").replace(_BR, "")
-        if t not in ("tag", "script", "style"):
-            return ""  # comments, directives
-        name = node["name"]
-        if name in _SKIP:
-            return ""
-        attrs = node["attrs"] or {}
-        inner = "".join(self.inline(k) for k in self.kids(node))
-        if name == "br":
-            return _BR
-        if name == "a":
-            label = _collapse(inner)
-            href = attrs.get("href")
-            if not href:
-                return inner
-            return (
-                _edge_space(inner, 0)
-                + f"[{label}]({href})"
-                + _edge_space(inner, -1)
-            )
-        if name == "img":
-            return f"![{attrs.get('alt', '')}]({attrs.get('src', '')})"
-        if name in ("strong", "b"):
-            return _wrap(inner, "**")
-        if name in ("em", "i"):
-            return _wrap(inner, "*")
-        if name == "code":
-            return _wrap(inner, "`")
-        return inner  # transparent inline (span, u, small, ...)
-
-    def _raw_text(self, node: dict) -> str:
-        out = []
-        for k in self.kids(node):
-            if k["type"] in ("text", "cdata"):
-                out.append((k["data"] or "").replace(_BR, ""))
-            elif k["type"] in ("tag", "script", "style"):
-                out.append(self._raw_text(k))
-        return "".join(out)
-
-    # ---------------- blocks ----------------
-    def blocks(self, parents: list[dict], depth: int = 0) -> list[str]:
-        out: list[str] = []
-        run: list[str] = []  # pending inline pieces -> implicit paragraph
-
-        def flush() -> None:
-            if run:
-                text = _collapse("".join(run))
-                run.clear()
-                if text:
-                    out.append(text)
-
-        for node in parents:
-            t = node["type"]
-            if t in ("comment", "directive"):
-                continue
-            name = node["name"] if t in ("tag", "script", "style") else None
-            if name in _SKIP:
-                continue
-            if name not in _BLOCK:
-                run.append(self.inline(node))
-                continue
-            flush()
-            if name in _HEADINGS:
-                text = _collapse(
-                    "".join(self.inline(k) for k in self.kids(node))
-                )
-                out.append(f"{'#' * _HEADINGS[name]} {text}".rstrip())
-            elif name in ("ul", "ol"):
-                out.append(self._list(node, depth))
-            elif name == "table":
-                out.append(self._table(node))
-            elif name == "pre":
-                out.append(f"```\n{self._raw_text(node)}\n```")
-            elif name == "blockquote":
-                inner = "\n\n".join(self.blocks(self.kids(node), depth))
-                out.append(
-                    "\n".join(f"> {line}" if line else ">"
-                              for line in inner.split("\n"))
-                )
-            elif name == "hr":
-                out.append("---")
-            elif name == "textarea":
-                text = _collapse(self._raw_text(node))
-                if text:
-                    out.append(text)
-            elif name == "p":
-                text = _collapse(
-                    "".join(self.inline(k) for k in self.kids(node))
-                )
-                if text:
-                    out.append(text)
-            else:  # transparent containers: div/section/tbody/...
-                out.extend(self.blocks(self.kids(node), depth))
-        flush()
-        return [b for b in out if b != ""]
-
-    def _list(self, node: dict, depth: int) -> str:
-        ordered = node["name"] == "ol"
-        lines: list[str] = []
-        items = [
-            k for k in self.kids(node)
-            if k["type"] == "tag" and k["name"] == "li"
-        ]
-        for i, li in enumerate(items, start=1):
-            marker = f"{i}. " if ordered else "- "
-            head: list[str] = []
-            tail: list[str] = []
-            for k in self.kids(li):
-                if k["type"] == "tag" and k["name"] in ("ul", "ol"):
-                    # nested lists carry their own depth-based indent
-                    tail.append(self._list(k, depth + 1))
-                elif k["type"] == "tag" and k["name"] in _BLOCK:
-                    tail.extend(
-                        "\n".join(
-                            "  " * (depth + 1) + line
-                            for line in block.split("\n")
-                        )
-                        for block in self.blocks([k], depth + 1)
-                    )
-                else:
-                    head.append(self.inline(k))
-            first = _collapse("".join(head))
-            lines.append("  " * depth + marker + first)
-            lines.extend(tail)
-        return "\n".join(lines)
-
-    def _table(self, node: dict) -> str:
-        rows: list[list[str]] = []
-
-        def walk_rows(parent: dict) -> None:
-            for k in self.kids(parent):
-                if k["type"] != "tag":
-                    continue
-                if k["name"] == "tr":
-                    cells = [
-                        _collapse(
-                            "".join(self.inline(c) for c in self.kids(cell))
-                        ).replace("|", "\\|")
-                        for cell in self.kids(k)
-                        if cell["type"] == "tag"
-                        and cell["name"] in ("td", "th")
-                    ]
-                    rows.append(cells)
-                elif k["name"] in ("thead", "tbody", "tfoot"):
-                    walk_rows(k)
-
-        walk_rows(node)
-        if not rows:
-            return ""
-        lines = ["| " + " | ".join(rows[0]) + " |"]
-        lines.append("| " + " | ".join("---" for _ in rows[0]) + " |")
-        for row in rows[1:]:
-            lines.append("| " + " | ".join(row) + " |")
-        return "\n".join(lines)
+    def extract(self, doc: str) -> tuple[str, int]:
+        """Returns (markdown, n_open_tags)."""
+        self._parser.parse(doc)
+        tree = self._tree
+        body = tree.body
+        scope = tree.root if body is None else body[2]
+        return "\n\n".join(_blocks(scope, 0, [])), tree.n_tags
 
 
 def to_markdown(nodes: list[dict]) -> str:
     """Adjacency node list (DomArrayHandler) -> Markdown string."""
-    r = _Renderer(nodes)
-    scope = r.kids(r.body) if r.body is not None else r.kids(None)
-    return "\n\n".join(r.blocks(scope))
+    return "\n\n".join(_blocks(_tree_of(nodes), 0, []))

@@ -543,18 +543,17 @@ def markdown_udf(**options):
     """HTML -> Markdown (engine/markdown.py): the structured-text
     shaping step of a training pipeline — headings/lists/links/tables
     kept, boilerplate head/script/style dropped. Same batch shape as
-    extract_text_udf: one reused parser per Arrow batch."""
+    extract_text_udf: one reused MarkdownExtractor per Arrow batch, the
+    same path as ``parse_pages(mode="markdown")``."""
 
     @F.pandas_udf(StringType())
     def _md(html: pd.Series) -> pd.Series:
-        from ..engine.markdown import to_markdown
+        from ..engine.markdown import MarkdownExtractor
 
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, options, batch_text=True)
+        extract = MarkdownExtractor(**options).extract
 
         def one(value) -> str:
-            parser.parse(_to_str(value))
-            return to_markdown(handler.nodes)
+            return extract(_to_str(value))[0]
 
         return html.map(one)
 

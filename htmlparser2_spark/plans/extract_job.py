@@ -70,33 +70,46 @@ PARSED_SCHEMA = StructType(
 )
 
 
+# The input columns _parse_batches reads; ``text`` (the expected
+# extraction) may be absent.
+_UDF_INPUTS = ("url", "html", "text", "lang")
+
+
 def _make_extract(mode: str):
     """Per-worker extractor: doc string -> (extracted_text, n_tags).
 
-    ``text`` is the hot path (tokenizer-only FastTextExtractor, full
-    textContent); ``main`` parses to a DOM and runs the readability-lite
-    main-content selection (north rule's boilerplate strip);
-    ``markdown`` parses to a DOM and renders structure-keeping Markdown
-    (engine/markdown.py) — one reused handler+parser per worker, reset
-    per document."""
-    if mode in ("main", "markdown"):
+    One reused extractor per worker, reset per document. ``main`` and
+    ``markdown`` parse with batched text (``Parser(batch_text=True)``):
+    neither reads per-event text granularity or positions.
+
+    * ``text`` is the hot path: tokenizer-only FastTextExtractor, full
+      textContent; ``n_tags`` counts opened tag names.
+    * ``main`` parses to the adjacency DOM (``DomArrayHandler``) and
+      runs the readability-lite main-content selection (north rule's
+      boilerplate strip); ``n_tags`` counts its element nodes.
+    * ``markdown`` is engine/markdown.py's MarkdownExtractor: the parser
+      builds the renderer's compact tree directly (``TreeHandler``, no
+      adjacency DOM) — the same path as ``markdown_udf``; ``n_tags``
+      counts opened elements, as ``main`` does.
+    """
+    if mode == "markdown":
+        from ..engine.markdown import MarkdownExtractor
+
+        return MarkdownExtractor().extract
+    if mode == "main":
         from ..engine.dom import DomArrayHandler
         from ..engine.parser import Parser
-
-        if mode == "main":
-            from ..engine.readability import main_content_text as render
-        else:
-            from ..engine.markdown import to_markdown as render
+        from ..engine.readability import main_content_text
 
         handler = DomArrayHandler(with_indices=False)
-        parser = Parser(handler)
+        parser = Parser(handler, batch_text=True)
         element_types = ("tag", "script", "style")
 
         def extract(doc: str) -> tuple[str, int]:
             parser.parse(doc)
             nodes = handler.nodes
             n_tags = sum(1 for n in nodes if n["type"] in element_types)
-            return render(nodes), n_tags
+            return main_content_text(nodes), n_tags
 
         return extract
     if mode != "text":
@@ -202,6 +215,11 @@ def parse_pages(
     Python CPU-s (see the module notes), so more tasks than cores add
     that overhead with nothing to show for it.
 
+    Only ``url``, ``html``, ``text`` and ``lang`` (those present) are
+    selected into the UDF: other input columns (a sources.pages table's
+    ``warc_ts``, run_extract's ``bucket``) are pruned from the scan
+    instead of crossing the Arrow boundary unread.
+
     ``repartition=None`` (auto) shuffles by ``xxhash64(url)`` into ``n``
     partitions only when the input reads fewer files than ``n``: a scan
     over at least ``n`` files already spreads the rows, and a shuffle
@@ -223,6 +241,7 @@ def parse_pages(
     Arrow's maxRecordsPerBatch. A row is atomic either way — documents
     are never split.
     """
+    pages = pages.select(*[c for c in _UDF_INPUTS if c in pages.columns])
     spark = pages.sparkSession
     n = n_partitions or spark.sparkContext.defaultParallelism
     if jumbo_bytes is not None:
@@ -316,9 +335,8 @@ def run_extract(
     if done:
         todo_pages = todo_pages.filter(~F.col("bucket").isin(done))
 
-    keep = [c for c in ("url", "html", "text", "lang") if c in todo_pages.columns]
     parsed = parse_pages(
-        todo_pages.select(*keep),
+        todo_pages,
         n_partitions=n_partitions,
         jumbo_bytes=jumbo_bytes,
         mode=mode,

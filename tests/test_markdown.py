@@ -1,17 +1,37 @@
-"""HTML -> Markdown rendering (engine/markdown.py) rule-set pins."""
+"""HTML -> Markdown rendering (engine/markdown.py) rule-set pins, and
+parity of its two entry points: MarkdownExtractor (the parser builds
+the renderer's tree) and to_markdown (an adjacency array from
+DomArrayHandler)."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from htmlparser2_spark.engine.dom import DomArrayHandler
+from htmlparser2_spark.engine.markdown import MarkdownExtractor, to_markdown
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
-from htmlparser2_spark.engine.markdown import to_markdown
+
+from .fixture_docs import golden_inputs
+
+_ELEMENT_TYPES = ("tag", "script", "style")
+
+
+def dom(html: str, **options) -> list[dict]:
+    """The adjacency DOM of the exact (per-event) parse."""
+    handler = DomArrayHandler(with_indices=False)
+    Parser(handler, ParserOptions(**options)).parse(html)
+    return handler.nodes
 
 
 def md(html: str, **options) -> str:
-    handler = DomArrayHandler(with_indices=False)
-    parser = Parser(handler, ParserOptions(**options))
-    parser.parse(html)
-    return to_markdown(handler.nodes)
+    """Markdown through both entry points, which must agree."""
+    expected = to_markdown(dom(html, **options))
+    assert MarkdownExtractor(**options).extract(html)[0] == expected
+    return expected
 
 
 def test_headings_paragraphs_links():
@@ -125,3 +145,119 @@ def test_page_variant_shapes():
         "<textarea>T &amp; A</textarea><?bogus 2><div>tail</div></body></html>"
     )
     assert md(v2) == "| Doc 2 |\n| --- |\n| tx |\n\nT & A\n\ntail"
+
+
+# ---------------- entry-point parity ----------------
+
+
+def assert_paths_agree(extractor: MarkdownExtractor, doc: str, **options):
+    nodes = dom(doc, **options)
+    n_elements = sum(1 for n in nodes if n["type"] in _ELEMENT_TYPES)
+    assert extractor.extract(doc) == (to_markdown(nodes), n_elements)
+
+
+@pytest.mark.parametrize("doc, options", golden_inputs())
+def test_extractor_matches_adjacency_on_goldens(doc, options):
+    assert_paths_agree(MarkdownExtractor(**options), doc, **options)
+
+
+_OPTION_SETS = [
+    {},
+    {"xml_mode": True},
+    {"recognize_cdata": True},
+    {"decode_entities": False},
+    {"lower_case_tags": False, "recognize_self_closing": True},
+    {"xml_mode": True, "decode_entities": False, "recognize_cdata": False},
+]
+# One reused extractor per option set: each parse must also reset it.
+_EXTRACTORS = [MarkdownExtractor(**o) for o in _OPTION_SETS]
+
+_PIECES = st.sampled_from([
+    "<body>", "</body>", "<Body>", "<html>", "<head>", "<title>",
+    "</title>", "<p>", "</p>", "<P>", "<div>", "</div>", "<span>",
+    "<h1>", "</h1>", "<h3>", "<ul>", "</ul>", "<ol>", "<li>", "</li>",
+    "<table>", "</table>", "<thead>", "<tr>", "<td>", "<th>", "</td>",
+    "<pre>", "</pre>", "<blockquote>", "</blockquote>", "<hr>", "<hr/>",
+    "<textarea>", "</textarea>", "<b>", "</b>", "<strong>", "<i>",
+    "<em>", "</em>", "<code>", "</code>", '<a href="/u">', "<a>", "</a>",
+    '<img src="s.png" alt="t">', "<img>", "<br>", "</br>", "<br/>",
+    "<script>", "</script>", "<style>", "<!-- c -->", "<!--",
+    "<![CDATA[cd]]>", "<?pi x>", "<!doctype html>", "<svg>", "</svg>",
+    "<math>", "&amp;", "&lt;", "&#0;", "&#x41;", "\x00", "|", " ", "  ",
+    "\n", "\t", "word", "two words", "é",
+])
+
+
+@given(
+    st.lists(st.one_of(_PIECES, st.text(max_size=6)), max_size=40),
+    st.integers(0, len(_OPTION_SETS) - 1),
+)
+@settings(max_examples=400, deadline=None)
+def test_extractor_matches_adjacency_fuzz(pieces, which):
+    assert_paths_agree(
+        _EXTRACTORS[which], "".join(pieces), **_OPTION_SETS[which]
+    )
+
+
+def test_n_tags_counts_dom_elements():
+    # implied opens (</p>, </br>), voids and EOF-closed elements count
+    # once each; comments, text, directives and a truncated tag do not
+    doc = "<!doctype html><p>a</p></p></br><img><ul><li>x<li>y<!--c--><b"
+    nodes = dom(doc)
+    assert MarkdownExtractor().extract(doc)[1] == 7 == sum(
+        1 for n in nodes if n["type"] in _ELEMENT_TYPES
+    )
+
+
+def test_adjacency_honours_permuted_idx_in_parent():
+    nodes = [dict(n) for n in dom(
+        "<body><p>one</p><p>two</p><ul><li>a<li>b</ul></body>"
+    )]
+    body_id = next(n["node_id"] for n in nodes if n["name"] == "body")
+    kids = [n for n in nodes if n["parent_id"] == body_id]
+    for n in kids:  # reverse the body's children
+        n["idx_in_parent"] = len(kids) - 1 - n["idx_in_parent"]
+    ul_id = next(n["node_id"] for n in nodes if n["name"] == "ul")
+    for n in nodes:  # swap the two list items
+        if n["parent_id"] == ul_id:
+            n["idx_in_parent"] = 1 - n["idx_in_parent"]
+    expected = "- b\n- a\n\ntwo\n\none"
+    assert to_markdown(nodes) == expected
+    # list order does not matter once idx_in_parent orders siblings
+    random.Random(3).shuffle(nodes)
+    assert to_markdown(nodes) == expected
+
+
+def test_comment_between_text():
+    assert md("<body><p>a<!-- c -->b</p></body>") == "ab"
+    assert md("<body>x <!-- c --> y<b>z</b><!--d-->!</body>") == "x y**z**!"
+    assert md("<body><pre>a<!--c-->b</pre></body>") == "```\nab\n```"
+    assert md("<ul><li>a<!--c-->b<li>c</ul>") == "- ab\n- c"
+
+
+def test_cdata_dropped_unless_foreign_text():
+    # a CDATA section is a node the rules never emit, in xml_mode and
+    # with recognize_cdata; in HTML it is a comment; inside <svg> its
+    # content is plain text
+    assert md("<body><p>a<![CDATA[hid]]>b</p></body>", xml_mode=True) == "ab"
+    assert md("<p>a<![CDATA[hid]]>b</p>", recognize_cdata=True) == "ab"
+    assert md("<p>a<![CDATA[hid]]>b</p>") == "ab"
+    assert md("<body><svg><![CDATA[k]]></svg></body>") == "k"
+
+
+def test_xml_mode_keeps_case():
+    # xml_mode keeps tag case: <Body> is not body, so the whole
+    # document renders, and as an unknown (inline) element it renders
+    # everything inside it inline, <p> included
+    assert md("<Body><P>a</P><p>b</p><br/>c</Body>", xml_mode=True) == "ab\nc"
+    assert md("<body><h2>t</h2><x>y</x></body>", xml_mode=True) == "## t\n\ny"
+
+
+@pytest.mark.parametrize("tag", ["b", "div"])
+def test_deep_nesting_renders_through_both_entry_points(tag):
+    # 300 levels of inline and of block nesting render identically;
+    # pages past the recursion limit still raise (the renderer
+    # recurses once per level)
+    doc = f"<body>{f'<{tag}>' * 300}x"
+    out = md(doc)
+    assert out == ("**" * 300 + "x" + "**" * 300 if tag == "b" else "x")

@@ -104,6 +104,28 @@ def test_explicit_repartition_is_single_hash_exchange(spark, page_scans):
     assert url_hash_exchanges(parsed) == [16]
 
 
+def test_parse_pipeline_reads_only_udf_columns(spark, tmp_path):
+    """parse_pages hands the UDF url/html/text/lang only, so a stored
+    sources.pages table's warc_ts is pruned from the parquet scan."""
+    from htmlparser2_spark.plans.extract_job import parse_pages
+    from htmlparser2_spark.sources.pages import build_pages
+
+    path = str(tmp_path / "pages")
+    build_pages(spark, SF).write.parquet(path)
+    stored = spark.read.parquet(path)
+    assert "warc_ts" in stored.columns
+    for parsed in (
+        parse_pages(stored),
+        parse_pages(stored, jumbo_bytes=100_000),
+        parse_pages(stored.drop("text"), mode="markdown"),
+    ):
+        schemas = re.findall(r"ReadSchema: (struct<[^\n]*>)", plan(parsed))
+        assert schemas, plan(parsed)
+        for schema in schemas:
+            assert "warc_ts" not in schema
+            assert "html" in schema and "url" in schema
+
+
 def test_ann_broadcasts_query_side_with_topk_pushdown(spark):
     import __spark_entry__ as entry_mod
 

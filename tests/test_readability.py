@@ -2,7 +2,13 @@
 
 from __future__ import annotations
 
-from htmlparser2_spark.engine.readability import main_content
+import pytest
+
+from htmlparser2_spark.engine.dom import DomArrayHandler
+from htmlparser2_spark.engine.parser import Parser
+from htmlparser2_spark.engine.readability import main_content, main_content_text
+
+from .fixture_docs import golden_inputs
 
 PAGE = """<html><head><title>Site</title><script>nav()</script></head><body>
 <div id="nav"><ul>
@@ -64,3 +70,20 @@ def test_pages_v0_winner_flips_on_doc_id_digits():
         assert main_content(v0(i, text)) == text
     for i in (1000, 4999, 123456):
         assert main_content(v0(i, text)) == f"Doc {i} {text} more"
+
+
+@pytest.mark.parametrize("doc, options", golden_inputs())
+def test_extract_main_mode_matches_exact_event_dom(doc, options):
+    """parse_pages(mode="main") parses with batched text; its output
+    must equal main_content_text of the exact per-event DOM (default
+    options, like the extract job)."""
+    from htmlparser2_spark.plans.extract_job import _make_extract
+
+    handler = DomArrayHandler(with_indices=False)
+    Parser(handler).parse(doc)
+    n_elements = sum(
+        1 for n in handler.nodes if n["type"] in ("tag", "script", "style")
+    )
+    assert _make_extract("main")(doc) == (
+        main_content_text(handler.nodes), n_elements
+    )

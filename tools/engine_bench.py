@@ -14,11 +14,11 @@ deterministic corpora bench.py uses, one thread, best-of-N:
 
 Both paths are measured: the tokenizer-only fast path that
 extract_text_udf uses for default options, and the full parser with
-the text-only handler. The markdown renderer (DOM build + to_markdown,
-the exact per-row work of markdown_udf) is measured on the realistic
-corpus plus a structure-rich wiki-style corpus (headings/lists/links/
-table — the shapes the renderer actually transforms). Prints one JSON
-line.
+the text-only handler. Markdown rendering is measured through
+MarkdownExtractor (parser-built tree + renderer, the per-row work of
+markdown_udf and parse_pages(mode="markdown")) on the realistic corpus
+plus a structure-rich wiki-style corpus (headings/lists/links/table —
+the shapes the renderer actually transforms). Prints one JSON line.
 
 Usage: python tools/engine_bench.py [n_docs] [repeats]
 """
@@ -169,17 +169,14 @@ def main(n_docs: int = 20000, repeats: int = 3) -> None:
         for d in docs[:200]:
             assert fast.extract(d)[0] == full(d), "fast != full"
 
-    # Markdown rendering: DOM build + to_markdown, the per-row work of
-    # markdown_udf (functions/udfs.py) with the same reused handler.
-    from htmlparser2_spark.engine.dom import DomArrayHandler
-    from htmlparser2_spark.engine.markdown import to_markdown
+    # Markdown rendering: the production extractor of markdown_udf
+    # (functions/udfs.py) and parse_pages(mode="markdown").
+    from htmlparser2_spark.engine.markdown import MarkdownExtractor
 
-    md_handler = DomArrayHandler(with_indices=False)
-    md_parser = Parser(md_handler, batch_text=True)  # = markdown_udf
+    md_extractor = MarkdownExtractor()
 
     def render(d: str) -> str:
-        md_parser.parse(d)
-        return to_markdown(md_handler.nodes)
+        return md_extractor.extract(d)[0]
 
     for name, gen in (("realistic", realistic_page),
                       ("structured", structured_page)):

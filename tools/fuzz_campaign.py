@@ -8,9 +8,12 @@ the 16 ParserOptions combinations:
   tests/test_eof_edges.py::test_eof_implied_close_index_is_len_plus_one)
 * chunked parse (random split) == whole-document parse, same options
 * default options: fast_text == DOM textContent
+* default and swept options: ``MarkdownExtractor`` (markdown from the
+  parser-built tree, with its open-element count) == adjacency
+  ``to_markdown`` on the exact-event DOM (with its element count)
 
 Usage: ``python tools/fuzz_campaign.py [N] [seed]`` (default 60000).
-A 60k-document run passes clean as of round 1.
+A 60k-document run passes clean.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 from htmlparser2_spark.engine.collector import EventCollector  # noqa: E402
 from htmlparser2_spark.engine.dom import parse_document, text_content  # noqa: E402
 from htmlparser2_spark.engine.fast_text import FastTextExtractor  # noqa: E402
+from htmlparser2_spark.engine.markdown import MarkdownExtractor, to_markdown  # noqa: E402
 from htmlparser2_spark.engine.parser import Parser, ParserOptions  # noqa: E402
 from htmlparser2_spark.engine.stream import StreamingParser  # noqa: E402
 
@@ -62,6 +66,7 @@ def rand_doc(rng: random.Random) -> str:
 def main(n_docs: int = 60000, seed: int = 20260816) -> int:
     rng = random.Random(seed)
     extractor = FastTextExtractor()
+    md_extractors = [MarkdownExtractor(**opts) for opts in OPTION_SPACE]
     failures = 0
     for i in range(n_docs):
         doc = rand_doc(rng)
@@ -82,6 +87,14 @@ def main(n_docs: int = 60000, seed: int = 20260816) -> int:
             sp.write(doc[:k])
             sp.end(doc[k:])
             assert col2.events == col.events, f"chunk!=whole k={k}: {doc!r} {opts}"
+            nodes = parse_document(doc, **opts)
+            n_elements = sum(
+                1 for n in nodes if n["type"] in ("tag", "script", "style")
+            )
+            got = md_extractors[i % len(OPTION_SPACE)].extract(doc)
+            assert got == (to_markdown(nodes), n_elements), (
+                f"markdown tree!=adjacency: {doc!r} {opts}"
+            )
             if i % len(OPTION_SPACE) == 0:
                 dom_text = text_content(parse_document(doc))
                 fast, _ = extractor.extract(doc)
