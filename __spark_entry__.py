@@ -2268,11 +2268,11 @@ def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus encoding with the learned BPE merges: the merge table
-    becomes a literal replace chain in the plan (map-only Project, no
-    shuffle/UDF). The oracle replays training and then re-encodes
-    every document through the same ranked replaces via a CTE chain,
-    comparing subword counts and the md5 of the full segmentation."""
+    """Corpus encoding with the learned BPE merges: one map-only
+    Arrow-UDF projection (the memoized per-word kernel; no shuffle).
+    The oracle replays training and then re-encodes every document
+    through the ranked replaces as a CTE chain, comparing subword
+    counts and the md5 of the full segmentation."""
     from htmlparser2_spark.operators.bpe import (
         encode_bpe,
         train_bpe,
@@ -2512,7 +2512,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     (q_extract_match, q_minhash_lsh) + the flagship
     #     q_extract_text (r4-green, continuity across rotations),
     #   * 4 queries whose code changes THIS round and must re-certify
-    #     under it: q_bpe_train / q_bpe_encode (dual-engine encoder),
+    #     under it: q_bpe_train / q_bpe_encode (BPE encoder),
     #     q_bm25 (persist knob), q_script_profile (astral ranges),
     #   * 35 r3-only rows refreshed to r5 (oldest-green-first fill).
     # Displaced below the cap, every one holding an r4-green row:

@@ -20,12 +20,12 @@ Spark level (Arrow-batched, cluster scale):
   operators.lm_score:   bigram-LM scoring + stupid backoff + CCNet buckets
   operators.blocklist:  UT1-style domain/keyword admission
   operators.robots:     robots.txt + meta-robots page admission
-  operators.bpe:        BPE merge training + pure-Catalyst encoding
+  operators.bpe:        BPE merge training + Arrow-batched encoding
   operators.ranking:    BM25 top-k retrieval
   operators.sampling:   hash/stratified/quota/temperature sampling, shards
   plans.extract_job:    repartition -> parse -> lineage -> resumable writes
   plans.curate_job:     quality -> dedup -> decontaminate -> sample/rebalance
-  streaming:            incremental + stateful extraction
+  streaming:            stateful first-seen dedup + per-host budgets
   sources:              pages synthesis, snapshot tables, WARC/WET, CDX
 """
 

@@ -1,5 +1,5 @@
 """Byte-pair-encoding subword tokenizer: distributed merge training
-and pure-Catalyst encoding.
+and Arrow-batched encoding.
 
 The tokenizer-TRAINING step of an LLM data pipeline (Sennrich,
 Haddow & Birch 2016, "Neural Machine Translation of Rare Words with
@@ -18,9 +18,9 @@ adjacent matches share the boundary space), a single left-to-right
 non-overlapping string replace — the semantics of Python
 ``str.replace``, Spark ``F.replace`` and DuckDB/ANSI ``replace()``
 alike — IS canonical BPE merge application: ``{a}{a}{a}`` →
-``{aa}{a}``, ``{a}{b}{a}{b}`` → ``{ab}{ab}``. All three engines
-agree byte-for-byte by construction, so the driver's DuckDB oracle
-can replay training AND encoding exactly.
+``{aa}{a}``, ``{a}{b}{a}{b}`` → ``{ab}{ab}``. So the trainer is a
+plain string-replace loop, and a SQL oracle can replay training AND
+encoding exactly as a ``replace()`` chain.
 
 Words are ``[a-z]+`` runs of the lowercased text (ASCII-only by
 design: the brace alphabet and the ``</w>`` end-of-word marker can
@@ -40,22 +40,21 @@ Scale shape (100 TB corpus)
   is never collected). This is how production tokenizers train at
   scale: frequencies are aggregated distributed, merges are learned
   on the aggregate. Cost O(n_merges × top_words × avg_word_len).
-- ``encode_bpe``: dual-engine, map-only either way (the same shape as
-  ``similarity.pq_encode`` and the minhash fold). Small merge tables
-  compile to LITERAL replace calls — a whole-stage-codegen Project
-  with zero Python — but the expression tree grows one nested
-  ``replace`` per merge, and a production 30k–50k merge vocabulary
-  blows past codegen's 64KB method limit into interpreted mode with
-  the analyzer itself becoming the bottleneck (the same plan-size
-  cliff ``pq_encode`` documents for k=256 codebooks). Above
-  ``MAX_JVM_MERGES`` the encode switches to an Arrow-batched Python
-  kernel: per distinct word (memoized per worker), repeatedly merge
-  the lowest-rank pair present — provably the same result as the
-  sequential replace chain, because a merge's output symbol can only
-  appear in later-rank rules, so after rank r is exhausted no pair of
-  rank <= r can reappear (parity is test-pinned, including a seeded
-  randomized differential). Cost per distinct word is independent of
-  the merge-table depth — dict lookups, not 30k string scans.
+- ``encode_bpe``: one map-only Arrow-batched Python kernel (the
+  shape of the minhash fold): per distinct word (memoized per
+  worker), repeatedly merge the lowest-rank pair present — provably
+  the same result as the sequential replace chain, because a merge's
+  output symbol can only appear in later-rank rules, so after rank r
+  is exhausted no pair of rank <= r can reappear (pinned by a seeded
+  randomized differential against the replace chain in
+  tests/test_bpe.py). Cost per distinct word is independent of the
+  merge-table depth — dict lookups, not 30k string scans — so the
+  same kernel serves a 24-merge gate table and a 50k-merge production
+  vocabulary. A literal ``replace`` chain in the plan would nest one
+  call per merge: past a few hundred merges it leaves whole-stage
+  codegen and makes analysis the bottleneck, and even at 24 merges it
+  measured slower on sf0.1 (1.53-1.63 s against the kernel's
+  0.58-0.72 s on a 4-core host).
 
 Cross-word safety needs no separator symbol: a learned pair's left
 symbol never contains ``</w>`` (it is word-final in every training
@@ -68,19 +67,16 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
     "WORD_PATTERN",
     "EOW",
-    "MAX_JVM_MERGES",
     "word_frequencies",
     "train_bpe_on_freqs",
     "train_bpe",
     "merges_to_df",
-    "segment_expr",
-    "apply_merges",
     "encode_word_py",
     "encode_text_py",
     "encode_bpe",
@@ -89,14 +85,6 @@ __all__ = [
 WORD_PATTERN = "[a-z]+"
 EOW = "</w>"
 _SYM_RE = re.compile(r"\{([^}]*)\}")
-
-# Above this many merges the literal-replace plan is refused: each
-# merge nests one more `replace` call, and a deep chain first falls
-# out of whole-stage codegen (64KB generated-method limit) and then
-# makes analysis itself quadratic. Production vocabularies (30k-50k
-# merges) always take the Arrow kernel; the literal chain remains the
-# zero-Python engine for small tables and the oracle's exactness twin.
-MAX_JVM_MERGES = 256
 
 # Per-worker word->segmentation memo cap for the Arrow kernel. Distinct
 # lowercase [a-z]+ words are Zipf-bounded in real corpora, but a 100 TB
@@ -188,59 +176,6 @@ def merges_to_df(
     )
 
 
-def segment_expr(
-    text_col: Column | str, pattern: str = WORD_PATTERN
-) -> Column:
-    """Brace-delimited character segmentation of a whole document:
-    each lowercased ``pattern`` word becomes ``{c}{c}...{</w>}``,
-    concatenated. NULL / word-free text segments to ''. Pure
-    Catalyst (regexp + one interpreted HOF transform per doc)."""
-    col = F.col(text_col) if isinstance(text_col, str) else text_col
-    words = F.regexp_extract_all(
-        F.lower(F.coalesce(col, F.lit(""))), F.lit(pattern), F.lit(0)
-    )
-    return F.array_join(
-        F.transform(
-            words,
-            lambda w: F.concat(
-                F.regexp_replace(w, "(.)", "{$1}"), F.lit("{%s}" % EOW)
-            ),
-        ),
-        "",
-    )
-
-
-def apply_merges(
-    seg: Column | str,
-    merges: list[tuple[int, str, str, int]],
-    *,
-    max_jvm_merges: int = MAX_JVM_MERGES,
-) -> Column:
-    """Fold the learned merges over a segmentation column (or column
-    name) in rank order — n_merges literal ``replace`` expressions,
-    map-only. Refuses tables past ``max_jvm_merges`` (see the module
-    constant: the expression tree falls out of codegen and then out of
-    tractable analysis) before it builds any Column, so the check needs
-    no SparkContext — production-depth tables take ``encode_bpe``'s
-    Arrow engine instead."""
-    if len(merges) > max_jvm_merges:
-        raise ValueError(
-            f"{len(merges)} merges exceed the literal-replace plan "
-            f"bound ({max_jvm_merges}): a replace chain this deep "
-            "leaves whole-stage codegen (64KB method limit) and makes "
-            "the analyzer the bottleneck — use encode_bpe(..., "
-            "engine='arrow') (or raise max_jvm_merges knowingly)"
-        )
-    col = F.col(seg) if isinstance(seg, str) else seg
-    for _rank, lhs, rhs, _cnt in merges:
-        col = F.replace(
-            col,
-            F.lit("{%s}{%s}" % (lhs, rhs)),
-            F.lit("{%s%s}" % (lhs, rhs)),
-        )
-    return col
-
-
 def encode_word_py(word: str, ranks: dict[tuple[str, str], int]) -> str:
     """Encode ONE word against a rank dict: repeatedly merge every
     left-to-right non-overlapping occurrence of the lowest-rank pair
@@ -282,12 +217,11 @@ def encode_text_py(
     pattern: str = WORD_PATTERN,
     cache: dict[str, str] | None = None,
 ) -> str:
-    """Whole-document encode, the Arrow kernel's per-row work: word
-    split mirrors ``segment_expr`` (lowercase, ``pattern`` runs, NULL
-    -> ''), each distinct word encoded once via ``cache``. Cross-word
-    merges cannot exist (no learned lhs contains ``</w>`` — see the
-    module docstring), so per-word encoding equals the document-level
-    replace chain."""
+    """Whole-document encode, the Arrow kernel's per-row work: the
+    document's lowercased ``pattern`` runs (NULL -> ''), each distinct
+    word encoded once via ``cache``. Cross-word merges cannot exist (no
+    learned lhs contains ``</w>`` — see the module docstring), so
+    per-word encoding equals the document-level replace chain."""
     words = re.findall(pattern, (text or "").lower())
     parts: list[str] = []
     if cache is None:
@@ -304,11 +238,10 @@ def encode_text_py(
 
 
 def _encode_udf(merges: list[tuple[int, str, str, int]], pattern: str):
-    """Arrow-batched document encoder (the ``_minhash_fold_udf`` /
-    ``pq_encode`` dual-engine shape): the rank dict ships once per
-    worker in the closure; the word memo persists across batches
-    within a worker process (deterministic — it caches a pure
-    function)."""
+    """Arrow-batched document encoder (the ``_minhash_fold_udf``
+    shape): the rank dict ships once per worker in the closure; the
+    word memo persists across batches within a worker process
+    (deterministic — it caches a pure function)."""
     ranks = {(lhs, rhs): rank for rank, lhs, rhs, _cnt in merges}
     cache: dict[str, str] = {}
 
@@ -332,38 +265,21 @@ def encode_bpe(
     text_col: str = "text",
     out_col: str = "bpe_seg",
     pattern: str = WORD_PATTERN,
-    engine: str = "auto",
-    max_jvm_merges: int = MAX_JVM_MERGES,
 ) -> DataFrame:
     """Add ``out_col`` (the encoded segmentation string — symbols are
     its brace groups) and ``n_bpe`` (subword token count = brace-group
     count). Applying merges in learned-rank order is the original
-    subword-nmt encoder; the whole thing is one map-only projection in
-    BOTH engines (plan-pinned: no shuffle either way).
+    subword-nmt encoder; here it is one map-only projection through
+    the memoized per-word Arrow kernel (plan-pinned: no shuffle, no
+    join — the merge table is closure state), whatever the table's
+    depth.
 
-    ``engine``: ``"jvm"`` (literal replace chain, zero Python — the
-    DuckDB oracle's exactness twin; refuses > ``max_jvm_merges``),
-    ``"arrow"`` (memoized per-word Python kernel, Arrow-batched —
-    depth-independent, the production path for 30k+ merge tables), or
-    ``"auto"`` (jvm up to the bound, arrow past it). Engines are
-    bit-identical by construction and parity-pinned in tests; the one
-    documented divergence risk is non-ASCII lowercasing (JVM
-    ``lower()`` vs Python ``str.lower()`` can differ on exotic locale
-    mappings), which the ASCII ``pattern`` makes invisible unless a
-    non-ASCII char lowercases INTO [a-z] — e.g. U+212A KELVIN SIGN,
-    which both map to 'k'."""
-    if engine == "auto":
-        engine = "jvm" if len(merges) <= max_jvm_merges else "arrow"
-    if engine == "jvm":
-        seg = apply_merges(
-            segment_expr(text_col, pattern),
-            merges,
-            max_jvm_merges=max_jvm_merges,
-        )
-    elif engine == "arrow":
-        seg = _encode_udf(merges, pattern)(F.col(text_col))
-    else:
-        raise ValueError(f"unknown engine {engine!r} (auto|jvm|arrow)")
+    Words come from Python ``str.lower()``; the SQL oracle lowercases
+    with its own ``lower()``. They agree on ASCII and on U+212A KELVIN
+    SIGN (both give 'k'). A divergence needs a character that only one
+    of them lowercases into [a-z], which an ASCII corpus never
+    contains."""
+    seg = _encode_udf(merges, pattern)(F.col(text_col))
     out = docs.withColumn(out_col, seg)
     n = F.length(out_col) - F.length(F.replace(F.col(out_col), F.lit("{")))
     return out.withColumn("n_bpe", n.cast("int"))

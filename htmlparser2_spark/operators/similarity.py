@@ -15,6 +15,12 @@
   ever reaches the driver), corpus partitioned into cells, queries probe
   the ``n_probe`` nearest cells. Scan cost drops from |corpus| to
   ~|corpus| * n_probe / n_centroids per query.
+
+One scorer per operator: the candidate joins (IVF, LSH), cell
+assignment and :func:`dedup.embedding_dup_pairs` all score with the
+Catalyst :func:`_cosine` fold. :func:`brute_force_topk` is the one
+operator with two paths: ``engine="jvm"`` is the exactness oracle the
+gate replays bit-for-bit, and ``engine="arrow"`` is its fast path.
 """
 
 from __future__ import annotations
@@ -42,39 +48,6 @@ __all__ = [
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
-
-
-def _cosine_arrow():
-    """Row-wise Arrow cosine for candidate scoring: one einsum over
-    the batch instead of an interpreted ``zip_with``/``aggregate``
-    fold per row. Same zero-norm -> 0.0 convention as :func:`_cosine`.
-    Used by the ``engine="arrow"`` paths of the candidate-join
-    operators (ivf/lsh), where scored pairs arrive as two array
-    columns rather than a matrix-able corpus batch."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.array(list(a), dtype=np.float64)
-        B = np.array(list(b), dtype=np.float64)
-        dots = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        return pd.Series(
-            np.divide(dots, den, out=np.zeros_like(dots), where=den != 0)
-        )
-
-    return cos
-
-
-def _pair_sim(engine: str):
-    """(qv, cv) -> sim column factory for the candidate-join scorers."""
-    if engine == "arrow":
-        udf = _cosine_arrow()
-        return lambda qv, cv: udf(qv, cv)
-    if engine != "jvm":
-        raise ValueError(f"unknown engine {engine!r} (jvm|arrow)")
-    return lambda qv, cv: _cosine(_as_double(qv), _as_double(cv))
 
 
 def _cosine(a, b):
@@ -109,6 +82,9 @@ def brute_force_topk(
     Returns (query_id, neighbor_id, rank, sim) with sim rounded to 4
     decimals (ranking uses the unrounded value; ties break on the
     lower neighbor id).
+
+    Two paths by design, each behind a gate row (q_ann_topk,
+    q_ann_arrow); every other similarity operator has one:
 
     * ``engine="jvm"`` (default): broadcast-join + ``zip_with``/
       ``aggregate`` cosine + window top-k — pure Catalyst with strict
@@ -410,7 +386,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
     metric: str = "cosine",
-    engine: str = "jvm",
 ) -> DataFrame:
     """Approximate cosine top-k via an IVF index.
 
@@ -421,9 +396,9 @@ def ivf_topk(
     corpus snapshot, reuse for every query stream). ``metric`` governs
     both the fit and cell assignment — centroids fit with one metric
     and assigned with another silently degrade recall, so the same
-    value threads through everywhere. ``engine="arrow"`` scores the
-    probed candidates with the batched einsum cosine instead of the
-    interpreted HOF fold (same decisions; see :func:`_cosine_arrow`).
+    value threads through everywhere. Probed candidates are scored with
+    the Catalyst :func:`_cosine` fold, the same scorer as the cell
+    assignment and the jvm brute force.
     """
     if centroids is None:
         centroids = ivf_fit_centroids(
@@ -454,7 +429,7 @@ def ivf_topk(
     sims = cb.join(F.broadcast(qb), "cell").select(
         "query_id",
         "neighbor_id",
-        _pair_sim(engine)(F.col("qv"), F.col("cv")).alias("sim"),
+        _cosine(_as_double(F.col("qv")), _as_double(F.col("cv"))).alias("sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
@@ -479,14 +454,12 @@ def lsh_topk(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    engine: str = "jvm",
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket.
 
     The bucket join replaces the full cross join; recall depends on
     ``n_bits`` (fewer bits -> bigger buckets -> higher recall/cost).
-    ``engine="arrow"`` scores candidates with the batched einsum
-    cosine (same decisions; see :func:`_cosine_arrow`).
+    Candidates are scored with the Catalyst :func:`_cosine` fold.
     """
     qb = hyperplane_lsh_buckets(
         queries, dim=dim, n_bits=n_bits, seed=seed, id_col=id_col, vec_col=vec_col
@@ -497,7 +470,7 @@ def lsh_topk(
     sims = cb.join(F.broadcast(qb), "bucket").select(
         "query_id",
         "neighbor_id",
-        _pair_sim(engine)(F.col("qv"), F.col("cv")).alias("sim"),
+        _cosine(_as_double(F.col("qv")), _as_double(F.col("cv"))).alias("sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
@@ -514,6 +487,10 @@ def lsh_topk(
 # shuffles/stores ~d*4/m times smaller; distances are computed
 # asymmetrically (ADC): exact query sub-vectors against the coded
 # corpus's reconstructed centroids.
+
+# pq_encode compiles codebooks up to this many codewords (m * k) into
+# literal JVM expressions and hands larger ones to its numpy kernel.
+PQ_MAX_EXPR_CODEWORDS = 512
 
 
 def _l2(a, b):
@@ -625,22 +602,21 @@ def pq_encode(
     *,
     vec_col: str = "embedding",
     code_col: str = "pq_code",
-    max_expr_codewords: int = 512,
 ) -> DataFrame:
     """Attach ``code_col`` (array<int>, length m): per subspace, the
     index of the nearest codeword by L2.
 
-    Two engines, chosen by codebook size: small codebooks compile to
-    pure JVM expressions (zero Python), but the expression tree grows
-    as m*k literal L2 terms and a production k=256 codebook OOMs the
-    driver at plan-build time — above ``max_expr_codewords`` total
-    codewords the encode switches to an Arrow-batched numpy argmin
-    (vectorized over the batch; codebooks ship once per worker in the
-    UDF closure). Ties resolve to the lowest code in both engines
+    Two engines, chosen by codebook size and never by the caller:
+    small codebooks compile to pure JVM expressions (zero Python), but
+    the expression tree grows as m*k literal L2 terms and a production
+    k=256 codebook runs out of memory while the plan is built — above
+    ``PQ_MAX_EXPR_CODEWORDS`` total codewords the encode switches to
+    an Arrow-batched numpy argmin (vectorized over the batch;
+    codebooks ship once per worker in the UDF closure). Ties resolve to the lowest code in both engines
     (numpy argmin takes the first minimum). The original vector column
     is untouched; storage-conscious callers drop it after encoding."""
     m, k, subdim = _pq_geometry(codebooks)
-    if m * k <= max_expr_codewords:
+    if m * k <= PQ_MAX_EXPR_CODEWORDS:
         return df.withColumn(
             code_col, _pq_codes_expr(_as_double(F.col(vec_col)), codebooks)
         )

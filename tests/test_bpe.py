@@ -13,10 +13,8 @@ import pytest
 from htmlparser2_spark.operators.bpe import (
     EOW,
     _word_seg,
-    apply_merges,
     encode_bpe,
     merges_to_df,
-    segment_expr,
     train_bpe,
     train_bpe_on_freqs,
     word_frequencies,
@@ -25,8 +23,8 @@ from htmlparser2_spark.operators.bpe import (
 
 def _encode_py(text: str, merges) -> str:
     """Reference encoder: segment, then apply merges in rank order
-    with plain str.replace — the exact semantics the Catalyst chain
-    must reproduce."""
+    with plain str.replace — the semantics of the SQL oracle's replace
+    chain, which encode_bpe's per-word kernel must reproduce."""
     import re
 
     words = re.findall("[a-z]+", (text or "").lower())
@@ -120,16 +118,31 @@ def test_spark_encode_matches_python(spark):
 
 
 @pytest.mark.spark
+def _assert_map_only(df):
+    p = _plan(df)
+    assert "ArrowEvalPython" in p, p
+    for op in ("Exchange", "Join", "Aggregate"):
+        assert op not in p, (op, p)
+
+
+@pytest.mark.spark
 def test_encode_plan_is_map_only(spark):
-    """The replace chain must stay a single map-only Project: no
-    Exchange, no Python evaluation, no join against the merge table
-    (merges are plan literals)."""
+    """Encoding is one map-only Arrow UDF projection: no Exchange, and
+    no Join or Aggregate against the merge table (it is closure state,
+    never a plan side)."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    merges = [(1, "e", EOW, 0), (2, "t", "h", 0)]
-    p = _plan(encode_bpe(docs, merges))
-    assert "Exchange" not in p
-    assert "Python" not in p and "mapInPandas" not in p
-    assert "Join" not in p
+    _assert_map_only(encode_bpe(docs, [(1, "e", EOW, 0), (2, "t", "h", 0)]))
+
+
+@pytest.mark.spark
+def test_encode_trained_table_plan_is_map_only(spark):
+    """A table trained on the corpus (not only a hand-written one)
+    keeps the same map-only plan: the table's size picks no other
+    path."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    merges = train_bpe(word_frequencies(docs.limit(40), top_words=40), 6)
+    assert len(merges) == 6
+    _assert_map_only(encode_bpe(docs, merges))
 
 
 @pytest.mark.spark
@@ -137,29 +150,6 @@ def test_merges_to_df_roundtrip(spark):
     merges = [(1, "l", "o", 7), (2, "lo", "w", 7)]
     out = merges_to_df(spark, merges).collect()
     assert [tuple(r) for r in out] == merges
-
-
-@pytest.mark.spark
-def test_segment_expr_null_and_nonlatin(spark):
-    df = spark.createDataFrame([(None,), ("42 !!",), ("Ab",)], ["text"])
-    got = [r[0] for r in df.select(segment_expr("text")).collect()]
-    assert got == ["", "", "{a}{b}{%s}" % EOW]
-
-
-@pytest.mark.spark
-def test_apply_merges_column_matches_str_replace(spark):
-    merges = train_bpe_on_freqs([("aaa", 1), ("abab", 3), ("low", 2)], 4)
-    df = spark.createDataFrame(
-        [("aaa abab low lowaaa",), ("ababab",)], ["text"]
-    )
-    got = [
-        r[0]
-        for r in df.select(
-            apply_merges(segment_expr("text"), merges)
-        ).collect()
-    ]
-    want = [_encode_py("aaa abab low lowaaa", merges), _encode_py("ababab", merges)]
-    assert got == want
 
 
 # ------------------------------------------------------- property
@@ -228,12 +218,12 @@ def test_trainer_differential_against_symbol_list_simulation():
         assert re.findall(r"\{([^}]*)\}", seg) == sim, seed
 
 
-# ------------------------------------------------ dual-engine encoder
+# ---------------------------------------------------------- encoder
 
 
 def test_priority_encoder_matches_sequential_replace():
     """encode_word_py merges the lowest-rank pair present iteratively;
-    the jvm chain replays every merge in rank order. Provably equal
+    the reference replays every merge in rank order. Provably equal
     (a merge's output symbol only occurs in later-rank rules) — pinned
     here by a seeded differential over overlap-prone random corpora,
     the same campaign shape as the trainer differential."""
@@ -256,69 +246,47 @@ def test_priority_encoder_matches_sequential_replace():
     assert encode_text_py(None, {}) == ""
 
 
-def test_apply_merges_refuses_past_jvm_bound():
-    """The bound is checked before any Column is built: this runs with
-    no SparkContext (the ``-m "not spark"`` loop)."""
-    from htmlparser2_spark.operators.bpe import apply_merges
-
-    merges = [(1, "a", "b", 0), (2, "ab", "c", 0), (3, "abc", EOW, 0)]
-    with pytest.raises(ValueError, match="literal-replace plan bound"):
-        apply_merges("seg", merges, max_jvm_merges=2)
-
-
 @pytest.mark.spark
-def test_encode_jvm_engine_refuses_past_bound(spark):
-    docs = spark.createDataFrame([("ab",)], ["text"])
-    merges = [(1, "a", "b", 0), (2, "ab", EOW, 0)]
-    with pytest.raises(ValueError, match="literal-replace plan bound"):
-        encode_bpe(docs, merges, engine="jvm", max_jvm_merges=1)
-    with pytest.raises(ValueError, match="unknown engine"):
-        encode_bpe(docs, merges, engine="numpy")
-
-
-@pytest.mark.spark
-def test_arrow_engine_matches_jvm(spark):
-    """Bit-identical engines on real corpus text + the one documented
-    non-ASCII edge (U+212A KELVIN SIGN lowercases into [a-z] in both
-    JVM lower() and Python str.lower())."""
-    from pyspark.sql import functions as F
-
+def test_encode_matches_reference_on_edge_inputs(spark):
+    """encode_bpe equals the str.replace reference on real corpus text
+    plus the edge rows: NULL, a word-free string, mixed case, and
+    U+212A KELVIN SIGN, which lowercases into [a-z] ('k') in both
+    Python str.lower() and the SQL oracle's lower()."""
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
-    docs = docs.select("doc_id", "text").union(
-        spark.createDataFrame(
-            [(100001, "Kelvin siKn"), (100002, None)],
-            ["doc_id", "text"],
-        )
+    edge = spark.createDataFrame(
+        [(100001, "\u212aelvin si\u212an"), (100002, None), (100003, "42 !!"),
+         (100004, "Ab")],
+        "doc_id long, text string",
     )
+    docs = docs.select("doc_id", "text").union(edge)
     merges = train_bpe(word_frequencies(docs, top_words=60), 15)
-    jvm = encode_bpe(docs, merges, engine="jvm")
-    arrow = encode_bpe(docs, merges, engine="arrow")
-    j = {r["doc_id"]: (r["bpe_seg"], r["n_bpe"]) for r in jvm.collect()}
-    a = {r["doc_id"]: (r["bpe_seg"], r["n_bpe"]) for r in arrow.collect()}
-    assert j == a
+    got = {r["doc_id"]: (r["bpe_seg"], r["n_bpe"])
+           for r in encode_bpe(docs, merges).collect()}
+    assert len(got) == 64
+    for doc_id, text in docs.collect():
+        seg = _encode_py(text, merges)
+        assert got[doc_id] == (seg, seg.count("{")), doc_id
+    assert "{k}" in _encode_py("\u212a", [])
 
 
 @pytest.mark.spark
-def test_encode_auto_switches_engine_and_stays_map_only(spark):
-    """auto = jvm at/below the bound, arrow above it; BOTH plans are
-    map-only (no Exchange, no Join — the merge table is closure/plan
-    state, never a joined side)."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    merges = train_bpe(
-        word_frequencies(docs.limit(40), top_words=40), 6
+def test_encode_without_merges_segments_null_and_nonlatin(spark):
+    """With an empty merge table the output is the bare character
+    segmentation: NULL and a word-free string give "", and letters are
+    lowercased with the end-of-word marker appended."""
+    df = spark.createDataFrame(
+        [(1, None), (2, "42 !!"), (3, "Ab")], "doc_id long, text string"
     )
-    auto_small = _plan(encode_bpe(docs, merges, max_jvm_merges=6))
-    assert "Python" not in auto_small and "Exchange" not in auto_small
-    auto_big = _plan(encode_bpe(docs, merges, max_jvm_merges=5))
-    assert "ArrowEvalPython" in auto_big
-    assert "Exchange" not in auto_big and "Join" not in auto_big
+    got = [(r["bpe_seg"], r["n_bpe"])
+           for r in encode_bpe(df, []).orderBy("doc_id").collect()]
+    assert got == [("", 0), ("", 0), ("{a}{b}{%s}" % EOW, 3)]
 
 
 @pytest.mark.spark
 def test_arrow_engine_depth_independent(spark):
-    """The arrow kernel must accept a merge table past the jvm bound —
-    a structurally-valid synthetic 300-merge table (each word's prefix
-    chain) encodes without touching the literal-plan path."""
+    """The kernel's output does not depend on the merge table's depth:
+    a structurally-valid synthetic 300+-merge table (each word's prefix
+    chain) encodes exactly like a direct encode_text_py call."""
     from htmlparser2_spark.operators.bpe import encode_text_py
 
     import random
@@ -343,12 +311,12 @@ def test_arrow_engine_depth_independent(spark):
             seen.add(pair)
             rank += 1
             merges.append((rank, pair[0], pair[1], 1))
-    assert len(merges) > 260  # past MAX_JVM_MERGES
+    assert len(merges) > 260
     docs = spark.createDataFrame(
         [(i, " ".join(rng.choice(words) for _ in range(5))) for i in range(20)],
         ["doc_id", "text"],
     )
-    enc = encode_bpe(docs, merges)  # auto -> arrow
+    enc = encode_bpe(docs, merges)
     ranks = {(l, r): k for k, l, r, _ in merges}
     for r in enc.collect():
         assert r["bpe_seg"] == encode_text_py(r["text"], ranks), r["doc_id"]

@@ -146,14 +146,15 @@ def test_extract_scan_prunes_columns(spark):
 
 def test_minhash_signatures_map_only(spark):
     """The signature stage is a per-row reduction: its plan must be a
-    pure narrow Project over the scan — no shuffle, no aggregate."""
+    narrow projection over the scan (one Arrow UDF eval) — no shuffle,
+    no join, no aggregate."""
     from htmlparser2_spark.operators.dedup import minhash_signatures
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for engine in ("jvm", "arrow"):
-        p = plan(minhash_signatures(docs, n_perm=8, engine=engine))
-        assert "Exchange" not in p
-        assert "Aggregate" not in p
+    p = plan(minhash_signatures(docs, n_perm=8))
+    assert "ArrowEvalPython" in p, p
+    for op in ("Exchange", "Join", "Aggregate"):
+        assert op not in p, (op, p)
 
 
 def test_simhash_map_only(spark):
@@ -391,9 +392,8 @@ def test_tokenization_bound_once_per_row(spark):
     from htmlparser2_spark.operators.quality import gopher_filter
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for engine in ("jvm", "arrow"):
-        p = _optimized(minhash_signatures(docs, n_perm=8, engine=engine))
-        assert p.count("split(") == 1, (engine, p)
+    p = _optimized(minhash_signatures(docs, n_perm=8))
+    assert p.count("split(") == 1, p
     p = _optimized(docs.select(_bigram_array(F.col("text")).alias("bg")))
     assert p.count("split(") == 1, p
     # gopher binds two token arrays (whitespace words + newline lines)

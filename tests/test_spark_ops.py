@@ -132,25 +132,39 @@ def test_minhash_lsh_finds_exact_and_near_dups(spark, dup_docs):
     assert near_found >= 7  # prefix-noised docs: high jaccard, most found
 
 
-def test_minhash_engines_bit_identical(spark, dup_docs):
-    """The Arrow/numpy permutation+min fold must reproduce the pure-
-    Catalyst HOF fold exactly — including the all-null signature for
-    shingle-less documents."""
-    from htmlparser2_spark.operators.dedup import minhash_signatures
+def test_minhash_signatures_match_python_fold(spark, dup_docs):
+    """The Arrow/numpy permutation+min fold equals a plain-Python
+    ``min((a*h + b) % M31)`` fold over Spark-computed
+    ``pmod(xxhash64(shingle), M31)`` base hashes — including the
+    all-null signature of a shingle-less document."""
+    from htmlparser2_spark.operators.dedup import (
+        _MERSENNE,
+        _perm_params,
+        minhash_signatures,
+    )
 
     docs = dup_docs.unionByName(
         spark.createDataFrame([(999_999, "one two")], "doc_id long, text string")
     )
-    jvm = {
-        r["id"]: r["sig"]
-        for r in minhash_signatures(docs, engine="jvm").collect()
+    shingles = {}
+    for doc_id, text in docs.collect():
+        toks = text.split(" ")
+        shingles[doc_id] = [" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)]
+    distinct = sorted({sh for shs in shingles.values() for sh in shs})
+    base = dict(
+        spark.createDataFrame([(sh,) for sh in distinct], "s string")
+        .select("s", F.pmod(F.xxhash64("s"), F.lit(_MERSENNE)))
+        .collect()
+    )
+    params = _perm_params(32, 42)
+    want = {
+        doc_id: [min((a * base[sh] + b) % _MERSENNE for sh in shs)
+                 for a, b in params] if shs else [None] * 32
+        for doc_id, shs in shingles.items()
     }
-    arrow = {
-        r["id"]: r["sig"]
-        for r in minhash_signatures(docs, engine="arrow").collect()
-    }
-    assert jvm == arrow
-    assert arrow[999_999] == [None] * 32  # too short for 3-shingles
+    got = {r["id"]: r["sig"] for r in minhash_signatures(docs).collect()}
+    assert got == want
+    assert got[999_999] == [None] * 32  # too short for 3-shingles
 
 
 def test_ngram_jaccard_pairs(spark, dup_docs):
@@ -254,23 +268,6 @@ def test_lsh_topk_recall_vs_brute_force(spark):
     # result must be a subset of per-bucket candidates.
     assert len(approx & exact) >= len(exact) // 3
     assert all(rank for rank in range(1, 4))
-
-
-def test_candidate_scorer_engines_agree(spark):
-    """ivf_topk and lsh_topk produce identical rankings under the
-    einsum scorer and the Catalyst fold on real embeddings."""
-    from htmlparser2_spark.operators.similarity import ivf_topk, lsh_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5)
-    c = emb.filter(F.col("vec_id") >= 5)
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    for op, kw in ((ivf_topk, {}), (lsh_topk, {"dim": 64, "n_bits": 2})):
-        jvm = {key(r): (r["neighbor_id"], r["sim"])
-               for r in op(q, c, k=3, engine="jvm", **kw).collect()}
-        arrow = {key(r): (r["neighbor_id"], r["sim"])
-                 for r in op(q, c, k=3, engine="arrow", **kw).collect()}
-        assert jvm == arrow and jvm
 
 
 def test_brute_force_engines_agree(spark):
@@ -2415,13 +2412,20 @@ def test_ivfpq_probe_pruning(spark):
 
 
 def test_pq_encode_numpy_engine_matches_expression_engine(spark):
-    """Above the expression-size cap pq_encode switches to the Arrow/
-    numpy argmin path; codes must be identical to the JVM path."""
+    """A codebook past PQ_MAX_EXPR_CODEWORDS takes the Arrow/numpy
+    argmin path; its codes must equal the JVM expression engine
+    (``_pq_codes_expr``) applied directly to the same codebook."""
     import random
-    from htmlparser2_spark.operators.similarity import pq_encode
+    from htmlparser2_spark.operators.similarity import (
+        PQ_MAX_EXPR_CODEWORDS,
+        _as_double,
+        _pq_codes_expr,
+        pq_encode,
+    )
 
     rng = random.Random(21)
-    dim, m, k = 16, 4, 6
+    dim, m, k = 4, 2, 260
+    assert m * k > PQ_MAX_EXPR_CODEWORDS
     sub = dim // m
     codebooks = [
         [[rng.uniform(-1, 1) for _ in range(sub)] for _ in range(k)]
@@ -2431,10 +2435,12 @@ def test_pq_encode_numpy_engine_matches_expression_engine(spark):
         [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(50)],
         "vec_id long, embedding array<double>",
     )
-    expr_codes = {r["vec_id"]: list(r["pq_code"]) for r in
-                  pq_encode(df, codebooks).collect()}
+    expr = df.withColumn(
+        "pq_code", _pq_codes_expr(_as_double(F.col("embedding")), codebooks)
+    )
+    expr_codes = {r["vec_id"]: list(r["pq_code"]) for r in expr.collect()}
     np_codes = {r["vec_id"]: list(r["pq_code"]) for r in
-                pq_encode(df, codebooks, max_expr_codewords=1).collect()}
+                pq_encode(df, codebooks).collect()}
     assert expr_codes == np_codes and len(expr_codes) == 50
 
 

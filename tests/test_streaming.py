@@ -1,5 +1,5 @@
-"""Structured Streaming tests: incremental extraction with checkpoint
-resume, stateful first-seen dedup, and per-host budgets."""
+"""Structured Streaming tests: stateful first-seen dedup and per-host
+budgets."""
 
 from __future__ import annotations
 
@@ -15,22 +15,6 @@ def _pages(spark):
     from htmlparser2_spark.sources.pages import build_pages
 
     return build_pages(spark, SF)
-
-
-def test_stream_extract_incremental_resume(spark, tmp_path):
-    from htmlparser2_spark.streaming.stream_extract import run_stream_once
-
-    src, out, ckpt = str(tmp_path / "src"), str(tmp_path / "out"), str(tmp_path / "ck")
-    pages = _pages(spark)
-    pages.filter(F.length("url") % 2 == 0).write.parquet(src)
-    run_stream_once(spark, src, out, ckpt)
-    n1 = spark.read.parquet(out).count()
-    pages.filter(F.length("url") % 2 == 1).write.mode("append").parquet(src)
-    run_stream_once(spark, src, out, ckpt)
-    res = spark.read.parquet(out)
-    assert res.count() == 500
-    assert res.count() > n1
-    assert res.agg(F.sum("golden_match")).collect()[0][0] == 500
 
 
 def test_stateful_dedup_first_seen(spark, tmp_path):
@@ -123,27 +107,3 @@ def test_stateful_host_budget(spark, tmp_path):
     assert by_host["host0"]["over_budget"] == 1
     assert by_host["host0"]["docs_total"] > 100
     assert sum(r["docs_total"] for r in by_host.values()) == 500
-
-
-def test_windowed_throughput_metrics(spark, tmp_path):
-    from htmlparser2_spark.streaming.stream_extract import (
-        stream_extract,
-        windowed_throughput,
-    )
-
-    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ck")
-    _pages(spark).write.parquet(src)
-    parsed = stream_extract(spark, src)
-    rows = []
-    q = (
-        windowed_throughput(parsed, window="1 minute")
-        .writeStream.foreachBatch(lambda df, _id: rows.extend(df.collect()))
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert sum(r["docs"] for r in rows) == 500
-    assert sum(r["matches"] for r in rows) == 500
-    assert all(r["bytes"] > 0 and r["window"] is not None for r in rows)

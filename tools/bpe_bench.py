@@ -1,15 +1,10 @@
 """Single-thread BPE-encode kernel throughput (no Spark).
 
-The round-4 verdict flagged the literal-replace encode plan as the
-repo's one scale-negative: a production 30k-merge vocabulary cannot be
-a 30k-deep Catalyst expression. operators/bpe.py now ships a dual
-engine; this harness measures the Arrow kernel's per-core work
+Measures the per-core work of ``encode_bpe``'s Arrow kernel
 (``encode_text_py`` — the exact per-row function the pandas UDF runs)
-at a REALISTIC merge-table depth (8k+), demonstrating that encode cost
-is depth-independent: per distinct word it is pair-rank dict lookups,
-never one string scan per merge. For contrast it also replays the
-small-table sequential replace chain (the jvm engine's semantics) in
-pure Python at the jvm bound, whose cost IS linear in table depth.
+at a REALISTIC merge-table depth (8k+): per distinct word the cost is
+pair-rank dict lookups, never one string scan per merge, so encode
+cost does not grow with the table's depth.
 
 Corpus/vocabulary are synthesized deterministically (seeded): the
 sf0.01 documents table's word list is only ~31 distinct words — far
@@ -31,7 +26,6 @@ import time
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from htmlparser2_spark.operators.bpe import (  # noqa: E402
-    MAX_JVM_MERGES,
     WORD_PATTERN,
     encode_text_py,
 )
@@ -109,23 +103,6 @@ def main(n_docs: int = 4000, repeats: int = 3) -> None:
             n += encode_text_py(t, ranks, cache=cache).count("{")
         return n
 
-    # jvm-engine semantics replayed in Python at the jvm bound — the
-    # depth-LINEAR baseline the kernel replaces past MAX_JVM_MERGES.
-    small = merges[:MAX_JVM_MERGES]
-    reps = [("{%s}{%s}" % (l, r), "{%s%s}" % (l, r)) for _, l, r, _ in small]
-
-    def run_chain_small() -> int:
-        n = 0
-        for t in texts:
-            seg = "".join(
-                "".join("{%s}" % c for c in w) + "{</w>}"
-                for w in word_re.findall((t or "").lower())
-            )
-            for pat, rep in reps:
-                seg = seg.replace(pat, rep)
-            n += seg.count("{")
-        return n
-
     def best(fn):
         b, tokens = None, 0
         for _ in range(repeats):
@@ -136,7 +113,6 @@ def main(n_docs: int = 4000, repeats: int = 3) -> None:
         return b, tokens
 
     arrow_s, arrow_tok = best(run_arrow_kernel)
-    chain_s, chain_tok = best(run_chain_small)
     out = {
         "metric": "bpe encode kernel, single thread",
         "n_docs": len(texts),
@@ -147,10 +123,6 @@ def main(n_docs: int = 4000, repeats: int = 3) -> None:
         "arrow_kernel_sec": round(arrow_s, 3),
         "arrow_kernel_mb_per_sec": round(total_bytes / 1e6 / arrow_s, 2),
         "arrow_kernel_tokens": arrow_tok,
-        "n_merges_chain": len(small),
-        "chain_replay_sec": round(chain_s, 3),
-        "chain_replay_mb_per_sec": round(total_bytes / 1e6 / chain_s, 2),
-        "chain_replay_tokens": chain_tok,
     }
     print(json.dumps(out))
 
