@@ -17,7 +17,7 @@ from __future__ import annotations
 from .parser import Parser, ParserOptions
 from .tokenizer import Tokenizer
 
-__all__ = ["fast_text_content", "FastTextExtractor"]
+__all__ = ["fast_text_content", "FastTextExtractor", "TextHandler"]
 
 
 class _Bail(Exception):
@@ -27,27 +27,23 @@ class _Bail(Exception):
 class _FastHandler:
     """Minimal tokenizer callback set: collect text, count tags."""
 
-    __slots__ = ("buf", "lbuf", "parts", "n_tags", "n_texts")
+    __slots__ = ("buf", "parts", "n_tags")
 
     def __init__(self) -> None:
         self.buf = ""
-        self.lbuf = ""
         self.parts: list[str] = []
         self.n_tags = 0
-        self.n_texts = 0
 
     def reset(self, buf: str) -> None:
         self.buf = buf
         self.parts.clear()
         self.n_tags = 0
-        self.n_texts = 0
 
     def is_in_foreign_context(self) -> bool:
         return False
 
     def on_text(self, start: int, end: int) -> None:
         self.parts.append(self.buf[start:end])
-        self.n_texts += 1
 
     def on_text_decoded(self, s: str, end: int) -> None:
         # Batched contract (tokenizer run loop): one pre-decoded string
@@ -57,11 +53,9 @@ class _FastHandler:
         # Parser's opt-in need it; this handler doesn't). RCDATA content
         # (<title>/<textarea>) still arrives via the per-event methods.
         self.parts.append(s)
-        self.n_texts += 1
 
     def on_text_entity(self, cp: int, end: int) -> None:
         self.parts.append(chr(cp))
-        self.n_texts += 1
 
     def on_open_tag_name(self, start: int, end: int) -> None:
         self.n_tags += 1
@@ -112,12 +106,18 @@ class _FastHandler:
         pass
 
 
-class _FullTextHandler:
-    """Parser-level text collector for the fallback path."""
+class TextHandler:
+    """Parser-level textContent collector: text parts plus opened-tag
+    count, reset by every ``Parser.parse`` (``on_parser_init``). The
+    fallback of :class:`FastTextExtractor` and the text extractor for
+    non-default parser options (functions/udfs.py ``_make_extract``)."""
 
     __slots__ = ("parts", "n_tags")
 
     def __init__(self) -> None:
+        self.on_parser_init(None)
+
+    def on_parser_init(self, parser) -> None:
         self.parts: list[str] = []
         self.n_tags = 0
 
@@ -139,7 +139,7 @@ class FastTextExtractor:
     def __init__(self) -> None:
         self._fast = _FastHandler()
         self._tokenizer = Tokenizer(self._fast, light_attrs=True)
-        self._full = _FullTextHandler()
+        self._full = TextHandler()
         self._parser = Parser(self._full, ParserOptions())
         self.n_fallbacks = 0
 
@@ -153,8 +153,6 @@ class FastTextExtractor:
         except _Bail:
             self.n_fallbacks += 1
             full = self._full
-            full.parts.clear()
-            full.n_tags = 0
             self._parser.parse(doc)
             return "".join(full.parts), full.n_tags
 

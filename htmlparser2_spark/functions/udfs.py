@@ -6,12 +6,26 @@ Equivalents of the reference's API surface (/root/reference/src/index.ts):
 
 * ``extract_text_udf``  — parseDocument + DomUtils textContent, fused into
   a text-only handler (no DOM materialization) for the hot path
+* ``inner_text_udf``    — DomUtils innerText (block-aware text)
 * ``clean_text_udf``    — boilerplate-stripping variant
 * ``main_content_udf``  — readability-lite main-content block selection
+* ``markdown_udf``      — structure-keeping HTML -> Markdown
 * ``dom_nodes_udf``     — parseDocument as an adjacency node array
+* ``node_counts_udf``   — per-document (name, cnt) node-name histogram
 * ``parser_events_udf`` — the Handler event stream (testHelper shape)
 * ``feed_udf``          — parseFeed
+* ``sitemap_udf``       — sitemap / sitemap-index parse
 * ``doc_stats_udf``     — per-document node/text/event counters
+* ``sniff_decode_udf``  — charset sniff + decode of raw bytes
+
+Every factory but ``sniff_decode_udf`` is one :func:`_doc_udf`: the one
+batch loop, which builds a per-document function once per Arrow batch
+and feeds it each cell through :func:`_to_str`, the one decoder. Decode
+policy: NULL is the empty document, a STRING cell is used as is, a
+BINARY cell decodes as UTF-8 with U+FFFD replacement (``parse_pages``'s
+``sniff_charset`` sniffs BINARY cells instead). Text extractors
+(``text``, ``main``, ``markdown``) come from :func:`_make_extract`,
+shared with ``plans/extract_job.parse_pages``.
 """
 
 from __future__ import annotations
@@ -32,6 +46,8 @@ from pyspark.sql.types import (
 )
 
 from ..engine.dom import DomArrayHandler, clean_text, inner_text
+from ..engine.encoding import decode_html
+from ..engine.fast_text import FastTextExtractor, TextHandler
 from ..engine.feed import get_feed
 from ..engine.parser import Parser, ParserOptions
 from ..engine.sitemap import get_sitemap
@@ -58,22 +74,19 @@ __all__ = [
 ]
 
 
-def _to_str(value) -> str:
-    if isinstance(value, (bytes, bytearray, memoryview)):
-        return bytes(value).decode("utf-8", "replace")
-    return value or ""
-
-
-class _TextHandler:
-    """Text-only handler: textContent without building a DOM."""
-
-    __slots__ = ("parts",)
-
-    def __init__(self) -> None:
-        self.parts: list[str] = []
-
-    def on_text(self, data: str) -> None:
-        self.parts.append(data)
+def _to_str(value, sniff: bool = False) -> str:
+    """The one payload decoder: an html cell (NULL, STRING or BINARY)
+    -> document string. NULL is the empty document, a STRING is used as
+    is, BINARY decodes as UTF-8 with U+FFFD replacement, or with
+    ``sniff`` through the BOM + meta-prescan decoder
+    (engine/encoding.py ``decode_html``)."""
+    if isinstance(value, str):
+        return value
+    if value is None:
+        return ""
+    if sniff:
+        return decode_html(value)[1]
+    return bytes(value).decode("utf-8", "replace")
 
 
 class _CountingHandler:
@@ -178,94 +191,135 @@ def _make_parser(handler, options: dict, *, batch_text: bool = False) -> Parser:
     return Parser(handler, ParserOptions(**options), batch_text=batch_text)
 
 
+def _make_extract(mode: str, **options):
+    """Reusable extractor: doc string -> (extracted_text, n_tags), reset
+    per document. ``options`` are ParserOptions keywords; every parser
+    here batches text (no mode reads per-event text or positions).
+
+    * ``text``: full textContent. Default options take the
+      tokenizer-only FastTextExtractor (the hot path), any other the
+      full Parser with one :class:`TextHandler`; ``n_tags`` counts
+      opened tags.
+    * ``main``: the readability-lite main-content block of the
+      adjacency DOM (``DomArrayHandler``); ``n_tags`` counts its
+      element nodes.
+    * ``markdown``: engine/markdown.py's MarkdownExtractor, which builds
+      the renderer's compact tree directly; ``n_tags`` counts opened
+      elements.
+    """
+    if mode == "text":
+        if not options:
+            return FastTextExtractor().extract
+        text = TextHandler()
+        parser = _make_parser(text, options, batch_text=True)
+
+        def extract_text(doc: str) -> tuple[str, int]:
+            parser.parse(doc)
+            return "".join(text.parts), text.n_tags
+
+        return extract_text
+    if mode == "main":
+        from ..engine.readability import main_content_text
+
+        dom = DomArrayHandler(with_indices=False)
+        parser = _make_parser(dom, options, batch_text=True)
+
+        def extract_main(doc: str) -> tuple[str, int]:
+            parser.parse(doc)
+            nodes = dom.nodes
+            n_tags = sum(1 for n in nodes if n["type"] in ("tag", "script", "style"))
+            return main_content_text(nodes), n_tags
+
+        return extract_main
+    if mode == "markdown":
+        from ..engine.markdown import MarkdownExtractor
+
+        return MarkdownExtractor(**options).extract
+    raise ValueError(f"unknown extract mode: {mode!r}")
+
+
+def _doc_udf(return_type, make):
+    """The one pandas UDF body over an html column. ``make()`` runs once
+    per Arrow batch and returns the per-document function, typically
+    closing over one Parser that ``parse()`` resets per document. Every
+    cell reaches it through :func:`_to_str`. For a struct
+    ``return_type`` it returns one dict (DataFrame row) per document."""
+    names = return_type.names if isinstance(return_type, StructType) else None
+
+    # Series -> Series hints select Spark's scalar pandas UDF, which
+    # takes a DataFrame as the value of a struct column.
+    def run(html: pd.Series) -> pd.Series:
+        one = make()
+        # Series.__iter__ is slow; pull a plain list once per batch.
+        out = [one(_to_str(v)) for v in html.tolist()]
+        if names is None:
+            return pd.Series(out, dtype=object)
+        return pd.DataFrame(out, columns=names)
+
+    return F.pandas_udf(run, return_type)
+
+
+def _parsed(new_handler, result, options: dict, *, batch_text: bool = False):
+    """``make`` for a UDF whose value is ``result(handler)`` after one
+    parse of the document."""
+
+    def make():
+        handler = new_handler()
+        parser = _make_parser(handler, options, batch_text=batch_text)
+
+        def one(doc: str):
+            parser.parse(doc)
+            return result(handler)
+
+        return one
+
+    return make
+
+
+def _on_dom(fn, options: dict, *, batch_text: bool = True):
+    """``make`` for a UDF whose value is ``fn(nodes)`` of the parsed
+    adjacency DOM (no source indices)."""
+    return _parsed(
+        lambda: DomArrayHandler(with_indices=False),
+        lambda dom: fn(dom.nodes),
+        options,
+        batch_text=batch_text,
+    )
+
+
+def _extracted(mode: str, options: dict):
+    """``make`` for a UDF whose value is the text of ``_make_extract``."""
+
+    def make():
+        extract = _make_extract(mode, **options)
+        return lambda doc: extract(doc)[0]
+
+    return make
+
+
 # ------------------------------------------------------------------
 # The pandas UDF factories take engine options and return a column fn.
-# A fresh Parser is reused across the batch (reset per document), so
-# per-row setup cost is one object reset, not object construction.
 
 
 def extract_text_udf(**options):
-    @F.pandas_udf(StringType())
-    def _extract(html: pd.Series) -> pd.Series:
-        if not options:
-            # Default HTML options: tokenizer-only fast path (~2x),
-            # bails to the full parser on foreign content.
-            from ..engine.fast_text import FastTextExtractor
-
-            extractor = FastTextExtractor()
-
-            def one(value) -> str:
-                return extractor.extract(_to_str(value))[0]
-
-        else:
-            handler = _TextHandler()
-            parser = _make_parser(handler, options, batch_text=True)
-
-            def one(value) -> str:
-                handler.parts.clear()
-                parser.parse(_to_str(value))
-                return "".join(handler.parts)
-
-        return html.map(one)
-
-    return _extract
+    return _doc_udf(StringType(), _extracted("text", options))
 
 
 def inner_text_udf(**options):
-    @F.pandas_udf(StringType())
-    def _inner(html: pd.Series) -> pd.Series:
-        # One handler+parser per batch; parse() resets them per document
-        # (on_parser_init re-inits the tree, like the reference
-        # DomHandler), so per-row cost is a state reset, never object
-        # construction.
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, options, batch_text=True)
-
-        def one(value) -> str:
-            parser.parse(_to_str(value))
-            return inner_text(handler.nodes)
-
-        return html.map(one)
-
-    return _inner
+    return _doc_udf(StringType(), _on_dom(inner_text, options))
 
 
 def clean_text_udf(**options):
-    @F.pandas_udf(StringType())
-    def _clean(html: pd.Series) -> pd.Series:
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, options, batch_text=True)
-
-        def one(value) -> str:
-            parser.parse(_to_str(value))
-            return clean_text(handler.nodes)
-
-        return html.map(one)
-
-    return _clean
+    return _doc_udf(StringType(), _on_dom(clean_text, options))
 
 
 def main_content_udf(**options):
     """Readability-lite main-content selection (north rule's "HTML
     boilerplate strip ... DOM heuristics"): parse, score block
     candidates by link-penalized subtree text mass, return the winning
-    block's normalized text (engine/readability.py). Same batch shape
-    as clean_text_udf: one reused parser per Arrow batch."""
-
-    @F.pandas_udf(StringType())
-    def _main(html: pd.Series) -> pd.Series:
-        from ..engine.readability import main_content_text
-
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, options, batch_text=True)
-
-        def one(value) -> str:
-            parser.parse(_to_str(value))
-            return main_content_text(handler.nodes)
-
-        return html.map(one)
-
-    return _main
+    block's normalized text (engine/readability.py) — the same path as
+    ``parse_pages(mode="main")``."""
+    return _doc_udf(StringType(), _extracted("main", options))
 
 
 NODE_SCHEMA = ArrayType(
@@ -298,23 +352,17 @@ def dom_nodes_udf(with_ancestors: bool = False, **options):
     """``with_ancestors=True`` adds an ``ancestors array<int>`` field
     (open-element node ids, root-first) — the descendant axis for
     relational DOM queries (operators/domquery.py elements_inside)."""
-    schema = NODE_ANC_SCHEMA if with_ancestors else NODE_SCHEMA
-
-    @F.pandas_udf(schema)
-    def _nodes(html: pd.Series) -> pd.Series:
-        # Batch-level reuse is safe for the returned node lists:
-        # on_parser_init binds a *fresh* list per document, so a
-        # previously returned list is never mutated by the next parse.
-        handler = DomArrayHandler(with_ancestors=with_ancestors)
-        parser = _make_parser(handler, options)
-
-        def one(value):
-            parser.parse(_to_str(value))
-            return handler.nodes
-
-        return html.map(one)
-
-    return _nodes
+    # Returning handler.nodes is safe: on_parser_init binds a *fresh*
+    # list per document, so a returned list is never mutated by the
+    # next parse.
+    return _doc_udf(
+        NODE_ANC_SCHEMA if with_ancestors else NODE_SCHEMA,
+        _parsed(
+            lambda: DomArrayHandler(with_ancestors=with_ancestors),
+            lambda dom: dom.nodes,
+            options,
+        ),
+    )
 
 
 NODE_COUNT_SCHEMA = ArrayType(
@@ -336,21 +384,15 @@ def node_counts_udf(**options):
     count, so the downstream ``explode -> groupBy -> sum`` shuffles
     kilobytes per partition at any corpus scale.
     """
-
-    @F.pandas_udf(NODE_COUNT_SCHEMA)
-    def _counts(html: pd.Series) -> pd.Series:
-        handler = _NodeCountHandler()
-        parser = _make_parser(handler, options, batch_text=True)
-
-        def one(value):
-            parser.parse(_to_str(value))
-            return [
-                {"name": k, "cnt": v} for k, v in handler.counts.items()
-            ]
-
-        return html.map(one)
-
-    return _counts
+    return _doc_udf(
+        NODE_COUNT_SCHEMA,
+        _parsed(
+            _NodeCountHandler,
+            lambda h: [{"name": k, "cnt": v} for k, v in h.counts.items()],
+            options,
+            batch_text=True,
+        ),
+    )
 
 
 EVENT_SCHEMA = ArrayType(
@@ -418,18 +460,9 @@ class _EventArrayHandler:
 
 
 def parser_events_udf(**options):
-    @F.pandas_udf(EVENT_SCHEMA)
-    def _events(html: pd.Series) -> pd.Series:
-        handler = _EventArrayHandler()
-        parser = _make_parser(handler, options)
-
-        def one(value):
-            parser.parse(_to_str(value))
-            return handler.events
-
-        return html.map(one)
-
-    return _events
+    return _doc_udf(
+        EVENT_SCHEMA, _parsed(_EventArrayHandler, lambda h: h.events, options)
+    )
 
 
 _MEDIA_SCHEMA = StructType(
@@ -479,44 +512,24 @@ FEED_SCHEMA = StructType(
 )
 
 
-def feed_udf():
-    @F.pandas_udf(FEED_SCHEMA)
-    def _feed(xml: pd.Series) -> pd.DataFrame:
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, {"xml_mode": True}, batch_text=True)
-        rows = []
-        for value in xml:
-            parser.parse(_to_str(value))
-            feed = get_feed(handler.nodes)
-            if feed is None:
-                rows.append({f.name: None for f in FEED_SCHEMA.fields})
-                continue
-            items = [
-                {
-                    "id": it.get("id"),
-                    "title": it.get("title"),
-                    "link": it.get("link"),
-                    "description": it.get("description"),
-                    "pubDate": it.get("pubDate"),
-                    "media": it.get("media") or [],
-                }
-                for it in feed.get("items", [])
-            ]
-            rows.append(
-                {
-                    "type": feed.get("type"),
-                    "id": feed.get("id"),
-                    "title": feed.get("title"),
-                    "link": feed.get("link"),
-                    "description": feed.get("description"),
-                    "updated": feed.get("updated"),
-                    "author": feed.get("author"),
-                    "items": items,
-                }
-            )
-        return pd.DataFrame(rows)
+_ITEM_FIELDS = FEED_SCHEMA["items"].dataType.elementType.names
 
-    return _feed
+
+def _feed_row(nodes) -> dict:
+    feed = get_feed(nodes)
+    if feed is None:
+        return dict.fromkeys(FEED_SCHEMA.names)
+    row = {name: feed.get(name) for name in FEED_SCHEMA.names}
+    row["items"] = [
+        {**{k: it.get(k) for k in _ITEM_FIELDS}, "media": it.get("media") or []}
+        for it in feed.get("items", [])
+    ]
+    return row
+
+
+def feed_udf():
+    """parseFeed (engine xmlMode): NULL struct for non-feed documents."""
+    return _doc_udf(FEED_SCHEMA, _on_dom(_feed_row, {"xml_mode": True}))
 
 
 SITEMAP_SCHEMA = StructType(
@@ -542,22 +555,10 @@ SITEMAP_SCHEMA = StructType(
 def markdown_udf(**options):
     """HTML -> Markdown (engine/markdown.py): the structured-text
     shaping step of a training pipeline — headings/lists/links/tables
-    kept, boilerplate head/script/style dropped. Same batch shape as
-    extract_text_udf: one reused MarkdownExtractor per Arrow batch, the
-    same path as ``parse_pages(mode="markdown")``."""
-
-    @F.pandas_udf(StringType())
-    def _md(html: pd.Series) -> pd.Series:
-        from ..engine.markdown import MarkdownExtractor
-
-        extract = MarkdownExtractor(**options).extract
-
-        def one(value) -> str:
-            return extract(_to_str(value))[0]
-
-        return html.map(one)
-
-    return _md
+    kept, boilerplate head/script/style dropped. The same path as
+    ``parse_pages(mode="markdown")``: one reused MarkdownExtractor per
+    Arrow batch."""
+    return _doc_udf(StringType(), _extracted("markdown", options))
 
 
 def sniff_decode_udf(default: str = "utf-8"):
@@ -576,8 +577,6 @@ def sniff_decode_udf(default: str = "utf-8"):
 
     @F.pandas_udf(schema)
     def _sniff(data: pd.Series) -> pd.DataFrame:
-        from ..engine.encoding import decode_html
-
         rows = [
             decode_html(v if v is not None else b"", default) for v in data
         ]
@@ -586,25 +585,16 @@ def sniff_decode_udf(default: str = "utf-8"):
     return _sniff
 
 
+def _sitemap_row(nodes) -> dict:
+    # Explicit None fields: an empty dict would become NaN and fail the
+    # Arrow conversion of the ``entries`` array.
+    return get_sitemap(nodes) or dict.fromkeys(SITEMAP_SCHEMA.names)
+
+
 def sitemap_udf():
     """Sitemap/sitemap-index parse (engine xmlMode, same batch shape
     as ``feed_udf``): NULL struct for non-sitemap documents."""
-
-    @F.pandas_udf(SITEMAP_SCHEMA)
-    def _sitemap(xml: pd.Series) -> pd.DataFrame:
-        handler = DomArrayHandler(with_indices=False)
-        parser = _make_parser(handler, {"xml_mode": True}, batch_text=True)
-        rows = []
-        for value in xml:
-            parser.parse(_to_str(value))
-            sm = get_sitemap(handler.nodes)
-            if sm is None:
-                rows.append({"kind": None, "entries": None})
-            else:
-                rows.append(sm)
-        return pd.DataFrame(rows)
-
-    return _sitemap
+    return _doc_udf(SITEMAP_SCHEMA, _on_dom(_sitemap_row, {"xml_mode": True}))
 
 
 STATS_SCHEMA = StructType(
@@ -618,21 +608,11 @@ STATS_SCHEMA = StructType(
 
 
 def doc_stats_udf(**options):
-    @F.pandas_udf(STATS_SCHEMA)
-    def _stats(html: pd.Series) -> pd.DataFrame:
-        handler = _CountingHandler()
-        parser = _make_parser(handler, options)
-        rows = []
-        for value in html:
-            parser.parse(_to_str(value))
-            rows.append(
-                {
-                    "n_events": handler.n_events,
-                    "n_tags": handler.n_tags,
-                    "n_text_chars": handler.n_text_chars,
-                    "max_depth": handler.max_depth,
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return _stats
+    return _doc_udf(
+        STATS_SCHEMA,
+        _parsed(
+            _CountingHandler,
+            lambda h: {name: getattr(h, name) for name in STATS_SCHEMA.names},
+            options,
+        ),
+    )

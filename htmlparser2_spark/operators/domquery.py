@@ -13,11 +13,10 @@ nodes table is materialized).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.udfs import _to_str, dom_nodes_udf
+from ..functions.udfs import _doc_udf, _on_dom, dom_nodes_udf
 
 __all__ = [
     "explode_nodes",
@@ -274,26 +273,18 @@ def outer_html(pages: DataFrame, html_col: str = "html", **parser_options) -> Da
     """getOuterHTML-equivalent: parse + re-serialize each document."""
     from pyspark.sql.types import StringType
 
-    from ..engine.dom import DomArrayHandler, serialize
-    from ..engine.parser import Parser, ParserOptions
+    from ..engine.dom import serialize
 
     xml_mode = parser_options.get("xml_mode", False)
-
-    @F.pandas_udf(StringType())
-    def _render(html: pd.Series) -> pd.Series:
-        # One handler+parser per batch (parse() re-inits the tree via
-        # on_parser_init); per-row cost is a state reset, not
-        # construction.
-        handler = DomArrayHandler(with_indices=False)
-        parser = Parser(handler, ParserOptions(**parser_options))
-
-        def one(value):
-            parser.parse(_to_str(value))
-            return serialize(handler.nodes, xml_mode=xml_mode)
-
-        return html.map(one)
-
-    return pages.withColumn("outer_html", _render(F.col(html_col)))
+    render = _doc_udf(
+        StringType(),
+        _on_dom(
+            lambda nodes: serialize(nodes, xml_mode=xml_mode),
+            parser_options,
+            batch_text=False,
+        ),
+    )
+    return pages.withColumn("outer_html", render(F.col(html_col)))
 
 
 def inner_html(pages: DataFrame, *, tag: str = "body", html_col: str = "html",
@@ -305,28 +296,20 @@ def inner_html(pages: DataFrame, *, tag: str = "body", html_col: str = "html",
     is absent."""
     from pyspark.sql.types import StringType
 
-    from ..engine.dom import DomArrayHandler, inner_html_of
-    from ..engine.parser import Parser, ParserOptions
+    from ..engine.dom import inner_html_of
 
     xml_mode = parser_options.get("xml_mode", False)
 
-    @F.pandas_udf(StringType())
-    def _inner(html: pd.Series) -> pd.Series:
-        handler = DomArrayHandler(with_indices=False)
-        parser = Parser(handler, ParserOptions(**parser_options))
+    def inner(nodes):
+        target = next((n for n in nodes if n["name"] == tag), None)
+        if target is None:
+            return None
+        return inner_html_of(nodes, target["node_id"], xml_mode=xml_mode)
 
-        def one(value):
-            parser.parse(_to_str(value))
-            target = next(
-                (n for n in handler.nodes if n["name"] == tag), None
-            )
-            if target is None:
-                return None
-            return inner_html_of(handler.nodes, target["node_id"], xml_mode=xml_mode)
-
-        return html.map(one)
-
-    return pages.withColumn("inner_html", _inner(F.col(html_col)))
+    render = _doc_udf(
+        StringType(), _on_dom(inner, parser_options, batch_text=False)
+    )
+    return pages.withColumn("inner_html", render(F.col(html_col)))
 
 
 def _descendant_ids(

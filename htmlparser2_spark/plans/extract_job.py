@@ -33,6 +33,12 @@ Scale design notes
   ``write()`` chunks (Parser.ts:774-800).
 * Lineage: every output row carries its partition id; per-partition
   metrics (docs, bytes, events, wall_ms) aggregate from the same pass.
+  ``n_events`` (and so ``events``) is not counted: it is the estimate
+  2 x ``n_tags``, kept in ``PARSED_SCHEMA`` for existing readers;
+  ``doc_stats_udf`` counts events exactly.
+* Documents are decoded and extracted by functions/udfs.py's
+  ``_to_str`` and ``_make_extract``, the same decoder and extractors
+  as the HTML UDFs.
 """
 
 from __future__ import annotations
@@ -52,6 +58,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..functions.udfs import _make_extract, _to_str
 
 __all__ = ["parse_pages", "run_extract", "partition_metrics"]
 
@@ -75,50 +83,6 @@ PARSED_SCHEMA = StructType(
 _UDF_INPUTS = ("url", "html", "text", "lang")
 
 
-def _make_extract(mode: str):
-    """Per-worker extractor: doc string -> (extracted_text, n_tags).
-
-    One reused extractor per worker, reset per document. ``main`` and
-    ``markdown`` parse with batched text (``Parser(batch_text=True)``):
-    neither reads per-event text granularity or positions.
-
-    * ``text`` is the hot path: tokenizer-only FastTextExtractor, full
-      textContent; ``n_tags`` counts opened tag names.
-    * ``main`` parses to the adjacency DOM (``DomArrayHandler``) and
-      runs the readability-lite main-content selection (north rule's
-      boilerplate strip); ``n_tags`` counts its element nodes.
-    * ``markdown`` is engine/markdown.py's MarkdownExtractor: the parser
-      builds the renderer's compact tree directly (``TreeHandler``, no
-      adjacency DOM) — the same path as ``markdown_udf``; ``n_tags``
-      counts opened elements, as ``main`` does.
-    """
-    if mode == "markdown":
-        from ..engine.markdown import MarkdownExtractor
-
-        return MarkdownExtractor().extract
-    if mode == "main":
-        from ..engine.dom import DomArrayHandler
-        from ..engine.parser import Parser
-        from ..engine.readability import main_content_text
-
-        handler = DomArrayHandler(with_indices=False)
-        parser = Parser(handler, batch_text=True)
-        element_types = ("tag", "script", "style")
-
-        def extract(doc: str) -> tuple[str, int]:
-            parser.parse(doc)
-            nodes = handler.nodes
-            n_tags = sum(1 for n in nodes if n["type"] in element_types)
-            return main_content_text(nodes), n_tags
-
-        return extract
-    if mode != "text":
-        raise ValueError(f"unknown extract mode: {mode!r}")
-    from ..engine.fast_text import FastTextExtractor
-
-    return FastTextExtractor().extract
-
-
 def _parse_batches_fn(mode: str, sniff_charset: bool = False):
     def _parse_batches(
         batches: Iterator[pd.DataFrame],
@@ -130,21 +94,6 @@ def _parse_batches_fn(mode: str, sniff_charset: bool = False):
         t0 = time.perf_counter()
 
         extract = _make_extract(mode)
-        if sniff_charset:
-            from ..engine.encoding import decode_html
-
-            def to_doc(html):
-                return "" if html is None else decode_html(html)[1]
-
-        else:
-
-            def to_doc(html):
-                return (
-                    html.decode("utf-8", "replace")
-                    if html is not None
-                    else ""
-                )
-
         for batch in batches:
             # Series.__iter__ is slow; pull plain python lists once per
             # batch.
@@ -167,21 +116,26 @@ def _parse_batches_fn(mode: str, sniff_charset: bool = False):
             for html, golden in zip(htmls, goldens):
                 # NULL payloads (fetch failures in real crawls) parse as
                 # empty documents instead of failing the task. With
-                # sniff_charset, bytes go through the BOM + meta
-                # prescan decoder (engine/encoding.py) instead of
+                # sniff_charset, BINARY payloads go through the BOM +
+                # meta prescan decoder (engine/encoding.py) instead of
                 # assumed-UTF-8.
-                doc = to_doc(html)
-                extracted, n_tags = extract(doc)
+                extracted, n_tags = extract(_to_str(html, sniff_charset))
                 extracted_col.append(extracted)
                 match_col.append(
                     1 if golden is not None and extracted == golden else 0
                 )
                 tags_col.append(n_tags)
-                # Lineage-only approximation: opens+closes pair up, so
-                # event volume ~ 2 x tags (exact counting lives in
+                # Not a count: opens+closes pair up, so event volume is
+                # estimated as 2 x tags (exact counting lives in
                 # doc_stats_udf).
                 events_col.append(2 * n_tags)
-                bytes_col.append(len(html) if html is not None else 0)
+                # UTF-8 bytes for STRING payloads: octet_length(html),
+                # the measure jumbo_bytes routes on.
+                bytes_col.append(
+                    0 if html is None
+                    else len(html.encode()) if isinstance(html, str)
+                    else len(html)
+                )
             yield pd.DataFrame(
                 {
                     "url": batch["url"],
@@ -209,6 +163,14 @@ def parse_pages(
     sniff_charset: bool = False,
 ) -> DataFrame:
     """Parse a pages DataFrame with one ``mapInPandas`` pass.
+
+    ``html`` may be a BINARY or a STRING column. NULL parses as the
+    empty document; BINARY decodes as UTF-8 with U+FFFD replacement, or
+    with ``sniff_charset=True`` through the BOM + meta-prescan decoder;
+    STRING is used as is. ``html_bytes`` is ``octet_length(html)``:
+    bytes for BINARY, UTF-8 bytes for STRING. ``mode`` is ``text``
+    (full textContent), ``main`` (readability-lite main content) or
+    ``markdown``.
 
     ``n_partitions`` (``n``) defaults to ``defaultParallelism``: one
     Python task per core. Every Arrow-UDF task costs a fixed ~0.25
@@ -279,7 +241,10 @@ def parse_pages(
 
 
 def partition_metrics(parsed: DataFrame) -> DataFrame:
-    """Per-partition lineage: docs, bytes, events, wall_ms."""
+    """Per-partition lineage: docs, bytes, events, wall_ms.
+
+    ``events`` sums ``n_events``, the 2 x ``n_tags`` estimate, not a
+    count of parser events."""
     return parsed.groupBy("pid").agg(
         F.count(F.lit(1)).alias("docs"),
         F.sum("html_bytes").alias("bytes"),

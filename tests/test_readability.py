@@ -77,7 +77,7 @@ def test_extract_main_mode_matches_exact_event_dom(doc, options):
     """parse_pages(mode="main") parses with batched text; its output
     must equal main_content_text of the exact per-event DOM (default
     options, like the extract job)."""
-    from htmlparser2_spark.plans.extract_job import _make_extract
+    from htmlparser2_spark.functions.udfs import _make_extract
 
     handler = DomArrayHandler(with_indices=False)
     Parser(handler).parse(doc)
