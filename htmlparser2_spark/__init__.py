@@ -27,8 +27,13 @@ Spark level (Arrow-batched, cluster scale):
   plans.curate_job:     quality -> dedup -> decontaminate -> sample/rebalance
   streaming:            stateful first-seen dedup + per-host budgets
   sources:              pages synthesis, snapshot tables, WARC/WET, CDX
+
+Importing the package installs ``_zipcache`` first (CPython < 3.13): a
+Python worker then re-reads a zip archive on ``sys.path`` only when it
+changed, not in every task.
 """
 
+from . import _zipcache  # noqa: F401  (first: patches zipimport)
 from .engine.dom import (
     DefaultHandler,
     DomArrayHandler,

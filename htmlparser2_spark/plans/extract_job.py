@@ -7,15 +7,18 @@ per-partition lineage, and checkpoint-resumable bucketed writes.
 
 Scale design notes
 ------------------
-* One Python task per core. Each Arrow-UDF task pays a fixed ~0.25
-  CPU-s in the Python worker whatever its data (Spark 4.1 + CPython
-  3.11: ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
-  which makes every ``zipimporter`` re-read ``pyspark.zip``'s
-  directory, once per task). An identity ``mapInArrow`` over 20k small
-  pages on a 4-core host cost 1.0 Python CPU-s in 4 tasks and 7.7-8.1 s
-  in 32, with the UDF body at ~0.01 s. So the parse runs
-  ``defaultParallelism`` tasks, not a multiple of it: more tasks buy
-  no tail hiding worth their fixed cost.
+* One Python task per core. Spark's worker calls
+  ``importlib.invalidate_caches()`` in every task, which on CPython
+  < 3.13 made every ``zipimporter`` re-read ``pyspark.zip``'s
+  directory: ~0.2 Python CPU-s per task whatever its data.
+  ``htmlparser2_spark._zipcache`` (installed by importing the package)
+  skips those re-reads from a worker's second task on. An identity
+  ``mapInArrow`` over 20k small pages on a 4-core host, in workers
+  that imported the package, costs 0.07-0.09 Python CPU-s in 4 tasks
+  and 0.52-0.58 s in 32 (0.8 and 5.8-6.4 s without the cache), and
+  0.33 vs 0.81 JVM CPU-s. A task beyond the cores still costs ~0.03
+  CPU-s and no measurement shows tail hiding that repays it, so the
+  parse runs ``defaultParallelism`` tasks.
 * Repartition key is ``xxhash64(url)`` — unique keys, so hash partitioning
   balances row *counts*. A file scan is already spread over its files
   and is not shuffled unless it has fewer files than cores (one small
@@ -173,9 +176,9 @@ def parse_pages(
     ``markdown``.
 
     ``n_partitions`` (``n``) defaults to ``defaultParallelism``: one
-    Python task per core. Every Arrow-UDF task costs a fixed ~0.25
-    Python CPU-s (see the module notes), so more tasks than cores add
-    that overhead with nothing to show for it.
+    Python task per core. Each task beyond that costs ~0.03 CPU-s of
+    Python worker and JVM time (see the module notes) for no measured
+    gain.
 
     Only ``url``, ``html``, ``text`` and ``lang`` (those present) are
     selected into the UDF: other input columns (a sources.pages table's
