@@ -19,10 +19,11 @@ Delivery model: like the reference, ``write()`` tokenizes incrementally
 far are delivered during the ``write()`` call (so createDocumentStream
 element callbacks fire as elements close, not only at ``end()``).
 Constructs that might still change with more input (an unterminated
-tag/comment/rawtext body, an entity touching the buffer end, trailing
-text) are deferred: the tokenizer suspends at the first such construct
-(:meth:`Tokenizer.run_partial`) and the final ``end()`` pass applies
-EOF semantics from the suspension point. Consequences of that contract:
+tag/comment/rawtext body, and trailing text with any entity in it —
+text is final only once a ``<`` follows it) are deferred: the one scan
+loop, :meth:`Tokenizer.run` with ``final=False``, suspends at the first
+such construct, and the ``end()`` pass (``final=True``) applies EOF
+semantics from the suspension point. Consequences of that contract:
 
 * The *final* event stream is chunk-invariant, exactly like the
   reference (Parser.events.spec.ts:13-40); text events may split at
@@ -60,7 +61,7 @@ class StreamingParser:
         self._parser = Parser(handler, options)
         self._handler = handler
         # Incremental tokenization needs our scan-based Tokenizer's
-        # run_partial contract; injected custom tokenizers keep the
+        # run(final=False) contract; injected custom tokenizers keep the
         # buffer-and-parse-at-end behavior.
         self._incremental = (options is None or options.tokenizer_class is None)
         self._buf = ""
@@ -89,41 +90,34 @@ class StreamingParser:
             self._parser.reset()
             self._started = True
 
-    def _pump(self) -> None:
-        """Tokenize as much buffered input as delivery rules (and a
-        possible mid-pass pause()) allow."""
+    def _run(self, final: bool) -> int | None:
+        """One tokenizer pass from the resume position; a pause()
+        raised from a callback stops it at a construct boundary."""
         self._begin()
         self._parser.buffer = self._buf
         self._pumping = True
         try:
-            self._resume = self._parser.tokenizer.run_partial(
+            return self._parser.tokenizer.run(
                 self._buf,
                 self._resume,
                 should_pause=lambda: self._paused,
                 lbuf=self._lbuf,
+                final=final,
             )
         finally:
             self._pumping = False
 
+    def _pump(self) -> None:
+        """Tokenize as much buffered input as delivery rules allow."""
+        self._resume = self._run(False)
+
     def _finish(self) -> None:
-        """The EOF pass; honors a pause() raised from a callback
-        mid-flush by suspending at the construct boundary (resume()
-        continues it)."""
+        """The EOF pass (resume() continues it after a mid-flush
+        pause())."""
         if not self._incremental:
             self._parser.parse(self._buf)
             return
-        self._begin()
-        self._parser.buffer = self._buf
-        self._pumping = True
-        try:
-            pos = self._parser.tokenizer.run(
-                self._buf,
-                self._resume,
-                should_pause=lambda: self._paused,
-                lbuf=self._lbuf,
-            )
-        finally:
-            self._pumping = False
+        pos = self._run(True)
         if pos is not None:  # paused mid-finish: resume() re-enters
             self._resume = pos
             self._end_pending = True
@@ -139,7 +133,7 @@ class StreamingParser:
         self._append(chunk)
         # A write() from inside a handler callback (self._pumping) only
         # buffers: the outer pass's snapshot can't see the new data, and
-        # re-entering run_partial from the stale resume position would
+        # re-entering the tokenizer from the stale resume position would
         # replay already-delivered constructs.
         if self._incremental and not self._paused and not self._pumping:
             self._pump()

@@ -10,10 +10,12 @@ offsets into the document string (the reference uses UTF-16 code units;
 identical for BMP input — see SURVEY.md §7 "hard parts").
 
 Callback surface mirrors Tokenizer.ts:113-130 (positional events carrying
-index pairs, entity events carrying code points). Whole-document parsing
-only: the reference's chunk/pause/resume machinery maps to Spark's own
-batching (SURVEY.md §2.3), so each call to :meth:`Tokenizer.run` processes
-one complete document.
+index pairs, entity events carrying code points). One scan loop,
+:meth:`Tokenizer.run`, serves whole documents and chunked input alike, as
+the reference's does (Tokenizer.ts:898-1011): a whole-document call treats
+the buffer end as EOF, while a streaming ``write()`` pass
+(``final=False``, engine/stream.py) stops at the first construct more
+input could still change and returns the position to resume from.
 
 Every helper consumes input from a given position and returns
 ``(cursor, section_start)``; the main loop ends when ``cursor >= len`` and
@@ -66,7 +68,6 @@ _SPECIAL_BY_FIRST = {
 }
 _RCDATA = frozenset(("title", "textarea"))
 
-_RE_TEXT_STOP = re.compile(r"[<&]")
 _RE_NON_WS = re.compile(r"[^ \t\n\f\r]")
 _RE_TAG_SECTION_END = re.compile(r"[ \t\n\f\r/>]")
 _RE_ATTR_NAME_END = re.compile(r"[ \t\n\f\r/>=]")
@@ -86,8 +87,8 @@ _RE_LIGHT_TAG = re.compile(
     r"""([^ \t\n\f\r/>]*)"""
     r"""(?:>|[ \t\n\f\r/](?:[^>"'=]|=[ \t\n\f\r]*(?:"[^"]*"|'[^']*')?)*>)"""
 )
-# Closing-tag light path (HTML mode): name section ([a-zA-Z] then
-# anything that isn't a section-end char), after which
+# Closing-tag scan (entered at a tag-start char, see _is_tag_start):
+# name section (anything that isn't a section-end char), after which
 # AfterClosingTagName skips EVERYTHING up to the terminating '>' — so
 # one linear match reproduces the exact machine's positions (group-1
 # end = name end, match end = '>' + 1). The junk+'>' suffix is
@@ -95,7 +96,7 @@ _RE_LIGHT_TAG = re.compile(
 # arrives during the junk skip (only EOF inside the name drops the
 # event) — the caller distinguishes the three EOF shapes by where the
 # match ends.
-_RE_LIGHT_CLOSE = re.compile(r"([a-zA-Z][^ \t\n\f\r/>]*)(?:[^>]*>)?")
+_RE_LIGHT_CLOSE = re.compile(r"([^ \t\n\f\r/>]+)(?:[^>]*>)?")
 # Per-attribute light path for the exact machine (attribute events
 # wanted — the full parser): ONE linear match replaces the non-ws /
 # name-end / non-ws / value scans for the dominant shapes — quoted
@@ -123,7 +124,7 @@ def _is_end_of_tag_section(c: str) -> bool:
 
 
 class Tokenizer:
-    """One-shot tokenizer over a complete document string.
+    """Tokenizer over a document string, whole or streamed in chunks.
 
     ``cbs`` is any object providing the callback methods mirroring the
     reference ``Callbacks`` interface: ``on_text(start, end)``,
@@ -171,17 +172,24 @@ class Tokenizer:
 
     # ------------------------------------------------------------------
     def run(self, buf: str, start: int = 0, should_pause=None,
-            lbuf: str | None = None) -> int | None:
-        """Tokenize ``buf`` from ``start`` to EOF (one-shot semantics).
+            lbuf: str | None = None, final: bool = True) -> int | None:
+        """Tokenize ``buf`` from ``start``; positions are absolute
+        document offsets.
 
-        ``start`` supports the incremental path (:meth:`run_partial`):
-        the final ``end()`` pass resumes where the last partial pass
-        suspended; positions stay absolute document offsets either way.
+        ``final=True`` treats the end of ``buf`` as EOF: trailing text
+        and EOF shapes are emitted, then ``on_end``, and None is
+        returned. ``final=False`` (streaming ``write()``) delivers only
+        what more input cannot change and returns the position to
+        resume from: trailing text is held back, and a construct whose
+        completeness check (``_validate_open_tag``, ``_validate_bang``,
+        the ``>`` / ``?>`` finds) fails stops the pass at its ``<``.
+        Text is decoded only when a buffered ``<`` follows it, which is
+        final because no character reference extends across ``<``.
         ``should_pause`` (streaming only) is checked between constructs;
         when it fires, the pass stops WITHOUT the EOF epilogue and
-        returns the position to resume from (None = ran to completion).
-        ``lbuf`` is an optional precomputed ASCII-lowercased shadow of
-        ``buf`` (streaming callers maintain it incrementally).
+        returns the position to resume from. ``lbuf`` is an optional
+        precomputed ASCII-lowercased shadow of ``buf`` (streaming
+        callers maintain it incrementally).
         """
         cbs = self.cbs
         xml = self.xml_mode
@@ -239,6 +247,8 @@ class Tokenizer:
                 if amp < i:
                     amp = find("&", i)
                 if amp != -1 and (lt == -1 or amp < lt):
+                    if lt == -1 and not final:
+                        break  # trailing text: not final yet
                     if on_text_decoded is not None:
                         seg_end = lt if lt != -1 else n
                         on_text_decoded(
@@ -280,25 +290,41 @@ class Tokenizer:
             sec = j
             i = j + 1
             if i >= n:
-                break  # trailing '<' emitted by the epilogue
+                break  # trailing '<': EOF epilogue, or resume at it
 
             c = buf[i]
             # ------------- BeforeTagName dispatch -------------
+            # Streaming passes first check that the construct is complete
+            # in ``buf``, so no helper reaches its EOF path mid-stream.
+            # The checks are conservative: a false "incomplete" only
+            # defers delivery to a later pass.
             if ("a" <= c <= "z" or "A" <= c <= "Z") if not xml else (
                 not _is_end_of_tag_section(c) and c not in "!?/"
             ):
+                if not final and not self._validate_open_tag(buf, lbuf, i):
+                    return j
                 i, sec = open_tag(buf, lbuf, i)
             elif c == "!":
+                if not final and not self._validate_bang(buf, lbuf, j):
+                    return j
                 i, sec = markup_declaration(buf, lbuf, i + 1)
             elif c == "?":
+                if not final and find("?>" if xml else ">", i + 1) == -1:
+                    return j
                 if xml:
                     i, sec = self._processing_instruction(buf, i + 1)
                 else:
                     i, sec = self._bogus_comment(buf, i, i)
             elif c == "/":
+                # Every closing-tag path (name, '</>', '</ ' bogus
+                # comment, junk skip) terminates at a '>'.
+                if not final and find(">", i + 1) == -1:
+                    return j
                 i, sec = closing_tag(buf, lbuf, i + 1)
             # else: '<' stays literal text (sec still at '<'); rescan from i.
 
+        if not final:
+            return sec
         # ------------- EOF epilogue (plain trailing text) -------------
         # A pause() raised from the final construct's callback (or from
         # the trailing-text callback itself) defers the rest of the
@@ -312,147 +338,6 @@ class Tokenizer:
                 return n  # text delivered; on_end deferred to resume
         cbs.on_end()
         return None
-
-    # ------------------------------------------------------------------
-    # Incremental (chunked) tokenization.
-    #
-    # ``run_partial`` tokenizes as much of ``buf`` as is provably final:
-    # each construct is pre-validated for completeness with cheap
-    # find-based scans, then executed through the same helpers the
-    # one-shot path uses. On the first construct that *might* change
-    # with more input (unterminated tag/comment/rawtext body, an entity
-    # touching the buffer end, trailing text) it stops and returns the
-    # position to resume from; the caller re-invokes with the grown
-    # buffer, and the final pass runs :meth:`run` (EOF semantics) from
-    # the last resume point. Validation is deliberately conservative:
-    # a false "incomplete" only defers delivery to ``end()`` (the
-    # pre-existing behavior); validation never lets a helper hit its
-    # EOF path mid-stream, which is what the chunked==whole golden
-    # replays pin.
-
-    # Longest named entity is 33 chars ("&CounterClockwiseContourIntegral;");
-    # any '&' closer than this to the buffer end might still grow.
-    _ENTITY_GUARD = 48
-
-    def run_partial(self, buf: str, start: int, should_pause=None,
-                    lbuf: str | None = None) -> int:
-        """Deliver events for every complete construct in
-        ``buf[start:]``; return the resume position (callers pass it
-        back with more data, or to :meth:`run` at end-of-input).
-
-        ``should_pause`` (optional nullary callable) is checked between
-        constructs so a handler callback can apply backpressure
-        mid-buffer, like the reference's ``pause()``
-        (Parser.ts:805-823): when it returns true, the pass stops at
-        the current construct boundary and the resume position points
-        at the unconsumed remainder. ``lbuf`` is an optional
-        precomputed lowercased shadow (streaming callers maintain it
-        incrementally so repeated pumps stay O(new data), not O(doc)).
-        """
-        cbs = self.cbs
-        xml = self.xml_mode
-        decode = self.decode_entities
-        n = len(buf)
-        if lbuf is None:
-            lbuf = buf.translate(_ASCII_LOWER)
-        text_mode = STRICT if xml else LEGACY
-        guard = self._ENTITY_GUARD
-
-        i = start
-        sec = start
-        while i < n:
-            if should_pause is not None and should_pause():
-                return sec
-            # ---------------- text ----------------
-            if decode:
-                m = _RE_TEXT_STOP.search(buf, i)
-                if m is None:
-                    return sec  # trailing text: not final yet
-                j = m.start()
-                if buf[j] == "&":
-                    res = decode_at(buf, j, text_mode)
-                    # Stability: a decode (or non-decode) is final only
-                    # when no future char can change it. Any '&' within
-                    # the longest-entity window of the buffer end can
-                    # ("&timesbar" + ";" upgrades a legacy &times match
-                    # to the full name; "&am" + "p;" turns a non-match
-                    # into one), and an arbitrarily long numeric run
-                    # touching the end can keep growing.
-                    if n - j < guard or (res is not None and j + res[1] >= n):
-                        if sec < j:
-                            cbs.on_text(sec, j)
-                        return j
-                    if res is None:
-                        i = j + 1  # stable literal '&'
-                        continue
-                    cps, consumed = res
-                    end = j + consumed
-                    if sec < j:
-                        cbs.on_text(sec, j)
-                    for cp in cps:
-                        cbs.on_text_entity(cp, end)
-                    i = sec = end
-                    continue
-            else:
-                j = buf.find("<", i)
-                if j == -1:
-                    return sec
-            # '<' at j. Text before a construct is final in every
-            # continuation (the one-shot loop emits it before
-            # dispatching too), so suspensions flush it and resume at
-            # the '<' itself.
-            if j + 1 >= n:
-                if j > sec:
-                    cbs.on_text(sec, j)
-                return j  # dispatch char not buffered yet
-            c = buf[j + 1]
-            if ("a" <= c <= "z" or "A" <= c <= "Z") if not xml else (
-                not _is_end_of_tag_section(c) and c not in "!?/"
-            ):
-                if not self._validate_open_tag(buf, lbuf, j + 1):
-                    if j > sec:
-                        cbs.on_text(sec, j)
-                    return j
-                if j > sec:
-                    cbs.on_text(sec, j)
-                i, sec = self._open_tag(buf, lbuf, j + 1)
-            elif c == "!":
-                if not self._validate_bang(buf, lbuf, j):
-                    if j > sec:
-                        cbs.on_text(sec, j)
-                    return j
-                if j > sec:
-                    cbs.on_text(sec, j)
-                i, sec = self._markup_declaration(buf, lbuf, j + 2)
-            elif c == "?":
-                terminated = (
-                    buf.find("?>", j + 2) != -1
-                    if xml
-                    else buf.find(">", j + 2) != -1
-                )
-                if not terminated:
-                    if j > sec:
-                        cbs.on_text(sec, j)
-                    return j
-                if j > sec:
-                    cbs.on_text(sec, j)
-                if xml:
-                    i, sec = self._processing_instruction(buf, j + 2)
-                else:
-                    i, sec = self._bogus_comment(buf, j + 1, j + 1)
-            elif c == "/":
-                # Every closing-tag path (name, '</>', '</ ' bogus
-                # comment, junk skip) terminates at a '>'.
-                if buf.find(">", j + 2) == -1:
-                    if j > sec:
-                        cbs.on_text(sec, j)
-                    return j
-                if j > sec:
-                    cbs.on_text(sec, j)
-                i, sec = self._closing_tag(buf, lbuf, j + 2)
-            else:
-                i = j + 1  # literal '<': stays in the text run
-        return sec
 
     def _validate_open_tag(self, buf: str, lbuf: str, i: int) -> bool:
         """True when the open tag starting at ``i`` (first name char) —
@@ -838,12 +723,11 @@ class Tokenizer:
                 # '</>' ignored; the section (from '<') stays in the text.
                 return i + 1, i - 2
             return i + 1, i + 1
-        if not self.xml_mode and ("a" <= c <= "z" or "A" <= c <= "Z"):
-            # Light path: one linear match replaces the section-end
-            # search + junk-skip find (see _RE_LIGHT_CLOSE). Three EOF
-            # shapes, mirroring the exact machine below: name ran to
-            # EOF -> event dropped; name ended but no '>' -> event
-            # emitted, rest dropped; '>' found -> resume past it.
+        if self._is_tag_start(c):
+            # One linear match replaces the section-end search +
+            # junk-skip find (see _RE_LIGHT_CLOSE). Three EOF shapes:
+            # name ran to EOF -> event dropped; name ended but no '>'
+            # -> event emitted, rest dropped; '>' found -> resume past it.
             m = _RE_LIGHT_CLOSE.match(buf, i)
             j = m.end(1)
             if j >= n:
@@ -853,18 +737,6 @@ class Tokenizer:
             if e > j:
                 return e, e
             return n, n  # junk-skip hit EOF: no '>' anywhere ahead
-        if self._is_tag_start(c):
-            m = _RE_TAG_SECTION_END.search(buf, i)
-            if m is None:
-                return n, n  # EOF in closing tag name: dropped
-            j = m.start()
-            cbs.on_close_tag(i, j)
-            if buf[j] == ">":
-                return j + 1, j + 1
-            g = buf.find(">", j)
-            if g == -1:
-                return n, n
-            return g + 1, g + 1
         return self._bogus_comment(buf, i, i)
 
     # ------------------------------------------------------------------

@@ -8,6 +8,8 @@ Invariants (mirroring the reference's own guarantees):
 * text extraction is identical between the event stream, the DOM fold,
   and the relational rebuild
 * serialize -> reparse preserves textContent for HTML-safe trees
+* streaming the document in arbitrary chunks yields the whole-document
+  event stream
 """
 
 from __future__ import annotations
@@ -18,15 +20,30 @@ from hypothesis import strategies as st
 from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.dom import DomArrayHandler, parse_document, text_content
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
+from htmlparser2_spark.engine.stream import StreamingParser
 
 # Markup-ish alphabet biased toward structure characters.
-_MARKUP = st.text(
-    alphabet=st.sampled_from(
-        list("<>/=&;!?-[]'\" \n\tabcdDATAscriptyleXMP#x0123&amp;lt<!--]]>")
-    ),
-    max_size=200,
+_MARKUP_CHARS = st.sampled_from(
+    list("<>/=&;!?-[]'\" \n\tabcdDATAscriptyleXMP#x0123&amp;lt<!--]]>")
 )
+_MARKUP = st.text(alphabet=_MARKUP_CHARS, max_size=200)
 _FREE = st.text(max_size=120)
+# Whole constructs between short _MARKUP runs: single characters rarely
+# spell a complete tag, comment or entity for a chunk cut to split.
+_TOKENS = st.lists(
+    st.one_of(
+        st.sampled_from([
+            "<p>", "</p>", "<p ", "<b x=1>", "<br/>", "</ div>", "<script>",
+            "</script>", "<title>", "</title>", "<svg>", "</svg>",
+            "<plaintext>", "<!--", "-->", "--!>", "<![CDATA[", "]]>",
+            "<!doctype html>", "<?php ?>", "&amp;", "&amp", "&lt;", "&times",
+            "&timesbar;", "&notin;", "&#x41;", "&#65;", "&#", "a='b'",
+            'c="d"', "x=y",
+        ]),
+        st.text(alphabet=_MARKUP_CHARS, max_size=12),
+    ),
+    max_size=20,
+).map("".join)
 
 _OPTIONS = st.fixed_dictionaries(
     {
@@ -52,6 +69,33 @@ def test_never_raises_and_indices_valid(doc, options):
         # the implied EOF close-tags (Parser.ts:699-708).
         assert 0 <= ev["startIndex"] <= len(doc) + 1
         assert 0 <= ev["endIndex"] <= len(doc) + 1
+
+
+@st.composite
+def _chunked_doc(draw):
+    """A document split into the 1-9 chunks it is written in (cut
+    points drawn inside it; repeated cuts give empty writes)."""
+    doc = draw(st.one_of(_MARKUP, _FREE, _TOKENS))
+    cuts = sorted(draw(st.lists(st.integers(0, len(doc)), max_size=8)))
+    return [doc[a:b] for a, b in zip([0, *cuts], [*cuts, len(doc)])]
+
+
+@given(_chunked_doc(), _OPTIONS)
+@settings(max_examples=400, deadline=None)
+def test_chunked_equals_whole(chunks, options):
+    doc = "".join(chunks)
+    whole = EventCollector()
+    parser = Parser(whole, ParserOptions(**options))
+    whole.attach(parser)
+    parser.parse(doc)
+
+    chunked = EventCollector()
+    sp = StreamingParser(chunked, ParserOptions(**options))
+    chunked.attach(sp._parser)
+    for chunk in chunks:
+        sp.write(chunk)
+    sp.end()
+    assert chunked.events == whole.events
 
 
 @given(st.one_of(_MARKUP, _FREE))

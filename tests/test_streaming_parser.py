@@ -290,6 +290,33 @@ def test_legacy_entity_upgrade_across_chunks():
     assert col.events[0]["data"] == ["⨱"]
 
 
+@pytest.mark.parametrize(
+    "doc, at_write",
+    [
+        # Text followed by a buffered '<' is final: its entities decode
+        # at write() time, wherever they sit in the buffer.
+        ("x &amp;<", ["x &"]),
+        ("&timesbar<", ["×bar"]),
+        # Trailing text is not final, so an entity in it waits for a
+        # '<' or end(), however far it lies from the buffer end.
+        ("a &amp; " + "b" * 60, []),
+    ],
+)
+def test_text_delivered_once_a_tag_start_follows(doc, at_write):
+    col = EventCollector()
+    sp = StreamingParser(col)
+    col.attach(sp._parser)
+    sp.write(doc)
+    assert [e["data"][0] for e in col.events if e["$event"] == "text"] == at_write
+    sp.end()
+
+    whole = EventCollector()
+    p = Parser(whole)
+    whole.attach(p)
+    p.parse(doc)
+    assert col.events == whole.events
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_random_chunk_splits_equal_whole(seed):
     """Arbitrary (not just per-char) chunkings across all goldens."""
@@ -524,10 +551,11 @@ def test_pause_does_not_lose_data_reference_parity():
     sp.resume()  # double-resume must be a no-op, like the reference
     assert not sp._paused
     sp.end()
-    # Deviation from the reference's timing: our entity guard defers
-    # the short buffer's delivery to the end() flush, so the handler's
-    # pause lands there and one more resume completes the flush. The
-    # contract under test — no data is lost across pause — holds.
+    # Deviation from the reference's timing: trailing text is final
+    # only once a '<' follows it, so this '<'-free buffer is delivered
+    # by the end() flush; the handler's pause lands there and one more
+    # resume completes the flush. The contract under test — no data is
+    # lost across pause — holds.
     sp.resume()
     texts = [e["data"][0] for e in col.events if e["$event"] == "text"]
     assert "".join(texts) == "& it up!"

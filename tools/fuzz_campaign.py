@@ -6,7 +6,7 @@ the 16 ParserOptions combinations:
 * the parser never raises and indices satisfy
   ``0 <= start <= end <= len(doc) + 1`` (the +1 is reachable — see
   tests/test_eof_edges.py::test_eof_implied_close_index_is_len_plus_one)
-* chunked parse (random split) == whole-document parse, same options
+* chunked parse (1-8 random chunks) == whole-document parse, same options
 * default options: fast_text == DOM textContent
 * default and swept options: ``MarkdownExtractor`` (markdown from the
   parser-built tree, with its open-element count) == adjacency
@@ -83,10 +83,17 @@ def main(n_docs: int = 60000, seed: int = 20260816) -> int:
             col2 = EventCollector()
             sp = StreamingParser(col2, ParserOptions(**opts))
             col2.attach(sp._parser)
-            k = rng.randrange(0, len(doc) + 1)
-            sp.write(doc[:k])
-            sp.end(doc[k:])
-            assert col2.events == col.events, f"chunk!=whole k={k}: {doc!r} {opts}"
+            # 1-8 chunks (0-7 cuts): one document crosses several
+            # write() suspensions, not just one.
+            cuts = sorted(
+                rng.randrange(0, len(doc) + 1) for _ in range(rng.randrange(0, 8))
+            )
+            for a, b in zip([0, *cuts], cuts):
+                sp.write(doc[a:b])
+            sp.end(doc[cuts[-1] if cuts else 0:])
+            assert col2.events == col.events, (
+                f"chunk!=whole cuts={cuts}: {doc!r} {opts}"
+            )
             nodes = parse_document(doc, **opts)
             n_elements = sum(
                 1 for n in nodes if n["type"] in ("tag", "script", "style")
