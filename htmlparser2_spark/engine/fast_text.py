@@ -66,6 +66,10 @@ class _FastHandler:
         ):
             raise _Bail
 
+    # A plain `<name>` (tokenizer opt-in): its on_open_tag_end is a
+    # no-op here, so the fused event is the name event.
+    on_plain_open_tag = on_open_tag_name
+
     # CDATA only tokenizes from literal "<![CDATA[", which in default
     # HTML mode (non-foreign, recognizeCDATA off) the parser reports as a
     # comment — i.e. no text. Foreign context would bail before this.

@@ -181,6 +181,11 @@ _CTX_NONE = 0
 _CTX_SVG = 1
 _CTX_MATHML = 2
 
+# The foreign-context entry an opened element pushes: svg and math
+# start foreign content, an HTML integration point returns to HTML.
+_FOREIGN_PUSH = {"svg": _CTX_SVG, "math": _CTX_MATHML}
+_FOREIGN_PUSH.update(dict.fromkeys(_HTML_INTEGRATION_ELEMENTS, _CTX_NONE))
+
 _RE_NAME_END = re.compile(r"[\s/]")
 
 
@@ -254,6 +259,10 @@ class Parser:
             # golden event streams are untouched.
             self.on_text_decoded = self._on_text_decoded
         self.html_mode = not o.xml_mode
+        # HTML with lower-case tags: outside foreign content a tag name
+        # is its lowercased buffer slice (the common-case branches of
+        # _read_tag_name and on_close_tag).
+        self._plain_names = self.html_mode and o.lower_case_tags
         self.tokenizer = (o.tokenizer_class or Tokenizer)(
             self,
             xml_mode=o.xml_mode,
@@ -346,23 +355,26 @@ class Parser:
         return self.html_mode and name in VOID_ELEMENTS
 
     def _read_tag_name(self, start: int, end: int) -> str:
+        foreign = self._foreign
+        if self._plain_names and len(foreign) == 1:
+            # HTML, lowercased, no foreign ancestor: the common case.
+            name = self.buffer[start:end].lower()
+            return "img" if name == "image" else name
         name = self.buffer[start:end]
-        if self.options.lower_case_tags:
-            name = name.lower()
-        else:
+        if not self.options.lower_case_tags:
             return name
+        name = name.lower()
         if not self.html_mode:
             return name
-        if self._foreign[-1] == _CTX_SVG:
+        if foreign[-1] == _CTX_SVG:
             return SVG_CASE_ADJUSTMENTS.get(name, name)
-        if len(self._foreign) > 1:
-            # A foreign ancestor exists: closing tags for SVG elements at
-            # HTML integration points need case adjustment to match the
-            # stack (Parser.ts:372-384).
-            adjusted = SVG_CASE_ADJUSTMENTS.get(name)
-            if adjusted is not None and adjusted in self._stack:
-                return adjusted
-        if self._foreign[-1] == _CTX_NONE:
+        # A foreign ancestor exists: closing tags for SVG elements at
+        # HTML integration points need case adjustment to match the
+        # stack (Parser.ts:372-384).
+        adjusted = SVG_CASE_ADJUSTMENTS.get(name)
+        if adjusted is not None and adjusted in self._stack:
+            return adjusted
+        if foreign[-1] == _CTX_NONE:
             return "img" if name == "image" else name
         return name
 
@@ -370,48 +382,73 @@ class Parser:
         self.end_index = end
         self._emit_open_tag(self._read_tag_name(start, end))
 
+    def on_plain_open_tag(self, start: int, end: int) -> None:
+        """The tokenizer's fused attribute-less open tag: exactly
+        ``on_open_tag_name(start, end)`` then ``on_open_tag_end(end)``,
+        the same handler events and indices."""
+        self.end_index = end
+        name = self._read_tag_name(start, end)
+        if self._open_head(name):
+            self._open_tail(name, {}, False)
+        self.start_index = end + 1
+
     def _emit_open_tag(self, name: str) -> None:
         self._open_tag_start = self.start_index
-        self._tagname = name
-
-        # A second <form> while one is open is ignored entirely
-        # (Parser.ts:403-417).
-        if self.html_mode and name == "form" and "form" in self._stack:
+        if self._open_head(name):
+            self._tagname = name
+            self._attribs = {}
+            self._attrib_quotes = {}
+        else:
             self._tagname = ""
-            return
 
-        implies_close = self.html_mode and OPEN_IMPLIES_CLOSE.get(name)
-        if implies_close:
-            stack = self._stack
-            while stack and stack[-1] in implies_close:
-                self._pop_element(True)
-        if not self._is_void(name):
-            self._stack.append(name)
-            if self.html_mode:
-                if name == "svg":
-                    self._foreign.append(_CTX_SVG)
-                elif name == "math":
-                    self._foreign.append(_CTX_MATHML)
-                elif name in _HTML_INTEGRATION_ELEMENTS:
-                    self._foreign.append(_CTX_NONE)
+    # Tree construction for an open tag (Parser.ts:393-451) lives in
+    # the next two helpers, the one copy of its rules for the split
+    # events, the fused event and the ``</p>`` synthesis.
+    def _open_head(self, name: str) -> bool:
+        """At the tag name: the implied closes, the stack and
+        foreign-context pushes, then the handler's ``on_open_tag_name``.
+        False when the tag is ignored (a second ``<form>`` while one is
+        open, Parser.ts:403-417)."""
+        stack = self._stack
+        if self.html_mode:
+            if name == "form" and "form" in stack:
+                return False
+            implies_close = OPEN_IMPLIES_CLOSE.get(name)
+            if implies_close:
+                while stack and stack[-1] in implies_close:
+                    self._pop_element(True)
+            if name not in VOID_ELEMENTS:
+                stack.append(name)
+                ctx = _FOREIGN_PUSH.get(name)
+                if ctx is not None:
+                    self._foreign.append(ctx)
+        else:
+            stack.append(name)
         cb = self._cb_open_tag_name
         if cb:
             cb(name)
-        self._attribs = {}
-        self._attrib_quotes = {}
+        return True
+
+    def _open_tail(self, name: str, attribs: dict, is_implied: bool) -> None:
+        """At the tag end: the handler's ``on_open_tag``, then a void
+        element's implied close."""
+        cb = self._cb_open_tag
+        if cb:
+            cb(name, attribs, is_implied)
+        if self.html_mode and name in VOID_ELEMENTS:
+            cb = self._cb_close_tag
+            if cb:
+                cb(name, True)
 
     def _end_open_tag(self, is_implied: bool) -> None:
         self.start_index = self._open_tag_start
-        if self._attribs is not None:
-            cb = self._cb_open_tag
-            if cb:
-                cb(self._tagname, self._attribs, is_implied)
+        attribs = self._attribs
+        if attribs is not None:
+            # Handlers may read _attrib_quotes in on_open_tag
+            # (DomArrayHandler): reset after the events.
+            self._open_tail(self._tagname, attribs, is_implied)
             self._attribs = None
             self._attrib_quotes = None
-        if self._is_void(self._tagname):
-            cb = self._cb_close_tag
-            if cb:
-                cb(self._tagname, True)
         self._tagname = ""
 
     def on_open_tag_end(self, end: int) -> None:
@@ -421,10 +458,22 @@ class Parser:
 
     def on_close_tag(self, start: int, end: int) -> None:
         self.end_index = end
+        stack = self._stack
+        if (
+            self._plain_names
+            and len(self._foreign) == 1
+            and stack
+            and stack[-1] == self.buffer[start:end].lower()
+        ):
+            # Common case: closing the innermost element with no
+            # foreign ancestor, so no alias or case adjustment applies
+            # ("image" is pushed only in foreign content).
+            self._pop_element(False)
+            self.start_index = end + 1
+            return
         name = self._read_tag_name(start, end)
 
         if not self._is_void(name):
-            stack = self._stack
             if stack and stack[-1] == name:
                 # Common case: closing the innermost element.
                 self._pop_element(False)

@@ -66,6 +66,7 @@ _SPECIAL_BY_FIRST = {
     "t": ("title", "textarea"),
     "x": ("xmp",),
 }
+_SPECIAL = frozenset(name for names in _SPECIAL_BY_FIRST.values() for name in names)
 _RCDATA = frozenset(("title", "textarea"))
 
 _RE_NON_WS = re.compile(r"[^ \t\n\f\r]")
@@ -73,9 +74,8 @@ _RE_TAG_SECTION_END = re.compile(r"[ \t\n\f\r/>]")
 _RE_ATTR_NAME_END = re.compile(r"[ \t\n\f\r/>=]")
 _RE_NQ_VALUE_END = re.compile(r"[ \t\n\f\r>&]")
 _RE_NQ_VALUE_END_NODECODE = re.compile(r"[ \t\n\f\r>]")
-# Light-path whole-tag match (name + attribute section + '>') — the
-# group-1 end is the tag-name end (first section-end char), saving the
-# separate _RE_TAG_SECTION_END search on the hot per-tag path.
+# Light-path attribute-section match, entered at the tag-name end (the
+# _RE_TAG_SECTION_END hit) and running to the tag-ending '>'.
 # Attribute-section grammar: quotes are consumable ONLY directly after
 # '=' + optional whitespace — the exact condition under which the
 # attribute machine enters a quoted-value state. Any other quote
@@ -83,9 +83,8 @@ _RE_NQ_VALUE_END_NODECODE = re.compile(r"[ \t\n\f\r>]")
 # and the caller bails to the exact machine. The alternatives are
 # first-character-disjoint ('=' is excluded from the char class), so
 # the scan is backtrack-free/linear.
-_RE_LIGHT_TAG = re.compile(
-    r"""([^ \t\n\f\r/>]*)"""
-    r"""(?:>|[ \t\n\f\r/](?:[^>"'=]|=[ \t\n\f\r]*(?:"[^"]*"|'[^']*')?)*>)"""
+_RE_LIGHT_ATTRS = re.compile(
+    r""">|[ \t\n\f\r/](?:[^>"'=]|=[ \t\n\f\r]*(?:"[^"]*"|'[^']*')?)*>"""
 )
 # Closing-tag scan (entered at a tag-start char, see _is_tag_start):
 # name section (anything that isn't a section-end char), after which
@@ -136,6 +135,14 @@ class Tokenizer:
     ``on_cdata(start, end, offset)``, ``on_declaration(start, end)``,
     ``on_processing_instruction(start, end)``, ``on_end()`` and
     ``is_in_foreign_context()``.
+
+    One method is optional: ``on_plain_open_tag(start, end)``. A
+    callback set that has it receives every plain HTML open tag — an
+    attribute-less ``<name>`` whose lowercased name is not a special
+    (raw-text/RCDATA/plaintext) tag — as that ONE event, which means
+    exactly ``on_open_tag_name(start, end)`` followed by
+    ``on_open_tag_end(end)`` (``end`` is the ``>``, which is also where
+    the name ends). Sets without it, and XML mode, get the two events.
     """
 
     __slots__ = (
@@ -237,6 +244,18 @@ class Tokenizer:
         # alternating on_text/on_text_entity events. Positional
         # handlers (parser, collectors) keep the exact event stream.
         on_text_decoded = getattr(cbs, "on_text_decoded", None)
+        # Plain-tag dispatch (HTML only): `<name>` and `</name…>` take
+        # one match and one callback each instead of the _open_tag /
+        # _closing_tag helper chain. Open tags go that way only for
+        # callback sets with the on_plain_open_tag opt-in (class
+        # docstring); the close-tag match emits the exact machine's
+        # on_close_tag.
+        on_plain_open_tag = (
+            None if xml else getattr(cbs, "on_plain_open_tag", None)
+        )
+        on_close_tag = cbs.on_close_tag
+        tag_section_end = _RE_TAG_SECTION_END.search
+        light_close = _RE_LIGHT_CLOSE.match
         while i < n:
             if should_pause is not None and should_pause():
                 return sec
@@ -303,7 +322,16 @@ class Tokenizer:
             ):
                 if not final and not self._validate_open_tag(buf, lbuf, i):
                     return j
-                i, sec = open_tag(buf, lbuf, i)
+                e = -1
+                if on_plain_open_tag is not None:
+                    m = tag_section_end(buf, i)
+                    if m is not None:
+                        e = m.start()
+                        if buf[e] == ">" and lbuf[i:e] not in _SPECIAL:
+                            on_plain_open_tag(i, e)
+                            i = sec = e + 1
+                            continue
+                i, sec = open_tag(buf, lbuf, i, e)
             elif c == "!":
                 if not final and not self._validate_bang(buf, lbuf, j):
                     return j
@@ -320,7 +348,17 @@ class Tokenizer:
                 # comment, junk skip) terminates at a '>'.
                 if not final and find(">", i + 1) == -1:
                     return j
-                i, sec = closing_tag(buf, lbuf, i + 1)
+                k = i + 1
+                if not xml and k < n and "a" <= lbuf[k] <= "z":
+                    # The tag-start branch of _closing_tag when a '>'
+                    # ends the tag; EOF shapes take the helper.
+                    m = light_close(buf, k)
+                    e = m.end(1)
+                    if m.end() > e:
+                        on_close_tag(k, e)
+                        i = sec = m.end()
+                        continue
+                i, sec = closing_tag(buf, lbuf, k)
             # else: '<' stays literal text (sec still at '<'); rescan from i.
 
         if not final:
@@ -490,7 +528,9 @@ class Tokenizer:
 
     # ------------------------------------------------------------------
     # Open tag + attributes. Entered with ``i`` at the first tag-name char.
-    def _open_tag(self, buf: str, lbuf: str, i: int):
+    def _open_tag(self, buf: str, lbuf: str, i: int, j: int = -1):
+        # j: the tag-name end (_RE_TAG_SECTION_END hit) when the caller
+        # has already searched for it, else -1.
         cbs = self.cbs
         n = len(buf)
         name_start = i
@@ -515,31 +555,30 @@ class Tokenizer:
                         # trailing-data rule for SpecialStartSequence).
                         return n, name_start
 
+        if j == -1:
+            m = _RE_TAG_SECTION_END.search(buf, i)
+            if m is None:
+                return n, n  # EOF inside tag name: tag dropped
+            j = m.start()
+        cbs.on_open_tag_name(name_start, j)
+
         if self.light_attrs:
-            # One linear regex scan over the whole tag — name section
-            # plus attributes to the tag-ending '>' (_RE_LIGHT_TAG). A
-            # quote is a value delimiter only when preceded by '='
-            # (+ optional ws) — the exact condition under which the
-            # attribute machine enters a quoted-value state. Any other
-            # quote placement (quote in a name or unquoted value:
-            # pathological markup) fails the match and bails to the
-            # exact machine below, as does EOF inside the tag (the
-            # exact machine's EOF paths then drop the tag). Attribute
-            # events are skipped by contract; '/>' is equivalent to
-            # '>' here (recognize_self_closing off).
-            m = _RE_LIGHT_TAG.match(buf, name_start)
+            # One linear regex scan over the attribute section to the
+            # tag-ending '>' (_RE_LIGHT_ATTRS). A quote is a value
+            # delimiter only when preceded by '=' (+ optional ws) — the
+            # exact condition under which the attribute machine enters a
+            # quoted-value state. Any other quote placement (quote in a
+            # name or unquoted value: pathological markup) fails the
+            # match and bails to the exact machine below, as does EOF
+            # inside the tag (the exact machine's EOF paths then drop
+            # the tag). Attribute events are skipped by contract; '/>'
+            # is equivalent to '>' here (recognize_self_closing off).
+            m = _RE_LIGHT_ATTRS.match(buf, j)
             if m is not None:
-                cbs.on_open_tag_name(name_start, m.end(1))
                 end = m.end() - 1
                 cbs.on_open_tag_end(end)
                 return self._enter_tag_body(buf, lbuf, end + 1, special)
             # No match: fall through to the exact attribute machine.
-
-        m = _RE_TAG_SECTION_END.search(buf, i)
-        if m is None:
-            return n, n  # EOF inside tag name: tag dropped
-        j = m.start()
-        cbs.on_open_tag_name(name_start, j)
 
         # Fast path: attribute-less tag (`<p>` — the dominant shape).
         if buf[j] == ">":

@@ -1,10 +1,12 @@
 """PDF / layout-parse plumbing over binary payload columns.
 
 The north rule lists "PDF/layout parse" alongside HTML extraction. No
-PDF codec ships in this container, so the decode step is a clearly
-marked deterministic stub behind the same mapInPandas contract the HTML
-path uses — swap ``_extract_pdf_text_stub`` for pdfminer/pypdf and every
-schema, batch shape, and downstream operator stays unchanged.
+PDF library is a dependency, so the decode step is a minimal
+content-stream parser (FlateDecode streams inflated with stdlib zlib)
+with a clearly marked deterministic stub fallback, behind the same
+mapInPandas contract the HTML path uses — swap
+``_extract_pdf_text_stub`` for pdfminer/pypdf and every schema, batch
+shape, and downstream operator stays unchanged.
 
 The layout model is the real contract: a PDF parses into *spans*
 ``(page_no, span_idx, kind, text, x0, y0, x1, y1)``; document text is
@@ -16,6 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -47,6 +50,14 @@ SPAN_SCHEMA = StructType(
 
 
 _RE_STREAM = re.compile(rb"stream\r?\n(.*?)endstream", re.DOTALL)
+# The stream dictionary's filter: one /FlateDecode (bare or as a
+# one-element array) is inflated; any other filter is not decoded.
+_RE_FILTER = re.compile(rb"/Filter\s*(\[\s*/FlateDecode\s*\]|/FlateDecode\b)?")
+# All FlateDecode streams of one document inflate to at most this many
+# bytes together. Deflate reaches ~1000:1, so without a bound one
+# crafted row of a few MB could inflate to GBs inside the worker; the
+# bound keeps a row's content on the scale of an uncompressed payload.
+_MAX_INFLATED_BYTES = 8 << 20
 _RE_BT = re.compile(rb"BT(.*?)ET", re.DOTALL)
 # Text-object operators we understand: positioning (Td/TD/Tm/T*) and
 # show-text (Tj, ', TJ with an array of strings/kerns).
@@ -88,22 +99,57 @@ def _pdf_literal(raw: bytes) -> str:
     return out.decode("latin-1")
 
 
+def _stream_content(
+    payload: bytes, m: re.Match, dict_start: int, budget: int
+) -> tuple[bytes, int]:
+    """A content stream's bytes and how many of them were inflated.
+
+    The stream is inflated with zlib when its dictionary (from the
+    enclosing ``obj``, or ``dict_start``) says ``/Filter /FlateDecode``,
+    to at most ``budget`` bytes. A stream that fails to inflate, that
+    would inflate past ``budget``, or whose filter is not FlateDecode,
+    gives ``b""``."""
+    s = m.start()
+    head = payload[max(dict_start, payload.rfind(b"obj", 0, s)) : s]
+    f = _RE_FILTER.search(head)
+    if f is None:
+        return m.group(1), 0
+    if f.group(1) is None or budget <= 0:  # max_length 0 means no limit
+        return b"", 0
+    inflater = zlib.decompressobj()
+    try:
+        content = inflater.decompress(m.group(1), budget)
+    except zlib.error:
+        return b"", 0
+    # Short of the deflate end: corrupt, truncated, or stopped at the
+    # budget with input left in unconsumed_tail.
+    if not inflater.eof:
+        return b"", 0
+    return content, len(content)
+
+
 def _extract_pdf_text_real(payload: bytes) -> list[dict]:
-    """Minimal REAL layout parser for uncompressed PDFs.
+    """Minimal REAL layout parser for PDF content streams.
 
     Walks ``stream…endstream`` content streams (one page per stream),
-    interprets ``BT…ET`` text objects — ``Td``/``TD``/``Tm``/``T*``
+    inflating ``/Filter /FlateDecode`` ones with zlib, and interprets
+    ``BT…ET`` text objects — ``Td``/``TD``/``Tm``/``T*``
     positioning, ``Tj``/``'``/``TJ`` show-text with escape and octal
     decoding — and emits one span per show-text operator positioned at
     the current text point (width estimated at 6pt/char, 12pt line
-    height: header-level layout, not glyph metrics). Compressed
-    (``/Filter``) streams carry no plain-text operators and simply
-    yield nothing here — a full pdfminer/pypdf replaces this in
-    production behind the same span schema.
+    height: header-level layout, not glyph metrics). A stream that
+    fails to inflate, that would take the document's inflated bytes
+    past ``_MAX_INFLATED_BYTES``, or that carries another filter,
+    yields nothing — a full pdfminer/pypdf replaces this in production
+    behind the same span schema.
     """
     spans: list[dict] = []
+    prev_end = 0
+    budget = _MAX_INFLATED_BYTES
     for page_no, m in enumerate(_RE_STREAM.finditer(payload)):
-        body = m.group(1)
+        body, inflated = _stream_content(payload, m, prev_end, budget)
+        budget -= inflated
+        prev_end = m.end()
         span_idx = 0
         for bt in _RE_BT.finditer(body):
             x, y = 0.0, 0.0
@@ -160,9 +206,10 @@ def _extract_pdf_text_real(payload: bytes) -> list[dict]:
 
 def _extract_pdf_text_stub(payload: bytes) -> list[dict]:
     """PDF layout parse: REAL for uncompressed text operators
-    (:func:`_extract_pdf_text_real`), deterministic STUB fallback when
-    the document yields no parseable text objects (e.g. every stream is
-    compressed — no inflate codec pathway here).
+    (:func:`_extract_pdf_text_real`, FlateDecode streams inflated),
+    deterministic STUB fallback when the document yields no parseable
+    text objects (no content stream, only image/font data, or streams
+    that fail to inflate or exceed the inflate bound).
 
     Raises ValueError on an invalid header exactly like a real parser.
     """

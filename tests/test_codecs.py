@@ -1,7 +1,7 @@
 """Real header/codec parsers over genuinely encoded bytes: PNG IHDR,
 GIF screen descriptor, JPEG SOF frame, WAV RIFF chunks, and the minimal
-uncompressed-PDF text-operator extractor. Unknown formats still fall
-back to the documented deterministic stubs."""
+PDF text-operator extractor (plain and FlateDecode streams). Unknown
+formats still fall back to the documented deterministic stubs."""
 
 from __future__ import annotations
 
@@ -10,8 +10,12 @@ import zlib
 
 import pytest
 
+from htmlparser2_spark.functions import pdf
 from htmlparser2_spark.functions.multimodal import _decode_audio, _decode_image
-from htmlparser2_spark.functions.pdf import _extract_pdf_text_stub
+from htmlparser2_spark.functions.pdf import (
+    _extract_pdf_text_real,
+    _extract_pdf_text_stub,
+)
 
 
 def make_png(width: int, height: int, color_type: int = 6) -> bytes:
@@ -136,6 +140,75 @@ def test_pdf_multi_stream_pages():
     )
     spans = _extract_pdf_text_stub(p)
     assert [(s["page_no"], s["text"]) for s in spans] == [(0, "pg0"), (1, "pg1")]
+
+
+def test_pdf_flate_stream_gives_uncompressed_twin_spans():
+    content = (
+        b"BT /F1 12 Tf 72 700 Td (Hello \\(PDF\\)) Tj "
+        b"0 -14 TD [(li) -20 (ne two)] TJ ET"
+    )
+    plain = _extract_pdf_text_stub(_pdf(content))
+    assert [s["text"] for s in plain] == ["Hello (PDF)", "line two"]
+    packed = zlib.compress(content)
+    for filt in (b"/FlateDecode", b"[ /FlateDecode ]"):
+        pdf = (
+            b"%PDF-1.4\n1 0 obj\n"
+            + b"<< /Length %d /Filter %s >>\nstream\n" % (len(packed), filt)
+            + packed
+            + b"\nendstream\nendobj\ntrailer"
+        )
+        assert _extract_pdf_text_stub(pdf) == plain
+
+
+def test_pdf_stream_that_fails_to_inflate_yields_no_spans():
+    good = b"BT 0 10 Td (kept) Tj ET"
+    bad = (
+        b"<< /Length 9 /Filter /FlateDecode >>\nstream\nnot zlib!\n"
+        b"endstream"
+    )
+    truncated = (
+        b"<< /Filter /FlateDecode >>\nstream\n"
+        + zlib.compress(b"BT (cut) Tj ET")[:-4]
+        + b"\nendstream"
+    )
+    pdf = (
+        b"%PDF-1.4\n1 0 obj\n" + bad + b"\nendobj\n2 0 obj\n" + truncated
+        + b"\nendobj\n3 0 obj\n<< >>\nstream\n" + good
+        + b"\nendstream\nendobj"
+    )
+    spans = _extract_pdf_text_real(pdf)
+    assert [(s["page_no"], s["text"]) for s in spans] == [(2, "kept")]
+    only_bad = b"%PDF-1.4\n1 0 obj\n" + bad + b"\nendobj"
+    assert _extract_pdf_text_real(only_bad) == []
+
+
+def test_pdf_inflate_is_bounded_per_document():
+    limit = pdf._MAX_INFLATED_BYTES
+    op = b"BT (x) Tj ET "
+    bomb = zlib.compress(op * (limit // len(op) + 1), 9)
+    half = zlib.compress(op * (limit // len(op) // 2 + 1), 9)
+    assert len(bomb) < limit // 100
+
+    def stream(packed: bytes) -> bytes:
+        return (
+            b"<< /Filter /FlateDecode >>\nstream\n" + packed + b"\nendstream"
+        )
+
+    over = b"%PDF-1.4\n1 0 obj\n" + stream(bomb) + b"\nendobj"
+    assert _extract_pdf_text_real(over) == []
+    spans = _extract_pdf_text_stub(over)
+    assert spans and all(s["text"].startswith("p") for s in spans)
+    # Two streams each under the bound but over it together: the first
+    # is read, the second yields nothing, and the plain third is kept.
+    doc = (
+        b"%PDF-1.4\n1 0 obj\n" + stream(half) + b"\nendobj\n2 0 obj\n"
+        + stream(half) + b"\nendobj\n3 0 obj\n<< >>\nstream\n"
+        + b"BT (plain) Tj ET\nendstream\nendobj"
+    )
+    pages = {}
+    for s in _extract_pdf_text_real(doc):
+        pages.setdefault(s["page_no"], set()).add(s["text"])
+    assert pages == {0: {"x"}, 2: {"plain"}}
 
 
 def test_pdf_without_text_objects_falls_back_to_stub():

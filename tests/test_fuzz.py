@@ -10,6 +10,8 @@ Invariants (mirroring the reference's own guarantees):
 * serialize -> reparse preserves textContent for HTML-safe trees
 * streaming the document in arbitrary chunks yields the whole-document
   event stream
+* the fused plain-tag events give the same handler events as the split
+  open-tag pair (tests/split_parser.py)
 """
 
 from __future__ import annotations
@@ -21,6 +23,8 @@ from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.dom import DomArrayHandler, parse_document, text_content
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 from htmlparser2_spark.engine.stream import StreamingParser
+
+from .split_parser import SplitParser
 
 # Markup-ish alphabet biased toward structure characters.
 _MARKUP_CHARS = st.sampled_from(
@@ -38,12 +42,26 @@ _TOKENS = st.lists(
             "<plaintext>", "<!--", "-->", "--!>", "<![CDATA[", "]]>",
             "<!doctype html>", "<?php ?>", "&amp;", "&amp", "&lt;", "&times",
             "&timesbar;", "&notin;", "&#x41;", "&#65;", "&#", "a='b'",
-            'c="d"', "x=y",
+            'c="d"', "x=y", "<form>", "<image>", "</image>", "<math>",
+            "<foreignObject>", "<desc>", "<li>", "<td>", "<tr>", "<h1>",
+            "<P>", "<IMG>", "<input>", "</br>",
         ]),
         st.text(alphabet=_MARKUP_CHARS, max_size=12),
     ),
     max_size=20,
 ).map("".join)
+
+# Tree-construction soup: the tags whose open/close rules (implied
+# closes, void elements, <form> suppression, the image alias, foreign
+# content and its integration points) a tag path must reproduce.
+_TREE_TAGS = [
+    "<form>", "</form>", "<image>", "</image>", "<math>", "</math>",
+    "<svg>", "</svg>", "<foreignObject>", "</foreignObject>", "<desc>",
+    "</desc>", "<li>", "</li>", "<td>", "<tr>", "<h1>", "</h1>", "<p>",
+    "</p>", "<P>", "<IMG>", "<input>", "</br>", "<title>", "</title>",
+    "<b x=1>", "x",
+]
+_TREE_SOUP = st.lists(st.sampled_from(_TREE_TAGS), max_size=30).map("".join)
 
 _OPTIONS = st.fixed_dictionaries(
     {
@@ -96,6 +114,36 @@ def test_chunked_equals_whole(chunks, options):
         sp.write(chunk)
     sp.end()
     assert chunked.events == whole.events
+
+
+def _assert_split_path_events(doc: str, options: ParserOptions) -> None:
+    def events(parser_class):
+        collector = EventCollector()
+        parser = parser_class(collector, options)
+        collector.attach(parser)
+        parser.parse(doc)
+        return collector.events
+
+    assert events(Parser) == events(SplitParser)
+
+
+@given(
+    st.one_of(_MARKUP, _FREE, _TOKENS),
+    _OPTIONS,
+    st.one_of(st.none(), st.booleans()),
+)
+@settings(max_examples=400, deadline=None)
+def test_fused_tag_events_equal_split_path(doc, options, lower_case_tags):
+    _assert_split_path_events(
+        doc, ParserOptions(lower_case_tags=lower_case_tags, **options)
+    )
+
+
+@given(_TREE_SOUP)
+@settings(max_examples=400, deadline=None)
+def test_fused_tree_rules_equal_split_path(doc):
+    """Default HTML options, where plain tags take the fused path."""
+    _assert_split_path_events(doc, ParserOptions())
 
 
 @given(st.one_of(_MARKUP, _FREE))

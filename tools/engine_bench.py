@@ -17,8 +17,11 @@ extract_text_udf uses for default options, and the full parser with
 the text-only handler. Markdown rendering is measured through
 MarkdownExtractor (parser-built tree + renderer, the per-row work of
 markdown_udf and parse_pages(mode="markdown")) on the realistic corpus
-plus a structure-rich wiki-style corpus (headings/lists/links/table —
-the shapes the renderer actually transforms). Prints one JSON line.
+plus perfbench's structured pages (``perfbench.inputs.structured_pages``,
+the pages the ``structured_pages_markdown`` workload times:
+headings/lists/links/table, the shapes the renderer transforms). Each
+markdown line also gives its opened tags per document and µs per tag.
+Prints one JSON line.
 
 Usage: python tools/engine_bench.py [n_docs] [repeats]
 """
@@ -34,6 +37,10 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from htmlparser2_spark.engine.fast_text import FastTextExtractor, TextHandler  # noqa: E402
 from htmlparser2_spark.engine.parser import Parser  # noqa: E402
+from perfbench.inputs import structured_pages  # noqa: E402
+
+# Seed of the structured-pages corpus.
+STRUCTURED_SEED = 521
 
 WORDS = (
     "spark group query row data slow small filter customer line merge "
@@ -78,29 +85,6 @@ def entity_heavy_page(i: int) -> str:
     return (
         f"<html><head><title>Doc {i} &copy;</title></head>"
         f'<body><p class="q">{words}</p><p>{words}</p></body></html>'
-    )
-
-
-def structured_page(i: int) -> str:
-    # Wiki-style structure-rich page (~4 KB): nested lists, links,
-    # emphasis, a pipe table, code — every markdown rule class fires,
-    # so this corpus bounds the renderer's worst realistic mix.
-    items = "".join(
-        f'<li><a href="/w/{i}-{k}">{_text(i + k, 4)}</a>'
-        f"<ul><li><b>{_text(i + k, 3)}</b> and <i>{_text(k, 3)}</i></li></ul></li>"
-        for k in range(6)
-    )
-    rows = "".join(
-        f"<tr><td>{_text(i + k, 3)}</td><td><code>v{k}</code></td></tr>"
-        for k in range(5)
-    )
-    paras = "".join(f"<p>{_text(i + p, 40)}</p>" for p in range(4))
-    return (
-        f"<html><head><title>Doc {i}</title><style>p{{}}</style></head>"
-        f"<body><h1>Doc {i}</h1>{paras}<h2>Index</h2><ul>{items}</ul>"
-        f"<table><tr><th>key</th><th>val</th></tr>{rows}</table>"
-        f"<pre>x = {i}</pre><blockquote>{_text(i, 12)}</blockquote>"
-        "</body></html>"
     )
 
 
@@ -167,11 +151,20 @@ def main(n_docs: int = 20000, repeats: int = 3) -> None:
     def render(d: str) -> str:
         return md_extractor.extract(d)[0]
 
-    for name, gen in (("realistic", realistic_page),
-                      ("structured", structured_page)):
-        docs = [gen(i) for i in range(n_docs)]
-        out[f"{name}_markdown"] = measure(docs, render, repeats)
-        assert render(docs[0])  # non-empty render sanity
+    structured = structured_pages(STRUCTURED_SEED, n_docs)
+    structured_docs = [h.decode() for h in structured["html"]]
+    # The structured pages carry their expected Markdown.
+    for d, expected in zip(structured_docs[:200], structured["text"]):
+        assert render(d) == expected, "structured markdown != expected"
+    for name, docs in (
+        ("realistic", [realistic_page(i) for i in range(n_docs)]),
+        ("structured", structured_docs),
+    ):
+        line = measure(docs, render, repeats)
+        tags_per_doc = sum(md_extractor.extract(d)[1] for d in docs) / n_docs
+        line["tags_per_doc"] = round(tags_per_doc, 1)
+        line["us_per_tag"] = round(line["ms_per_doc"] * 1e3 / tags_per_doc, 3)
+        out[f"{name}_markdown"] = line
     print(json.dumps(out))
 
 

@@ -11,6 +11,8 @@ the 16 ParserOptions combinations:
 * default and swept options: ``MarkdownExtractor`` (markdown from the
   parser-built tree, with its open-element count) == adjacency
   ``to_markdown`` on the exact-event DOM (with its element count)
+* the Parser's events, indices included, == those of the split
+  open-tag path kept in tests/split_parser.py (fused plain tags)
 
 Usage: ``python tools/fuzz_campaign.py [N] [seed]`` (default 60000).
 A 60k-document run passes clean.
@@ -31,6 +33,7 @@ from htmlparser2_spark.engine.fast_text import FastTextExtractor  # noqa: E402
 from htmlparser2_spark.engine.markdown import MarkdownExtractor, to_markdown  # noqa: E402
 from htmlparser2_spark.engine.parser import Parser, ParserOptions  # noqa: E402
 from htmlparser2_spark.engine.stream import StreamingParser  # noqa: E402
+from tests.split_parser import SplitParser  # noqa: E402
 
 ALPH = "<>/=&;!?-[]'\" \n\tabcdDATAscriptyleXMP#x0123&amp;lt<!--]]>" + "é€\U0001f600̸"
 TOKENS = [
@@ -39,7 +42,9 @@ TOKENS = [
     "]]>", "<!doctype html>", "&amp;", "&times", "&#x41;", "&#",
     "&NotGreaterFullEqual;", "a='b'", 'c="d"', "x=y", "<br/>", "</p>",
     "<li>", "<tr>", "<td>", "<plaintext>", "<?php ?>", "</ div>",
-    "<iframe>", "<noembed>", "<xmp>", "</xmp>",
+    "<iframe>", "<noembed>", "<xmp>", "</xmp>", "<form>", "<image>",
+    "</image>", "<foreignObject>", "<desc>", "<h1>", "<P>", "<IMG>",
+    "<input>", "</br>",
 ]
 
 OPTION_SPACE = [
@@ -80,6 +85,13 @@ def main(n_docs: int = 60000, seed: int = 20260816) -> int:
                 assert 0 <= ev["startIndex"] <= ev["endIndex"] <= len(doc) + 1, (
                     doc, opts, ev,
                 )
+            col_split = EventCollector()
+            split = SplitParser(col_split, ParserOptions(**opts))
+            col_split.attach(split)
+            split.parse(doc)
+            assert col_split.events == col.events, (
+                f"fused!=split: {doc!r} {opts}"
+            )
             col2 = EventCollector()
             sp = StreamingParser(col2, ParserOptions(**opts))
             col2.attach(sp._parser)
