@@ -17,20 +17,28 @@ StringDecoder keeps split multi-byte UTF-8 intact):
 Delivery model: like the reference, ``write()`` tokenizes incrementally
 — events for every construct that is provably complete in the data so
 far are delivered during the ``write()`` call (so createDocumentStream
-element callbacks fire as elements close, not only at ``end()``).
-Constructs that might still change with more input (an unterminated
-tag/comment/rawtext body, and trailing text with any entity in it —
-text is final only once a ``<`` follows it) are deferred: the one scan
-loop, :meth:`Tokenizer.run` with ``final=False``, suspends at the first
-such construct, and the ``end()`` pass (``final=True``) applies EOF
-semantics from the suspension point. Consequences of that contract:
+element callbacks fire as elements close, not only at ``end()``). The
+one scan loop, :meth:`Tokenizer.run` with ``final=False``, asks the
+tokenizer's own grammar whether a construct is complete: each ``<``
+construct is a dry run of the helper that tokenizes it in a whole
+document, and its recorded events are delivered only when that helper
+ends it before the buffer end. Everything else is deferred: an
+unterminated tag/comment/raw-text body, a construct whose last
+character is the last buffered one (``write('<!DOCTYPE html>')``
+delivers at the next ``write()`` or ``end()``), and trailing text
+(text is final only once a ``<`` follows it). The pass suspends at the
+first deferred construct, and the ``end()`` pass (``final=True``)
+applies EOF semantics from the suspension point. Consequences of that
+contract:
 
 * The *final* event stream is chunk-invariant, exactly like the
   reference (Parser.events.spec.ts:13-40); text events may split at
   chunk boundaries in both engines and collectors merge them.
-* Delivery timing differs from the reference only in that an element
-  whose construct spans a chunk boundary is delivered when it
-  completes, not re-attempted per character.
+* Delivery timing differs from the reference in two ways: a construct
+  spanning a chunk boundary is delivered when it completes, not
+  re-attempted per character; and one ending exactly at a chunk's end
+  waits for the next pass (plain ``<name>`` and ``</name>`` tags
+  excepted: their ``>`` is enough).
 * Per-document memory is O(doc) in both engines (the reference retains
   all chunks for getSlice, Parser.ts:285-286).
 

@@ -122,6 +122,51 @@ def _is_end_of_tag_section(c: str) -> bool:
     return c == "/" or c == ">" or c in _WS
 
 
+class _Incomplete(Exception):
+    """A streaming dry run reached the buffer end (see _DryRun)."""
+
+
+class _DryRun:
+    """A ``<``-construct helper as a streaming (``final=False``) pass runs it.
+
+    A call runs the helper with this object as the tokenizer's callback
+    set, which queues ``on_*`` events and forwards
+    ``is_in_foreign_context`` (the one query helpers make, before they
+    emit). Every EOF shape of every helper returns the buffer end as its
+    cursor, so a cursor short of it means the construct ended inside
+    ``buf`` for good: the queue is replayed to the real callbacks.
+    Otherwise it is dropped and :class:`_Incomplete` stops the pass.
+    """
+
+    def __init__(self, tokenizer: Tokenizer, helper) -> None:
+        self.tokenizer, self.helper = tokenizer, helper
+        self.cbs = cbs = tokenizer.cbs
+        self.is_in_foreign_context = cbs.is_in_foreign_context
+        self.events = []
+
+    def __getattr__(self, name: str):
+        # First use of an on_* event: bind (and keep) its queueing callback.
+        f = getattr(self.cbs, name)
+        push = self.events.append
+        record = lambda *args: push((f, args))  # noqa: E731
+        setattr(self, name, record)
+        return record
+
+    def __call__(self, buf: str, *args):
+        self.tokenizer.cbs = self
+        try:
+            cursor, sec = self.helper(buf, *args)
+        finally:
+            self.tokenizer.cbs = self.cbs
+            events = self.events[:]
+            self.events.clear()
+        if cursor >= len(buf):
+            raise _Incomplete
+        for f, args in events:
+            f(*args)
+        return cursor, sec
+
+
 class Tokenizer:
     """Tokenizer over a document string, whole or streamed in chunks.
 
@@ -151,6 +196,7 @@ class Tokenizer:
         "recognize_self_closing",
         "light_attrs",
         "cbs",
+        "_dry_runs",
     )
 
     def __init__(
@@ -176,6 +222,7 @@ class Tokenizer:
         # recognize_self_closing is off (on_self_closing_tag vs
         # on_open_tag_end indices are not distinguished).
         self.light_attrs = light_attrs
+        self._dry_runs = None  # streaming helper wrappers, built on first use
 
     # ------------------------------------------------------------------
     def run(self, buf: str, start: int = 0, should_pause=None,
@@ -187,11 +234,11 @@ class Tokenizer:
         and EOF shapes are emitted, then ``on_end``, and None is
         returned. ``final=False`` (streaming ``write()``) delivers only
         what more input cannot change and returns the position to
-        resume from: trailing text is held back, and a construct whose
-        completeness check (``_validate_open_tag``, ``_validate_bang``,
-        the ``>`` / ``?>`` finds) fails stops the pass at its ``<``.
-        Text is decoded only when a buffered ``<`` follows it, which is
-        final because no character reference extends across ``<``.
+        resume from. Trailing text is held back; text is decoded once a
+        buffered ``<`` follows it (no character reference crosses
+        ``<``). Every ``<`` construct but the plain-tag probes is a dry
+        run of its own helper (:class:`_DryRun`): one that is unfinished
+        or ends on the last buffered char stops the pass at its ``<``.
         ``should_pause`` (streaming only) is checked between constructs;
         when it fires, the pass stops WITHOUT the EOF epilogue and
         returns the position to resume from. ``lbuf`` is an optional
@@ -210,9 +257,13 @@ class Tokenizer:
         # per-token loop (same technique as the reference's hot-state
         # dispatch ordering, Tokenizer.ts:893-897).
         on_text = cbs.on_text
-        open_tag = self._open_tag
-        closing_tag = self._closing_tag
-        markup_declaration = self._markup_declaration
+        helpers = (self._open_tag, self._closing_tag, self._markup_declaration,
+                   self._bogus_comment, self._processing_instruction)
+        if not final:
+            helpers = self._dry_runs = self._dry_runs or tuple(
+                _DryRun(self, h) for h in helpers)
+        (open_tag, closing_tag, markup_declaration, bogus_comment,
+         processing_instruction) = helpers
         find = buf.find
 
         i = start  # cursor
@@ -256,110 +307,101 @@ class Tokenizer:
         on_close_tag = cbs.on_close_tag
         tag_section_end = _RE_TAG_SECTION_END.search
         light_close = _RE_LIGHT_CLOSE.match
-        while i < n:
-            if should_pause is not None and should_pause():
-                return sec
-            # ---------------- Text ----------------
-            if lt != -1 and lt < i:
-                lt = find("<", i)
-            if amp != -1:
-                if amp < i:
-                    amp = find("&", i)
-                if amp != -1 and (lt == -1 or amp < lt):
-                    if lt == -1 and not final:
-                        break  # trailing text: not final yet
-                    if on_text_decoded is not None:
-                        seg_end = lt if lt != -1 else n
-                        on_text_decoded(
-                            decode_text_span(buf, sec, seg_end, text_mode),
-                            seg_end,
+        try:
+            while i < n:
+                if should_pause is not None and should_pause():
+                    return sec
+                # ---------------- Text ----------------
+                if lt != -1 and lt < i:
+                    lt = find("<", i)
+                if amp != -1:
+                    if amp < i:
+                        amp = find("&", i)
+                    if amp != -1 and (lt == -1 or amp < lt):
+                        if lt == -1 and not final:
+                            break  # trailing text: not final yet
+                        if on_text_decoded is not None:
+                            seg_end = lt if lt != -1 else n
+                            on_text_decoded(
+                                decode_text_span(buf, sec, seg_end, text_mode),
+                                seg_end,
+                            )
+                            i = sec = seg_end
+                            continue
+                        semi = find(";", amp + 1, amp + 9)
+                        hit = (
+                            common_get(buf[amp + 1 : semi + 1])
+                            if semi != -1
+                            else None
                         )
-                        i = sec = seg_end
+                        if hit is None:
+                            # Exact decoder, inlined from _entity's text
+                            # branch (the wrapper call was measurable at
+                            # real-web entity densities).
+                            res = decode_at(buf, amp, text_mode)
+                            if res is None:
+                                i = amp + 1  # '&' stays literal; rescan
+                                continue
+                            hit = res
+                        cps, consumed = hit
+                        if amp > sec:
+                            on_text(sec, amp)
+                        end = amp + consumed
+                        for cp in cps:
+                            on_text_entity(cp, end)
+                        i = sec = end
                         continue
-                    semi = find(";", amp + 1, amp + 9)
-                    hit = (
-                        common_get(buf[amp + 1 : semi + 1])
-                        if semi != -1
-                        else None
-                    )
-                    if hit is None:
-                        # Exact decoder, inlined from _entity's text
-                        # branch (the wrapper call was measurable at
-                        # real-web entity densities).
-                        res = decode_at(buf, amp, text_mode)
-                        if res is None:
-                            i = amp + 1  # '&' stays literal; rescan
-                            continue
-                        hit = res
-                    cps, consumed = hit
-                    if amp > sec:
-                        on_text(sec, amp)
-                    end = amp + consumed
-                    for cp in cps:
-                        on_text_entity(cp, end)
-                    i = sec = end
-                    continue
-            j = lt
-            if j == -1:
-                i = n
-                break
-            # '<' found at j.
-            if j > sec:
-                on_text(sec, j)
-            sec = j
-            i = j + 1
-            if i >= n:
-                break  # trailing '<': EOF epilogue, or resume at it
+                j = lt
+                if j == -1:
+                    i = n
+                    break
+                # '<' found at j.
+                if j > sec:
+                    on_text(sec, j)
+                sec = j
+                i = j + 1
+                if i >= n:
+                    break  # trailing '<': EOF epilogue, or resume at it
 
-            c = buf[i]
-            # ------------- BeforeTagName dispatch -------------
-            # Streaming passes first check that the construct is complete
-            # in ``buf``, so no helper reaches its EOF path mid-stream.
-            # The checks are conservative: a false "incomplete" only
-            # defers delivery to a later pass.
-            if ("a" <= c <= "z" or "A" <= c <= "Z") if not xml else (
-                not _is_end_of_tag_section(c) and c not in "!?/"
-            ):
-                if not final and not self._validate_open_tag(buf, lbuf, i):
-                    return j
-                e = -1
-                if on_plain_open_tag is not None:
-                    m = tag_section_end(buf, i)
-                    if m is not None:
-                        e = m.start()
-                        if buf[e] == ">" and lbuf[i:e] not in _SPECIAL:
-                            on_plain_open_tag(i, e)
-                            i = sec = e + 1
+                c = buf[i]
+                # ------------- BeforeTagName dispatch -------------
+                # Plain-tag probes fire only on a '>' in ``buf``, so they are
+                # final in both modes; streaming dry-runs the other helpers.
+                if ("a" <= c <= "z" or "A" <= c <= "Z") if not xml else (
+                    not _is_end_of_tag_section(c) and c not in "!?/"
+                ):
+                    e = -1
+                    if on_plain_open_tag is not None:
+                        m = tag_section_end(buf, i)
+                        if m is not None:
+                            e = m.start()
+                            if buf[e] == ">" and lbuf[i:e] not in _SPECIAL:
+                                on_plain_open_tag(i, e)
+                                i = sec = e + 1
+                                continue
+                    i, sec = open_tag(buf, lbuf, i, e)
+                elif c == "!":
+                    i, sec = markup_declaration(buf, lbuf, i + 1)
+                elif c == "?":
+                    if xml:
+                        i, sec = processing_instruction(buf, i + 1)
+                    else:
+                        i, sec = bogus_comment(buf, i, i)
+                elif c == "/":
+                    k = i + 1
+                    if not xml and k < n and "a" <= lbuf[k] <= "z":
+                        # The tag-start branch of _closing_tag when a '>'
+                        # ends the tag; EOF shapes take the helper.
+                        m = light_close(buf, k)
+                        e = m.end(1)
+                        if m.end() > e:
+                            on_close_tag(k, e)
+                            i = sec = m.end()
                             continue
-                i, sec = open_tag(buf, lbuf, i, e)
-            elif c == "!":
-                if not final and not self._validate_bang(buf, lbuf, j):
-                    return j
-                i, sec = markup_declaration(buf, lbuf, i + 1)
-            elif c == "?":
-                if not final and find("?>" if xml else ">", i + 1) == -1:
-                    return j
-                if xml:
-                    i, sec = self._processing_instruction(buf, i + 1)
-                else:
-                    i, sec = self._bogus_comment(buf, i, i)
-            elif c == "/":
-                # Every closing-tag path (name, '</>', '</ ' bogus
-                # comment, junk skip) terminates at a '>'.
-                if not final and find(">", i + 1) == -1:
-                    return j
-                k = i + 1
-                if not xml and k < n and "a" <= lbuf[k] <= "z":
-                    # The tag-start branch of _closing_tag when a '>'
-                    # ends the tag; EOF shapes take the helper.
-                    m = light_close(buf, k)
-                    e = m.end(1)
-                    if m.end() > e:
-                        on_close_tag(k, e)
-                        i = sec = m.end()
-                        continue
-                i, sec = closing_tag(buf, lbuf, k)
-            # else: '<' stays literal text (sec still at '<'); rescan from i.
+                    i, sec = closing_tag(buf, lbuf, k)
+                # else: '<' stays literal text (sec still at '<'); rescan from i.
+        except _Incomplete:
+            return sec  # the unfinished construct's '<': resume there
 
         if not final:
             return sec
@@ -376,128 +418,6 @@ class Tokenizer:
                 return n  # text delivered; on_end deferred to resume
         cbs.on_end()
         return None
-
-    def _validate_open_tag(self, buf: str, lbuf: str, i: int) -> bool:
-        """True when the open tag starting at ``i`` (first name char) —
-        including a raw-text/RCDATA body for special tags — is provably
-        complete in ``buf``."""
-        n = len(buf)
-        special = None
-        if not self.xml_mode:
-            cands = _SPECIAL_BY_FIRST.get(lbuf[i])
-            if cands and not self.cbs.is_in_foreign_context():
-                for cand in cands:
-                    end = i + len(cand)
-                    if lbuf[i:end] == cand and end < n:
-                        if _is_end_of_tag_section(buf[end]):
-                            special = cand
-                        break
-                    if end >= n and cand.startswith(lbuf[i:n]):
-                        return False  # could still become special
-        if special == "plaintext":
-            # Consumes to EOF by definition: only final.
-            return False
-        # Quote-aware scan for the tag-ending '>' (value quotes are
-        # those preceded by '='+ws; any other quote placement is
-        # pathological — defer it rather than model the exact machine).
-        pos = i
-        while True:
-            g = buf.find(">", pos)
-            if g == -1:
-                return False
-            q1 = buf.find('"', pos, g)
-            q2 = buf.find("'", pos, g)
-            q = q1 if q2 == -1 else q2 if q1 == -1 else min(q1, q2)
-            if q == -1:
-                break
-            k = q - 1
-            while k >= i and buf[k] in _WS:
-                k -= 1
-            if k < i or buf[k] != "=":
-                return False  # suspicious quote: defer to end()
-            mate = buf.find(buf[q], q + 1)
-            if mate == -1:
-                return False
-            pos = mate + 1
-        if special is None:
-            return True
-        # Raw-text/RCDATA body: the case-insensitive end tag, a tag-
-        # section char after it, and the closing '>' must all be here.
-        needle = "</" + special
-        ln = len(needle)
-        pos = g + 1
-        while True:
-            k = lbuf.find(needle, pos)
-            if k == -1 or k + ln >= n:
-                return False
-            if not _is_end_of_tag_section(buf[k + ln]):
-                pos = k + ln
-                continue
-            if buf[k + ln] == ">":
-                return True
-            return buf.find(">", k + ln) != -1
-
-    def _validate_bang(self, buf: str, lbuf: str, j: int) -> bool:
-        """True when the ``<!`` construct at ``j`` is provably complete:
-        comments need their end sequence, CDATA its ``]]>``, everything
-        else a ``>``; prefixes that could still become a different
-        construct ("<![CD", "<!doct" at buffer end) stay incomplete."""
-        n = len(buf)
-        s = j + 2
-        if s >= n:
-            return False
-        c = buf[s]
-        if c == "[":
-            rest = buf[s + 1 : s + 7]
-            if rest == "CDATA[":
-                # XML emits the cdata at ']]>'; unclosed HTML CDATA is
-                # a bogus-comment-to-EOF — either way ']]>' must be
-                # in-buffer before the construct is final.
-                return buf.find("]]>", s + 7) != -1
-            if len(rest) < 6 and "CDATA[".startswith(rest):
-                return False  # could still complete the sequence
-            return buf.find(">", s + 1) != -1  # declaration / bogus
-        if c == "-":
-            if s + 1 >= n:
-                return False
-            if buf[s + 1] == "-":
-                body = s + 2  # comment content start
-                if not self.xml_mode:
-                    # Abruptly closed empty comments are HTML-only
-                    # (Tokenizer.ts:419-432); XML comments always need
-                    # the full end sequence.
-                    if body >= n:
-                        return False
-                    if buf[body] == ">":
-                        return True  # <!-->
-                    if buf[body] == "-" and body + 1 >= n:
-                        return False  # could be <!---> or a dash run
-                    if buf.startswith("->", body):
-                        return True  # <!--->
-                return _RE_COMMENT_END.search(buf, body) is not None
-            # '<!-' + other: XML declaration (consumes the char at s+1
-            # unchecked, so its terminator starts at s+2) / HTML
-            # bogus-or-empty comment (terminator can be at s+1 itself).
-            if self.xml_mode:
-                return buf.find(">", s + 2) != -1
-            return buf.find(">", s + 1) != -1
-        if not self.xml_mode and lbuf[s] == "d":
-            k = s + 1
-            t = 1
-            while k < n and t < 7 and lbuf[k] == "doctype"[t]:
-                k += 1
-                t += 1
-            if t < 7 and k >= n:
-                return False  # partial 'doctype' could still match
-            return buf.find(">", k) != -1
-        if not self.xml_mode:
-            if c == ">":
-                return True  # '<!>': empty bogus comment
-            return buf.find(">", s + 1) != -1  # bogus comment
-        # XML declaration: the char at s is consumed unchecked
-        # (Tokenizer.ts BeforeDeclaration), so '<!>' scans on for a
-        # LATER '>' — the terminator search starts past it.
-        return buf.find(">", s + 1) != -1
 
     # ------------------------------------------------------------------
     def _is_tag_start(self, c: str) -> bool:

@@ -39,7 +39,6 @@ __all__ = [
     "attach_media_metadata",
     "image_features",
     "audio_features",
-    "frame_sample",
 ]
 
 MEDIA_SCHEMA = StructType(
@@ -290,36 +289,3 @@ def audio_features(df: DataFrame, *, dim: int = 16) -> DataFrame:
     return df.select("media_id", "payload").mapInPandas(
         worker, AUDIO_FEATURES_SCHEMA
     )
-
-
-def frame_sample(
-    df: DataFrame, *, every_nth: int = 10, payload_col: str = "payload"
-) -> DataFrame:
-    """Video frame sampling plumbing: emits (media_id, frame_idx, frame).
-
-    The stub treats each 4KB payload slice as a "frame"; a real
-    implementation replaces the slicing with an ffmpeg/pyav iterator —
-    the explode shape and schema stay identical.
-    """
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("frame_idx", IntegerType()),
-            StructField("frame", BinaryType()),
-        ]
-    )
-
-    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunk = 4096
-        for batch in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame": []}
-            for mid, payload in zip(batch["media_id"], batch[payload_col]):
-                data = bytes(payload or b"")
-                n_frames = max(1, len(data) // chunk)
-                for idx in range(0, n_frames, every_nth):
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(idx)
-                    rows["frame"].append(data[idx * chunk : (idx + 1) * chunk])
-            yield pd.DataFrame(rows)
-
-    return df.select("media_id", payload_col).mapInPandas(worker, schema)

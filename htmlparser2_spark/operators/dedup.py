@@ -590,12 +590,22 @@ def duplicate_clusters(
     Only ids that appear in ``pairs`` are returned; singletons carry no
     dedup decision and would bloat the output at corpus scale.
     """
+    # The symmetrized edges are read by every round: materialize them
+    # once, or each round re-runs the whole upstream lineage of
+    # ``pairs``. Both directions come from one pass over ``pairs``.
+    a, b = F.col(id_a), F.col(id_b)
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(a.alias("src"), b.alias("dst")),
+                    F.struct(b.alias("src"), a.alias("dst")),
+                )
+            ).alias("e")
         )
+        .select("e.src", "e.dst")
         .distinct()
+        .localCheckpoint(eager=True)
     )
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "cluster_id", F.col("id")

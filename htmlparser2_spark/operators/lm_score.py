@@ -374,7 +374,6 @@ def perplexity_buckets_by_cutoff(
     n_buckets: int = 3,
     part_col: str | None = None,
     score_col: str = "avg_logp",
-    id_col: str = "id",
     round_dp: int = 4,
     accuracy: int | None = None,
 ) -> DataFrame:
@@ -395,9 +394,6 @@ def perplexity_buckets_by_cutoff(
     path. Comparison happens on scores and cutoffs both rounded to
     ``round_dp`` so the DuckDB oracle (``quantile_cont`` + the same
     list_filter count) reproduces every boundary decision.
-
-    ``id_col`` is unused (no ordering exists to break ties for) but
-    kept for signature parity with :func:`perplexity_buckets`.
     """
     cuts = perplexity_bucket_cutoffs(
         scored,

@@ -131,6 +131,43 @@ def _line_fields(raw):
     return field, value
 
 
+def _stanzas(robots: DataFrame, host_col: str, body_col: str, fields):
+    """(agents, lines) of every host's robots groups: ``agents`` is
+    (host, group_id, agent) with the agent lowercased, ``lines`` is
+    (host, group_id, field, value) for the other kept lines.
+
+    Only lines whose field is in ``fields`` (which holds 'user-agent')
+    are kept, and grouping runs over the kept lines: a User-agent line
+    opens a new group unless the previous kept line was also a
+    User-agent line (consecutive UA lines share the group, RFC 9309
+    §2.1). So each caller's field set decides its own adjacency. Lines
+    before any User-agent line get group_id 0, which has no agent.
+    """
+    lines = _one_body(robots, host_col, body_col).select(
+        "host",
+        F.posexplode(F.split(F.col("body"), "\n")).alias("pos", "raw"),
+    )
+    field, value = _line_fields(F.col("raw"))
+    parsed = lines.select(
+        "host", "pos", field.alias("field"), value.alias("value")
+    ).filter(F.col("field").isin(*fields))
+    w = Window.partitionBy("host").orderBy("pos")
+    is_ua = F.col("field") == "user-agent"
+    new_group = is_ua & ~F.lag(is_ua, 1, False).over(w)
+    grouped = parsed.withColumn(
+        "group_id",
+        F.sum(new_group.cast("int")).over(
+            w.rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    )
+    agents = grouped.filter(is_ua).select(
+        "host", "group_id", F.lower(F.col("value")).alias("agent")
+    )
+    return agents, grouped.filter(~is_ua).select(
+        "host", "group_id", "field", "value"
+    )
+
+
 def parse_robots(robots: DataFrame, *, host_col: str = "host",
                  body_col: str = "body") -> DataFrame:
     """(host, agent, rule, path) from a (host, robots-txt body) table.
@@ -150,31 +187,10 @@ def parse_robots(robots: DataFrame, *, host_col: str = "host",
     partitions by host — robots bodies are bounded (Google caps at
     500 KiB), so per-host line lists never skew a partition.
     """
-    lines = _one_body(robots, host_col, body_col).select(
-        "host",
-        F.posexplode(F.split(F.col("body"), "\n")).alias("pos", "raw"),
+    agents, lines = _stanzas(
+        robots, host_col, body_col, ("user-agent", "allow", "disallow")
     )
-    field, value = _line_fields(F.col("raw"))
-    parsed = lines.select(
-        "host", "pos", field.alias("field"), value.alias("value")
-    ).filter(F.col("field").isin("user-agent", "allow", "disallow"))
-
-    w = Window.partitionBy("host").orderBy("pos")
-    is_ua = F.col("field") == "user-agent"
-    # A User-agent line opens a new group unless the previous parsed
-    # line was also a User-agent line (consecutive UA lines share the
-    # group, RFC 9309 §2.1).
-    new_group = is_ua & ~F.lag(is_ua, 1, False).over(w)
-    grouped = parsed.withColumn(
-        "group_id",
-        F.sum(new_group.cast("int")).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    agents = grouped.filter(is_ua).select(
-        "host", "group_id", F.lower(F.col("value")).alias("agent")
-    )
-    rules = grouped.filter(~is_ua & (F.col("value") != "")).select(
+    rules = lines.filter(F.col("value") != "").select(
         "host", "group_id", F.col("field").alias("rule"),
         F.col("value").alias("path"),
     )
@@ -193,37 +209,20 @@ def crawl_delays(robots: DataFrame, *, host_col: str = "host",
     RFC 9309, but honored by most large crawlers; the frontier turns
     it into a per-host fetch budget: ``floor(window / delay)``).
 
-    Groups are resolved with the same consecutive-User-agent rule as
-    :func:`parse_robots` (a standalone pass so that adding the extra
-    field cannot perturb parse_robots' adjacency logic). Only groups
-    that HAVE a delay line emit a row; multiple delay lines in one
-    group keep the smallest (conservative politeness); an unparseable
-    value yields ``delay_sec`` NULL — visible corruption rather than a
+    Groups come from the stanza builder shared with
+    :func:`parse_robots`, run over this function's own field set
+    (User-agent and Crawl-delay lines), so the extra field cannot
+    perturb parse_robots' adjacency. Only groups that HAVE a delay
+    line emit a row; multiple delay lines in one group keep the
+    smallest (conservative politeness); an unparseable value yields
+    ``delay_sec`` NULL — visible corruption rather than a
     silently-dropped directive.
     """
-    lines = _one_body(robots, host_col, body_col).select(
-        "host",
-        F.posexplode(F.split(F.col("body"), "\n")).alias("pos", "raw"),
-    )
-    field, value = _line_fields(F.col("raw"))
-    parsed = lines.select(
-        "host", "pos", field.alias("field"), value.alias("value")
-    ).filter(F.col("field").isin("user-agent", "crawl-delay"))
-    w = Window.partitionBy("host").orderBy("pos")
-    is_ua = F.col("field") == "user-agent"
-    new_group = is_ua & ~F.lag(is_ua, 1, False).over(w)
-    grouped = parsed.withColumn(
-        "group_id",
-        F.sum(new_group.cast("int")).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    agents = grouped.filter(is_ua).select(
-        "host", "group_id", F.lower(F.col("value")).alias("agent")
+    agents, lines = _stanzas(
+        robots, host_col, body_col, ("user-agent", "crawl-delay")
     )
     delays = (
-        grouped.filter(~is_ua)
-        .select(
+        lines.select(
             "host", "group_id",
             # try_cast: an unparseable value is data corruption, not a
             # job failure (ANSI cast would throw on e.g. 'fast')

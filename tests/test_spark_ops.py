@@ -848,6 +848,28 @@ def test_duplicate_clusters_components(spark):
     assert rows == again
 
 
+def test_duplicate_clusters_evaluates_pairs_once(spark):
+    """The pairs lineage runs once per call, not once per label round:
+    a pairs column computed by a counting Python UDF is evaluated once
+    per pairs row across the whole duplicate_clusters call."""
+    from htmlparser2_spark.operators.dedup import duplicate_clusters
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def next_id(x):
+        calls.add(1)
+        return x + 1
+
+    starts = spark.createDataFrame(
+        [(i,) for i in (0, 1, 2, 3, 4, 10)], "id_a long"
+    )
+    # A 6-node chain (several label rounds) and one pair.
+    pairs = starts.withColumn("id_b", F.udf(next_id, "long")("id_a"))
+    rows = {r["id"]: r["cluster_id"] for r in duplicate_clusters(pairs).collect()}
+    assert rows == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 0, 10: 10, 11: 10}
+    assert calls.value == 6
+
+
 def test_url_functions_edge_cases(spark):
     from htmlparser2_spark.functions.urls import canonicalize_url, url_host
 

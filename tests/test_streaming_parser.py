@@ -317,6 +317,56 @@ def test_text_delivered_once_a_tag_start_follows(doc, at_write):
     assert col.events == whole.events
 
 
+def _whole_events(doc: str) -> list[dict]:
+    whole = EventCollector()
+    p = Parser(whole)
+    whole.attach(p)
+    p.parse(doc)
+    return whole.events
+
+
+def test_construct_delivered_when_its_helper_ends_it():
+    """A '<' construct is complete when its own helper ends it inside
+    the buffer. The quote in `b"c` is part of an attribute name, not a
+    value delimiter, so the tag is final at write() time."""
+    col = EventCollector()
+    sp = StreamingParser(col)
+    col.attach(sp._parser)
+    sp.write('<a b"c>x<')
+    assert [(e["$event"], e["data"]) for e in col.events] == [
+        ("opentagname", ["a"]),
+        ("attribute", ['b"c', ""]),
+        ("opentag", ["a", {'b"c': ""}, False]),
+        ("text", ["x"]),
+    ]
+    sp.end()
+    assert col.events == _whole_events('<a b"c>x<')
+
+
+@pytest.mark.parametrize(
+    "doc",
+    ["<!DOCTYPE html>", '<a href="x">', "<!-- c -->", "<script>x</script>"],
+)
+@pytest.mark.parametrize("then", ["write", "end"])
+def test_construct_ending_at_buffer_end_waits_one_pass(doc, then):
+    """A construct whose last char is the last buffered char is held
+    back by that write() and delivered once by the next pass."""
+    col = EventCollector()
+    sp = StreamingParser(col)
+    col.attach(sp._parser)
+    sp.write(doc)
+    assert col.events == []
+    if then == "write":
+        sp.write("z")
+        assert col.events == _whole_events(doc + "z")[: len(col.events)]
+        assert col.events
+        sp.end()
+        assert col.events == _whole_events(doc + "z")
+    else:
+        sp.end()
+        assert col.events == _whole_events(doc)
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_random_chunk_splits_equal_whole(seed):
     """Arbitrary (not just per-char) chunkings across all goldens."""

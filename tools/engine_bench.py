@@ -21,6 +21,9 @@ plus perfbench's structured pages (``perfbench.inputs.structured_pages``,
 the pages the ``structured_pages_markdown`` workload times:
 headings/lists/links/table, the shapes the renderer transforms). Each
 markdown line also gives its opened tags per document and µs per tag.
+The ``realistic_streamed`` line feeds the realistic corpus through
+StreamingParser + DomArrayHandler in 64-char ``write()`` chunks, after
+checking 200 documents' final nodes against the whole-document parse.
 Prints one JSON line.
 
 Usage: python tools/engine_bench.py [n_docs] [repeats]
@@ -35,12 +38,16 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
+from htmlparser2_spark.engine.dom import DomArrayHandler, parse_document  # noqa: E402
 from htmlparser2_spark.engine.fast_text import FastTextExtractor, TextHandler  # noqa: E402
 from htmlparser2_spark.engine.parser import Parser  # noqa: E402
+from htmlparser2_spark.engine.stream import StreamingParser  # noqa: E402
 from perfbench.inputs import structured_pages  # noqa: E402
 
 # Seed of the structured-pages corpus.
 STRUCTURED_SEED = 521
+# write() chunk size of the streamed line.
+STREAM_CHUNK = 64
 
 WORDS = (
     "spark group query row data slow small filter customer line merge "
@@ -165,6 +172,26 @@ def main(n_docs: int = 20000, repeats: int = 3) -> None:
         line["tags_per_doc"] = round(tags_per_doc, 1)
         line["us_per_tag"] = round(line["ms_per_doc"] * 1e3 / tags_per_doc, 3)
         out[f"{name}_markdown"] = line
+
+    # Streaming: the same DOM contract as parse_document, built from
+    # STREAM_CHUNK-char write() calls.
+    handler = DomArrayHandler()
+    streaming = StreamingParser(handler)
+    handler.attach(streaming._parser)
+
+    def stream(d: str) -> list[dict]:
+        streaming.reset()
+        for k in range(0, len(d), STREAM_CHUNK):
+            streaming.write(d[k : k + STREAM_CHUNK])
+        streaming.end()
+        return handler.nodes
+
+    docs = [realistic_page(i) for i in range(n_docs)]
+    for d in docs[:200]:
+        assert stream(d) == parse_document(d), "streamed != whole"
+    line = measure(docs, stream, repeats)
+    line["chunk_chars"] = STREAM_CHUNK
+    out["realistic_streamed"] = line
     print(json.dumps(out))
 
 
