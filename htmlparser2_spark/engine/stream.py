@@ -28,8 +28,22 @@ character is the last buffered one (``write('<!DOCTYPE html>')``
 delivers at the next ``write()`` or ``end()``), and trailing text
 (text is final only once a ``<`` follows it). The pass suspends at the
 first deferred construct, and the ``end()`` pass (``final=True``)
-applies EOF semantics from the suspension point. Consequences of that
-contract:
+applies EOF semantics from the suspension point.
+
+A ``write()`` runs no pass at all when the input buffered since the
+last pass holds no ``<`` and no ``>``, and that pass's buffer did not
+end in ``>``. Such a pass could deliver nothing: trailing text needs a
+following ``<``, every ``<`` construct ends on a ``>``, and a construct
+ending on the last buffered char is the one case that waits a pass. The
+check starts where the last pass's buffer ended, not at the chunk, so
+data written from a callback counts; ``resume()`` and ``end()`` always
+run their pass. So a long tag, comment or text run streamed in small
+chunks is tokenized about once, not once per chunk. Two costs remain
+per ``write()``: ``self._buf += chunk`` copies the whole buffer, and a
+raw-text body dense in ``<`` (a ``<script>`` full of comparisons) is
+re-scanned from its ``<script>`` on every pass.
+
+Consequences of that contract:
 
 * The *final* event stream is chunk-invariant, exactly like the
   reference (Parser.events.spec.ts:13-40); text events may split at
@@ -52,7 +66,6 @@ from __future__ import annotations
 import codecs
 
 from .parser import Parser, ParserOptions
-from .tokenizer import _ASCII_LOWER as _STREAM_LOWER
 
 __all__ = [
     "StreamingParser",
@@ -73,10 +86,8 @@ class StreamingParser:
         # buffer-and-parse-at-end behavior.
         self._incremental = (options is None or options.tokenizer_class is None)
         self._buf = ""
-        # Lowercased shadow maintained incrementally: re-translating the
-        # whole buffer per write() would make streaming O(n^2/chunk).
-        self._lbuf = ""
         self._resume = 0
+        self._scanned = 0  # len(self._buf) at the last tokenizer pass
         self._started = False
         self._ended = False
         self._paused = False
@@ -103,13 +114,13 @@ class StreamingParser:
         raised from a callback stops it at a construct boundary."""
         self._begin()
         self._parser.buffer = self._buf
+        self._scanned = len(self._buf)
         self._pumping = True
         try:
             return self._parser.tokenizer.run(
                 self._buf,
                 self._resume,
                 should_pause=lambda: self._paused,
-                lbuf=self._lbuf,
                 final=final,
             )
         finally:
@@ -118,6 +129,14 @@ class StreamingParser:
     def _pump(self) -> None:
         """Tokenize as much buffered input as delivery rules allow."""
         self._resume = self._run(False)
+
+    def _may_deliver(self) -> bool:
+        """Whether a write() pass could deliver anything (module notes):
+        input since the last pass holds a '<' or '>', or that pass's
+        buffer ended in '>'."""
+        buf, seen = self._buf, self._scanned
+        return (buf.endswith(">", 0, seen) or buf.find("<", seen) != -1
+                or buf.find(">", seen) != -1)
 
     def _finish(self) -> None:
         """The EOF pass (resume() continues it after a mid-flush
@@ -130,20 +149,17 @@ class StreamingParser:
             self._resume = pos
             self._end_pending = True
 
-    def _append(self, chunk: str) -> None:
-        self._buf += chunk
-        self._lbuf += chunk.translate(_STREAM_LOWER)
-
     def write(self, chunk: str) -> None:
         if self._ended:
             self._use_after_end(".write() after done!")
             return
-        self._append(chunk)
+        self._buf += chunk
         # A write() from inside a handler callback (self._pumping) only
         # buffers: the outer pass's snapshot can't see the new data, and
         # re-entering the tokenizer from the stale resume position would
         # replay already-delivered constructs.
-        if self._incremental and not self._paused and not self._pumping:
+        if (self._incremental and not self._paused and not self._pumping
+                and self._may_deliver()):
             self._pump()
             if self._end_pending and not self._paused:
                 # end() arrived from a callback during this pump.
@@ -159,7 +175,7 @@ class StreamingParser:
         # reports instead of silently splicing data into the document.
         self._ended = True
         if chunk is not None:
-            self._append(chunk)
+            self._buf += chunk
         if self._paused or self._pumping:
             self._end_pending = True
             return
@@ -204,8 +220,8 @@ class StreamingParser:
     def reset(self) -> None:
         """Reuse the instance for a new document (Parser.ts:713-726)."""
         self._buf = ""
-        self._lbuf = ""
         self._resume = 0
+        self._scanned = 0
         self._started = False
         self._ended = False
         self._paused = False

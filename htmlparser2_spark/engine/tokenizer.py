@@ -48,12 +48,6 @@ QUOTE_DOUBLE = 3
 
 _WS = " \t\n\f\r"
 
-# Length-preserving ASCII lowercasing (str.lower can change string length
-# for some Unicode code points, which would corrupt position bookkeeping).
-_ASCII_LOWER = str.maketrans(
-    "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"
-)
-
 # Text-only ("special") HTML tags, keyed by first character (reference:
 # Tokenizer.ts:138-176). `plaintext` switches the rest of the document to
 # text; `title`/`textarea` are RCDATA (entities decode inside); the rest
@@ -68,6 +62,15 @@ _SPECIAL_BY_FIRST = {
 }
 _SPECIAL = frozenset(name for names in _SPECIAL_BY_FIRST.values() for name in names)
 _RCDATA = frozenset(("title", "textarea"))
+# Case is folded on the slice being tested, ASCII only, as the reference
+# compares (Tokenizer.ts:138-176). A lowered name slice is exact: no
+# special name or 'doctype' holds 'k', the one ASCII letter a non-ASCII
+# code point (U+212A) lowers to. The end-tag searches need re.A, without
+# which re.I also matches 'ſ' to 's' and 'İ' to 'i'.
+_END_TAG_SEARCH = {
+    name: re.compile("</" + name, re.I | re.A).search for name in _SPECIAL
+}
+_DOCTYPE = ("dD", "oO", "cC", "tT", "yY", "pP", "eE")
 
 _RE_NON_WS = re.compile(r"[^ \t\n\f\r]")
 _RE_TAG_SECTION_END = re.compile(r"[ \t\n\f\r/>]")
@@ -226,7 +229,7 @@ class Tokenizer:
 
     # ------------------------------------------------------------------
     def run(self, buf: str, start: int = 0, should_pause=None,
-            lbuf: str | None = None, final: bool = True) -> int | None:
+            final: bool = True) -> int | None:
         """Tokenize ``buf`` from ``start``; positions are absolute
         document offsets.
 
@@ -241,16 +244,12 @@ class Tokenizer:
         or ends on the last buffered char stops the pass at its ``<``.
         ``should_pause`` (streaming only) is checked between constructs;
         when it fires, the pass stops WITHOUT the EOF epilogue and
-        returns the position to resume from. ``lbuf`` is an optional
-        precomputed ASCII-lowercased shadow of ``buf`` (streaming
-        callers maintain it incrementally).
+        returns the position to resume from.
         """
         cbs = self.cbs
         xml = self.xml_mode
         decode = self.decode_entities
         n = len(buf)
-        if lbuf is None:
-            lbuf = buf.translate(_ASCII_LOWER)
         text_mode = STRICT if xml else LEGACY
 
         # Hot-path locals: attribute/method lookups hoisted out of the
@@ -375,13 +374,13 @@ class Tokenizer:
                         m = tag_section_end(buf, i)
                         if m is not None:
                             e = m.start()
-                            if buf[e] == ">" and lbuf[i:e] not in _SPECIAL:
+                            if buf[e] == ">" and buf[i:e].lower() not in _SPECIAL:
                                 on_plain_open_tag(i, e)
                                 i = sec = e + 1
                                 continue
-                    i, sec = open_tag(buf, lbuf, i, e)
+                    i, sec = open_tag(buf, i, e)
                 elif c == "!":
-                    i, sec = markup_declaration(buf, lbuf, i + 1)
+                    i, sec = markup_declaration(buf, i + 1)
                 elif c == "?":
                     if xml:
                         i, sec = processing_instruction(buf, i + 1)
@@ -389,7 +388,9 @@ class Tokenizer:
                         i, sec = bogus_comment(buf, i, i)
                 elif c == "/":
                     k = i + 1
-                    if not xml and k < n and "a" <= lbuf[k] <= "z":
+                    if not xml and k < n and (
+                        "a" <= buf[k] <= "z" or "A" <= buf[k] <= "Z"
+                    ):
                         # The tag-start branch of _closing_tag when a '>'
                         # ends the tag; EOF shapes take the helper.
                         m = light_close(buf, k)
@@ -398,7 +399,7 @@ class Tokenizer:
                             on_close_tag(k, e)
                             i = sec = m.end()
                             continue
-                    i, sec = closing_tag(buf, lbuf, k)
+                    i, sec = closing_tag(buf, k)
                 # else: '<' stays literal text (sec still at '<'); rescan from i.
         except _Incomplete:
             return sec  # the unfinished construct's '<': resume there
@@ -448,7 +449,7 @@ class Tokenizer:
 
     # ------------------------------------------------------------------
     # Open tag + attributes. Entered with ``i`` at the first tag-name char.
-    def _open_tag(self, buf: str, lbuf: str, i: int, j: int = -1):
+    def _open_tag(self, buf: str, i: int, j: int = -1):
         # j: the tag-name end (_RE_TAG_SECTION_END hit) when the caller
         # has already searched for it, else -1.
         cbs = self.cbs
@@ -457,18 +458,18 @@ class Tokenizer:
 
         special = None  # matched text-only tag name, if any
         if not self.xml_mode:
-            cands = _SPECIAL_BY_FIRST.get(lbuf[i])
+            cands = _SPECIAL_BY_FIRST.get(buf[i].lower())
             # Foreign-context query deferred until a special candidate
             # matches by first letter (rare) — one dict probe replaces a
             # Python call on the per-tag hot path.
             if cands and not cbs.is_in_foreign_context():
                 for cand in cands:
                     end = i + len(cand)
-                    if lbuf[i:end] == cand and end < n:
+                    if buf[i:end].lower() == cand and end < n:
                         if _is_end_of_tag_section(buf[end]):
                             special = cand
                         break
-                    if end >= n and cand.startswith(lbuf[i:n]):
+                    if end >= n and cand.startswith(buf[i:n].lower()):
                         # EOF while the tail is still a (possibly complete)
                         # prefix of the special-start sequence: the partial
                         # name is emitted as trailing text (reference
@@ -497,13 +498,13 @@ class Tokenizer:
             if m is not None:
                 end = m.end() - 1
                 cbs.on_open_tag_end(end)
-                return self._enter_tag_body(buf, lbuf, end + 1, special)
+                return self._enter_tag_body(buf, end + 1, special)
             # No match: fall through to the exact attribute machine.
 
         # Fast path: attribute-less tag (`<p>` — the dominant shape).
         if buf[j] == ">":
             cbs.on_open_tag_end(j)
-            return self._enter_tag_body(buf, lbuf, j + 1, special)
+            return self._enter_tag_body(buf, j + 1, special)
 
         # --------- attribute loop (BeforeAttributeName etc.) ---------
         i = j
@@ -538,7 +539,7 @@ class Tokenizer:
             c = buf[i]
             if c == ">":
                 cbs.on_open_tag_end(i)
-                return self._enter_tag_body(buf, lbuf, i + 1, special)
+                return self._enter_tag_body(buf, i + 1, special)
             if c == "/":
                 # InSelfClosingTag: whitespace may separate '/' and '>'.
                 m2 = _RE_NON_WS.search(buf, i + 1)
@@ -549,7 +550,7 @@ class Tokenizer:
                     cbs.on_self_closing_tag(k)
                     if self.recognize_self_closing:
                         return k + 1, k + 1
-                    return self._enter_tag_body(buf, lbuf, k + 1, special)
+                    return self._enter_tag_body(buf, k + 1, special)
                 i = k  # anything else: treat as a new attribute
                 continue
             # --- attribute name ---
@@ -611,7 +612,7 @@ class Tokenizer:
             continue
 
     # ------------------------------------------------------------------
-    def _enter_tag_body(self, buf: str, lbuf: str, i: int, special):
+    def _enter_tag_body(self, buf: str, i: int, special):
         """After '>' of an open tag: normal text, raw text, or plaintext."""
         if special is None:
             return i, i
@@ -620,18 +621,19 @@ class Tokenizer:
             if i < n:
                 self.cbs.on_text(i, n)
             return n, n
-        return self._special_tag(buf, lbuf, i, special)
+        return self._special_tag(buf, i, special)
 
-    def _special_tag(self, buf: str, lbuf: str, i: int, name: str):
+    def _special_tag(self, buf: str, i: int, name: str):
         """Scan raw-text/RCDATA content for the case-insensitive end tag."""
         cbs = self.cbs
         n = len(buf)
-        needle = "</" + name
-        ln = len(needle)
+        search = _END_TAG_SEARCH[name]
+        ln = len(name) + 2  # "</name"
         rcdata = name in _RCDATA and self.decode_entities
         sec = pos = i
         while True:
-            j = lbuf.find(needle, pos)
+            m = search(buf, pos)
+            j = -1 if m is None else m.start()
             if rcdata:
                 a = buf.find("&", pos, j if j != -1 else n)
                 if a != -1:
@@ -660,7 +662,7 @@ class Tokenizer:
             return g + 1, g + 1
 
     # ------------------------------------------------------------------
-    def _closing_tag(self, buf: str, lbuf: str, i: int):
+    def _closing_tag(self, buf: str, i: int):
         """Entered just past '</'."""
         cbs = self.cbs
         n = len(buf)
@@ -714,7 +716,7 @@ class Tokenizer:
         return j + 1, j + 1
 
     # ------------------------------------------------------------------
-    def _markup_declaration(self, buf: str, lbuf: str, i: int):
+    def _markup_declaration(self, buf: str, i: int):
         """Entered just past '<!'; the section starts at ``i``."""
         cbs = self.cbs
         n = len(buf)
@@ -754,11 +756,11 @@ class Tokenizer:
             # Anything else: declaration; this char is consumed unchecked.
             return self._declaration(buf, i + 1, sec)
         # ---- HTML mode ----
-        if lbuf[i] == "d":
+        if c in _DOCTYPE[0]:
             # DeclarationSequence: case-insensitive 'doctype'.
             k = i + 1
             t = 1
-            while k < n and t < 7 and lbuf[k] == "doctype"[t]:
+            while k < n and t < 7 and buf[k] in _DOCTYPE[t]:
                 k += 1
                 t += 1
             if t == 7:

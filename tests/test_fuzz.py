@@ -44,7 +44,9 @@ _TOKENS = st.lists(
             "&timesbar;", "&notin;", "&#x41;", "&#65;", "&#", "a='b'",
             'c="d"', "x=y", "<form>", "<image>", "</image>", "<math>",
             "<foreignObject>", "<desc>", "<li>", "<td>", "<tr>", "<h1>",
-            "<P>", "<IMG>", "<input>", "</br>",
+            "<P>", "<IMG>", "<input>", "</br>", "<SCRIPT>", "</ScRiPt>",
+            "<TiTle>", "</TITLE >", "<!DocType x>", "</scr\u0130pt>",
+            "</\u017ftyle>",
         ]),
         st.text(alphabet=_MARKUP_CHARS, max_size=12),
     ),

@@ -16,8 +16,10 @@ import pathlib
 import pytest
 
 from htmlparser2_spark.engine.collector import EventCollector
+from htmlparser2_spark.engine.dom import DomArrayHandler, parse_document
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 from htmlparser2_spark.engine.stream import StreamingParser, WritableStreamParser
+from htmlparser2_spark.engine.tokenizer import Tokenizer
 
 GOLDENS = json.loads(
     (pathlib.Path(__file__).parent / "goldens" / "parser_events.json").read_text()
@@ -367,6 +369,96 @@ def test_construct_ending_at_buffer_end_waits_one_pass(doc, then):
         assert col.events == _whole_events(doc)
 
 
+def test_write_without_tag_delimiters_runs_no_pass(monkeypatch):
+    """A write() whose input since the last pass holds no '<' or '>'
+    runs no tokenizer pass (that pass's buffer did not end in '>'), so
+    a long tag streamed in small chunks is not re-tokenized per chunk."""
+    doc = "<div " + " ".join(f'a{k}="v{k}"' for k in range(2000)) + ">x</div>"
+    whole = parse_document(doc)
+    calls = []
+    run = Tokenizer.run
+
+    def counted_run(self, *args, **kwargs):
+        calls.append(1)
+        return run(self, *args, **kwargs)
+
+    monkeypatch.setattr(Tokenizer, "run", counted_run)
+    handler = DomArrayHandler()
+    sp = StreamingParser(handler)
+    handler.attach(sp._parser)
+    for k in range(0, len(doc), 64):
+        sp.write(doc[k : k + 64])
+    sp.end()
+    # The first chunk ('<div'), the last one ('>x</div>') and end().
+    assert len(calls) == 3
+    assert handler.nodes == whole
+
+
+# ASCII-only case folding: a special tag's start and end tags and
+# 'doctype' match case-insensitively in ASCII letters only, so 'İ'
+# (U+0130), 'ı' (U+0131) and 'ſ' (U+017F) never match 'i' or 's'.
+_DOTTED = "scr" + "i\u0307" + "pt"  # "SCRİPT".lower()
+
+
+@pytest.mark.parametrize(
+    "doc, expected",
+    [
+        ("<script>a</scr\u0130pt>b</script>", [
+            ("opentagname", ["script"]),
+            ("opentag", ["script", {}, False]),
+            ("text", ["a</scr\u0130pt>b"]),
+            ("closetag", ["script", False]),
+        ]),
+        ("<script>a</\u017fcript>b</script>", [
+            ("opentagname", ["script"]),
+            ("opentag", ["script", {}, False]),
+            ("text", ["a</\u017fcript>b"]),
+            ("closetag", ["script", False]),
+        ]),
+        ("<title>a</t\u0130tle>b</title>", [
+            ("opentagname", ["title"]),
+            ("opentag", ["title", {}, False]),
+            ("text", ["a</t\u0130tle>b"]),
+            ("closetag", ["title", False]),
+        ]),
+        ("<SCR\u0130PT><b>x</b>", [
+            ("opentagname", [_DOTTED]),
+            ("opentag", [_DOTTED, {}, False]),
+            ("opentagname", ["b"]),
+            ("opentag", ["b", {}, False]),
+            ("text", ["x"]),
+            ("closetag", ["b", False]),
+            ("closetag", [_DOTTED, True]),
+        ]),
+        ("<!doct\u0131pe y>", [
+            ("comment", ["doct\u0131pe y"]),
+            ("commentend", []),
+        ]),
+        ("<SCRIPT>a</ScRiPt>b", [
+            ("opentagname", ["script"]),
+            ("opentag", ["script", {}, False]),
+            ("text", ["a"]),
+            ("closetag", ["script", False]),
+            ("text", ["b"]),
+        ]),
+    ],
+)
+@pytest.mark.parametrize("chunked", [False, True], ids=["whole", "1-char"])
+def test_case_folding_is_ascii_only(doc, expected, chunked):
+    col = EventCollector()
+    if chunked:
+        sp = StreamingParser(col)
+        col.attach(sp._parser)
+        for ch in doc:
+            sp.write(ch)
+        sp.end()
+    else:
+        p = Parser(col)
+        col.attach(p)
+        p.parse(doc)
+    assert [(e["$event"], e["data"]) for e in col.events] == expected
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_random_chunk_splits_equal_whole(seed):
     """Arbitrary (not just per-char) chunkings across all goldens."""
@@ -637,6 +729,34 @@ def test_end_from_callback_during_resume_pump_completes():
     texts = [e["data"][0] for e in col.events if e["$event"] == "text"]
     assert texts == ["a", "x", "trailing text"]
     assert ends == [True]
+
+
+def test_resume_after_mid_pass_pause_delivers_rest():
+    """pause() from a callback partway through a write(), then resume()
+    with no further input on a buffer ending in text: resume() always
+    runs its pass, so the constructs after the pause are delivered."""
+    holder = {}
+    doc = "<a>x</a><b>y</b>tail"
+
+    class H(EventCollector):
+        def on_close_tag(self, name, implied):
+            super().on_close_tag(name, implied)
+            if name == "a":
+                holder["sp"].pause()
+
+    col = H()
+    sp = StreamingParser(col)
+    holder["sp"] = sp
+    col.attach(sp._parser)
+    sp.write(doc)
+    closes = [e["data"][0] for e in col.events if e["$event"] == "closetag"]
+    assert closes == ["a"]
+    sp.resume()
+    closes = [e["data"][0] for e in col.events if e["$event"] == "closetag"]
+    texts = [e["data"][0] for e in col.events if e["$event"] == "text"]
+    assert (closes, texts) == (["a", "b"], ["x", "y"])
+    sp.end()
+    assert col.events == _whole_events(doc)
 
 
 def test_pause_in_final_callback_defers_epilogue():

@@ -23,8 +23,10 @@ headings/lists/links/table, the shapes the renderer transforms). Each
 markdown line also gives its opened tags per document and µs per tag.
 The ``realistic_streamed`` line feeds the realistic corpus through
 StreamingParser + DomArrayHandler in 64-char ``write()`` chunks, after
-checking 200 documents' final nodes against the whole-document parse.
-Prints one JSON line.
+checking 200 documents' final nodes against the whole-document parse;
+``long_tag_streamed`` streams one ~30 KB open tag of 2000 attributes
+the same way (checked first), the shape a ``write()`` pass would
+re-tokenize from its ``<`` on every chunk. Prints one JSON line.
 
 Usage: python tools/engine_bench.py [n_docs] [repeats]
 """
@@ -46,8 +48,10 @@ from perfbench.inputs import structured_pages  # noqa: E402
 
 # Seed of the structured-pages corpus.
 STRUCTURED_SEED = 521
-# write() chunk size of the streamed line.
+# write() chunk size of the streamed lines.
 STREAM_CHUNK = 64
+# Documents in the long_tag_streamed line.
+LONG_TAG_DOCS = 10
 
 WORDS = (
     "spark group query row data slow small filter customer line merge "
@@ -103,6 +107,12 @@ def synthetic_page(i: int) -> str:
         f'</head><body><h1>Doc {i}</h1><!-- c --><p class="c3">{t}</p>'
         f'<a href="https://example.com/doc/{i}">more</a></body></html>'
     )
+
+
+def long_tag_page(i: int) -> str:
+    # One ~30 KB open tag: 2000 quoted attributes, no '<' or '>' inside.
+    attrs = " ".join(f'a{k}="v{i}-{k}"' for k in range(2000))
+    return f"<html><body><div {attrs}>Doc {i}</div></body></html>"
 
 
 def measure(docs: list[str], one, repeats: int) -> dict:
@@ -192,6 +202,12 @@ def main(n_docs: int = 20000, repeats: int = 3) -> None:
     line = measure(docs, stream, repeats)
     line["chunk_chars"] = STREAM_CHUNK
     out["realistic_streamed"] = line
+
+    docs = [long_tag_page(i) for i in range(LONG_TAG_DOCS)]
+    assert stream(docs[0]) == parse_document(docs[0]), "streamed != whole"
+    line = measure(docs, stream, repeats)
+    line["chunk_chars"] = STREAM_CHUNK
+    out["long_tag_streamed"] = line
     print(json.dumps(out))
 
 

@@ -44,7 +44,8 @@ TOKENS = [
     "<li>", "<tr>", "<td>", "<plaintext>", "<?php ?>", "</ div>",
     "<iframe>", "<noembed>", "<xmp>", "</xmp>", "<form>", "<image>",
     "</image>", "<foreignObject>", "<desc>", "<h1>", "<P>", "<IMG>",
-    "<input>", "</br>",
+    "<input>", "</br>", "<SCRIPT>", "</ScRiPt>", "<TiTle>", "</TITLE >",
+    "<!DocType x>", "</scr\u0130pt>", "</\u017ftyle>",
 ]
 
 OPTION_SPACE = [
