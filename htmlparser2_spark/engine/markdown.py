@@ -30,9 +30,11 @@ Tree contract
 A node is either a ``str`` (text, scrubbed of NUL) or an element tuple
 ``(name, attrs, kids)``: ``attrs`` the element's attribute dict,
 ``kids`` its child nodes in document order. Comments, directives/PIs
-and CDATA sections are absent — no rule emits them. TreeHandler merges
-adjacent text; the renderer only ever concatenates neighbouring text,
-so a run split in two renders the same. What an element renders as follows from its name alone (a
+and CDATA sections are absent — no rule emits them. Adjacent text
+nodes are allowed: TreeHandler appends each text event as it comes,
+and to_markdown one node per DOM text node. The renderer only ever
+concatenates neighbouring text, so a run split in two renders the
+same. What an element renders as follows from its name alone (a
 ``script``/``style`` element is skipped by name, as DomArrayHandler
 types it by name). Two producers build the tree:
 
@@ -133,8 +135,7 @@ class TreeHandler:
     the Parser makes a fresh one per tag and drops its own reference.
     """
 
-    __slots__ = ("root", "body", "n_tags", "_kids", "_stack", "_text",
-                 "_in_cdata")
+    __slots__ = ("root", "body", "n_tags", "_kids", "_stack", "_in_cdata")
 
     def __init__(self) -> None:
         self.on_parser_init(None)
@@ -145,19 +146,9 @@ class TreeHandler:
         self.n_tags = 0
         self._kids = self.root  # child list of the innermost open element
         self._stack: list[list] = []  # child lists of its ancestors
-        # Pending text pieces, joined once when the run ends — a long
-        # run of text events stays linear, unlike repeated str +=.
-        self._text: list[str] = []
         self._in_cdata = False
 
-    def _flush_text(self) -> None:
-        text = "".join(self._text)
-        self._text.clear()
-        self._kids.append(text.replace(_BR, "") if _BR in text else text)
-
     def on_open_tag(self, name: str, attrs: dict, is_implied: bool) -> None:
-        if self._text:
-            self._flush_text()
         kids: list = []
         element = (name, attrs, kids)
         self._kids.append(element)
@@ -168,24 +159,20 @@ class TreeHandler:
             self.body = element
 
     def on_close_tag(self, name: str, is_implied: bool) -> None:
-        if self._text:
-            self._flush_text()
         if self._stack:
             self._kids = self._stack.pop()
 
     def on_text(self, data: str) -> None:
+        # Each piece is its own node: the renderer only concatenates
+        # neighbouring text (module docstring, tree contract).
         if not self._in_cdata:
-            self._text.append(data)
+            self._kids.append(data.replace(_BR, "") if _BR in data else data)
 
     def on_cdata_start(self) -> None:
         self._in_cdata = True
 
     def on_cdata_end(self) -> None:
         self._in_cdata = False
-
-    def on_end(self) -> None:
-        if self._text:
-            self._flush_text()
 
 
 _ELEMENT_TYPES = frozenset(("tag", "script", "style"))

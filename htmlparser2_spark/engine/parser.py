@@ -186,6 +186,20 @@ _CTX_MATHML = 2
 _FOREIGN_PUSH = {"svg": _CTX_SVG, "math": _CTX_MATHML}
 _FOREIGN_PUSH.update(dict.fromkeys(_HTML_INTEGRATION_ELEMENTS, _CTX_NONE))
 
+# The one tag a second copy of which is ignored while it is open
+# (Parser.ts:403-417), and the alias of ``img`` outside foreign content
+# (Parser.ts:359-391).
+_FORM_TAG = "form"
+_IMAGE_TAG = "image"
+
+# Lowercased open-tag names that a tree rule may touch even without a
+# foreign ancestor: void elements, the ``<form>`` rule, the ``image``
+# alias and the foreign-context pushes. Any other name, when no implied
+# close fires, is just pushed (Parser.on_plain_open_tag's inline branch).
+_RULED_OPEN_NAMES = frozenset(
+    (*VOID_ELEMENTS, _FORM_TAG, _IMAGE_TAG, *_FOREIGN_PUSH)
+)
+
 _RE_NAME_END = re.compile(r"[\s/]")
 
 
@@ -232,7 +246,17 @@ class ParserOptions:
 
 
 class Parser:
-    """One-shot parser for a complete document string."""
+    """One-shot parser for a complete document string.
+
+    The Parser takes the tokenizer's two fused open-tag events (see
+    Tokenizer's class docstring). ``on_plain_open_tag`` is always on; an
+    element that no tree rule touches (its lowercased name is outside
+    ``_RULED_OPEN_NAMES`` and no implied close fires, with no foreign
+    ancestor) is pushed and reported right there, any other goes through
+    ``_open_head``/``_open_tail``. ``on_attr_open_tag`` is on only when
+    the handler has no ``on_attribute`` and attribute names are
+    lowercased; it too goes through ``_open_head``/``_open_tail``.
+    """
 
     def __init__(
         self,
@@ -285,6 +309,10 @@ class Parser:
         self._cb_end = g("on_end")
         self._cb_parser_init = g("on_parser_init")
         self._cb_reset = g("on_reset")
+        if self._cb_attribute or not o.lower_case_attribute_names:
+            # Attribute events wanted, or names kept as written: every
+            # attribute tag takes the split events (tokenizer opt-in).
+            self.on_attr_open_tag = None
         self._reset_state()
         # Lifecycle: onparserinit fires at construction (Parser.ts:308)
         # and again after every reset (Parser.ts:713-723).
@@ -359,7 +387,7 @@ class Parser:
         if self._plain_names and len(foreign) == 1:
             # HTML, lowercased, no foreign ancestor: the common case.
             name = self.buffer[start:end].lower()
-            return "img" if name == "image" else name
+            return "img" if name == _IMAGE_TAG else name
         name = self.buffer[start:end]
         if not self.options.lower_case_tags:
             return name
@@ -375,7 +403,7 @@ class Parser:
         if adjusted is not None and adjusted in self._stack:
             return adjusted
         if foreign[-1] == _CTX_NONE:
-            return "img" if name == "image" else name
+            return "img" if name == _IMAGE_TAG else name
         return name
 
     def on_open_tag_name(self, start: int, end: int) -> None:
@@ -387,10 +415,63 @@ class Parser:
         ``on_open_tag_name(start, end)`` then ``on_open_tag_end(end)``,
         the same handler events and indices."""
         self.end_index = end
+        if self._plain_names and len(self._foreign) == 1:
+            name = self.buffer[start:end].lower()
+            if name not in _RULED_OPEN_NAMES:
+                stack = self._stack
+                implies_close = OPEN_IMPLIES_CLOSE.get(name)
+                if not (implies_close and stack and stack[-1] in implies_close):
+                    # No tree rule applies: push, and the two handler
+                    # events of _open_head and _open_tail.
+                    stack.append(name)
+                    cb = self._cb_open_tag_name
+                    if cb:
+                        cb(name)
+                    cb = self._cb_open_tag
+                    if cb:
+                        cb(name, {}, False)
+                    self.start_index = end + 1
+                    return
         name = self._read_tag_name(start, end)
         if self._open_head(name):
             self._open_tail(name, {}, False)
         self.start_index = end + 1
+
+    def on_attr_open_tag(self, start: int, end: int, attrs: list, gt: int) -> None:
+        """The tokenizer's one-event attribute tag: ``start``/``end``
+        bound the name, ``attrs`` holds one ``_RE_ATTR_LIGHT`` match
+        per attribute, ``gt`` is the ``>``. The same handler events and
+        indices as the split name, attribute and end events, for a
+        handler with no ``on_attribute`` (``__init__`` opts out
+        otherwise): the names are lowercased (lower_case_attribute_names
+        is on) and the first occurrence wins (Parser.ts:596-598)."""
+        self.end_index = end
+        name = self._read_tag_name(start, end)
+        if self._open_head(name):
+            attribs: dict[str, str] = {}
+            quotes: dict[str, str] = {}
+            for m in attrs:
+                key, double, single = m.groups()
+                key = key.lower()
+                if key not in attribs:
+                    if double is not None:
+                        attribs[key] = double
+                        quotes[key] = '"'
+                    elif single is not None:
+                        attribs[key] = single
+                        quotes[key] = "'"
+                    else:
+                        attribs[key] = ""
+                        quotes[key] = NO_VALUE
+            # Handlers may read _attrib_quotes in on_open_tag
+            # (DomArrayHandler): reset after the events.
+            self._attrib_quotes = quotes
+            self.end_index = gt
+            self._open_tail(name, attribs, False)
+            self._attrib_quotes = None
+        else:
+            self.end_index = gt
+        self.start_index = gt + 1
 
     def _emit_open_tag(self, name: str) -> None:
         self._open_tag_start = self.start_index
@@ -411,7 +492,7 @@ class Parser:
         open, Parser.ts:403-417)."""
         stack = self._stack
         if self.html_mode:
-            if name == "form" and "form" in stack:
+            if name == _FORM_TAG and _FORM_TAG in stack:
                 return False
             implies_close = OPEN_IMPLIES_CLOSE.get(name)
             if implies_close:
@@ -467,8 +548,13 @@ class Parser:
         ):
             # Common case: closing the innermost element with no
             # foreign ancestor, so no alias or case adjustment applies
-            # ("image" is pushed only in foreign content).
-            self._pop_element(False)
+            # ("image" is pushed only in foreign content), and the
+            # element is none of _pop_element's foreign-context ones
+            # (each of those holds a _foreign entry while open).
+            name = stack.pop()
+            cb = self._cb_close_tag
+            if cb:
+                cb(name, False)
             self.start_index = end + 1
             return
         name = self._read_tag_name(start, end)

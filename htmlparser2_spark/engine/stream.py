@@ -53,8 +53,10 @@ Consequences of that contract:
   re-attempted per character; and one ending exactly at a chunk's end
   waits for the next pass (plain ``<name>`` and ``</name>`` tags
   excepted: their ``>`` is enough).
-* Per-document memory is O(doc) in both engines (the reference retains
-  all chunks for getSlice, Parser.ts:285-286).
+* Per-document memory is O(doc) here, and not in the reference: its
+  ``shiftBuffer`` drops each chunk once the tokenizer has consumed it
+  (Parser.ts:764-768), while ``self._buf += chunk`` keeps, and copies,
+  the whole document.
 
 Custom injected tokenizers (``ParserOptions.tokenizer_class``) fall
 back to buffer-and-parse-at-end, since their overridden behavior has no

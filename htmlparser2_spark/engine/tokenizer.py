@@ -61,6 +61,9 @@ _SPECIAL_BY_FIRST = {
     "x": ("xmp",),
 }
 _SPECIAL = frozenset(name for names in _SPECIAL_BY_FIRST.values() for name in names)
+# First characters of the special names, both cases: a tag name that
+# starts with none of them is not special without being lowercased.
+_SPECIAL_FIRST = "".join(_SPECIAL_BY_FIRST) + "".join(_SPECIAL_BY_FIRST).upper()
 _RCDATA = frozenset(("title", "textarea"))
 # Case is folded on the slice being tested, ASCII only, as the reference
 # compares (Tokenizer.ts:138-176). A lowered name slice is exact: no
@@ -116,6 +119,8 @@ _RE_ATTR_LIGHT = re.compile(
     r"|(?=[ \t\n\f\r]*[^ \t\n\f\r=])"
     r")"
 )
+# The end of an attribute section after its last _RE_ATTR_LIGHT match.
+_RE_TAG_GT = re.compile(r"[ \t\n\f\r]*>")
 _RE_COMMENT_END = re.compile(r"--!?>")
 _RE_TRAILING_BANG_DASHES = re.compile(r"--+!$")
 _RE_TRAILING_DASHES = re.compile(r"--+$")
@@ -191,6 +196,17 @@ class Tokenizer:
     exactly ``on_open_tag_name(start, end)`` followed by
     ``on_open_tag_end(end)`` (``end`` is the ``>``, which is also where
     the name ends). Sets without it, and XML mode, get the two events.
+
+    A set with that method may also have ``on_attr_open_tag(name_start,
+    name_end, attrs, gt)``. It then receives, as that ONE event, every
+    non-special HTML open tag whose attribute section is a run of
+    ``_RE_ATTR_LIGHT`` matches (quoted ``&``-free values and valueless
+    attributes) followed by optional whitespace and ``>``: ``attrs``
+    holds the matches, ``gt`` is the ``>``. It means exactly
+    ``on_open_tag_name(name_start, name_end)``, the attribute events the
+    exact machine derives from each match, then ``on_open_tag_end(gt)``.
+    A ``None`` value opts out, and a ``light_attrs`` tokenizer never
+    sends it (it skips attribute sections whole).
     """
 
     __slots__ = (
@@ -256,7 +272,22 @@ class Tokenizer:
         # per-token loop (same technique as the reference's hot-state
         # dispatch ordering, Tokenizer.ts:893-897).
         on_text = cbs.on_text
-        helpers = (self._open_tag, self._closing_tag, self._markup_declaration,
+        # Plain-tag dispatch (HTML only): `<name>` and `</name…>` take
+        # one match and one callback each instead of the _open_tag /
+        # _closing_tag helper chain. Open tags go that way only for
+        # callback sets with the on_plain_open_tag opt-in (class
+        # docstring); the close-tag match emits the exact machine's
+        # on_close_tag. Sets that also opt in to on_attr_open_tag get
+        # light attribute tags as one event, from _attr_open_tag, unless
+        # light_attrs already skips their attribute sections.
+        on_plain_open_tag = (
+            None if xml else getattr(cbs, "on_plain_open_tag", None)
+        )
+        open_tag = self._open_tag
+        if (not self.light_attrs and on_plain_open_tag is not None
+                and getattr(cbs, "on_attr_open_tag", None) is not None):
+            open_tag = self._attr_open_tag
+        helpers = (open_tag, self._closing_tag, self._markup_declaration,
                    self._bogus_comment, self._processing_instruction)
         if not final:
             helpers = self._dry_runs = self._dry_runs or tuple(
@@ -294,15 +325,6 @@ class Tokenizer:
         # alternating on_text/on_text_entity events. Positional
         # handlers (parser, collectors) keep the exact event stream.
         on_text_decoded = getattr(cbs, "on_text_decoded", None)
-        # Plain-tag dispatch (HTML only): `<name>` and `</name…>` take
-        # one match and one callback each instead of the _open_tag /
-        # _closing_tag helper chain. Open tags go that way only for
-        # callback sets with the on_plain_open_tag opt-in (class
-        # docstring); the close-tag match emits the exact machine's
-        # on_close_tag.
-        on_plain_open_tag = (
-            None if xml else getattr(cbs, "on_plain_open_tag", None)
-        )
         on_close_tag = cbs.on_close_tag
         tag_section_end = _RE_TAG_SECTION_END.search
         light_close = _RE_LIGHT_CLOSE.match
@@ -374,7 +396,10 @@ class Tokenizer:
                         m = tag_section_end(buf, i)
                         if m is not None:
                             e = m.start()
-                            if buf[e] == ">" and buf[i:e].lower() not in _SPECIAL:
+                            if buf[e] == ">" and (
+                                c not in _SPECIAL_FIRST
+                                or buf[i:e].lower() not in _SPECIAL
+                            ):
                                 on_plain_open_tag(i, e)
                                 i = sec = e + 1
                                 continue
@@ -392,7 +417,14 @@ class Tokenizer:
                         "a" <= buf[k] <= "z" or "A" <= buf[k] <= "Z"
                     ):
                         # The tag-start branch of _closing_tag when a '>'
-                        # ends the tag; EOF shapes take the helper.
+                        # ends the tag; EOF shapes take the helper. An
+                        # alphanumeric `</name>` needs no regex: the '>'
+                        # is where _RE_LIGHT_CLOSE's name group ends.
+                        e = find(">", k)
+                        if e != -1 and buf[k:e].isalnum():
+                            on_close_tag(k, e)
+                            i = sec = e + 1
+                            continue
                         m = light_close(buf, k)
                         e = m.end(1)
                         if m.end() > e:
@@ -610,6 +642,26 @@ class Tokenizer:
                 i = j
                 break
             continue
+
+    def _attr_open_tag(self, buf: str, i: int, j: int):
+        """``_open_tag`` for callback sets with the ``on_attr_open_tag``
+        opt-in. A non-special tag whose attribute section is a run of
+        ``_RE_ATTR_LIGHT`` matches, optional whitespace and ``>`` is ONE
+        event; any other tag takes ``_open_tag`` from the name end."""
+        if j == -1 or buf[i:j].lower() in _SPECIAL:
+            return self._open_tag(buf, i, j)
+        attr_light_match = _RE_ATTR_LIGHT.match
+        attrs = []
+        k = j
+        while (m := attr_light_match(buf, k)) is not None:
+            attrs.append(m)
+            k = m.end()
+        m = _RE_TAG_GT.match(buf, k)
+        if m is None:
+            return self._open_tag(buf, i, j)
+        gt = m.end() - 1
+        self.cbs.on_attr_open_tag(i, j, attrs, gt)
+        return gt + 1, gt + 1
 
     # ------------------------------------------------------------------
     def _enter_tag_body(self, buf: str, i: int, special):

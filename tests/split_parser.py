@@ -2,13 +2,17 @@
 differential reference.
 
 :class:`SplitParser` opts out of the tokenizer's ``on_plain_open_tag``
-event, so every open tag arrives as ``on_open_tag_name`` +
-``on_open_tag_end``, and carries the earlier tag-name, open-tag and
-close-tag bodies: no common-case close branch and no helper shared with
-the fused event. ``Parser`` must give every handler the same events,
+and ``on_attr_open_tag`` events, so every open tag arrives as
+``on_open_tag_name``, one event per attribute and ``on_open_tag_end``,
+and carries the earlier tag-name, open-tag and close-tag bodies: no
+common-case open or close branch and no helper shared with the fused
+events. ``Parser`` must give every handler the same events,
 with the same ``start_index``/``end_index``, as this class does
-(tests/test_fuzz.py::test_fused_tag_events_equal_split_path and
-tools/fuzz_campaign.py).
+(tests/test_fuzz.py::test_fused_tag_events_equal_split_path,
+tests/test_tree_rules.py and tools/fuzz_campaign.py). Those compare an
+EventCollector, whose ``on_attribute`` keeps the per-attribute events,
+and a DomArrayHandler, which has none and so gets the one-event
+attribute tags.
 """
 
 from __future__ import annotations
@@ -23,11 +27,34 @@ from htmlparser2_spark.engine.parser import (
     Parser,
 )
 
-__all__ = ["SplitParser"]
+__all__ = ["SplitParser", "ordered_nodes", "parsed"]
+
+
+def parsed(parser_class, handler, doc: str, options=None):
+    """``handler`` once a ``parser_class`` attached to it has parsed
+    ``doc``."""
+    parser = parser_class(handler, options)
+    handler.attach(parser)
+    parser.parse(doc)
+    return handler
+
+
+def ordered_nodes(nodes: list[dict]) -> list[dict]:
+    """DomArrayHandler nodes with ``attrs`` and ``attr_quotes`` as item
+    lists, so that comparing them also compares attribute order."""
+    return [
+        {
+            **n,
+            "attrs": n["attrs"] and list(n["attrs"].items()),
+            "attr_quotes": n["attr_quotes"] and list(n["attr_quotes"].items()),
+        }
+        for n in nodes
+    ]
 
 
 class SplitParser(Parser):
     on_plain_open_tag = None
+    on_attr_open_tag = None
 
     def _read_tag_name(self, start: int, end: int) -> str:
         name = self.buffer[start:end]

@@ -10,8 +10,13 @@ Invariants (mirroring the reference's own guarantees):
 * serialize -> reparse preserves textContent for HTML-safe trees
 * streaming the document in arbitrary chunks yields the whole-document
   event stream
-* the fused plain-tag events give the same handler events as the split
-  open-tag pair (tests/split_parser.py)
+* the fused plain-tag and one-event attribute-tag paths give the same
+  handler events as the split open-tag path (tests/split_parser.py)
+
+Both path comparisons run an EventCollector (per-attribute events) and
+an index-carrying DomArrayHandler (no ``on_attribute``, so the Parser
+takes the one-event attribute tags), comparing nodes, attributes in
+order with their quotes, and ``start_index``/``end_index``.
 """
 
 from __future__ import annotations
@@ -24,7 +29,7 @@ from htmlparser2_spark.engine.dom import DomArrayHandler, parse_document, text_c
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 from htmlparser2_spark.engine.stream import StreamingParser
 
-from .split_parser import SplitParser
+from .split_parser import SplitParser, ordered_nodes, parsed
 
 # Markup-ish alphabet biased toward structure characters.
 _MARKUP_CHARS = st.sampled_from(
@@ -46,7 +51,8 @@ _TOKENS = st.lists(
             "<foreignObject>", "<desc>", "<li>", "<td>", "<tr>", "<h1>",
             "<P>", "<IMG>", "<input>", "</br>", "<SCRIPT>", "</ScRiPt>",
             "<TiTle>", "</TITLE >", "<!DocType x>", "</scr\u0130pt>",
-            "</\u017ftyle>",
+            "</\u017ftyle>", '<a href="x" b>', "<li A='1' a=\"2\" >",
+            '<svg viewBox="0 0">',
         ]),
         st.text(alphabet=_MARKUP_CHARS, max_size=12),
     ),
@@ -61,7 +67,8 @@ _TREE_TAGS = [
     "<svg>", "</svg>", "<foreignObject>", "</foreignObject>", "<desc>",
     "</desc>", "<li>", "</li>", "<td>", "<tr>", "<h1>", "</h1>", "<p>",
     "</p>", "<P>", "<IMG>", "<input>", "</br>", "<title>", "</title>",
-    "<b x=1>", "x",
+    "<b x=1>", "x", '<p a="1" A=\'2\' b>', '<form x="1">', '<image src="s">',
+    '<svg viewBox="0 0">', '<td class="c">', '<li a = "1">', '<input a="">',
 ]
 _TREE_SOUP = st.lists(st.sampled_from(_TREE_TAGS), max_size=30).map("".join)
 
@@ -100,33 +107,40 @@ def _chunked_doc(draw):
     return [doc[a:b] for a, b in zip([0, *cuts], [*cuts, len(doc)])]
 
 
+def _chunked(handler, chunks: list[str], options: ParserOptions):
+    sp = StreamingParser(handler, options)
+    handler.attach(sp._parser)
+    for chunk in chunks:
+        sp.write(chunk)
+    sp.end()
+    return handler
+
+
 @given(_chunked_doc(), _OPTIONS)
 @settings(max_examples=400, deadline=None)
 def test_chunked_equals_whole(chunks, options):
     doc = "".join(chunks)
-    whole = EventCollector()
-    parser = Parser(whole, ParserOptions(**options))
-    whole.attach(parser)
-    parser.parse(doc)
-
-    chunked = EventCollector()
-    sp = StreamingParser(chunked, ParserOptions(**options))
-    chunked.attach(sp._parser)
-    for chunk in chunks:
-        sp.write(chunk)
-    sp.end()
-    assert chunked.events == whole.events
+    options = ParserOptions(**options)
+    assert (
+        _chunked(EventCollector(), chunks, options).events
+        == parsed(Parser, EventCollector(), doc, options).events
+    )
+    assert ordered_nodes(
+        _chunked(DomArrayHandler(), chunks, options).nodes
+    ) == ordered_nodes(parsed(Parser, DomArrayHandler(), doc, options).nodes)
 
 
 def _assert_split_path_events(doc: str, options: ParserOptions) -> None:
     def events(parser_class):
-        collector = EventCollector()
-        parser = parser_class(collector, options)
-        collector.attach(parser)
-        parser.parse(doc)
-        return collector.events
+        return parsed(parser_class, EventCollector(), doc, options).events
+
+    def nodes(parser_class):
+        return ordered_nodes(
+            parsed(parser_class, DomArrayHandler(), doc, options).nodes
+        )
 
     assert events(Parser) == events(SplitParser)
+    assert nodes(Parser) == nodes(SplitParser)
 
 
 @given(

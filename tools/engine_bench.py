@@ -20,7 +20,10 @@ markdown_udf and parse_pages(mode="markdown")) on the realistic corpus
 plus perfbench's structured pages (``perfbench.inputs.structured_pages``,
 the pages the ``structured_pages_markdown`` workload times:
 headings/lists/links/table, the shapes the renderer transforms). Each
-markdown line also gives its opened tags per document and µs per tag.
+markdown line also gives its opened tags per document, µs per tag, and
+its two layers: ``parse_us_per_doc`` (Parser + TreeHandler building the
+tree) and ``render_us_per_doc`` (the renderer's ``_blocks`` over that
+tree), each best-of-N and timed per document in the same loop.
 The ``realistic_streamed`` line feeds the realistic corpus through
 StreamingParser + DomArrayHandler in 64-char ``write()`` chunks, after
 checking 200 documents' final nodes against the whole-document parse;
@@ -132,6 +135,33 @@ def measure(docs: list[str], one, repeats: int) -> dict:
     }
 
 
+def markdown_layers(docs: list[str], repeats: int) -> dict:
+    """Best-of-``repeats`` µs per document of the markdown line's two
+    layers: the parse that builds the tree, and the render over it."""
+    from htmlparser2_spark.engine.markdown import TreeHandler, _blocks
+
+    tree = TreeHandler()
+    parser = Parser(tree, batch_text=True)  # as MarkdownExtractor builds it
+    best_parse = best_render = None
+    for _ in range(repeats):
+        parse_s = render_s = 0.0
+        for d in docs:
+            t0 = time.perf_counter()
+            parser.parse(d)
+            t1 = time.perf_counter()
+            body = tree.body
+            _blocks(tree.root if body is None else body[2], 0, [])
+            t2 = time.perf_counter()
+            parse_s += t1 - t0
+            render_s += t2 - t1
+        best_parse = parse_s if best_parse is None else min(best_parse, parse_s)
+        best_render = render_s if best_render is None else min(best_render, render_s)
+    return {
+        "parse_us_per_doc": round(best_parse / len(docs) * 1e6, 1),
+        "render_us_per_doc": round(best_render / len(docs) * 1e6, 1),
+    }
+
+
 def main(n_docs: int = 20000, repeats: int = 3) -> None:
     fast = FastTextExtractor()
     handler = TextHandler()
@@ -181,6 +211,7 @@ def main(n_docs: int = 20000, repeats: int = 3) -> None:
         tags_per_doc = sum(md_extractor.extract(d)[1] for d in docs) / n_docs
         line["tags_per_doc"] = round(tags_per_doc, 1)
         line["us_per_tag"] = round(line["ms_per_doc"] * 1e3 / tags_per_doc, 3)
+        line.update(markdown_layers(docs, repeats))
         out[f"{name}_markdown"] = line
 
     # Streaming: the same DOM contract as parse_document, built from

@@ -12,7 +12,11 @@ the 16 ParserOptions combinations:
   parser-built tree, with its open-element count) == adjacency
   ``to_markdown`` on the exact-event DOM (with its element count)
 * the Parser's events, indices included, == those of the split
-  open-tag path kept in tests/split_parser.py (fused plain tags)
+  open-tag path kept in tests/split_parser.py (fused plain tags), for an
+  EventCollector (per-attribute events) and for an index-carrying
+  DomArrayHandler (no ``on_attribute``: one-event attribute tags), whose
+  nodes, attributes in order with their quotes, and indices must also
+  be equal between the chunked and the whole-document parse
 
 Usage: ``python tools/fuzz_campaign.py [N] [seed]`` (default 60000).
 A 60k-document run passes clean.
@@ -28,12 +32,16 @@ import sys
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from htmlparser2_spark.engine.collector import EventCollector  # noqa: E402
-from htmlparser2_spark.engine.dom import parse_document, text_content  # noqa: E402
+from htmlparser2_spark.engine.dom import (  # noqa: E402
+    DomArrayHandler,
+    parse_document,
+    text_content,
+)
 from htmlparser2_spark.engine.fast_text import FastTextExtractor  # noqa: E402
 from htmlparser2_spark.engine.markdown import MarkdownExtractor, to_markdown  # noqa: E402
 from htmlparser2_spark.engine.parser import Parser, ParserOptions  # noqa: E402
 from htmlparser2_spark.engine.stream import StreamingParser  # noqa: E402
-from tests.split_parser import SplitParser  # noqa: E402
+from tests.split_parser import SplitParser, ordered_nodes, parsed  # noqa: E402
 
 ALPH = "<>/=&;!?-[]'\" \n\tabcdDATAscriptyleXMP#x0123&amp;lt<!--]]>" + "é€\U0001f600̸"
 TOKENS = [
@@ -45,7 +53,9 @@ TOKENS = [
     "<iframe>", "<noembed>", "<xmp>", "</xmp>", "<form>", "<image>",
     "</image>", "<foreignObject>", "<desc>", "<h1>", "<P>", "<IMG>",
     "<input>", "</br>", "<SCRIPT>", "</ScRiPt>", "<TiTle>", "</TITLE >",
-    "<!DocType x>", "</scr\u0130pt>", "</\u017ftyle>",
+    "<!DocType x>", "</scr\u0130pt>", "</\u017ftyle>", '<a href="x" b>',
+    "<li A='1' a=\"2\" >", '<svg viewBox="0 0">', '<form x="1">',
+    '<image src="s">', '<td class="c">', '<input a="">',
 ]
 
 OPTION_SPACE = [
@@ -69,6 +79,15 @@ def rand_doc(rng: random.Random) -> str:
     return "".join(parts)
 
 
+def chunked(handler, doc: str, cuts: list[int], options: ParserOptions):
+    sp = StreamingParser(handler, options)
+    handler.attach(sp._parser)
+    for a, b in zip([0, *cuts], cuts):
+        sp.write(doc[a:b])
+    sp.end(doc[cuts[-1] if cuts else 0:])
+    return handler
+
+
 def main(n_docs: int = 60000, seed: int = 20260816) -> int:
     rng = random.Random(seed)
     extractor = FastTextExtractor()
@@ -78,35 +97,30 @@ def main(n_docs: int = 60000, seed: int = 20260816) -> int:
         doc = rand_doc(rng)
         opts = OPTION_SPACE[i % len(OPTION_SPACE)]
         try:
-            col = EventCollector()
-            parser = Parser(col, ParserOptions(**opts))
-            col.attach(parser)
-            parser.parse(doc)
-            for ev in col.events:
+            options = ParserOptions(**opts)
+            events = parsed(Parser, EventCollector(), doc, options).events
+            for ev in events:
                 assert 0 <= ev["startIndex"] <= ev["endIndex"] <= len(doc) + 1, (
                     doc, opts, ev,
                 )
-            col_split = EventCollector()
-            split = SplitParser(col_split, ParserOptions(**opts))
-            col_split.attach(split)
-            split.parse(doc)
-            assert col_split.events == col.events, (
+            assert parsed(SplitParser, EventCollector(), doc, options).events == events, (
                 f"fused!=split: {doc!r} {opts}"
             )
-            col2 = EventCollector()
-            sp = StreamingParser(col2, ParserOptions(**opts))
-            col2.attach(sp._parser)
+            dom = ordered_nodes(parsed(Parser, DomArrayHandler(), doc, options).nodes)
+            assert ordered_nodes(
+                parsed(SplitParser, DomArrayHandler(), doc, options).nodes
+            ) == dom, f"fused!=split DOM: {doc!r} {opts}"
             # 1-8 chunks (0-7 cuts): one document crosses several
             # write() suspensions, not just one.
             cuts = sorted(
                 rng.randrange(0, len(doc) + 1) for _ in range(rng.randrange(0, 8))
             )
-            for a, b in zip([0, *cuts], cuts):
-                sp.write(doc[a:b])
-            sp.end(doc[cuts[-1] if cuts else 0:])
-            assert col2.events == col.events, (
+            assert chunked(EventCollector(), doc, cuts, options).events == events, (
                 f"chunk!=whole cuts={cuts}: {doc!r} {opts}"
             )
+            assert ordered_nodes(
+                chunked(DomArrayHandler(), doc, cuts, options).nodes
+            ) == dom, f"chunk!=whole DOM cuts={cuts}: {doc!r} {opts}"
             nodes = parse_document(doc, **opts)
             n_elements = sum(
                 1 for n in nodes if n["type"] in ("tag", "script", "style")
@@ -122,10 +136,8 @@ def main(n_docs: int = 60000, seed: int = 20260816) -> int:
             if i % 4 == 0:
                 # batch_text opt-in parity (round 4): index-free DOM
                 # must match the exact per-event stream's DOM.
-                from htmlparser2_spark.engine.dom import DomArrayHandler
-
                 h1 = DomArrayHandler(with_indices=False)
-                Parser(h1, ParserOptions(**opts)).parse(doc)
+                Parser(h1, options).parse(doc)
                 h2 = DomArrayHandler(with_indices=False)
                 Parser(h2, ParserOptions(**opts), batch_text=True).parse(doc)
                 assert h1.nodes == h2.nodes, f"batch!=exact: {doc!r} {opts}"
