@@ -51,8 +51,11 @@ Consequences of that contract:
 * Delivery timing differs from the reference in two ways: a construct
   spanning a chunk boundary is delivered when it completes, not
   re-attempted per character; and one ending exactly at a chunk's end
-  waits for the next pass (plain ``<name>`` and ``</name>`` tags
-  excepted: their ``>`` is enough).
+  waits for the next pass. Only an attribute-less, non-special
+  ``<name>`` and an alphanumeric ``</name>`` deliver on their own
+  ``>``: the scan loop emits them without a dry run. Any other close
+  tag (``</p x>``, ``</my-tag>``) is a dry run of ``_closing_tag`` and
+  waits like the rest.
 * Per-document memory is O(doc) here, and not in the reference: its
   ``shiftBuffer`` drops each chunk once the tokenizer has consumed it
   (Parser.ts:764-768), while ``self._buf += chunk`` keeps, and copies,

@@ -48,22 +48,18 @@ QUOTE_DOUBLE = 3
 
 _WS = " \t\n\f\r"
 
-# Text-only ("special") HTML tags, keyed by first character (reference:
-# Tokenizer.ts:138-176). `plaintext` switches the rest of the document to
-# text; `title`/`textarea` are RCDATA (entities decode inside); the rest
-# are raw text.
-_SPECIAL_BY_FIRST = {
-    "i": ("iframe",),
-    "n": ("noembed", "noframes"),
-    "p": ("plaintext",),
-    "s": ("script", "style"),
-    "t": ("title", "textarea"),
-    "x": ("xmp",),
-}
-_SPECIAL = frozenset(name for names in _SPECIAL_BY_FIRST.values() for name in names)
+# Text-only ("special") HTML tags (reference: Tokenizer.ts:138-176).
+# `plaintext` switches the rest of the document to text; `title`/
+# `textarea` are RCDATA (entities decode inside); the rest are raw text.
+_SPECIAL = frozenset((
+    "iframe", "noembed", "noframes", "plaintext", "script", "style",
+    "title", "textarea", "xmp",
+))
 # First characters of the special names, both cases: a tag name that
 # starts with none of them is not special without being lowercased.
-_SPECIAL_FIRST = "".join(_SPECIAL_BY_FIRST) + "".join(_SPECIAL_BY_FIRST).upper()
+_SPECIAL_FIRST = "".join(sorted({name[0] for name in _SPECIAL}))
+_SPECIAL_FIRST += _SPECIAL_FIRST.upper()
+_SPECIAL_MAX = max(map(len, _SPECIAL))  # 9, 'plaintext'
 _RCDATA = frozenset(("title", "textarea"))
 # Case is folded on the slice being tested, ASCII only, as the reference
 # compares (Tokenizer.ts:138-176). A lowered name slice is exact: no
@@ -92,7 +88,7 @@ _RE_NQ_VALUE_END_NODECODE = re.compile(r"[ \t\n\f\r>]")
 _RE_LIGHT_ATTRS = re.compile(
     r""">|[ \t\n\f\r/](?:[^>"'=]|=[ \t\n\f\r]*(?:"[^"]*"|'[^']*')?)*>"""
 )
-# Closing-tag scan (entered at a tag-start char, see _is_tag_start):
+# Closing-tag scan (entered at the first name char, see _closing_tag):
 # name section (anything that isn't a section-end char), after which
 # AfterClosingTagName skips EVERYTHING up to the terminating '>' — so
 # one linear match reproduces the exact machine's positions (group-1
@@ -189,11 +185,17 @@ class Tokenizer:
     ``on_processing_instruction(start, end)``, ``on_end()`` and
     ``is_in_foreign_context()``.
 
+    The scan loop reads each open tag's name once, for every callback
+    set: it finds where the name ends and whether the tag is special
+    (raw text, RCDATA or plaintext: the lowered name is one of
+    ``_SPECIAL`` and ``is_in_foreign_context()`` is false), and hands
+    both, ``(j, special)``, to the open-tag helper, which classifies
+    nothing again.
+
     One method is optional: ``on_plain_open_tag(start, end)``. A
     callback set that has it receives every plain HTML open tag — an
-    attribute-less ``<name>`` whose lowercased name is not a special
-    (raw-text/RCDATA/plaintext) tag — as that ONE event, which means
-    exactly ``on_open_tag_name(start, end)`` followed by
+    attribute-less, non-special ``<name>`` — as that ONE event, which
+    means exactly ``on_open_tag_name(start, end)`` followed by
     ``on_open_tag_end(end)`` (``end`` is the ``>``, which is also where
     the name ends). Sets without it, and XML mode, get the two events.
 
@@ -255,9 +257,10 @@ class Tokenizer:
         what more input cannot change and returns the position to
         resume from. Trailing text is held back; text is decoded once a
         buffered ``<`` follows it (no character reference crosses
-        ``<``). Every ``<`` construct but the plain-tag probes is a dry
-        run of its own helper (:class:`_DryRun`): one that is unfinished
-        or ends on the last buffered char stops the pass at its ``<``.
+        ``<``). Every ``<`` construct but a plain ``<name>`` and an
+        alphanumeric ``</name>`` is a dry run of its own helper
+        (:class:`_DryRun`): one that is unfinished or ends on the last
+        buffered char stops the pass at its ``<``.
         ``should_pause`` (streaming only) is checked between constructs;
         when it fires, the pass stops WITHOUT the EOF epilogue and
         returns the position to resume from.
@@ -272,17 +275,16 @@ class Tokenizer:
         # per-token loop (same technique as the reference's hot-state
         # dispatch ordering, Tokenizer.ts:893-897).
         on_text = cbs.on_text
-        # Plain-tag dispatch (HTML only): `<name>` and `</name…>` take
-        # one match and one callback each instead of the _open_tag /
-        # _closing_tag helper chain. Open tags go that way only for
-        # callback sets with the on_plain_open_tag opt-in (class
-        # docstring); the close-tag match emits the exact machine's
-        # on_close_tag. Sets that also opt in to on_attr_open_tag get
-        # light attribute tags as one event, from _attr_open_tag, unless
-        # light_attrs already skips their attribute sections.
+        # Tag dispatch (class docstring): each open tag's name is
+        # classified once, here; a plain `<name>` (HTML, opt-in) and an
+        # alphanumeric `</name>` are one event each. Sets that also opt
+        # in to on_attr_open_tag get light attribute tags as one event,
+        # from _attr_open_tag, unless light_attrs already skips their
+        # attribute sections.
         on_plain_open_tag = (
             None if xml else getattr(cbs, "on_plain_open_tag", None)
         )
+        special_first = "" if xml else _SPECIAL_FIRST
         open_tag = self._open_tag
         if (not self.light_attrs and on_plain_open_tag is not None
                 and getattr(cbs, "on_attr_open_tag", None) is not None):
@@ -327,7 +329,6 @@ class Tokenizer:
         on_text_decoded = getattr(cbs, "on_text_decoded", None)
         on_close_tag = cbs.on_close_tag
         tag_section_end = _RE_TAG_SECTION_END.search
-        light_close = _RE_LIGHT_CLOSE.match
         try:
             while i < n:
                 if should_pause is not None and should_pause():
@@ -386,24 +387,28 @@ class Tokenizer:
 
                 c = buf[i]
                 # ------------- BeforeTagName dispatch -------------
-                # Plain-tag probes fire only on a '>' in ``buf``, so they are
-                # final in both modes; streaming dry-runs the other helpers.
+                # The plain open and close events fire only on a '>' in
+                # ``buf``, so they are final in both modes; streaming
+                # dry-runs the helpers.
                 if ("a" <= c <= "z" or "A" <= c <= "Z") if not xml else (
                     not _is_end_of_tag_section(c) and c not in "!?/"
                 ):
-                    e = -1
-                    if on_plain_open_tag is not None:
-                        m = tag_section_end(buf, i)
-                        if m is not None:
-                            e = m.start()
-                            if buf[e] == ">" and (
-                                c not in _SPECIAL_FIRST
-                                or buf[i:e].lower() not in _SPECIAL
-                            ):
-                                on_plain_open_tag(i, e)
-                                i = sec = e + 1
-                                continue
-                    i, sec = open_tag(buf, i, e)
+                    # Name end (-1: the name runs to EOF) and special
+                    # class, once; the foreign query waits for a
+                    # special-name match, which is rare.
+                    m = tag_section_end(buf, i)
+                    e = -1 if m is None else m.start()
+                    special = None
+                    if e != -1 and c in special_first:
+                        name = buf[i:e].lower()
+                        if name in _SPECIAL and not cbs.is_in_foreign_context():
+                            special = name
+                    if (special is None and on_plain_open_tag is not None
+                            and e != -1 and buf[e] == ">"):
+                        on_plain_open_tag(i, e)
+                        i = sec = e + 1
+                        continue
+                    i, sec = open_tag(buf, i, e, special)
                 elif c == "!":
                     i, sec = markup_declaration(buf, i + 1)
                 elif c == "?":
@@ -416,20 +421,13 @@ class Tokenizer:
                     if not xml and k < n and (
                         "a" <= buf[k] <= "z" or "A" <= buf[k] <= "Z"
                     ):
-                        # The tag-start branch of _closing_tag when a '>'
-                        # ends the tag; EOF shapes take the helper. An
-                        # alphanumeric `</name>` needs no regex: the '>'
-                        # is where _RE_LIGHT_CLOSE's name group ends.
+                        # An alphanumeric `</name>`: the '>' is where
+                        # _closing_tag's name ends. Every other close
+                        # takes the helper.
                         e = find(">", k)
                         if e != -1 and buf[k:e].isalnum():
                             on_close_tag(k, e)
                             i = sec = e + 1
-                            continue
-                        m = light_close(buf, k)
-                        e = m.end(1)
-                        if m.end() > e:
-                            on_close_tag(k, e)
-                            i = sec = m.end()
                             continue
                     i, sec = closing_tag(buf, k)
                 # else: '<' stays literal text (sec still at '<'); rescan from i.
@@ -451,12 +449,6 @@ class Tokenizer:
                 return n  # text delivered; on_end deferred to resume
         cbs.on_end()
         return None
-
-    # ------------------------------------------------------------------
-    def _is_tag_start(self, c: str) -> bool:
-        if self.xml_mode:
-            return not _is_end_of_tag_section(c)
-        return "a" <= c <= "z" or "A" <= c <= "Z"
 
     def _entity(self, buf: str, amp: int, mode: int, sec: int, in_attr: bool):
         """Handle '&' at ``amp``; returns (cursor, section_start)."""
@@ -481,39 +473,24 @@ class Tokenizer:
 
     # ------------------------------------------------------------------
     # Open tag + attributes. Entered with ``i`` at the first tag-name char.
-    def _open_tag(self, buf: str, i: int, j: int = -1):
-        # j: the tag-name end (_RE_TAG_SECTION_END hit) when the caller
-        # has already searched for it, else -1.
+    def _open_tag(self, buf: str, i: int, j: int, special):
+        """``j`` is the name end (the _RE_TAG_SECTION_END hit), or -1
+        when the name runs to EOF; ``special`` is the lowered special
+        name the tag opens (see :meth:`run`), else None."""
         cbs = self.cbs
         n = len(buf)
-        name_start = i
-
-        special = None  # matched text-only tag name, if any
-        if not self.xml_mode:
-            cands = _SPECIAL_BY_FIRST.get(buf[i].lower())
-            # Foreign-context query deferred until a special candidate
-            # matches by first letter (rare) — one dict probe replaces a
-            # Python call on the per-tag hot path.
-            if cands and not cbs.is_in_foreign_context():
-                for cand in cands:
-                    end = i + len(cand)
-                    if buf[i:end].lower() == cand and end < n:
-                        if _is_end_of_tag_section(buf[end]):
-                            special = cand
-                        break
-                    if end >= n and cand.startswith(buf[i:n].lower()):
-                        # EOF while the tail is still a (possibly complete)
-                        # prefix of the special-start sequence: the partial
-                        # name is emitted as trailing text (reference
-                        # trailing-data rule for SpecialStartSequence).
-                        return n, name_start
-
         if j == -1:
-            m = _RE_TAG_SECTION_END.search(buf, i)
-            if m is None:
-                return n, n  # EOF inside tag name: tag dropped
-            j = m.start()
-        cbs.on_open_tag_name(name_start, j)
+            # EOF inside the name. While the name is a (possibly whole)
+            # prefix of a special name it is emitted as trailing text
+            # (SpecialStartSequence's trailing-data rule); otherwise the
+            # tag is dropped.
+            if not self.xml_mode and n - i <= _SPECIAL_MAX:
+                tail = buf[i:n].lower()
+                if (any(name.startswith(tail) for name in _SPECIAL)
+                        and not cbs.is_in_foreign_context()):
+                    return n, i
+            return n, n
+        cbs.on_open_tag_name(i, j)
 
         if self.light_attrs:
             # One linear regex scan over the attribute section to the
@@ -643,13 +620,13 @@ class Tokenizer:
                 break
             continue
 
-    def _attr_open_tag(self, buf: str, i: int, j: int):
+    def _attr_open_tag(self, buf: str, i: int, j: int, special):
         """``_open_tag`` for callback sets with the ``on_attr_open_tag``
         opt-in. A non-special tag whose attribute section is a run of
         ``_RE_ATTR_LIGHT`` matches, optional whitespace and ``>`` is ONE
-        event; any other tag takes ``_open_tag`` from the name end."""
-        if j == -1 or buf[i:j].lower() in _SPECIAL:
-            return self._open_tag(buf, i, j)
+        event; any other tag takes ``_open_tag``."""
+        if j == -1 or special is not None:
+            return self._open_tag(buf, i, j, special)
         attr_light_match = _RE_ATTR_LIGHT.match
         attrs = []
         k = j
@@ -658,7 +635,7 @@ class Tokenizer:
             k = m.end()
         m = _RE_TAG_GT.match(buf, k)
         if m is None:
-            return self._open_tag(buf, i, j)
+            return self._open_tag(buf, i, j, None)
         gt = m.end() - 1
         self.cbs.on_attr_open_tag(i, j, attrs, gt)
         return gt + 1, gt + 1
@@ -736,7 +713,11 @@ class Tokenizer:
                 # '</>' ignored; the section (from '<') stays in the text.
                 return i + 1, i - 2
             return i + 1, i + 1
-        if self._is_tag_start(c):
+        # A name starts here (XML: any char but '/', since whitespace
+        # and '>' are handled above).
+        if (c != "/") if self.xml_mode else (
+            "a" <= c <= "z" or "A" <= c <= "Z"
+        ):
             # One linear match replaces the section-end search +
             # junk-skip find (see _RE_LIGHT_CLOSE). Three EOF shapes:
             # name ran to EOF -> event dropped; name ended but no '>'

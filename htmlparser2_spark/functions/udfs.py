@@ -243,15 +243,23 @@ def _doc_udf(return_type, make):
     per Arrow batch and returns the per-document function, typically
     closing over one Parser that ``parse()`` resets per document. Every
     cell reaches it through :func:`_to_str`. For a struct
-    ``return_type`` it returns one dict (DataFrame row) per document."""
+    ``return_type`` it returns one dict (DataFrame row) per document.
+    A document whose function raises gets NULL (a struct of NULLs), so
+    one bad document never fails the batch."""
     names = return_type.names if isinstance(return_type, StructType) else None
+    failed = None if names is None else dict.fromkeys(names)
 
     # Series -> Series hints select Spark's scalar pandas UDF, which
     # takes a DataFrame as the value of a struct column.
     def run(html: pd.Series) -> pd.Series:
         one = make()
+        out = []
         # Series.__iter__ is slow; pull a plain list once per batch.
-        out = [one(_to_str(v)) for v in html.tolist()]
+        for v in html.tolist():
+            try:
+                out.append(one(_to_str(v)))
+            except Exception:
+                out.append(failed)
         if names is None:
             return pd.Series(out, dtype=object)
         return pd.DataFrame(out, columns=names)

@@ -30,8 +30,10 @@ more expensive stage sees a smaller corpus):
 Returns ``(corpus, funnel)``: the curated DataFrame plus a
 ``(stage_idx, stage, n_docs)`` funnel table — the per-stage survivor
 counts an operations dashboard tracks per crawl batch. The funnel is
-built lazily (one action computes all stage counts); nothing collects
-to the driver inside the plan.
+built lazily (one action computes all stage counts; a checkpointed
+stage with an exchange runs that stage earlier, see
+``funnel.lazy_checkpointer``); nothing collects to the driver inside
+the plan.
 """
 
 from __future__ import annotations
@@ -74,10 +76,12 @@ def run_curation(
     (e.g. a simple token-count window) replaces it — useful where the
     decision must be reproducible outside Spark.
 
-    ``checkpoint_stages=True`` lazily ``localCheckpoint``s each
+    ``checkpoint_stages=True`` ``localCheckpoint(eager=False)``s each
     stage's survivor frame: the funnel counts plus the returned corpus
     would otherwise re-execute every upstream stage once per
-    evaluation (stage k's lineage contains stages 0..k-1). The
+    evaluation (stage k's lineage contains stages 0..k-1). Under AQE a
+    stage frame with an exchange runs that shuffle stage when it is
+    checkpointed, before any action (``lazy_checkpointer``). The
     truncation costs one executor-local materialization per stage —
     the standard trade for multi-consumer pipelines; disable it to
     keep pure lineage (e.g. when writing the corpus exactly once and

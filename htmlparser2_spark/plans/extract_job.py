@@ -35,10 +35,15 @@ Scale design notes
   granularity — the batch analogue of the reference's incremental
   ``write()`` chunks (Parser.ts:774-800).
 * Lineage: every output row carries its partition id; per-partition
-  metrics (docs, bytes, events, wall_ms) aggregate from the same pass.
+  metrics (docs, bytes, events, wall_ms, errors) aggregate from the
+  same pass.
   ``n_events`` (and so ``events``) is not counted: it is the estimate
   2 x ``n_tags``, kept in ``PARSED_SCHEMA`` for existing readers;
   ``doc_stats_udf`` counts events exactly.
+* No document fails the task: a document whose extraction raises (a
+  ``RecursionError`` from a page nested thousands deep, say) gets a
+  NULL ``extracted``, 0 ``n_tags`` and the exception's class name in
+  ``error``, and the batch goes on.
 * Documents are decoded and extracted by functions/udfs.py's
   ``_to_str`` and ``_make_extract``, the same decoder and extractors
   as the HTML UDFs.
@@ -77,6 +82,7 @@ PARSED_SCHEMA = StructType(
         StructField("html_bytes", LongType()),
         StructField("pid", IntegerType()),
         StructField("wall_ms", LongType()),
+        StructField("error", StringType()),
     ]
 )
 
@@ -116,13 +122,20 @@ def _parse_batches_fn(mode: str, sniff_charset: bool = False):
             tags_col = []
             events_col = []
             bytes_col = []
+            error_col = []
             for html, golden in zip(htmls, goldens):
                 # NULL payloads (fetch failures in real crawls) parse as
                 # empty documents instead of failing the task. With
                 # sniff_charset, BINARY payloads go through the BOM +
                 # meta prescan decoder (engine/encoding.py) instead of
-                # assumed-UTF-8.
-                extracted, n_tags = extract(_to_str(html, sniff_charset))
+                # assumed-UTF-8. A document that raises is one NULL row
+                # carrying its error class (module notes).
+                try:
+                    extracted, n_tags = extract(_to_str(html, sniff_charset))
+                    error = None
+                except Exception as exc:
+                    extracted, n_tags, error = None, 0, type(exc).__name__
+                error_col.append(error)
                 extracted_col.append(extracted)
                 match_col.append(
                     1 if golden is not None and extracted == golden else 0
@@ -150,6 +163,7 @@ def _parse_batches_fn(mode: str, sniff_charset: bool = False):
                     "html_bytes": bytes_col,
                     "pid": pid,
                     "wall_ms": int((time.perf_counter() - t0) * 1000),
+                    "error": error_col,
                 }
             )
 
@@ -244,16 +258,18 @@ def parse_pages(
 
 
 def partition_metrics(parsed: DataFrame) -> DataFrame:
-    """Per-partition lineage: docs, bytes, events, wall_ms.
+    """Per-partition lineage: docs, bytes, events, wall_ms, errors.
 
     ``events`` sums ``n_events``, the 2 x ``n_tags`` estimate, not a
-    count of parser events."""
+    count of parser events; ``errors`` counts the documents whose
+    extraction raised (non-NULL ``error``)."""
     return parsed.groupBy("pid").agg(
         F.count(F.lit(1)).alias("docs"),
         F.sum("html_bytes").alias("bytes"),
         F.sum("n_events").alias("events"),
         F.max("wall_ms").alias("wall_ms"),
         F.sum("golden_match").alias("golden_matches"),
+        F.count("error").alias("errors"),
     )
 
 

@@ -1,6 +1,6 @@
 """Shared stage plumbing for the composed plans (curate_job,
 crawl_job, prep_job): the lazy funnel builder and the per-stage
-lazy-localCheckpoint policy."""
+``localCheckpoint(eager=False)`` policy."""
 
 from __future__ import annotations
 
@@ -14,10 +14,15 @@ __all__ = ["build_funnel", "lazy_checkpointer"]
 
 def lazy_checkpointer(enabled: bool):
     """Stage-boundary truncation policy, shared by every composed
-    plan: with ``enabled``, each stage's frame is lazily
-    localCheckpointed so the funnel counts plus the returned frame
-    don't re-execute every upstream stage per consumer; disabled, the
-    identity (pure lineage for single-consumer runs)."""
+    plan: with ``enabled``, each stage's frame is
+    ``localCheckpoint(eager=False)``-ed so the funnel counts plus the
+    returned frame don't re-execute every upstream stage per consumer;
+    disabled, the identity (pure lineage for single-consumer runs).
+
+    ``eager=False`` is not free under AQE: on a frame whose plan holds
+    an exchange (a join, an aggregate), the call itself runs that
+    shuffle stage as a Spark job, before any action. A narrow frame
+    launches nothing until the first action."""
     if enabled:
         return lambda df: df.localCheckpoint(eager=False)
     return lambda df: df

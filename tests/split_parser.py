@@ -13,9 +13,21 @@ tests/test_tree_rules.py and tools/fuzz_campaign.py). Those compare an
 EventCollector, whose ``on_attribute`` keeps the per-attribute events,
 and a DomArrayHandler, which has none and so gets the one-event
 attribute tags.
+
+Parser and SplitParser run the same ``Tokenizer.run`` loop, so they
+cannot disagree about its tag probes. :class:`ProbeCheckingParser`
+checks those against the helpers instead: every open tag's name end and
+special class that the loop hands on must be the reference's
+(:func:`reference_open_tag`), and wherever the loop emits a tag itself
+(a plain ``<name>``, an alphanumeric ``</name>``), rerunning
+``_open_tag`` or ``_closing_tag`` at the same position must give the
+same events and resume position.
 """
 
 from __future__ import annotations
+
+import re
+import string
 
 from htmlparser2_spark.engine.parser import (
     _CTX_MATHML,
@@ -25,9 +37,17 @@ from htmlparser2_spark.engine.parser import (
     OPEN_IMPLIES_CLOSE,
     SVG_CASE_ADJUSTMENTS,
     Parser,
+    ParserOptions,
 )
+from htmlparser2_spark.engine.tokenizer import Tokenizer
 
-__all__ = ["SplitParser", "ordered_nodes", "parsed"]
+__all__ = [
+    "ProbeCheckingParser",
+    "SplitParser",
+    "ordered_nodes",
+    "parsed",
+    "reference_open_tag",
+]
 
 
 def parsed(parser_class, handler, doc: str, options=None):
@@ -142,3 +162,110 @@ class SplitParser(Parser):
             if self._cb_close_tag:
                 self._cb_close_tag("br", False)
         self.start_index = end + 1
+
+
+# The reference's text-only tags (Tokenizer.ts:138-176), compared after
+# ASCII-only case folding.
+_SPECIAL_NAMES = frozenset((
+    "iframe", "noembed", "noframes", "plaintext", "script", "style",
+    "title", "textarea", "xmp",
+))
+_ASCII_LOWER = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
+_NAME_END = re.compile(r"[ \t\n\f\r/>]")
+
+
+def reference_open_tag(buf: str, i: int, xml: bool, foreign: bool):
+    """``(j, special)`` for an open tag whose name starts at ``i``:
+    the name end (-1 when the name runs to EOF) and the special name
+    the tag opens, else None."""
+    m = _NAME_END.search(buf, i)
+    if m is None:
+        return -1, None
+    name = buf[i:m.start()].translate(_ASCII_LOWER)
+    special = not xml and not foreign and name in _SPECIAL_NAMES
+    return m.start(), name if special else None
+
+
+class _Recorder:
+    """A callback set that records every ``on_*`` event."""
+
+    def __init__(self) -> None:
+        self.events: list[tuple] = []
+
+    def is_in_foreign_context(self) -> bool:
+        raise AssertionError("a helper given its name end needs no context")
+
+    def __getattr__(self, name: str):
+        if not name.startswith("on_"):
+            raise AttributeError(name)
+        return lambda *args: self.events.append((name, args))
+
+
+def _rerun(helper: str, buf: str, *args):
+    """(events, return value) of one tokenizer helper run alone."""
+    recorder = _Recorder()
+    result = getattr(Tokenizer(recorder), helper)(buf, *args)
+    return recorder.events, result
+
+
+class _ProbeCheckingTokenizer(Tokenizer):
+    """Checks the arguments the scan loop passes the open-tag helpers,
+    and tracks whether a helper is running, so that an ``on_close_tag``
+    outside one is known to come from the loop itself."""
+
+    in_helper = 0
+
+    def _checked(self, helper, buf, i, j, special):
+        foreign = self.cbs.is_in_foreign_context()
+        assert (j, special) == reference_open_tag(buf, i, self.xml_mode, foreign), (
+            buf, i, j, special,
+        )
+        self.in_helper += 1
+        try:
+            return helper(buf, i, j, special)
+        finally:
+            self.in_helper -= 1
+
+    def _open_tag(self, buf, i, j, special):
+        return self._checked(super()._open_tag, buf, i, j, special)
+
+    def _attr_open_tag(self, buf, i, j, special):
+        return self._checked(super()._attr_open_tag, buf, i, j, special)
+
+    def _closing_tag(self, buf, i):
+        self.in_helper += 1
+        try:
+            return super()._closing_tag(buf, i)
+        finally:
+            self.in_helper -= 1
+
+
+class ProbeCheckingParser(Parser):
+    """A Parser whose tokenizer's tag probes are checked against the
+    helpers (module docstring). Whole documents only: streaming keeps
+    an injected tokenizer class off its incremental path."""
+
+    def __init__(self, handler, options: ParserOptions | None = None) -> None:
+        o = options or ParserOptions()
+        super().__init__(handler, ParserOptions(**{
+            **{k: getattr(o, k) for k in ParserOptions.__slots__},
+            "tokenizer_class": _ProbeCheckingTokenizer,
+        }))
+
+    def on_plain_open_tag(self, start: int, end: int) -> None:
+        buf = self.buffer
+        assert reference_open_tag(
+            buf, start, False, self.is_in_foreign_context()
+        ) == (end, None) and buf[end] == ">", (buf, start, end)
+        assert _rerun("_open_tag", buf, start, end, None) == (
+            [("on_open_tag_name", (start, end)), ("on_open_tag_end", (end,))],
+            (end + 1, end + 1),
+        ), (buf, start, end)
+        super().on_plain_open_tag(start, end)
+
+    def on_close_tag(self, start: int, end: int) -> None:
+        if not self.tokenizer.in_helper:
+            assert _rerun("_closing_tag", self.buffer, start) == (
+                [("on_close_tag", (start, end))], (end + 1, end + 1),
+            ), (self.buffer, start, end)
+        super().on_close_tag(start, end)

@@ -12,6 +12,7 @@ import pytest
 
 from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
+from htmlparser2_spark.engine.stream import StreamingParser
 
 
 def events(doc: str, **options):
@@ -44,6 +45,58 @@ def test_special_start_prefix_at_eof_is_text():
     assert texts("<tex") == ["tex"]
     # A non-special prefix is InTagName at EOF -> dropped.
     assert texts("<div") == []
+
+
+# Every prefix of every text-only tag name (Tokenizer.ts:138-176), in
+# both letter cases.
+_SPECIAL_PREFIXES = sorted({
+    case(name[:k])
+    for name in (
+        "iframe", "noembed", "noframes", "plaintext", "script", "style",
+        "title", "textarea", "xmp",
+    )
+    for k in range(1, len(name) + 1)
+    for case in (str.lower, str.upper)
+})
+
+
+def _collected(doc: str, chunked: bool) -> list[dict]:
+    """EventCollector events of ``doc``, parsed whole or written in
+    1-char chunks."""
+    collector = EventCollector()
+    if chunked:
+        sp = StreamingParser(collector)
+        collector.attach(sp._parser)
+        for ch in doc:
+            sp.write(ch)
+        sp.end()
+    else:
+        parser = Parser(collector)
+        collector.attach(parser)
+        parser.parse(doc)
+    return collector.events
+
+
+@pytest.mark.parametrize("chunked", [False, True], ids=["whole", "chunked"])
+def test_special_name_prefix_at_eof(chunked):
+    """A tag name running to EOF is trailing text while it is a prefix
+    of a special name in HTML; inside <svg>, or once it is no prefix,
+    the tag is dropped."""
+    svg = _collected("<svg>", False)
+    for prefix in _SPECIAL_PREFIXES:
+        assert _collected("<" + prefix, chunked) == [{
+            "$event": "text", "startIndex": 0, "endIndex": len(prefix),
+            "data": [prefix],
+        }], prefix
+        assert _collected("<svg><" + prefix, chunked) == svg, prefix
+    for doc in ("<scriptx", "<PLAINTEXTX", "<scr\u0130", "<s\u017f"):
+        assert _collected(doc, chunked) == [], doc
+        assert _collected("<svg>" + doc, chunked) == svg, doc
+    # The name ends at the space: the tag opens, then EOF drops it.
+    assert _collected("<s ", chunked) == [
+        {"$event": "opentagname", "startIndex": 0, "endIndex": 2, "data": ["s"]},
+        {"$event": "closetag", "startIndex": 0, "endIndex": 0, "data": ["s", True]},
+    ]
 
 
 def test_open_tag_name_incomplete_at_eof_dropped():

@@ -12,6 +12,9 @@ Invariants (mirroring the reference's own guarantees):
   event stream
 * the fused plain-tag and one-event attribute-tag paths give the same
   handler events as the split open-tag path (tests/split_parser.py)
+* the scan loop's tag probes agree with the tokenizer helpers: the name
+  end and special class it hands on, and each tag it emits itself
+  (tests/split_parser.py ProbeCheckingParser)
 
 Both path comparisons run an EventCollector (per-attribute events) and
 an index-carrying DomArrayHandler (no ``on_attribute``, so the Parser
@@ -21,7 +24,7 @@ order with their quotes, and ``start_index``/``end_index``.
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from htmlparser2_spark.engine.collector import EventCollector
@@ -29,7 +32,7 @@ from htmlparser2_spark.engine.dom import DomArrayHandler, parse_document, text_c
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 from htmlparser2_spark.engine.stream import StreamingParser
 
-from .split_parser import SplitParser, ordered_nodes, parsed
+from .split_parser import ProbeCheckingParser, SplitParser, ordered_nodes, parsed
 
 # Markup-ish alphabet biased toward structure characters.
 _MARKUP_CHARS = st.sampled_from(
@@ -52,7 +55,10 @@ _TOKENS = st.lists(
             "<P>", "<IMG>", "<input>", "</br>", "<SCRIPT>", "</ScRiPt>",
             "<TiTle>", "</TITLE >", "<!DocType x>", "</scr\u0130pt>",
             "</\u017ftyle>", '<a href="x" b>', "<li A='1' a=\"2\" >",
-            '<svg viewBox="0 0">',
+            '<svg viewBox="0 0">', "</p junk>", "</a b=1>", "</li/>",
+            "<XMP>", "<STYLE>", "<PlainText>", "<svg><title>",
+            "<svg><script>", "<math><style>", "<svg><xmp a='1'>",
+            "<svg><TEXTAREA>", "<iframe>",
         ]),
         st.text(alphabet=_MARKUP_CHARS, max_size=12),
     ),
@@ -153,6 +159,28 @@ def test_fused_tag_events_equal_split_path(doc, options, lower_case_tags):
     _assert_split_path_events(
         doc, ParserOptions(lower_case_tags=lower_case_tags, **options)
     )
+
+
+@given(
+    st.one_of(_MARKUP, _FREE, _TOKENS),
+    _OPTIONS,
+    st.one_of(st.none(), st.booleans()),
+)
+@example(
+    "<p>a</p junk><SCRIPT>x</p></script><svg><title>t</title><STYLE>s"
+    "</svg><svg><xmp a='1'>x</xmp></svg><TiTle>&amp;</TITLE >",
+    {"xml_mode": False, "decode_entities": True, "recognize_cdata": False,
+     "recognize_self_closing": False},
+    None,
+)
+@settings(max_examples=400, deadline=None)
+def test_run_loop_tag_probes_equal_helpers(doc, options, lower_case_tags):
+    """Wherever Tokenizer.run classifies an open tag or emits a tag
+    itself, the helpers, rerun on the same buffer and position, agree
+    (tests/split_parser.py ProbeCheckingParser)."""
+    options = ParserOptions(lower_case_tags=lower_case_tags, **options)
+    parsed(ProbeCheckingParser, EventCollector(), doc, options)
+    parsed(ProbeCheckingParser, DomArrayHandler(), doc, options)
 
 
 @given(_TREE_SOUP)

@@ -482,6 +482,80 @@ def test_partition_metrics(spark):
     assert sum(m["docs"] for m in metrics) == 500
     assert all(m["wall_ms"] >= 0 and m["events"] > 0 for m in metrics)
     assert sum(m["golden_matches"] for m in metrics) == 500
+    assert sum(m["errors"] for m in metrics) == 0
+
+
+def _normal_pages(n: int) -> list[tuple[str, str, str]]:
+    return [
+        (f"u{i}", f"<h1>Doc {i}</h1><p>a <b>{i}</b> &amp; c</p>"
+                  f"<ul><li>x<li><a href='/{i}'>y</a></ul>", "en")
+        for i in range(n)
+    ]
+
+
+def test_poisoned_document_fails_no_task(spark):
+    """A page nested 10^4 deep, on which the markdown renderer raises
+    RecursionError, in one batch with normal pages: parse_pages and
+    markdown_udf complete, every other row equals a run without the
+    page, and the bad row carries its error class."""
+    from htmlparser2_spark.functions.udfs import markdown_udf
+    from htmlparser2_spark.plans.extract_job import parse_pages, partition_metrics
+
+    schema = "url string, html string, lang string"
+    normal = _normal_pages(40)
+    rows = normal[:20] + [("bad", "<div>" * 10_000, "en")] + normal[20:]
+    clean_df = spark.createDataFrame(normal, schema).coalesce(1)
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+
+    def by_url(frame):  # every column but the timing
+        return {r["url"]: r.asDict() for r in frame.drop("wall_ms").collect()}
+
+    clean = by_url(parse_pages(clean_df, mode="markdown", repartition=False))
+    parsed = parse_pages(df, mode="markdown", repartition=False)
+    out = by_url(parsed)
+    bad = out.pop("bad")
+    assert out == clean
+    assert all(r["error"] is None and r["extracted"] for r in clean.values())
+    assert bad["extracted"] is None and bad["golden_match"] == 0
+    assert bad["error"] == "RecursionError"
+    metrics = partition_metrics(parsed).collect()
+    assert [(m["docs"], m["errors"]) for m in metrics] == [(41, 1)]
+
+    md = {
+        r["url"]: r["md"]
+        for r in df.select("url", markdown_udf()(F.col("html")).alias("md"))
+        .collect()
+    }
+    assert md.pop("bad") is None
+    assert md == {u: r["extracted"] for u, r in clean.items()}
+
+
+def test_doc_udf_struct_of_nulls_for_failing_document(spark):
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+    from htmlparser2_spark.functions.udfs import _doc_udf
+
+    schema = StructType(
+        [StructField("n", IntegerType()), StructField("doc", StringType())]
+    )
+
+    def make():
+        def one(doc):
+            if doc == "bad":
+                raise ValueError(doc)
+            return {"n": len(doc), "doc": doc}
+
+        return one
+
+    df = spark.createDataFrame([("a",), ("bad",), ("ccc",)], "html string")
+    got = [
+        r["s"].asDict()
+        for r in df.coalesce(1).select(_doc_udf(schema, make)(F.col("html")).alias("s"))
+        .collect()
+    ]
+    assert got == [
+        {"n": 1, "doc": "a"}, {"n": None, "doc": None}, {"n": 3, "doc": "ccc"}
+    ]
 
 
 # ---------------------------- textstats ----------------------------

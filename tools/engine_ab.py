@@ -13,7 +13,12 @@ with the order alternating per rep, one thread. Cases:
   alone on the structured pages: the parse layer of the markdown line
   (its tree is checked through ``markdown_structured``);
 * ``fast_text_synthetic`` / ``fast_text_realistic`` - FastTextExtractor
-  on engine_bench's synthetic and realistic pages.
+  on engine_bench's synthetic and realistic pages;
+* ``fast_text_pages`` - FastTextExtractor on ``sources.pages`` documents
+  of all three template variants, the pages the ``small_pages_text``
+  workload parses, built by DuckDB from ``oracle_pages_cte()`` over
+  perfbench's ``small_docs(SMALL_SEED, N_PAGES)`` (engine_bench's
+  synthetic page covers variant 0 only).
 
 A rep's ratio is parent time / change time, so above 1.0 means the
 change is faster. Each case prints the median ratio, its quartiles
@@ -34,15 +39,31 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-from perfbench.inputs import structured_pages  # noqa: E402
+from perfbench.inputs import small_docs, structured_pages  # noqa: E402
 from tools.engine_bench import (  # noqa: E402
     STRUCTURED_SEED,
     realistic_page,
     synthetic_page,
 )
 
-# Documents per corpus.
+# Documents per corpus, and the sources.pages corpus's size and seed.
 N_DOCS = 200
+N_PAGES = 3000
+SMALL_SEED = 501
+
+
+def sources_pages(seed: int, n_docs: int) -> list[str]:
+    """The ``sources.pages`` documents of ``small_docs(seed, n_docs)``,
+    in doc_id order, from the DuckDB dialect of the page templates."""
+    import duckdb
+    import pandas as pd
+
+    from htmlparser2_spark.sources.pages import oracle_pages_cte
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(small_docs(seed, n_docs)))
+    query = f"WITH {oracle_pages_cte()} SELECT page_str FROM pages ORDER BY doc_id"
+    return [page for (page,) in con.sql(query).fetchall()]
 
 
 def load_engine(tree: str, alias: str):
@@ -73,6 +94,7 @@ def cases(engine) -> dict:
         "parse_structured": ("structured", tree_parser.parse),
         "fast_text_synthetic": ("synthetic", fast.extract),
         "fast_text_realistic": ("realistic", fast.extract),
+        "fast_text_pages": ("pages", fast.extract),
     }
 
 
@@ -90,6 +112,7 @@ def main(parent: str, change: str, reps: int = 30) -> int:
         ],
         "realistic": [realistic_page(i) for i in range(N_DOCS)],
         "synthetic": [synthetic_page(i) for i in range(N_DOCS)],
+        "pages": sources_pages(SMALL_SEED, N_PAGES),
     }
     trees = (cases(load_engine(parent, "_ab_parent")),
              cases(load_engine(change, "_ab_change")))

@@ -17,6 +17,8 @@ the 16 ParserOptions combinations:
   DomArrayHandler (no ``on_attribute``: one-event attribute tags), whose
   nodes, attributes in order with their quotes, and indices must also
   be equal between the chunked and the whole-document parse
+* the scan loop's tag probes agree with the tokenizer helpers
+  (tests/split_parser.py ProbeCheckingParser), for both handlers
 
 Usage: ``python tools/fuzz_campaign.py [N] [seed]`` (default 60000).
 A 60k-document run passes clean.
@@ -41,7 +43,12 @@ from htmlparser2_spark.engine.fast_text import FastTextExtractor  # noqa: E402
 from htmlparser2_spark.engine.markdown import MarkdownExtractor, to_markdown  # noqa: E402
 from htmlparser2_spark.engine.parser import Parser, ParserOptions  # noqa: E402
 from htmlparser2_spark.engine.stream import StreamingParser  # noqa: E402
-from tests.split_parser import SplitParser, ordered_nodes, parsed  # noqa: E402
+from tests.split_parser import (  # noqa: E402
+    ProbeCheckingParser,
+    SplitParser,
+    ordered_nodes,
+    parsed,
+)
 
 ALPH = "<>/=&;!?-[]'\" \n\tabcdDATAscriptyleXMP#x0123&amp;lt<!--]]>" + "é€\U0001f600̸"
 TOKENS = [
@@ -55,7 +62,10 @@ TOKENS = [
     "<input>", "</br>", "<SCRIPT>", "</ScRiPt>", "<TiTle>", "</TITLE >",
     "<!DocType x>", "</scr\u0130pt>", "</\u017ftyle>", '<a href="x" b>',
     "<li A='1' a=\"2\" >", '<svg viewBox="0 0">', '<form x="1">',
-    '<image src="s">', '<td class="c">', '<input a="">',
+    '<image src="s">', '<td class="c">', '<input a="">', "</p junk>",
+    "</a b=1>", "</li/>", "<XMP>", "<STYLE>", "<PlainText>",
+    "<svg><title>", "<svg><script>", "<math><style>", "<svg><xmp a='1'>",
+    "<svg><TEXTAREA>",
 ]
 
 OPTION_SPACE = [
@@ -107,6 +117,8 @@ def main(n_docs: int = 60000, seed: int = 20260816) -> int:
                 f"fused!=split: {doc!r} {opts}"
             )
             dom = ordered_nodes(parsed(Parser, DomArrayHandler(), doc, options).nodes)
+            parsed(ProbeCheckingParser, EventCollector(), doc, options)
+            parsed(ProbeCheckingParser, DomArrayHandler(), doc, options)
             assert ordered_nodes(
                 parsed(SplitParser, DomArrayHandler(), doc, options).nodes
             ) == dom, f"fused!=split DOM: {doc!r} {opts}"
