@@ -5,7 +5,10 @@ testHelper.ts:16-87): records ``{$event, data, startIndex, endIndex}``
 per handler callback, merges adjacent text events, drops the undefined
 quote argument from attribute events, and validates the
 ``startIndex <= endIndex`` invariant. Used by the ported golden-snapshot
-tests and by the event-stream UDF output.
+tests and the differential checks (tests/test_fuzz.py,
+tests/test_tree_rules.py, tools/fuzz_campaign.py); the event-stream UDF
+(functions/udfs.py ``parser_events_udf``) builds its rows with its own
+``_EventArrayHandler``.
 """
 
 from __future__ import annotations

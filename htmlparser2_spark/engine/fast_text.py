@@ -57,7 +57,7 @@ class _FastHandler:
     def on_text_entity(self, cp: int, end: int) -> None:
         self.parts.append(chr(cp))
 
-    def on_open_tag_name(self, start: int, end: int) -> None:
+    def on_open_tag_name(self, start: int, end: int, attrs=(), gt=0) -> None:
         self.n_tags += 1
         length = end - start
         if (length == 3 or length == 4) and self.buf[start:end].lower() in (
@@ -66,9 +66,10 @@ class _FastHandler:
         ):
             raise _Bail
 
-    # A plain `<name>` (tokenizer opt-in): its on_open_tag_end is a
-    # no-op here, so the fused event is the name event.
-    on_plain_open_tag = on_open_tag_name
+    # A bare `<name>` arrives as on_light_open_tag(start, end, (), end)
+    # (tokenizer opt-in; light_attrs sends no other light tag): its
+    # on_open_tag_end is a no-op here, so the one event is the name event.
+    on_light_open_tag = on_open_tag_name
 
     # CDATA only tokenizes from literal "<![CDATA[", which in default
     # HTML mode (non-foreign, recognizeCDATA off) the parser reports as a

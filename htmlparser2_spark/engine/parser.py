@@ -195,7 +195,7 @@ _IMAGE_TAG = "image"
 # Lowercased open-tag names that a tree rule may touch even without a
 # foreign ancestor: void elements, the ``<form>`` rule, the ``image``
 # alias and the foreign-context pushes. Any other name, when no implied
-# close fires, is just pushed (Parser.on_plain_open_tag's inline branch).
+# close fires, is just pushed (Parser.on_light_open_tag's inline branch).
 _RULED_OPEN_NAMES = frozenset(
     (*VOID_ELEMENTS, _FORM_TAG, _IMAGE_TAG, *_FOREIGN_PUSH)
 )
@@ -248,14 +248,14 @@ class ParserOptions:
 class Parser:
     """One-shot parser for a complete document string.
 
-    The Parser takes the tokenizer's two fused open-tag events (see
-    Tokenizer's class docstring). ``on_plain_open_tag`` is always on; an
-    element that no tree rule touches (its lowercased name is outside
-    ``_RULED_OPEN_NAMES`` and no implied close fires, with no foreign
-    ancestor) is pushed and reported right there, any other goes through
-    ``_open_head``/``_open_tail``. ``on_attr_open_tag`` is on only when
-    the handler has no ``on_attribute`` and attribute names are
-    lowercased; it too goes through ``_open_head``/``_open_tail``.
+    The Parser takes the tokenizer's one-event light open tag
+    (``on_light_open_tag``, see Tokenizer's class docstring) for every
+    handler and option set: an element that no tree rule touches (its
+    lowercased name is outside ``_RULED_OPEN_NAMES`` and no implied
+    close fires, with no foreign ancestor) is pushed and reported right
+    there, any other goes through ``_open_head``/``_open_tail``. Either
+    way the handler gets the events and indices of the split name,
+    attribute and end events.
     """
 
     def __init__(
@@ -309,10 +309,6 @@ class Parser:
         self._cb_end = g("on_end")
         self._cb_parser_init = g("on_parser_init")
         self._cb_reset = g("on_reset")
-        if self._cb_attribute or not o.lower_case_attribute_names:
-            # Attribute events wanted, or names kept as written: every
-            # attribute tag takes the split events (tokenizer opt-in).
-            self.on_attr_open_tag = None
         self._reset_state()
         # Lifecycle: onparserinit fires at construction (Parser.ts:308)
         # and again after every reset (Parser.ts:713-723).
@@ -410,10 +406,13 @@ class Parser:
         self.end_index = end
         self._emit_open_tag(self._read_tag_name(start, end))
 
-    def on_plain_open_tag(self, start: int, end: int) -> None:
-        """The tokenizer's fused attribute-less open tag: exactly
-        ``on_open_tag_name(start, end)`` then ``on_open_tag_end(end)``,
-        the same handler events and indices."""
+    def on_light_open_tag(self, start: int, end: int, attrs, gt: int) -> None:
+        """The tokenizer's one-event light open tag: ``start``/``end``
+        bound the name, ``attrs`` holds one ``_RE_ATTR_LIGHT`` match per
+        attribute (none for a bare ``<name>``), ``gt`` is the ``>``.
+        Exactly the handler events and indices of the split
+        ``on_open_tag_name(start, end)``, attribute events and
+        ``on_open_tag_end(gt)``."""
         self.end_index = end
         if self._plain_names and len(self._foreign) == 1:
             name = self.buffer[start:end].lower()
@@ -421,57 +420,65 @@ class Parser:
                 stack = self._stack
                 implies_close = OPEN_IMPLIES_CLOSE.get(name)
                 if not (implies_close and stack and stack[-1] in implies_close):
-                    # No tree rule applies: push, and the two handler
-                    # events of _open_head and _open_tail.
+                    # No tree rule applies: push, and the handler events
+                    # of _open_head, the attributes and _open_tail.
                     stack.append(name)
                     cb = self._cb_open_tag_name
                     if cb:
                         cb(name)
+                    attribs = self._light_attribs(attrs, True) if attrs else {}
+                    self.end_index = gt
                     cb = self._cb_open_tag
                     if cb:
-                        cb(name, {}, False)
-                    self.start_index = end + 1
+                        cb(name, attribs, False)
+                    self._attrib_quotes = None
+                    self.start_index = gt + 1
                     return
         name = self._read_tag_name(start, end)
-        if self._open_head(name):
-            self._open_tail(name, {}, False)
-        self.start_index = end + 1
-
-    def on_attr_open_tag(self, start: int, end: int, attrs: list, gt: int) -> None:
-        """The tokenizer's one-event attribute tag: ``start``/``end``
-        bound the name, ``attrs`` holds one ``_RE_ATTR_LIGHT`` match
-        per attribute, ``gt`` is the ``>``. The same handler events and
-        indices as the split name, attribute and end events, for a
-        handler with no ``on_attribute`` (``__init__`` opts out
-        otherwise): the names are lowercased (lower_case_attribute_names
-        is on) and the first occurrence wins (Parser.ts:596-598)."""
-        self.end_index = end
-        name = self._read_tag_name(start, end)
-        if self._open_head(name):
-            attribs: dict[str, str] = {}
-            quotes: dict[str, str] = {}
-            for m in attrs:
-                key, double, single = m.groups()
-                key = key.lower()
-                if key not in attribs:
-                    if double is not None:
-                        attribs[key] = double
-                        quotes[key] = '"'
-                    elif single is not None:
-                        attribs[key] = single
-                        quotes[key] = "'"
-                    else:
-                        attribs[key] = ""
-                        quotes[key] = NO_VALUE
-            # Handlers may read _attrib_quotes in on_open_tag
-            # (DomArrayHandler): reset after the events.
-            self._attrib_quotes = quotes
-            self.end_index = gt
+        opened = self._open_head(name)
+        attribs = self._light_attribs(attrs, opened) if attrs else {}
+        self.end_index = gt
+        if opened:
             self._open_tail(name, attribs, False)
             self._attrib_quotes = None
-        else:
-            self.end_index = gt
         self.start_index = gt + 1
+
+    def _light_attribs(self, attrs, keep: bool) -> dict:
+        """The attribute events of a one-event tag's matches, with the
+        split path's indices (``start_index`` at the attribute name,
+        ``end_index`` at the match end: past the closing quote, or the
+        name end of a valueless attribute), and the attribute dict, in
+        which the first occurrence wins (Parser.ts:596-598). ``keep``
+        (the tag opened) sets ``_attrib_quotes``, which handlers may
+        read in ``on_open_tag`` (DomArrayHandler) and the caller resets
+        after it; an ignored second ``<form>`` still reports its
+        attributes, as the split events do."""
+        cb = self._cb_attribute
+        lower = self.options.lower_case_attribute_names
+        attribs: dict[str, str] = {}
+        quotes: dict[str, str] = {}
+        if keep:
+            self._attrib_quotes = quotes
+        tag_start = self.start_index
+        for m in attrs:
+            key, double, single = m.groups()
+            if lower:
+                key = key.lower()
+            if double is not None:
+                value, quote = double, '"'
+            elif single is not None:
+                value, quote = single, "'"
+            else:
+                value, quote = "", NO_VALUE
+            if cb:
+                self.start_index = m.start(1)
+                self.end_index = m.end()
+                cb(key, value, quote)
+            if key not in attribs:
+                attribs[key] = value
+                quotes[key] = quote
+        self.start_index = tag_start
+        return attribs
 
     def _emit_open_tag(self, name: str) -> None:
         self._open_tag_start = self.start_index
@@ -484,7 +491,7 @@ class Parser:
 
     # Tree construction for an open tag (Parser.ts:393-451) lives in
     # the next two helpers, the one copy of its rules for the split
-    # events, the fused event and the ``</p>`` synthesis.
+    # events, the one-event tag and the ``</p>`` synthesis.
     def _open_head(self, name: str) -> bool:
         """At the tag name: the implied closes, the stack and
         foreign-context pushes, then the handler's ``on_open_tag_name``.

@@ -192,23 +192,19 @@ class Tokenizer:
     both, ``(j, special)``, to the open-tag helper, which classifies
     nothing again.
 
-    One method is optional: ``on_plain_open_tag(start, end)``. A
-    callback set that has it receives every plain HTML open tag — an
-    attribute-less, non-special ``<name>`` — as that ONE event, which
-    means exactly ``on_open_tag_name(start, end)`` followed by
-    ``on_open_tag_end(end)`` (``end`` is the ``>``, which is also where
-    the name ends). Sets without it, and XML mode, get the two events.
-
-    A set with that method may also have ``on_attr_open_tag(name_start,
-    name_end, attrs, gt)``. It then receives, as that ONE event, every
-    non-special HTML open tag whose attribute section is a run of
-    ``_RE_ATTR_LIGHT`` matches (quoted ``&``-free values and valueless
-    attributes) followed by optional whitespace and ``>``: ``attrs``
-    holds the matches, ``gt`` is the ``>``. It means exactly
+    One method is optional: ``on_light_open_tag(name_start, name_end,
+    attrs, gt)``. A callback set that has it receives every light HTML
+    open tag as that ONE event: a non-special tag whose attribute
+    section is a run of ``_RE_ATTR_LIGHT`` matches (quoted ``&``-free
+    values and valueless attributes, possibly none) followed by optional
+    whitespace and ``>``. ``attrs`` holds the matches and ``gt`` is the
+    ``>``; a bare ``<name>`` comes straight from the scan loop with
+    ``attrs == ()`` and ``gt == name_end``. The event means exactly
     ``on_open_tag_name(name_start, name_end)``, the attribute events the
     exact machine derives from each match, then ``on_open_tag_end(gt)``.
-    A ``None`` value opts out, and a ``light_attrs`` tokenizer never
-    sends it (it skips attribute sections whole).
+    Sets without it, and XML mode, get the split events; a
+    ``light_attrs`` tokenizer skips attribute sections whole, so it
+    sends the one event for bare ``<name>`` tags only.
     """
 
     __slots__ = (
@@ -257,7 +253,7 @@ class Tokenizer:
         what more input cannot change and returns the position to
         resume from. Trailing text is held back; text is decoded once a
         buffered ``<`` follows it (no character reference crosses
-        ``<``). Every ``<`` construct but a plain ``<name>`` and an
+        ``<``). Every ``<`` construct but a bare ``<name>`` and an
         alphanumeric ``</name>`` is a dry run of its own helper
         (:class:`_DryRun`): one that is unfinished or ends on the last
         buffered char stops the pass at its ``<``.
@@ -276,19 +272,17 @@ class Tokenizer:
         # dispatch ordering, Tokenizer.ts:893-897).
         on_text = cbs.on_text
         # Tag dispatch (class docstring): each open tag's name is
-        # classified once, here; a plain `<name>` (HTML, opt-in) and an
-        # alphanumeric `</name>` are one event each. Sets that also opt
-        # in to on_attr_open_tag get light attribute tags as one event,
-        # from _attr_open_tag, unless light_attrs already skips their
-        # attribute sections.
-        on_plain_open_tag = (
-            None if xml else getattr(cbs, "on_plain_open_tag", None)
+        # classified once, here; a bare `<name>` (HTML, opt-in) and an
+        # alphanumeric `</name>` are one event each. Other light open
+        # tags are one event from _light_open_tag, unless light_attrs
+        # already skips their attribute sections.
+        on_light_open_tag = (
+            None if xml else getattr(cbs, "on_light_open_tag", None)
         )
         special_first = "" if xml else _SPECIAL_FIRST
         open_tag = self._open_tag
-        if (not self.light_attrs and on_plain_open_tag is not None
-                and getattr(cbs, "on_attr_open_tag", None) is not None):
-            open_tag = self._attr_open_tag
+        if on_light_open_tag is not None and not self.light_attrs:
+            open_tag = self._light_open_tag
         helpers = (open_tag, self._closing_tag, self._markup_declaration,
                    self._bogus_comment, self._processing_instruction)
         if not final:
@@ -387,7 +381,7 @@ class Tokenizer:
 
                 c = buf[i]
                 # ------------- BeforeTagName dispatch -------------
-                # The plain open and close events fire only on a '>' in
+                # The loop's own open and close events fire only on a '>' in
                 # ``buf``, so they are final in both modes; streaming
                 # dry-runs the helpers.
                 if ("a" <= c <= "z" or "A" <= c <= "Z") if not xml else (
@@ -403,9 +397,9 @@ class Tokenizer:
                         name = buf[i:e].lower()
                         if name in _SPECIAL and not cbs.is_in_foreign_context():
                             special = name
-                    if (special is None and on_plain_open_tag is not None
+                    if (special is None and on_light_open_tag is not None
                             and e != -1 and buf[e] == ">"):
-                        on_plain_open_tag(i, e)
+                        on_light_open_tag(i, e, (), e)
                         i = sec = e + 1
                         continue
                     i, sec = open_tag(buf, i, e, special)
@@ -620,9 +614,9 @@ class Tokenizer:
                 break
             continue
 
-    def _attr_open_tag(self, buf: str, i: int, j: int, special):
-        """``_open_tag`` for callback sets with the ``on_attr_open_tag``
-        opt-in. A non-special tag whose attribute section is a run of
+    def _light_open_tag(self, buf: str, i: int, j: int, special):
+        """``_open_tag`` for callback sets with ``on_light_open_tag``. A
+        non-special tag whose attribute section is a run of
         ``_RE_ATTR_LIGHT`` matches, optional whitespace and ``>`` is ONE
         event; any other tag takes ``_open_tag``."""
         if j == -1 or special is not None:
@@ -637,7 +631,7 @@ class Tokenizer:
         if m is None:
             return self._open_tag(buf, i, j, None)
         gt = m.end() - 1
-        self.cbs.on_attr_open_tag(i, j, attrs, gt)
+        self.cbs.on_light_open_tag(i, j, attrs, gt)
         return gt + 1, gt + 1
 
     # ------------------------------------------------------------------

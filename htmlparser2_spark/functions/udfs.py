@@ -284,14 +284,14 @@ def _parsed(new_handler, result, options: dict, *, batch_text: bool = False):
     return make
 
 
-def _on_dom(fn, options: dict, *, batch_text: bool = True):
+def _on_dom(fn, options: dict):
     """``make`` for a UDF whose value is ``fn(nodes)`` of the parsed
-    adjacency DOM (no source indices)."""
+    adjacency DOM (no source indices, batched text)."""
     return _parsed(
         lambda: DomArrayHandler(with_indices=False),
         lambda dom: fn(dom.nodes),
         options,
-        batch_text=batch_text,
+        batch_text=True,
     )
 
 

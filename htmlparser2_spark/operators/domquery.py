@@ -278,11 +278,7 @@ def outer_html(pages: DataFrame, html_col: str = "html", **parser_options) -> Da
     xml_mode = parser_options.get("xml_mode", False)
     render = _doc_udf(
         StringType(),
-        _on_dom(
-            lambda nodes: serialize(nodes, xml_mode=xml_mode),
-            parser_options,
-            batch_text=False,
-        ),
+        _on_dom(lambda nodes: serialize(nodes, xml_mode=xml_mode), parser_options),
     )
     return pages.withColumn("outer_html", render(F.col(html_col)))
 
@@ -306,9 +302,7 @@ def inner_html(pages: DataFrame, *, tag: str = "body", html_col: str = "html",
             return None
         return inner_html_of(nodes, target["node_id"], xml_mode=xml_mode)
 
-    render = _doc_udf(
-        StringType(), _on_dom(inner, parser_options, batch_text=False)
-    )
+    render = _doc_udf(StringType(), _on_dom(inner, parser_options))
     return pages.withColumn("inner_html", render(F.col(html_col)))
 
 

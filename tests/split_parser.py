@@ -1,25 +1,24 @@
-"""The Parser's tag path before plain tags were fused, kept as a
-differential reference.
+"""The Parser's split tag path, kept as a differential reference.
 
-:class:`SplitParser` opts out of the tokenizer's ``on_plain_open_tag``
-and ``on_attr_open_tag`` events, so every open tag arrives as
+:class:`SplitParser` opts out of the tokenizer's one-event
+``on_light_open_tag``, so every open tag arrives as
 ``on_open_tag_name``, one event per attribute and ``on_open_tag_end``,
-and carries the earlier tag-name, open-tag and close-tag bodies: no
-common-case open or close branch and no helper shared with the fused
-events. ``Parser`` must give every handler the same events,
-with the same ``start_index``/``end_index``, as this class does
-(tests/test_fuzz.py::test_fused_tag_events_equal_split_path,
+and carries the tag-name, open-tag and close-tag bodies from before the
+one-event tag: no common-case open or close branch and no helper shared
+with it. ``Parser`` must give every handler, under every option set,
+the same events, with the same ``start_index``/``end_index``, as this
+class does (tests/test_fuzz.py::test_fused_tag_events_equal_split_path,
 tests/test_tree_rules.py and tools/fuzz_campaign.py). Those compare an
-EventCollector, whose ``on_attribute`` keeps the per-attribute events,
-and a DomArrayHandler, which has none and so gets the one-event
-attribute tags.
+EventCollector, which has ``on_attribute`` and so gets attribute events
+from the one-event tag, and an index-carrying DomArrayHandler, which
+reads ``_attrib_quotes`` in ``on_open_tag``.
 
 Parser and SplitParser run the same ``Tokenizer.run`` loop, so they
 cannot disagree about its tag probes. :class:`ProbeCheckingParser`
 checks those against the helpers instead: every open tag's name end and
 special class that the loop hands on must be the reference's
 (:func:`reference_open_tag`), and wherever the loop emits a tag itself
-(a plain ``<name>``, an alphanumeric ``</name>``), rerunning
+(a bare ``<name>``, an alphanumeric ``</name>``), rerunning
 ``_open_tag`` or ``_closing_tag`` at the same position must give the
 same events and resume position.
 """
@@ -73,8 +72,7 @@ def ordered_nodes(nodes: list[dict]) -> list[dict]:
 
 
 class SplitParser(Parser):
-    on_plain_open_tag = None
-    on_attr_open_tag = None
+    on_light_open_tag = None
 
     def _read_tag_name(self, start: int, end: int) -> str:
         name = self.buffer[start:end]
@@ -211,7 +209,8 @@ def _rerun(helper: str, buf: str, *args):
 class _ProbeCheckingTokenizer(Tokenizer):
     """Checks the arguments the scan loop passes the open-tag helpers,
     and tracks whether a helper is running, so that an ``on_close_tag``
-    outside one is known to come from the loop itself."""
+    or ``on_light_open_tag`` outside one is known to come from the loop
+    itself."""
 
     in_helper = 0
 
@@ -229,8 +228,8 @@ class _ProbeCheckingTokenizer(Tokenizer):
     def _open_tag(self, buf, i, j, special):
         return self._checked(super()._open_tag, buf, i, j, special)
 
-    def _attr_open_tag(self, buf, i, j, special):
-        return self._checked(super()._attr_open_tag, buf, i, j, special)
+    def _light_open_tag(self, buf, i, j, special):
+        return self._checked(super()._light_open_tag, buf, i, j, special)
 
     def _closing_tag(self, buf, i):
         self.in_helper += 1
@@ -252,16 +251,18 @@ class ProbeCheckingParser(Parser):
             "tokenizer_class": _ProbeCheckingTokenizer,
         }))
 
-    def on_plain_open_tag(self, start: int, end: int) -> None:
-        buf = self.buffer
-        assert reference_open_tag(
-            buf, start, False, self.is_in_foreign_context()
-        ) == (end, None) and buf[end] == ">", (buf, start, end)
-        assert _rerun("_open_tag", buf, start, end, None) == (
-            [("on_open_tag_name", (start, end)), ("on_open_tag_end", (end,))],
-            (end + 1, end + 1),
-        ), (buf, start, end)
-        super().on_plain_open_tag(start, end)
+    def on_light_open_tag(self, start: int, end: int, attrs, gt: int) -> None:
+        if not self.tokenizer.in_helper:
+            buf = self.buffer
+            assert attrs == () and gt == end, (buf, start, end)
+            assert reference_open_tag(
+                buf, start, False, self.is_in_foreign_context()
+            ) == (end, None) and buf[end] == ">", (buf, start, end)
+            assert _rerun("_open_tag", buf, start, end, None) == (
+                [("on_open_tag_name", (start, end)), ("on_open_tag_end", (end,))],
+                (end + 1, end + 1),
+            ), (buf, start, end)
+        super().on_light_open_tag(start, end, attrs, gt)
 
     def on_close_tag(self, start: int, end: int) -> None:
         if not self.tokenizer.in_helper:

@@ -10,16 +10,17 @@ Invariants (mirroring the reference's own guarantees):
 * serialize -> reparse preserves textContent for HTML-safe trees
 * streaming the document in arbitrary chunks yields the whole-document
   event stream
-* the fused plain-tag and one-event attribute-tag paths give the same
-  handler events as the split open-tag path (tests/split_parser.py)
+* the one-event light open tag gives the same handler events as the
+  split open-tag path (tests/split_parser.py)
 * the scan loop's tag probes agree with the tokenizer helpers: the name
   end and special class it hands on, and each tag it emits itself
   (tests/split_parser.py ProbeCheckingParser)
 
-Both path comparisons run an EventCollector (per-attribute events) and
-an index-carrying DomArrayHandler (no ``on_attribute``, so the Parser
-takes the one-event attribute tags), comparing nodes, attributes in
-order with their quotes, and ``start_index``/``end_index``.
+Both path comparisons run an EventCollector (attribute events) and an
+index-carrying DomArrayHandler (attribute quotes read in
+``on_open_tag``), comparing events or nodes, attributes in order with
+their quotes, and ``start_index``/``end_index``, under option sets that
+include ``lower_case_attribute_names`` (names lowercased or kept).
 """
 
 from __future__ import annotations
@@ -84,6 +85,7 @@ _OPTIONS = st.fixed_dictionaries(
         "decode_entities": st.booleans(),
         "recognize_cdata": st.booleans(),
         "recognize_self_closing": st.booleans(),
+        "lower_case_attribute_names": st.one_of(st.none(), st.booleans()),
     }
 )
 
@@ -170,7 +172,7 @@ def test_fused_tag_events_equal_split_path(doc, options, lower_case_tags):
     "<p>a</p junk><SCRIPT>x</p></script><svg><title>t</title><STYLE>s"
     "</svg><svg><xmp a='1'>x</xmp></svg><TiTle>&amp;</TITLE >",
     {"xml_mode": False, "decode_entities": True, "recognize_cdata": False,
-     "recognize_self_closing": False},
+     "recognize_self_closing": False, "lower_case_attribute_names": None},
     None,
 )
 @settings(max_examples=400, deadline=None)
@@ -186,7 +188,7 @@ def test_run_loop_tag_probes_equal_helpers(doc, options, lower_case_tags):
 @given(_TREE_SOUP)
 @settings(max_examples=400, deadline=None)
 def test_fused_tree_rules_equal_split_path(doc):
-    """Default HTML options, where plain tags take the fused path."""
+    """Default HTML options, where rule-free light tags open inline."""
     _assert_split_path_events(doc, ParserOptions())
 
 

@@ -5,9 +5,11 @@ For each name a tree rule touches (the ``OPEN_IMPLIES_CLOSE`` keys,
 the name is opened bare and with attributes under stack tops that fire
 its rule and ones that do not. ``Parser`` must give the same events,
 ``start_index``/``end_index`` included, as tests/split_parser.py's
-``SplitParser`` to three handlers: an EventCollector (per-attribute
-events), the same collector without ``on_attribute`` (the one-event
-attribute tag) and a DomArrayHandler (attribute order and quotes).
+``SplitParser`` to three handlers: an EventCollector (attribute
+events), the same collector without ``on_attribute`` and a
+DomArrayHandler (attribute order and quotes). A second table pins each
+shape of the tokenizer's one-event light open tag the same way, with
+attribute names lowercased and kept as written.
 """
 
 from __future__ import annotations
@@ -72,12 +74,45 @@ def test_ruled_open_tags_equal_split_path(name):
         ), doc
 
 
-def test_attribute_event_opt_in():
-    """The Parser takes one-event attribute tags only for a handler with
-    no ``on_attribute``, and only when attribute names are lowercased."""
-    assert Parser(DomArrayHandler()).on_attr_open_tag is not None
-    assert Parser(TagCollector()).on_attr_open_tag is not None
-    assert Parser(EventCollector()).on_attr_open_tag is None
-    assert Parser(
-        DomArrayHandler(), ParserOptions(lower_case_attribute_names=False)
-    ).on_attr_open_tag is None
+class LightTagCounter(Parser):
+    """A Parser that counts the one-event light open tags it gets."""
+
+    n_light = 0
+
+    def on_light_open_tag(self, start, end, attrs, gt):
+        self.n_light += 1
+        super().on_light_open_tag(start, end, attrs, gt)
+
+
+# (document, the one-event light open tags in it): bare names (``>``
+# at, or after whitespace past, the name end), attributes (valueless,
+# quoted, duplicate in mixed case), an ignored second ``<form>`` with
+# attributes, the ``image`` alias and an implied close.
+LIGHT_SHAPES = [
+    pytest.param("<p>t", 1, id="bare"),
+    pytest.param("<p >t", 1, id="bare_space"),
+    pytest.param("<p\n>t", 1, id="bare_newline"),
+    pytest.param("<p a>t", 1, id="valueless"),
+    pytest.param("<P A='1' a=\"2\" b>t</p>", 1, id="duplicate_mixed_case"),
+    pytest.param('<form><form x="1">t</form>', 2, id="second_form"),
+    pytest.param('<image src="s">t', 1, id="image_alias"),
+    pytest.param('<td><td class="c">t', 2, id="implied_close"),
+]
+
+
+@pytest.mark.parametrize("doc, n_light", LIGHT_SHAPES)
+@pytest.mark.parametrize(
+    "lower_case_attribute_names", [True, False], ids=["lowercased", "as_written"]
+)
+def test_light_open_tag_shapes_equal_split_path(
+    doc, n_light, lower_case_attribute_names
+):
+    options = ParserOptions(lower_case_attribute_names=lower_case_attribute_names)
+    collector = parsed(LightTagCounter, EventCollector(), doc, options)
+    assert collector.parser.n_light == n_light
+    assert collector.events == (
+        parsed(SplitParser, EventCollector(), doc, options).events
+    )
+    assert ordered_nodes(parsed(Parser, DomArrayHandler(), doc, options).nodes) == (
+        ordered_nodes(parsed(SplitParser, DomArrayHandler(), doc, options).nodes)
+    )

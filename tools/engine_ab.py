@@ -12,6 +12,9 @@ with the order alternating per rep, one thread. Cases:
 * ``parse_structured`` - ``Parser(TreeHandler(), batch_text=True)``
   alone on the structured pages: the parse layer of the markdown line
   (its tree is checked through ``markdown_structured``);
+* ``dom_nodes_structured`` - ``parse_document`` on the structured
+  pages: Parser and an index-carrying DomArrayHandler, the handler of
+  ``dom_nodes_udf``;
 * ``fast_text_synthetic`` / ``fast_text_realistic`` - FastTextExtractor
   on engine_bench's synthetic and realistic pages;
 * ``fast_text_pages`` - FastTextExtractor on ``sources.pages`` documents
@@ -85,6 +88,7 @@ def cases(engine) -> dict:
     markdown = importlib.import_module(f"{alias}.markdown")
     fast_text = importlib.import_module(f"{alias}.fast_text")
     parser = importlib.import_module(f"{alias}.parser")
+    dom = importlib.import_module(f"{alias}.dom")
     md = markdown.MarkdownExtractor()
     fast = fast_text.FastTextExtractor()
     tree_parser = parser.Parser(markdown.TreeHandler(), batch_text=True)
@@ -92,6 +96,7 @@ def cases(engine) -> dict:
         "markdown_structured": ("structured", md.extract),
         "markdown_realistic": ("realistic", md.extract),
         "parse_structured": ("structured", tree_parser.parse),
+        "dom_nodes_structured": ("structured", dom.parse_document),
         "fast_text_synthetic": ("synthetic", fast.extract),
         "fast_text_realistic": ("realistic", fast.extract),
         "fast_text_pages": ("pages", fast.extract),

@@ -1,7 +1,8 @@
 """Heavy offline fuzz campaign (beyond the CI-sized tests/test_fuzz.py).
 
 Generates markup-biased random documents and checks, for every one of
-the 16 ParserOptions combinations:
+the 48 ParserOptions combinations (four switches and
+``lower_case_attribute_names`` None/True/False):
 
 * the parser never raises and indices satisfy
   ``0 <= start <= end <= len(doc) + 1`` (the +1 is reachable — see
@@ -12,11 +13,11 @@ the 16 ParserOptions combinations:
   parser-built tree, with its open-element count) == adjacency
   ``to_markdown`` on the exact-event DOM (with its element count)
 * the Parser's events, indices included, == those of the split
-  open-tag path kept in tests/split_parser.py (fused plain tags), for an
-  EventCollector (per-attribute events) and for an index-carrying
-  DomArrayHandler (no ``on_attribute``: one-event attribute tags), whose
-  nodes, attributes in order with their quotes, and indices must also
-  be equal between the chunked and the whole-document parse
+  open-tag path kept in tests/split_parser.py (the one-event light open
+  tag), for an EventCollector (attribute events) and for an
+  index-carrying DomArrayHandler, whose nodes, attributes in order with
+  their quotes, and indices must also be equal between the chunked and
+  the whole-document parse
 * the scan loop's tag probes agree with the tokenizer helpers
   (tests/split_parser.py ProbeCheckingParser), for both handlers
 
@@ -71,11 +72,20 @@ TOKENS = [
 OPTION_SPACE = [
     dict(
         zip(
-            ("xml_mode", "decode_entities", "recognize_cdata", "recognize_self_closing"),
+            (
+                "xml_mode",
+                "decode_entities",
+                "recognize_cdata",
+                "recognize_self_closing",
+                "lower_case_attribute_names",
+            ),
             values,
         )
     )
-    for values in itertools.product((False, True), repeat=4)
+    for values in itertools.product(
+        (False, True), (False, True), (False, True), (False, True),
+        (None, True, False),
+    )
 ]
 
 
@@ -141,12 +151,13 @@ def main(n_docs: int = 60000, seed: int = 20260816) -> int:
             assert got == (to_markdown(nodes), n_elements), (
                 f"markdown tree!=adjacency: {doc!r} {opts}"
             )
-            if i % len(OPTION_SPACE) == 0:
+            if i % 16 == 0:
+                # Default options on both sides, whatever opts is.
                 dom_text = text_content(parse_document(doc))
                 fast, _ = extractor.extract(doc)
                 assert fast == dom_text, f"fast!=dom: {doc!r}"
             if i % 4 == 0:
-                # batch_text opt-in parity (round 4): index-free DOM
+                # batch_text opt-in parity: index-free DOM
                 # must match the exact per-event stream's DOM.
                 h1 = DomArrayHandler(with_indices=False)
                 Parser(h1, options).parse(doc)
