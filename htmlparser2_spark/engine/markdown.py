@@ -3,9 +3,8 @@
 LLM-data pipelines routinely keep *structure* that plain textContent
 (reference DomUtils ``textContent``, README.md:184) throws away —
 headings, lists, links, tables — by converting pages to Markdown. The
-reference has no such operator; this renderer walks a compact parse
-tree (below) with a small, fixed, deterministic rule set so the Spark
-oracle can predict output exactly:
+reference has no such operator; this renderer applies a small, fixed,
+deterministic rule set so the Spark oracle can predict output exactly:
 
 * rendered scope: the first ``<body>`` subtree when present, else the
   whole document; ``head``/``script``/``style``/``title`` subtrees,
@@ -25,58 +24,59 @@ oracle can predict output exactly:
   keeps raw text); cell ``|`` is escaped; no other Markdown escaping —
   content fidelity over re-parseability, documented trade-off.
 
-Tree contract
--------------
-A node is either a ``str`` (text, scrubbed of NUL) or an element tuple
-``(name, attrs, kids)``: ``attrs`` the element's attribute dict,
-``kids`` its child nodes in document order. Comments, directives/PIs
-and CDATA sections are absent — no rule emits them. Adjacent text
-nodes are allowed: TreeHandler appends each text event as it comes,
-and to_markdown one node per DOM text node. The renderer only ever
-concatenates neighbouring text, so a run split in two renders the
-same. What an element renders as follows from its name alone (a
-``script``/``style`` element is skipped by name, as DomArrayHandler
-types it by name). Two producers build the tree:
+Close-event contract
+--------------------
+The reference's Handler delivers each element's ``onclosetag`` after
+all of its content (PAPER.md §1.1, Parser.ts:216-253): the post-order a
+renderer needs. :class:`MarkdownHandler` is that renderer, one Parser
+handler with an explicit stack of frames, one per open element:
 
-* :class:`TreeHandler`, a Parser handler that builds it while parsing.
-  :class:`MarkdownExtractor` pairs it with one reused
-  ``Parser(batch_text=True)``: the one production path, behind
-  ``parse_pages(mode="markdown")`` and ``markdown_udf``.
-* :func:`to_markdown`, which converts a DomArrayHandler adjacency list
-  once, iteratively and in ``idx_in_parent`` order (operators/dommanip
-  renumbers it in place), then runs the same renderer. Tests, the
-  oracle and the engine replays use it.
+* the open tag fixes the element's *kind* from its parent's kind and
+  its own name (``_RULES``): block container, paragraph/heading,
+  inline, raw text (``pre``/``textarea``), list, list item, table,
+  row-group, row, cell, or skipped. The first ``<body>`` opens a new
+  root, the rendered scope;
+* text (scrubbed of NUL, CDATA sections dropped) joins the innermost
+  frame's parts; a transparent inline element shares its parent's;
+* the close hands the frame's piece or blocks to its parent.
 
-DomArrayHandler (engine/dom.py) stays the relational DOM contract —
-dom_nodes_udf, the node queries, the serializer. A renderer that needs
-only structure and text consumes TreeHandler instead: the adjacency
-dicts cost more to build than this renderer costs to run.
+A wrapper's collapsed text longer than 1 KB is not re-copied by every
+enclosing wrapper: it travels as a *rope*, a nested list that no
+enclosing collapse changes (``_rope``) and the enclosing block
+flattens once (``_text``). So the work stays linear in the page at any
+nesting depth.
 
-Recursion: the tree builders are iterative; the renderer recurses once
-per nesting level (``_inline``, ``_raw_text``, ``_blocks``, ``_list``),
-so a page nested deeper than the interpreter's recursion limit still
-raises RecursionError.
+:class:`MarkdownExtractor` pairs the handler with one reused
+``Parser(batch_text=True)``: the one production path, behind
+``parse_pages(mode="markdown")`` and ``markdown_udf``.
+:func:`to_markdown` replays a DomArrayHandler adjacency list as
+open/text/close events into the same handler (children in
+``idx_in_parent`` order, operators/dommanip renumbers it in place);
+tests, the oracle and the engine replays use it. DomArrayHandler
+(engine/dom.py) stays the relational DOM contract — dom_nodes_udf, the
+node queries, the serializer.
 """
 
 from __future__ import annotations
 
 import re
+from itertools import groupby
 from operator import itemgetter
 
 from .parser import Parser, ParserOptions
 
-__all__ = ["MarkdownExtractor", "TreeHandler", "to_markdown"]
+__all__ = ["MarkdownExtractor", "MarkdownHandler", "to_markdown"]
 
 _SKIP = {"head", "script", "style", "title"}
-_BLOCK = {
-    "address", "article", "aside", "blockquote", "body", "div", "dl",
-    "fieldset", "figcaption", "figure", "footer", "form", "h1", "h2",
-    "h3", "h4", "h5", "h6", "header", "hr", "html", "li", "main", "nav",
-    "ol", "p", "pre", "section", "table", "tbody", "td", "textarea",
-    "tfoot", "th", "thead", "tr", "ul",
-}
-_HEADINGS = {f"h{i}": i for i in range(1, 7)}
+_BLOCK = set(
+    "address article aside blockquote body div dl fieldset figcaption "
+    "figure footer form h1 h2 h3 h4 h5 h6 header hr html li main nav ol p "
+    "pre section table tbody td textarea tfoot th thead tr ul".split()
+)
+_HEADINGS = {f"h{i}": "#" * i for i in range(1, 7)}
+_MARKS = {"b": "**", "strong": "**", "i": "*", "em": "*", "code": "`"}
 _WS = re.compile(r"[ \t\r\n\f]+")
+_SPACES = " \t\r\n\f"
 # Placeholder so <br> survives whitespace collapsing. NUL is a valid
 # parsed-text character (the tokenizer passes it through), so document
 # text is scrubbed of the sentinel before splicing — a literal NUL in
@@ -84,333 +84,355 @@ _WS = re.compile(r"[ \t\r\n\f]+")
 # the markdown output instead, the right call for training text).
 _BR = "\x00"
 _BR_RE = re.compile(f" ?{_BR} ?")
+# A wrapper's collapsed text longer than this is a rope.
+_FLAT = 1024
 
 
-def _collapse(raw: str) -> str:
+def _rope(parts: list) -> list:
+    """A wrapper's collapsed content as the rope ``[text, rope, ...,
+    text]``: each run of text collapsed as ``_text`` does, ends
+    stripped, and each newline run a space, as the enclosing collapse
+    would make it. So a rope holds no whitespace run, newline or NUL
+    and starts and ends with a mark: no collapse changes it, and no
+    whitespace run or sentinel match crosses its edges."""
+    rope: list = []
+    for is_text, run in groupby(parts, lambda item: item.__class__ is str):
+        if is_text:
+            text = _BR_RE.sub("\n", _WS.sub(" ", "".join(run)))
+            run = (_WS.sub(" ", text),)
+        rope += run
+    rope[0] = rope[0].lstrip()
+    rope[-1] = rope[-1].rstrip()
+    return rope
+
+
+def _text(parts: list) -> str:
+    """The collapsed text of inline ``parts``: whitespace runs -> one
+    space, each <br> sentinel (with a space on either side) -> a
+    newline, the ends stripped. Ropes are flattened first (with a
+    stack): a collapse leaves them as they are, so the one collapse of
+    the whole is linear in its length."""
+    try:
+        raw = "".join(parts)
+    except TypeError:  # parts hold a rope
+        out, stack = [], [iter(parts)]
+        while stack:
+            for item in stack[-1]:
+                if item.__class__ is str:
+                    out.append(item)
+                else:
+                    stack.append(iter(item))
+                    break
+            else:
+                stack.pop()
+        raw = "".join(out)
     # Fast-path guard: text needing collapse holds a non-space
     # whitespace char or a double space; clean text (the common case
     # for running text) skips the sub's string rebuild. Five substring
     # tests beat one regex search ("[\t\r\n\f]|  " tries the
     # alternation at every offset): ~1 us vs ~11 us on a 380-char
     # paragraph.
-    if (
-        "  " in raw or "\n" in raw or "\t" in raw or "\r" in raw
-        or "\f" in raw
-    ):
-        out = _WS.sub(" ", raw)
+    if "  " in raw or "\n" in raw or "\t" in raw or "\r" in raw or "\f" in raw:
+        raw = _WS.sub(" ", raw)
+    if _BR in raw:
+        raw = _BR_RE.sub("\n", raw)
+    return raw.strip()
+
+
+def _wrapped(parts: list, left: str, right: str, keep_empty: bool) -> list:
+    """The pieces a wrapper hands its parent: its collapsed content
+    between ``left`` and ``right``, with a space outside each mark the
+    content started or ended with whitespace at ('foo<b> bar </b>baz'
+    -> 'foo **bar** baz'). Content that collapses to nothing gives a
+    link ``[](href)`` (``keep_empty``; empty content counts as
+    whitespace at both edges), else a single space if it held
+    whitespace: it still separates its neighbours. Content longer than
+    ``_FLAT`` chars, or holding a rope, becomes a rope."""
+    try:
+        inner = "".join(parts)
+    except TypeError:  # parts hold a rope; a rope sits between marks,
+        ends = [item for item in parts if item]  # so the ends are text
+        inner, flat = ends[0][0] + ends[-1][-1], False
     else:
-        out = raw
-    if _BR in out:
-        out = _BR_RE.sub("\n", out)
-    return out.strip()
+        core = _text((inner,))
+        if not (core or keep_empty):
+            return [" "] if inner else []
+        flat = len(core) <= _FLAT
+    e0 = " " if inner[:1] in _SPACES else ""
+    e1 = " " if inner[-1:] in _SPACES else ""
+    if flat:
+        return [f"{e0}{left}{core}{right}{e1}"]
+    return [e0, left, _rope(parts), right, e1]
 
 
-def _edge_space(inner: str, side: int) -> str:
-    """The single space an inline wrapper must re-emit outside its
-    markers when the wrapped content had leading/trailing whitespace
-    ('foo<b> bar </b>baz' -> 'foo **bar** baz', not 'foo**bar**baz')."""
-    ch = inner[side] if inner else ""
-    return " " if ch in " \t\r\n\f" else ""
+def _flush(run: list, out: list) -> None:
+    """Pending inline pieces at block level -> an implicit paragraph."""
+    text = _text(run) if run else ""
+    run.clear()
+    if text:
+        out.append(text)
 
 
-def _wrap(inner: str, mark: str) -> str:
-    core = _collapse(inner)
-    if not core:
-        # a whitespace-only wrapper still separates its neighbours
-        return " " if inner else ""
-    return (
-        _edge_space(inner, 0) + mark + core + mark + _edge_space(inner, -1)
-    )
+# ---------------- element kinds ----------------
+# A frame is a tuple (a list for _LIST, whose item count grows), its
+# kind first and its text sink (a parts list, or None when text is
+# dropped) second:
+#   _SPAN/_RAW (kind, parent's parts)   _NONE (kind, None)
+#   _ROOT      (kind, run, blocks, None, depth 0)
+#   _BOX/_PARA/_PRE/_AREA/_HR (kind, parts, out, indent, depth)
+#   _HEAD      (kind, parts, out, indent, "#"s)
+#   _QUOTE     (kind, run, inner blocks, indent, depth, out)
+#   _TABLE     (kind, None, out, indent, rows); _GROUP (kind, None,
+#              None, None, rows); _ROW (kind, None, cells)
+#   _LIST      [kind, None, out, None, lines, depth, ordered,
+#              item's tail (a nested list) or None, items so far,
+#              its items' indent]
+#   _ITEM      (kind, head, list's lines, prefix, tail, depth)
+#   _WRAP/_LINK (kind, parts, parent's parts, mark or href)
+#   _CELL      (kind, parts, row's cells)
+# ``out`` is the block list the element's blocks join; ``indent``,
+# for a block inside a list item, is (item's tail, pad): its lines
+# join the item's tail indented. Kinds up to _GROUP close with no
+# work; _BREAK and _IMAGE act when they open, with a _SKIPPED frame.
+(_SPAN, _RAW, _NONE, _ROOT, _ROW, _GROUP, _WRAP, _LINK, _CELL, _ITEM,
+ _BREAK, _IMAGE, _PARA, _HEAD, _PRE, _AREA, _BOX, _HR, _QUOTE, _TABLE,
+ _LIST) = range(21)
+
+_SKIPPED = (_NONE, None)
+_INLINE_RULES = {
+    **dict.fromkeys(_SKIP, _NONE), **dict.fromkeys(_MARKS, _WRAP),
+    "br": _BREAK, "img": _IMAGE, "a": _LINK,
+}
+_BLOCK_RULES = {
+    **_INLINE_RULES, **dict.fromkeys(_BLOCK, _BOX),
+    **dict.fromkeys(_HEADINGS, _HEAD), "p": _PARA, "pre": _PRE,
+    "textarea": _AREA, "blockquote": _QUOTE, "hr": _HR, "table": _TABLE,
+    "ul": _LIST, "ol": _LIST,
+}
+_INLINE, _BLOCKS = (_INLINE_RULES, _SPAN), (_BLOCK_RULES, _SPAN)
+_RAW_TEXT, _IGNORED = ({}, _RAW), ({}, _NONE)
+_GROUPS = dict.fromkeys(("thead", "tbody", "tfoot"), _GROUP)
+_TABLE_RULES = ({"tr": _ROW, **_GROUPS}, _NONE)
+# (rules, default) for the children of each frame kind. A list item's
+# children follow the block rules; a ul/ol there is its nested list.
+_RULES = (
+    _INLINE, _RAW_TEXT, _IGNORED, _BLOCKS,  # _SPAN _RAW _NONE _ROOT
+    ({"td": _CELL, "th": _CELL}, _NONE), _TABLE_RULES,  # _ROW _GROUP
+    _INLINE, _INLINE, _INLINE, _BLOCKS,  # _WRAP _LINK _CELL _ITEM
+    None, None,  # _BREAK _IMAGE: never a frame's kind
+    _INLINE, _INLINE, _RAW_TEXT, _RAW_TEXT,  # _PARA _HEAD _PRE _AREA
+    _BLOCKS, _IGNORED, _BLOCKS, _TABLE_RULES,  # _BOX _HR _QUOTE _TABLE
+    ({"li": _ITEM}, _NONE),  # _LIST
+)
 
 
-# ---------------- tree builders ----------------
-class TreeHandler:
-    """Parser handler that builds the renderer's tree directly.
+def _open_block(kind: int, name: str, parent) -> tuple | list:
+    """The frame of a block element whose parent is a block container
+    or a list item."""
+    if parent[0] == _ITEM:
+        depth = parent[5] + 1
+        out, indent, tail = [], (parent[4], "  " * depth), parent[4]
+    else:
+        out, depth, indent, tail = parent[2], parent[4], None, None
+        if parent[1]:
+            _flush(parent[1], out)
+    if kind < _QUOTE:  # _HEAD keeps its "#"s where the others keep depth
+        arg = _HEADINGS[name] if kind == _HEAD else depth
+        return (kind, [], out, indent, arg)
+    if kind == _QUOTE:
+        return (_QUOTE, [], [], indent, depth, out)
+    if kind == _TABLE:
+        return (_TABLE, None, out, indent, [])
+    # in an item, its nested list: its lines join the item's tail
+    return [_LIST, None, out, None, [], depth, name == "ol", tail, 0,
+            "  " * depth]
 
-    ``root`` holds the document's top-level nodes, ``body`` the first
-    ``<body>`` element (None if the page has none), ``n_tags`` the
-    number of opened elements — the element count of the
-    DomArrayHandler array for the same parse. Reset on every parse
-    (``on_parser_init``). The per-tag attrs dict is kept, not copied:
-    the Parser makes a fresh one per tag and drops its own reference.
+
+def _close_block(frame) -> None:
+    """Hand a block element's block to its ``out`` (and, inside a list
+    item, on to the item's tail)."""
+    kind, out = frame[0], frame[2]
+    if kind == _PARA or kind == _AREA:
+        text = _text(frame[1])
+    elif kind == _BOX:
+        text = _flush(frame[1], out)
+    elif kind == _LIST:
+        if frame[7] is not None:  # an item's nested list: to its tail,
+            frame[7].extend(frame[4] or ("",))  # or an empty line
+            return
+        text = "\n".join(frame[4])
+    elif kind == _HEAD:
+        text = f"{frame[4]} {_text(frame[1])}".rstrip()
+    elif kind == _TABLE:
+        rows = frame[4]
+        if rows:  # the header's separator row
+            rows.insert(1, ["---"] * len(rows[0]))
+        text = "\n".join(f"| {' | '.join(row)} |" for row in rows)
+    elif kind == _PRE:
+        text = f"```\n{''.join(frame[1])}\n```"
+    elif kind == _QUOTE:
+        _flush(frame[1], out)
+        lines = "\n\n".join(out).split("\n")
+        text = "\n".join(f"> {line}" if line else ">" for line in lines)
+        out = frame[5]
+    else:  # _HR
+        text = "---"
+    if text:
+        out.append(text)
+    if frame[3] is not None:
+        tail, pad = frame[3]
+        tail.extend(pad + line for block in out for line in block.split("\n"))
+
+
+# ---------------- handler ----------------
+class MarkdownHandler:
+    """Parser handler that renders Markdown as the Parser closes each
+    element (module docstring, close-event contract).
+
+    :meth:`markdown` is the rendered scope; ``n_tags`` the number of
+    opened elements — the element count of the DomArrayHandler array
+    for the same parse. Reset on every parse (``on_parser_init``).
     """
 
-    __slots__ = ("root", "body", "n_tags", "_kids", "_stack", "_in_cdata")
+    __slots__ = ("n_tags", "_stack", "_scope")
 
     def __init__(self) -> None:
         self.on_parser_init(None)
 
     def on_parser_init(self, parser) -> None:
-        self.root: list = []
-        self.body: tuple | None = None
+        self._stack: list = [(_ROOT, [], [], None, 0)]
+        self._scope: tuple | None = None  # the first <body>'s root
         self.n_tags = 0
-        self._kids = self.root  # child list of the innermost open element
-        self._stack: list[list] = []  # child lists of its ancestors
-        self._in_cdata = False
+
+    def markdown(self) -> str:
+        frame = self._scope or self._stack[0]
+        _flush(frame[1], frame[2])
+        return "\n\n".join(frame[2])
 
     def on_open_tag(self, name: str, attrs: dict, is_implied: bool) -> None:
-        kids: list = []
-        element = (name, attrs, kids)
-        self._kids.append(element)
-        self._stack.append(self._kids)
-        self._kids = kids
         self.n_tags += 1
-        if name == "body" and self.body is None:
-            self.body = element
+        stack = self._stack
+        top = stack[-1]
+        if name == "body" and self._scope is None:
+            frame = self._scope = (_ROOT, [], [], None, 0)
+        else:
+            rules, default = _RULES[top[0]]
+            kind = rules.get(name, default)
+            if kind < _NONE:
+                frame = (kind, top[1])
+            elif kind == _NONE:
+                frame = _SKIPPED
+            elif kind >= _PARA:
+                frame = _open_block(kind, name, top)
+            elif kind == _WRAP:
+                frame = (_WRAP, [], top[1], _MARKS[name])
+            elif kind == _LINK:
+                href = attrs.get("href")
+                frame = (_LINK, [], top[1], href) if href else (_SPAN, top[1])
+            elif kind == _ITEM:
+                top[8] += 1
+                marker = f"{top[8]}. " if top[6] else "- "
+                frame = (_ITEM, [], top[4], top[9] + marker, [], top[5])
+            elif kind == _CELL:
+                frame = (_CELL, [], top[2])
+            elif kind == _ROW:
+                frame = (_ROW, None, [])
+                top[4].append(frame[2])
+            elif kind == _GROUP:
+                frame = (_GROUP, None, None, None, top[4])
+            else:  # _BREAK, _IMAGE
+                frame = _SKIPPED
+                alt, src = attrs.get("alt", ""), attrs.get("src", "")
+                top[1].append(_BR if kind == _BREAK else f"![{alt}]({src})")
+        stack.append(frame)
 
     def on_close_tag(self, name: str, is_implied: bool) -> None:
-        if self._stack:
-            self._kids = self._stack.pop()
+        stack = self._stack
+        # An open tag cut off by EOF ('<a/') closes with no on_open_tag:
+        # each close pops one frame, but never the root.
+        frame = stack.pop() if len(stack) > 1 else _SKIPPED
+        kind = frame[0]
+        if kind <= _GROUP:  # nothing to hand on
+            return
+        if kind >= _PARA:
+            _close_block(frame)
+        elif kind == _WRAP:
+            frame[2].extend(_wrapped(frame[1], frame[3], frame[3], False))
+        elif kind == _ITEM:
+            lines = frame[2]
+            lines.append(frame[3] + _text(frame[1]))
+            lines.extend(frame[4])
+        elif kind == _CELL:
+            frame[2].append(_text(frame[1]).replace("|", "\\|"))
+        else:  # _LINK
+            frame[2].extend(_wrapped(frame[1], "[", f"]({frame[3]})", True))
 
     def on_text(self, data: str) -> None:
-        # Each piece is its own node: the renderer only concatenates
-        # neighbouring text (module docstring, tree contract).
-        if not self._in_cdata:
-            self._kids.append(data.replace(_BR, "") if _BR in data else data)
+        parts = self._stack[-1][1]
+        if parts is not None:
+            parts.append(data.replace(_BR, "") if _BR in data else data)
 
+    # No rule emits a CDATA section: it is a skipped frame of its own
+    # (no element opens or closes inside one).
     def on_cdata_start(self) -> None:
-        self._in_cdata = True
+        self._stack.append(_SKIPPED)
 
     def on_cdata_end(self) -> None:
-        self._in_cdata = False
-
-
-_ELEMENT_TYPES = frozenset(("tag", "script", "style"))
-_NO_ATTRS: dict = {}
-
-
-def _index(nodes: list[dict]) -> tuple[dict, object, bool]:
-    """One pass over an adjacency list: node_id -> child list (root
-    -1), the first ``<body>``'s node_id, and whether every sibling
-    group arrived in ``idx_in_parent`` order."""
-    kids_of: dict = {-1: []}
-    last_idx: dict = {}
-    body_id = None
-    in_order = True
-    for n in nodes:
-        t = n["type"]
-        if t in _ELEMENT_TYPES:
-            nid = n["node_id"]
-            kids = kids_of.get(nid)
-            if kids is None:
-                kids = kids_of[nid] = []
-            name = n["name"]
-            node = (name, n["attrs"] or _NO_ATTRS, kids)
-            if body_id is None and name == "body" and t == "tag":
-                body_id = nid
-        elif t == "text" or t == "cdata":
-            # DomArrayHandler's cdata nodes carry no data (their text
-            # is a child, which no rule reads)
-            node = n["data"] or ""
-            if _BR in node:
-                node = node.replace(_BR, "")
-        else:
-            continue  # comments, directives
-        pid = n["parent_id"]
-        sibs = kids_of.get(pid)
-        if sibs is None:
-            sibs = kids_of[pid] = []
-        sibs.append(node)
-        if in_order:
-            idx = n["idx_in_parent"]
-            if idx < last_idx.get(pid, idx):
-                in_order = False
-            last_idx[pid] = idx
-    return kids_of, body_id, in_order
-
-
-_IDX = itemgetter("idx_in_parent")
-
-
-def _tree_of(nodes: list[dict]) -> list:
-    """Adjacency list -> the child list the renderer starts from: the
-    first ``<body>``'s children, else the document's."""
-    kids_of, body_id, in_order = _index(nodes)
-    if not in_order:
-        # A stable sort by idx_in_parent orders every sibling group and
-        # keeps list order among equal indices. The body stays the
-        # first one in the list as given.
-        kids_of = _index(sorted(nodes, key=_IDX))[0]
-    return kids_of[-1 if body_id is None else body_id]
-
-
-# ---------------- renderer ----------------
-def _inline(node: tuple) -> str:
-    name, attrs, kids = node
-    if name in _SKIP:
-        return ""
-    if name == "br":
-        return _BR
-    if name == "img":
-        return f"![{attrs.get('alt', '')}]({attrs.get('src', '')})"
-    # explicit loop, not a comprehension: one frame per nesting level
-    parts = []
-    for k in kids:
-        parts.append(k if k.__class__ is str else _inline(k))
-    inner = "".join(parts)
-    if name == "a":
-        href = attrs.get("href")
-        if not href:
-            return inner
-        return (
-            _edge_space(inner, 0)
-            + f"[{_collapse(inner)}]({href})"
-            + _edge_space(inner, -1)
-        )
-    if name in ("strong", "b"):
-        return _wrap(inner, "**")
-    if name in ("em", "i"):
-        return _wrap(inner, "*")
-    if name == "code":
-        return _wrap(inner, "`")
-    return inner  # transparent inline (span, u, small, ...)
-
-
-def _inline_text(kids: list) -> str:
-    return _collapse(
-        "".join([k if k.__class__ is str else _inline(k) for k in kids])
-    )
-
-
-def _raw_text(kids: list) -> str:
-    parts = []
-    for k in kids:
-        parts.append(k if k.__class__ is str else _raw_text(k[2]))
-    return "".join(parts)
-
-
-def _blocks(nodes: list, depth: int, out: list[str]) -> list[str]:
-    """Append the non-empty Markdown blocks of ``nodes`` to ``out``;
-    returns ``out``."""
-    run: list[str] = []  # pending inline pieces -> implicit paragraph
-    for node in nodes:
-        if node.__class__ is str:
-            run.append(node)
-            continue
-        name = node[0]
-        if name not in _BLOCK:
-            run.append(_inline(node))
-            continue
-        if run:
-            text = _collapse("".join(run))
-            run.clear()
-            if text:
-                out.append(text)
-        kids = node[2]
-        if name in _HEADINGS:
-            out.append(f"{'#' * _HEADINGS[name]} {_inline_text(kids)}".rstrip())
-        elif name == "ul" or name == "ol":
-            text = _list(node, depth)
-            if text:
-                out.append(text)
-        elif name == "table":
-            text = _table(kids)
-            if text:
-                out.append(text)
-        elif name == "pre":
-            out.append(f"```\n{_raw_text(kids)}\n```")
-        elif name == "blockquote":
-            inner = "\n\n".join(_blocks(kids, depth, []))
-            out.append(
-                "\n".join(f"> {line}" if line else ">"
-                          for line in inner.split("\n"))
-            )
-        elif name == "hr":
-            out.append("---")
-        elif name == "textarea":
-            text = _collapse(_raw_text(kids))
-            if text:
-                out.append(text)
-        elif name == "p":
-            text = _inline_text(kids)
-            if text:
-                out.append(text)
-        else:  # transparent containers: div/section/tbody/...
-            _blocks(kids, depth, out)
-    if run:
-        text = _collapse("".join(run))
-        if text:
-            out.append(text)
-    return out
-
-
-def _list(node: tuple, depth: int) -> str:
-    ordered = node[0] == "ol"
-    pad = "  " * depth
-    lines: list[str] = []
-    i = 0
-    for li in node[2]:
-        if li.__class__ is str or li[0] != "li":
-            continue
-        i += 1
-        head: list[str] = []
-        tail: list[str] = []
-        for k in li[2]:
-            if k.__class__ is str:
-                head.append(k)
-            elif k[0] == "ul" or k[0] == "ol":
-                # nested lists carry their own depth-based indent
-                tail.append(_list(k, depth + 1))
-            elif k[0] in _BLOCK:
-                tail.extend(
-                    "\n".join(pad + "  " + line for line in block.split("\n"))
-                    for block in _blocks([k], depth + 1, [])
-                )
-            else:
-                head.append(_inline(k))
-        marker = f"{i}. " if ordered else "- "
-        lines.append(pad + marker + _collapse("".join(head)))
-        lines.extend(tail)
-    return "\n".join(lines)
-
-
-def _rows(kids: list, rows: list[list[str]]) -> None:
-    for k in kids:
-        if k.__class__ is str:
-            continue
-        if k[0] == "tr":
-            rows.append([
-                _inline_text(cell[2]).replace("|", "\\|")
-                for cell in k[2]
-                if cell.__class__ is not str and cell[0] in ("td", "th")
-            ])
-        elif k[0] in ("thead", "tbody", "tfoot"):
-            _rows(k[2], rows)
-
-
-def _table(kids: list) -> str:
-    rows: list[list[str]] = []
-    _rows(kids, rows)
-    if not rows:
-        return ""
-    lines = ["| " + " | ".join(rows[0]) + " |"]
-    lines.append("| " + " | ".join("---" for _ in rows[0]) + " |")
-    for row in rows[1:]:
-        lines.append("| " + " | ".join(row) + " |")
-    return "\n".join(lines)
+        self._stack.pop()
 
 
 # ---------------- entry points ----------------
 class MarkdownExtractor:
     """Reusable HTML -> Markdown extractor: one Parser (batched text)
-    feeding a :class:`TreeHandler`, reset per document. ``options``
-    are ParserOptions keywords."""
+    feeding a :class:`MarkdownHandler`, reset per document.
+    ``options`` are ParserOptions keywords."""
 
     def __init__(self, **options) -> None:
-        self._tree = TreeHandler()
-        self._parser = Parser(
-            self._tree, ParserOptions(**options), batch_text=True
-        )
+        self._handler = MarkdownHandler()
+        options = ParserOptions(**options)
+        self._parser = Parser(self._handler, options, batch_text=True)
 
     def extract(self, doc: str) -> tuple[str, int]:
         """Returns (markdown, n_open_tags)."""
         self._parser.parse(doc)
-        tree = self._tree
-        body = tree.body
-        scope = tree.root if body is None else body[2]
-        return "\n\n".join(_blocks(scope, 0, [])), tree.n_tags
+        return self._handler.markdown(), self._handler.n_tags
+
+
+_ELEMENT_TYPES = frozenset(("tag", "script", "style"))
+# Comments and directives (and what hangs under them) render nothing.
+_RENDERED = _ELEMENT_TYPES | {"text", "cdata"}
+_IDX = itemgetter("idx_in_parent")
 
 
 def to_markdown(nodes: list[dict]) -> str:
-    """Adjacency node list (DomArrayHandler) -> Markdown string."""
-    return "\n\n".join(_blocks(_tree_of(nodes), 0, []))
+    """Adjacency node list (DomArrayHandler) -> Markdown string.
+
+    Replays the first ``<body>`` in list order (else the document's
+    top-level nodes) into a :class:`MarkdownHandler`, children in
+    ``idx_in_parent`` order (list order among equal indices). A cdata
+    node renders as empty text: its content is a child no rule reads."""
+    kids_of: dict = {}
+    for n in nodes:
+        if n["type"] in _RENDERED:
+            kids_of.setdefault(n["parent_id"], []).append(n)
+    body = next(
+        (n for n in nodes if n["type"] == "tag" and n["name"] == "body"), None
+    )
+    for sibs in kids_of.values():
+        sibs.sort(key=_IDX)
+    handler = MarkdownHandler()
+    stack = [iter(kids_of.get(-1, ()) if body is None else (body,))]
+    while stack:
+        for n in stack[-1]:
+            if n["type"] in _ELEMENT_TYPES:
+                handler.on_open_tag(n["name"], n["attrs"] or {}, False)
+                stack.append(iter(kids_of.get(n["node_id"], ())))
+                if len(stack) > len(nodes) + 1:
+                    raise ValueError("adjacency list has a parent cycle")
+                break
+            handler.on_text(n["data"] or "")
+        else:
+            stack.pop()
+            if stack:
+                handler.on_close_tag("", False)
+    return handler.markdown()

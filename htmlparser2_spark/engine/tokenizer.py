@@ -654,9 +654,15 @@ class Tokenizer:
         ln = len(name) + 2  # "</name"
         rcdata = name in _RCDATA and self.decode_entities
         sec = pos = i
+        j = -2  # not searched yet
         while True:
-            m = search(buf, pos)
-            j = -1 if m is None else m.start()
+            if j == -2 or -1 < j < pos:
+                # The first end tag at or after pos stays j while the
+                # entity steps below advance pos up to it, and there is
+                # none after a search from an earlier pos found none:
+                # one search per end-tag candidate, not per entity.
+                m = search(buf, pos)
+                j = -1 if m is None else m.start()
             if rcdata:
                 a = buf.find("&", pos, j if j != -1 else n)
                 if a != -1:

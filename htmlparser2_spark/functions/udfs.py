@@ -203,9 +203,9 @@ def _make_extract(mode: str, **options):
     * ``main``: the readability-lite main-content block of the
       adjacency DOM (``DomArrayHandler``); ``n_tags`` counts its
       element nodes.
-    * ``markdown``: engine/markdown.py's MarkdownExtractor, which builds
-      the renderer's compact tree directly; ``n_tags`` counts opened
-      elements.
+    * ``markdown``: engine/markdown.py's MarkdownExtractor, which
+      renders each element as the Parser closes it; ``n_tags`` counts
+      opened elements.
     """
     if mode == "text":
         if not options:

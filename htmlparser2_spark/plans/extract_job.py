@@ -40,9 +40,8 @@ Scale design notes
   ``n_events`` (and so ``events``) is not counted: it is the estimate
   2 x ``n_tags``, kept in ``PARSED_SCHEMA`` for existing readers;
   ``doc_stats_udf`` counts events exactly.
-* No document fails the task: a document whose extraction raises (a
-  ``RecursionError`` from a page nested thousands deep, say) gets a
-  NULL ``extracted``, 0 ``n_tags`` and the exception's class name in
+* No document fails the task: a document whose extraction raises gets
+  a NULL ``extracted``, 0 ``n_tags`` and the exception's class name in
   ``error``, and the batch goes on.
 * Documents are decoded and extracted by functions/udfs.py's
   ``_to_str`` and ``_make_extract``, the same decoder and extractors
@@ -246,9 +245,11 @@ def parse_pages(
         # converts the whole logical plan to an RDD on every call just
         # to read a number). Misestimates only affect the shuffle-or-not
         # heuristic — callers at scale should pass `repartition`
-        # explicitly (unsplittable .gz inputs especially).
+        # explicitly (unsplittable .gz inputs especially). Count the
+        # JVM's file array in place: DataFrame.inputFiles() copies it
+        # into a Python list with one py4j call per file.
         par = spark.sparkContext.defaultParallelism
-        n_in = len(pages.inputFiles()) or par
+        n_in = len(pages._jdf.inputFiles()) or par
         repartition = n_in < n
     if repartition:
         pages = pages.repartition(n, F.xxhash64("url"))

@@ -2,28 +2,31 @@
 
 Each document stresses one dimension a template page never does: deep
 nesting, nested tables, one tag with very many attributes, an
-unterminated comment the size of a page, and dense entity soup. The
+unterminated comment or textarea the size of a page, and dense entity
+soup. The
 bodies are the in-process functions behind the Arrow UDFs:
 ``_make_extract(mode)`` for ``text``, ``main`` and ``markdown``, and the
 ``_on_dom`` bodies of ``inner_text_udf`` and ``clean_text_udf``. A
 linear body handles any of these documents in well under a second (a
 4-core host reads at most ~0.6 s of CPU per pair), so the bound below
-only trips on super-linear work. The markdown renderer recurses once
-per nesting level, so its four nesting cases raise ``RecursionError``;
-they are strict xfails, which its iterative rewrite has to flip.
+only trips on super-linear work. The markdown renderer keeps an
+explicit stack, so the nesting cases render like any other page.
+tests/adversaries.py draws randomized documents of the same kinds.
 """
 
 from __future__ import annotations
 
 import time
 
+import pandas as pd
 import pytest
 
 from htmlparser2_spark.engine.dom import clean_text, inner_text
+from htmlparser2_spark.functions import udfs
 from htmlparser2_spark.functions.udfs import _make_extract, _on_dom
+from htmlparser2_spark.plans import extract_job
 
-# CPU seconds one body may spend on one document.
-BOUND_S = 10.0
+from .adversaries import BOUND_S
 
 NESTED = {
     "div_1e3": "<div>" * 1_000 + "x",
@@ -34,6 +37,8 @@ NESTED = {
 FLAT = {
     "attrs_1e5": "<p " + " ".join(f'a{i}="v"' for i in range(100_000)) + ">x</p>",
     "comment_1mb": "<!--" + "x" * 1_000_000,
+    # RCDATA with no end tag: an end-tag search per entity was quadratic
+    "textarea_1mb": "<textarea>" + "x <y> & " * 125_000,
     "entities_5e4": "&amp;&lt&#x41;&#65;&notit;&timesbar;&#;& " * 50_000,
 }
 
@@ -51,15 +56,9 @@ def _bodies():
     }
 
 
-_RECURSES = pytest.mark.xfail(raises=RecursionError, strict=True)
-
-
 def _cases():
     for body in _bodies():
-        for name in NESTED:
-            marks = [_RECURSES] if body == "markdown" else []
-            yield pytest.param(body, name, marks=marks, id=f"{body}-{name}")
-        for name in FLAT:
+        for name in {**NESTED, **FLAT}:
             yield pytest.param(body, name, id=f"{body}-{name}")
 
 
@@ -73,3 +72,47 @@ def test_adversarial_document_returns_in_bounded_time(body, name):
     assert elapsed < BOUND_S, (body, name, elapsed)
     text = result[0] if isinstance(result, tuple) else result
     assert isinstance(text, str)
+
+
+def _raising_on_bad(mode: str, **options):
+    """``_make_extract`` whose extractor raises on the document "bad"."""
+    extract = _make_extract(mode, **options)
+
+    def one(doc: str):
+        if doc == "bad":
+            raise ValueError(doc)
+        return extract(doc)
+
+    return one
+
+
+def test_batch_loops_turn_a_raising_document_into_a_null_row(monkeypatch):
+    """The per-document guard of both batch loops, in-process: the
+    document whose extractor raises is one NULL row (with its error
+    class in parse_pages), and its neighbours in the batch are intact."""
+    monkeypatch.setattr(extract_job, "_make_extract", _raising_on_bad)
+    monkeypatch.setattr(udfs, "_make_extract", _raising_on_bad)
+    htmls = ["<p>a <b>x</b></p>", "bad", None]
+    batch = pd.DataFrame(
+        {"url": ["u0", "u1", "u2"], "html": htmls, "lang": ["en"] * 3}
+    )
+    parse = extract_job._parse_batches_fn("markdown")
+    out = pd.concat(list(parse(iter([batch]))))
+    assert out["extracted"].tolist() == ["a **x**", None, ""]
+    assert out["error"].tolist() == [None, "ValueError", None]
+    assert out["n_tags"].tolist() == [2, 0, 0]
+    run = udfs.markdown_udf().func
+    assert run(pd.Series(htmls)).tolist() == ["a **x**", None, ""]
+
+    def make():
+        def one(doc):
+            if doc == "bad":
+                raise ValueError(doc)
+            return {"n": len(doc)}
+
+        return one
+
+    struct = udfs.StructType([udfs.StructField("n", udfs.IntegerType())])
+    n = udfs._doc_udf(struct, make).func(pd.Series(htmls))["n"]
+    assert n.isna().tolist() == [False, True, False]
+    assert (n[0], n[2]) == (len(htmls[0]), 0)

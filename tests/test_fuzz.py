@@ -15,6 +15,11 @@ Invariants (mirroring the reference's own guarantees):
 * the scan loop's tag probes agree with the tokenizer helpers: the name
   end and special class it hands on, and each tag it emits itself
   (tests/split_parser.py ProbeCheckingParser)
+* MarkdownExtractor and to_markdown give the recursive reference's
+  Markdown (tests/markdown_reference.py), and the same element count
+* randomized structural adversaries (tests/adversaries.py): every
+  extractor and per-document UDF body returns within the bound, and the
+  two markdown entry points agree
 
 Both path comparisons run an EventCollector (attribute events) and an
 index-carrying DomArrayHandler (attribute quotes read in
@@ -25,14 +30,21 @@ include ``lower_case_attribute_names`` (names lowercased or kept).
 
 from __future__ import annotations
 
+import random
+import time
+
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.dom import DomArrayHandler, parse_document, text_content
+from htmlparser2_spark.engine.markdown import MarkdownExtractor, to_markdown
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 from htmlparser2_spark.engine.stream import StreamingParser
 
+from .adversaries import BOUND_S, CASES, document_bodies, structural_adversary
+from .markdown_reference import ReferenceExtractor, reference_to_markdown
 from .split_parser import ProbeCheckingParser, SplitParser, ordered_nodes, parsed
 
 # Markup-ish alphabet biased toward structure characters.
@@ -60,6 +72,13 @@ _TOKENS = st.lists(
             "<XMP>", "<STYLE>", "<PlainText>", "<svg><title>",
             "<svg><script>", "<math><style>", "<svg><xmp a='1'>",
             "<svg><TEXTAREA>", "<iframe>",
+            # the markdown rules' elements
+            "<ul>", "</ul>", "<ol>", "</li>", "<blockquote>",
+            "</blockquote>", "<pre>", "</pre>", "<table>", "</table>",
+            "<thead>", "<tbody>", "<th>", "</tr>", "<code>", "</code>",
+            "<b>", "</b>", "<strong>", "<i>", "</i>", "<em>", "<hr>",
+            "<h2>", "</h2>", '<img alt="t" src="s">', "<br>", "<div>",
+            "</div>", "<span>", "<body>", "</body>", "<textarea>",
         ]),
         st.text(alphabet=_MARKUP_CHARS, max_size=12),
     ),
@@ -236,6 +255,36 @@ def test_xml_mode_never_raises(doc):
     parser = Parser(handler, ParserOptions(xml_mode=True))
     handler.attach(parser)
     parser.parse(doc)
+
+
+@given(
+    st.one_of(_MARKUP, _FREE, _TOKENS),
+    _OPTIONS,
+    st.one_of(st.none(), st.booleans()),
+)
+@settings(max_examples=400, deadline=None)
+def test_markdown_equals_recursive_reference(doc, options, lower_case_tags):
+    """Both markdown entry points render what the recursive renderer
+    (tests/markdown_reference.py) renders; the extractor also counts
+    the same elements."""
+    options = {"lower_case_tags": lower_case_tags, **options}
+    expected = ReferenceExtractor(**options).extract(doc)
+    assert MarkdownExtractor(**options).extract(doc) == expected
+    nodes = parsed(Parser, DomArrayHandler(), doc, ParserOptions(**options)).nodes
+    assert to_markdown(nodes) == expected[0] == reference_to_markdown(nodes)
+
+
+@pytest.mark.parametrize("case", CASES)
+@given(seed=st.integers(0, 2**32 - 1))
+@settings(max_examples=1, deadline=None)
+def test_structural_adversaries_return_in_bounded_time(case, seed):
+    doc = structural_adversary(random.Random(seed), case)
+    for name, body in document_bodies().items():
+        t0 = time.process_time()
+        body(doc)
+        elapsed = time.process_time() - t0
+        assert elapsed < BOUND_S, (case, seed, name, elapsed)
+    assert MarkdownExtractor().extract(doc)[0] == to_markdown(parse_document(doc))
 
 
 def test_pathological_deep_nesting_is_iterative():

@@ -1,21 +1,26 @@
 """HTML -> Markdown rendering (engine/markdown.py) rule-set pins, and
-parity of its two entry points: MarkdownExtractor (the parser builds
-the renderer's tree) and to_markdown (an adjacency array from
-DomArrayHandler)."""
+parity of its two entry points, MarkdownExtractor (the Parser's events)
+and to_markdown (an adjacency array from DomArrayHandler), with each
+other and with the recursive renderer kept in
+tests/markdown_reference.py."""
 
 from __future__ import annotations
 
 import random
+import time
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from htmlparser2_spark.engine import markdown
 from htmlparser2_spark.engine.dom import DomArrayHandler
 from htmlparser2_spark.engine.markdown import MarkdownExtractor, to_markdown
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 
+from .adversaries import BOUND_S
 from .fixture_docs import golden_inputs
+from .markdown_reference import ReferenceExtractor, reference_to_markdown
 
 _ELEMENT_TYPES = ("tag", "script", "style")
 
@@ -28,8 +33,10 @@ def dom(html: str, **options) -> list[dict]:
 
 
 def md(html: str, **options) -> str:
-    """Markdown through both entry points, which must agree."""
-    expected = to_markdown(dom(html, **options))
+    """Markdown through both entry points, which must agree with each
+    other and with the recursive reference."""
+    expected = ReferenceExtractor(**options).extract(html)[0]
+    assert to_markdown(dom(html, **options)) == expected
     assert MarkdownExtractor(**options).extract(html)[0] == expected
     return expected
 
@@ -153,7 +160,10 @@ def test_page_variant_shapes():
 def assert_paths_agree(extractor: MarkdownExtractor, doc: str, **options):
     nodes = dom(doc, **options)
     n_elements = sum(1 for n in nodes if n["type"] in _ELEMENT_TYPES)
-    assert extractor.extract(doc) == (to_markdown(nodes), n_elements)
+    expected = ReferenceExtractor(**options).extract(doc)
+    assert expected[1] == n_elements
+    assert extractor.extract(doc) == expected
+    assert to_markdown(nodes) == expected[0] == reference_to_markdown(nodes)
 
 
 @pytest.mark.parametrize("doc, options", golden_inputs())
@@ -199,6 +209,25 @@ def test_extractor_matches_adjacency_fuzz(pieces, which):
     )
 
 
+@given(
+    st.lists(st.one_of(_PIECES, st.text(max_size=6)), max_size=40),
+    st.integers(0, len(_OPTION_SETS) - 1),
+)
+@settings(max_examples=400, deadline=None)
+def test_rope_collapse_matches_reference_fuzz(pieces, which):
+    """With every wrapped text a rope (threshold 0), the collapse that
+    re-spaces only a rope's top level renders what the reference's
+    whole-string re-collapse renders."""
+    flat = markdown._FLAT
+    markdown._FLAT = 0
+    try:
+        assert_paths_agree(
+            _EXTRACTORS[which], "".join(pieces), **_OPTION_SETS[which]
+        )
+    finally:
+        markdown._FLAT = flat
+
+
 def test_n_tags_counts_dom_elements():
     # implied opens (</p>, </br>), voids and EOF-closed elements count
     # once each; comments, text, directives and a truncated tag do not
@@ -222,10 +251,10 @@ def test_adjacency_honours_permuted_idx_in_parent():
         if n["parent_id"] == ul_id:
             n["idx_in_parent"] = 1 - n["idx_in_parent"]
     expected = "- b\n- a\n\ntwo\n\none"
-    assert to_markdown(nodes) == expected
+    assert to_markdown(nodes) == expected == reference_to_markdown(nodes)
     # list order does not matter once idx_in_parent orders siblings
     random.Random(3).shuffle(nodes)
-    assert to_markdown(nodes) == expected
+    assert to_markdown(nodes) == expected == reference_to_markdown(nodes)
 
 
 def test_comment_between_text():
@@ -255,9 +284,36 @@ def test_xml_mode_keeps_case():
 
 @pytest.mark.parametrize("tag", ["b", "div"])
 def test_deep_nesting_renders_through_both_entry_points(tag):
-    # 300 levels of inline and of block nesting render identically;
-    # pages past the recursion limit still raise (the renderer
-    # recurses once per level)
+    # 300 levels of inline and of block nesting render as the recursive
+    # reference does
     doc = f"<body>{f'<{tag}>' * 300}x"
     out = md(doc)
     assert out == ("**" * 300 + "x" + "**" * 300 if tag == "b" else "x")
+
+
+@pytest.mark.parametrize("tag", ["b", "div"])
+def test_nesting_past_recursion_limit_renders_in_bounded_time(tag):
+    # 10^5 levels, past any recursion limit: both entry points render
+    # the page, equally, each within the adversary bound
+    depth = 100_000
+    doc = f"<body>{f'<{tag}>' * depth}x"
+    t0 = time.process_time()
+    got = MarkdownExtractor().extract(doc)[0]
+    t1 = time.process_time()
+    assert to_markdown(dom(doc)) == got
+    t2 = time.process_time()
+    assert t1 - t0 < BOUND_S and t2 - t1 < BOUND_S, (t1 - t0, t2 - t1)
+    assert got == ("**" * depth + "x" + "**" * depth if tag == "b" else "x")
+
+
+def test_wrapped_line_breaks_stay_linear():
+    # a <br> inside nested wrappers: each wrapper's collapse re-spaces
+    # only the pieces it added (rope), yet the text equals the
+    # reference's, which re-collapses the whole run at every level
+    doc = "<p>" + "<b> a<br>b " * 200 + "x"
+    assert md(doc).startswith("**a b **a b")
+    depth = 50_000
+    t0 = time.process_time()
+    out = MarkdownExtractor().extract("<p>" + "<i>a<br>" * depth + "x")[0]
+    assert time.process_time() - t0 < BOUND_S
+    assert out == "*a " * depth + "x" + "*" * depth

@@ -104,6 +104,49 @@ def test_explicit_repartition_is_single_hash_exchange(spark, page_scans):
     assert url_hash_exchanges(parsed) == [16]
 
 
+def test_parse_pages_counts_input_files_in_constant_py4j_calls(
+    spark, tmp_path, monkeypatch
+):
+    """The shuffle decision counts the scan's files without copying
+    their paths to Python one py4j call each: planning parse_pages
+    over 8 and over 256 files sends the same number of commands. The
+    releases of garbage-collected JVM references, which py4j's
+    finalizer thread sends through the same client when it gets to
+    them, are not counted."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from htmlparser2_spark.plans.extract_job import parse_pages
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def commands(n_files: int) -> int:
+        path = str(tmp_path / f"files_{n_files}")
+        # One row per range partition: each partition writes one file.
+        spark.range(0, n_files, 1, n_files).select(
+            F.format_string("https://h.example/%d", "id").alias("url"),
+            F.lit("en").alias("lang"),
+            F.lit("<p>x</p>").alias("html"),
+        ).write.parquet(path)
+        pages = spark.read.parquet(path)
+        assert len(pages.inputFiles()) == n_files
+        sent = []
+
+        def counting(command, *args, **kwargs):
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                sent.append(command)
+            return send(command, *args, **kwargs)
+
+        monkeypatch.setattr(client, "send_command", counting)
+        try:
+            parse_pages(pages)
+        finally:
+            monkeypatch.setattr(client, "send_command", send)
+        return len(sent)
+
+    assert commands(8) == commands(256)
+
+
 def test_parse_pipeline_reads_only_udf_columns(spark, tmp_path):
     """parse_pages hands the UDF url/html/text/lang only, so a stored
     sources.pages table's warc_ts is pruned from the parquet scan."""

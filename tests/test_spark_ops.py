@@ -494,10 +494,12 @@ def _normal_pages(n: int) -> list[tuple[str, str, str]]:
 
 
 def test_poisoned_document_fails_no_task(spark):
-    """A page nested 10^4 deep, on which the markdown renderer raises
-    RecursionError, in one batch with normal pages: parse_pages and
-    markdown_udf complete, every other row equals a run without the
-    page, and the bad row carries its error class."""
+    """A page nested 10^4 deep, past the recursion limit, in one batch
+    with normal pages: parse_pages and markdown_udf complete, every
+    other row equals a run without the page, and the deep page renders
+    (its markdown is empty: it holds no text) with no error. The guard
+    that turns a raising document into a NULL row is pinned in-process
+    (tests/test_adversaries.py)."""
     from htmlparser2_spark.functions.udfs import markdown_udf
     from htmlparser2_spark.plans.extract_job import parse_pages, partition_metrics
 
@@ -516,17 +518,17 @@ def test_poisoned_document_fails_no_task(spark):
     bad = out.pop("bad")
     assert out == clean
     assert all(r["error"] is None and r["extracted"] for r in clean.values())
-    assert bad["extracted"] is None and bad["golden_match"] == 0
-    assert bad["error"] == "RecursionError"
+    assert bad["extracted"] == "" and bad["golden_match"] == 0
+    assert bad["error"] is None and bad["n_tags"] == 10_000
     metrics = partition_metrics(parsed).collect()
-    assert [(m["docs"], m["errors"]) for m in metrics] == [(41, 1)]
+    assert [(m["docs"], m["errors"]) for m in metrics] == [(41, 0)]
 
     md = {
         r["url"]: r["md"]
         for r in df.select("url", markdown_udf()(F.col("html")).alias("md"))
         .collect()
     }
-    assert md.pop("bad") is None
+    assert md.pop("bad") == ""
     assert md == {u: r["extracted"] for u, r in clean.items()}
 
 

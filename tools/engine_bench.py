@@ -15,15 +15,17 @@ deterministic corpora bench.py uses, one thread, best-of-N:
 Both paths are measured: the tokenizer-only fast path that
 extract_text_udf uses for default options, and the full parser with
 the text-only handler. Markdown rendering is measured through
-MarkdownExtractor (parser-built tree + renderer, the per-row work of
-markdown_udf and parse_pages(mode="markdown")) on the realistic corpus
+MarkdownExtractor (the Parser feeding MarkdownHandler, which renders
+as elements close: the per-row work of markdown_udf and
+parse_pages(mode="markdown")) on the realistic corpus
 plus perfbench's structured pages (``perfbench.inputs.structured_pages``,
 the pages the ``structured_pages_markdown`` workload times:
 headings/lists/links/table, the shapes the renderer transforms). Each
 markdown line also gives its opened tags per document, µs per tag, and
-its two layers: ``parse_us_per_doc`` (Parser + TreeHandler building the
-tree) and ``render_us_per_doc`` (the renderer's ``_blocks`` over that
-tree), each best-of-N and timed per document in the same loop.
+its two layers: ``parse_us_per_doc`` (the Parser feeding a handler
+that records the events MarkdownHandler takes) and ``render_us_per_doc``
+(MarkdownHandler replaying those events), each best-of-N and timed per
+document in the same loop.
 The ``realistic_streamed`` line feeds the realistic corpus through
 StreamingParser + DomArrayHandler in 64-char ``write()`` chunks, after
 checking 200 documents' final nodes against the whole-document parse;
@@ -135,13 +137,41 @@ def measure(docs: list[str], one, repeats: int) -> dict:
     }
 
 
+class _EventLog:
+    """Records the Parser events of one document as (method, args)
+    calls of ``handler``."""
+
+    def __init__(self, handler) -> None:
+        self.handler = handler
+        self.events: list = []
+
+    def on_parser_init(self, parser) -> None:
+        self.events = []
+
+    def on_open_tag(self, name, attrs, is_implied) -> None:
+        self.events.append((self.handler.on_open_tag, (name, attrs, is_implied)))
+
+    def on_close_tag(self, name, is_implied) -> None:
+        self.events.append((self.handler.on_close_tag, (name, is_implied)))
+
+    def on_text(self, data) -> None:
+        self.events.append((self.handler.on_text, (data,)))
+
+    def on_cdata_start(self) -> None:
+        self.events.append((self.handler.on_cdata_start, ()))
+
+    def on_cdata_end(self) -> None:
+        self.events.append((self.handler.on_cdata_end, ()))
+
+
 def markdown_layers(docs: list[str], repeats: int) -> dict:
     """Best-of-``repeats`` µs per document of the markdown line's two
-    layers: the parse that builds the tree, and the render over it."""
-    from htmlparser2_spark.engine.markdown import TreeHandler, _blocks
+    layers: the parse, and the render from the parse's events."""
+    from htmlparser2_spark.engine.markdown import MarkdownHandler
 
-    tree = TreeHandler()
-    parser = Parser(tree, batch_text=True)  # as MarkdownExtractor builds it
+    handler = MarkdownHandler()
+    log = _EventLog(handler)
+    parser = Parser(log, batch_text=True)  # as MarkdownExtractor builds it
     best_parse = best_render = None
     for _ in range(repeats):
         parse_s = render_s = 0.0
@@ -149,8 +179,10 @@ def markdown_layers(docs: list[str], repeats: int) -> dict:
             t0 = time.perf_counter()
             parser.parse(d)
             t1 = time.perf_counter()
-            body = tree.body
-            _blocks(tree.root if body is None else body[2], 0, [])
+            handler.on_parser_init(None)
+            for method, args in log.events:
+                method(*args)
+            handler.markdown()
             t2 = time.perf_counter()
             parse_s += t1 - t0
             render_s += t2 - t1

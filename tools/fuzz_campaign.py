@@ -9,9 +9,11 @@ the 48 ParserOptions combinations (four switches and
   tests/test_eof_edges.py::test_eof_implied_close_index_is_len_plus_one)
 * chunked parse (1-8 random chunks) == whole-document parse, same options
 * default options: fast_text == DOM textContent
-* default and swept options: ``MarkdownExtractor`` (markdown from the
-  parser-built tree, with its open-element count) == adjacency
-  ``to_markdown`` on the exact-event DOM (with its element count)
+* default and swept options: ``MarkdownExtractor`` (markdown rendered
+  from the Parser's events, with its open-element count) and adjacency
+  ``to_markdown`` on the exact-event DOM == the recursive renderer kept
+  in tests/markdown_reference.py, and the extractor's element count ==
+  the DOM's
 * the Parser's events, indices included, == those of the split
   open-tag path kept in tests/split_parser.py (the one-event light open
   tag), for an EventCollector (attribute events) and for an
@@ -20,6 +22,10 @@ the 48 ParserOptions combinations (four switches and
   the whole-document parse
 * the scan loop's tag probes agree with the tokenizer helpers
   (tests/split_parser.py ProbeCheckingParser), for both handlers
+* every ``ADVERSARY_EVERY``-th document, one randomized structural
+  adversary (tests/adversaries.py): every ``_make_extract`` mode and
+  every ``_doc_udf`` body returns within ``BOUND_S`` CPU-s, and the two
+  markdown entry points agree
 
 Usage: ``python tools/fuzz_campaign.py [N] [seed]`` (default 60000).
 A 60k-document run passes clean.
@@ -31,6 +37,7 @@ import itertools
 import pathlib
 import random
 import sys
+import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
@@ -44,6 +51,15 @@ from htmlparser2_spark.engine.fast_text import FastTextExtractor  # noqa: E402
 from htmlparser2_spark.engine.markdown import MarkdownExtractor, to_markdown  # noqa: E402
 from htmlparser2_spark.engine.parser import Parser, ParserOptions  # noqa: E402
 from htmlparser2_spark.engine.stream import StreamingParser  # noqa: E402
+from tests.adversaries import (  # noqa: E402
+    BOUND_S,
+    document_bodies,
+    structural_adversary,
+)
+from tests.markdown_reference import (  # noqa: E402
+    ReferenceExtractor,
+    reference_to_markdown,
+)
 from tests.split_parser import (  # noqa: E402
     ProbeCheckingParser,
     SplitParser,
@@ -67,7 +83,15 @@ TOKENS = [
     "</a b=1>", "</li/>", "<XMP>", "<STYLE>", "<PlainText>",
     "<svg><title>", "<svg><script>", "<math><style>", "<svg><xmp a='1'>",
     "<svg><TEXTAREA>",
+    # the markdown rules' elements
+    "<body>", "</body>", "<ul>", "</ul>", "<ol>", "</li>", "<blockquote>",
+    "</blockquote>", "<pre>", "</pre>", "<table>", "</table>", "<thead>",
+    "<tbody>", "<th>", "</tr>", "<code>", "</code>", "<b>", "</b>",
+    "<strong>", "<i>", "</i>", "<em>", "<hr>", "<h2>", "</h2>",
+    '<img alt="t" src="s">', "<br>", "<div>", "</div>", "<span>",
 ]
+# One structural adversary per this many documents.
+ADVERSARY_EVERY = 5000
 
 OPTION_SPACE = [
     dict(
@@ -112,6 +136,8 @@ def main(n_docs: int = 60000, seed: int = 20260816) -> int:
     rng = random.Random(seed)
     extractor = FastTextExtractor()
     md_extractors = [MarkdownExtractor(**opts) for opts in OPTION_SPACE]
+    md_references = [ReferenceExtractor(**opts) for opts in OPTION_SPACE]
+    bodies = document_bodies()
     failures = 0
     for i in range(n_docs):
         doc = rand_doc(rng)
@@ -147,10 +173,27 @@ def main(n_docs: int = 60000, seed: int = 20260816) -> int:
             n_elements = sum(
                 1 for n in nodes if n["type"] in ("tag", "script", "style")
             )
+            expected = md_references[i % len(OPTION_SPACE)].extract(doc)
             got = md_extractors[i % len(OPTION_SPACE)].extract(doc)
-            assert got == (to_markdown(nodes), n_elements), (
-                f"markdown tree!=adjacency: {doc!r} {opts}"
+            assert got == expected and got[1] == n_elements, (
+                f"markdown extractor!=reference: {doc!r} {opts}"
             )
+            assert to_markdown(nodes) == got[0] == reference_to_markdown(nodes), (
+                f"markdown adjacency!=reference: {doc!r} {opts}"
+            )
+            if i % ADVERSARY_EVERY == 0:
+                adversary = structural_adversary(rng)
+                for name, body in bodies.items():
+                    t0 = time.process_time()
+                    body(adversary)
+                    elapsed = time.process_time() - t0
+                    assert elapsed < BOUND_S, (
+                        f"adversary over bound: {name} {elapsed:.1f} s "
+                        f"{adversary[:80]!r}"
+                    )
+                assert MarkdownExtractor().extract(adversary)[0] == to_markdown(
+                    parse_document(adversary)
+                ), f"adversary markdown tree!=adjacency: {adversary[:80]!r}"
             if i % 16 == 0:
                 # Default options on both sides, whatever opts is.
                 dom_text = text_content(parse_document(doc))
