@@ -31,20 +31,24 @@ all of its content (PAPER.md §1.1, Parser.ts:216-253): the post-order a
 renderer needs. :class:`MarkdownHandler` is that renderer, one Parser
 handler with an explicit stack of frames, one per open element:
 
-* the open tag fixes the element's *kind* from its parent's kind and
-  its own name (``_RULES``): block container, paragraph/heading,
-  inline, raw text (``pre``/``textarea``), list, list item, table,
-  row-group, row, cell, or skipped. The first ``<body>`` opens a new
+* the open tag picks the element's open function from its parent's
+  rules for child tags and its own name: block container, leaf block
+  (paragraph, heading, ``pre``, ``textarea``, ``hr``), wrapper
+  (``b``/``i``/``code``/linked ``a``), transparent inline, list, list
+  item, table, row, cell, or skipped. The function builds the frame:
+  its close function, the rules for its own children, its text sink
+  and the fields its close reads. The first ``<body>`` opens a new
   root, the rendered scope;
 * text (scrubbed of NUL, CDATA sections dropped) joins the innermost
-  frame's parts; a transparent inline element shares its parent's;
-* the close hands the frame's piece or blocks to its parent.
+  frame's parts; a transparent element shares its parent's;
+* the close calls the frame's close function, which hands the
+  element's piece or blocks to its parent.
 
-A wrapper's collapsed text longer than 1 KB is not re-copied by every
-enclosing wrapper: it travels as a *rope*, a nested list that no
-enclosing collapse changes (``_rope``) and the enclosing block
-flattens once (``_text``). So the work stays linear in the page at any
-nesting depth.
+A wrapper copies its collapsed content into one string only up to
+``_FLAT`` chars; longer content travels as a *rope*, a nested list that
+no enclosing collapse changes (``_rope``) and the enclosing block
+flattens once (``_text``). So nested wrappers copy at most ``_FLAT``
+chars each, and the work stays linear in the page at any nesting depth.
 
 :class:`MarkdownExtractor` pairs the handler with one reused
 ``Parser(batch_text=True)``: the one production path, behind
@@ -68,11 +72,13 @@ from .parser import Parser, ParserOptions
 __all__ = ["MarkdownExtractor", "MarkdownHandler", "to_markdown"]
 
 _SKIP = {"head", "script", "style", "title"}
-_BLOCK = set(
-    "address article aside blockquote body div dl fieldset figcaption "
-    "figure footer form h1 h2 h3 h4 h5 h6 header hr html li main nav ol p "
-    "pre section table tbody td textarea tfoot th thead tr ul".split()
-)
+_BLOCK = {
+    "address", "article", "aside", "blockquote", "body", "div", "dl",
+    "fieldset", "figcaption", "figure", "footer", "form", "h1", "h2",
+    "h3", "h4", "h5", "h6", "header", "hr", "html", "li", "main", "nav",
+    "ol", "p", "pre", "section", "table", "tbody", "td", "textarea",
+    "tfoot", "th", "thead", "tr", "ul",
+}
 _HEADINGS = {f"h{i}": "#" * i for i in range(1, 7)}
 _MARKS = {"b": "**", "strong": "**", "i": "*", "em": "*", "code": "`"}
 _WS = re.compile(r"[ \t\r\n\f]+")
@@ -84,7 +90,11 @@ _SPACES = " \t\r\n\f"
 # the markdown output instead, the right call for training text).
 _BR = "\x00"
 _BR_RE = re.compile(f" ?{_BR} ?")
-# A wrapper's collapsed text longer than this is a rope.
+# A wrapper's collapsed text longer than this is a rope. Any bound keeps
+# deep nesting linear (<b> x 10^5: 1.5-1.7 CPU-s for bounds 0 to 16K,
+# 32 s unbounded); strings below it keep the common case fast (ropes
+# for all wrapped text: 0.70x on the structured pages, whose longest
+# wrapped text is 31 chars).
 _FLAT = 1024
 
 
@@ -115,16 +125,13 @@ def _text(parts: list) -> str:
     try:
         raw = "".join(parts)
     except TypeError:  # parts hold a rope
-        out, stack = [], [iter(parts)]
-        while stack:
-            for item in stack[-1]:
-                if item.__class__ is str:
-                    out.append(item)
-                else:
-                    stack.append(iter(item))
-                    break
+        out, todo = [], [parts]
+        while todo:
+            item = todo.pop()
+            if item.__class__ is str:
+                out.append(item)
             else:
-                stack.pop()
+                todo += reversed(item)
         raw = "".join(out)
     # Fast-path guard: text needing collapse holds a non-space
     # whitespace char or a double space; clean text (the common case
@@ -139,149 +146,255 @@ def _text(parts: list) -> str:
     return raw.strip()
 
 
-def _wrapped(parts: list, left: str, right: str, keep_empty: bool) -> list:
-    """The pieces a wrapper hands its parent: its collapsed content
-    between ``left`` and ``right``, with a space outside each mark the
-    content started or ended with whitespace at ('foo<b> bar </b>baz'
-    -> 'foo **bar** baz'). Content that collapses to nothing gives a
-    link ``[](href)`` (``keep_empty``; empty content counts as
-    whitespace at both edges), else a single space if it held
-    whitespace: it still separates its neighbours. Content longer than
-    ``_FLAT`` chars, or holding a rope, becomes a rope."""
+def _flush(run: list, out: list) -> None:
+    """Pending inline pieces at block level -> an implicit paragraph."""
+    if run:
+        _place(_text(run), out, None)
+        run.clear()
+
+
+def _place(text: str, out: list, indent) -> None:
+    """A closed block element's ``text`` joins ``out``. Inside a list
+    item (``indent`` is the item's tail and a pad), every line of
+    ``out`` then joins the item's tail, padded."""
+    if text:
+        out.append(text)
+    if indent is not None:
+        tail, pad = indent
+        tail.extend(pad + line for block in out for line in block.split("\n"))
+
+
+# ---------------- frames ----------------
+# A frame is a tuple (close, kids, parts, ...): the function that hands
+# the closed element on (None: nothing to hand on), the rules for its
+# child tags (a dict of open functions and the default one), and the
+# sink of its text (None drops text). The open functions below list the
+# fields that follow. A block container's and a quote's are
+# (..., out, depth): the block list its children join, and the list
+# depth its nested lists indent by.
+
+
+def _open_span(name: str, attrs: dict, parent: tuple) -> tuple:
+    """A transparent element: its text joins the parent's parts, under
+    the parent's rules (the inline rules, under a block's): inside raw
+    text, raw text too."""
+    kids = parent[1]
+    return (None, _INLINE if kids is _BLOCKS else kids, parent[2])
+
+
+def _open_skip(name: str, attrs: dict, parent: tuple) -> tuple:
+    return _SKIPPED
+
+
+def _open_void(name: str, attrs: dict, parent: tuple) -> tuple:
+    """br and img: a piece of the parent's text."""
+    alt, src = attrs.get("alt", ""), attrs.get("src", "")
+    parent[2].append(_BR if name == "br" else f"![{alt}]({src})")
+    return _SKIPPED
+
+
+def _open_wrap(name: str, attrs: dict, parent: tuple) -> tuple:
+    """b/strong, i/em, code and a: (..., parent's parts, left mark,
+    right mark, keep_empty). A link without an href is transparent."""
+    if name != "a":
+        mark = _MARKS[name]
+        return (_close_wrap, _INLINE, [], parent[2], mark, mark, False)
+    href = attrs.get("href")
+    if not href:
+        return (None, _INLINE, parent[2])
+    return (_close_wrap, _INLINE, [], parent[2], "[", f"]({href})", True)
+
+
+def _close_wrap(frame: tuple) -> None:
+    """Hand the parent's parts the wrapper's collapsed content between
+    ``left`` and ``right``, with a space outside each mark the content
+    started or ended with whitespace at ('foo<b> bar </b>baz' -> 'foo
+    **bar** baz'). Content that collapses to nothing gives a link
+    ``[](href)`` (``keep_empty``; empty content counts as whitespace at
+    both edges), else a single space if it held whitespace: it still
+    separates its neighbours. Content longer than ``_FLAT`` chars, or
+    holding a rope, goes as a rope."""
+    _, _, parts, into, left, right, keep_empty = frame
     try:
         inner = "".join(parts)
     except TypeError:  # parts hold a rope; a rope sits between marks,
         ends = [item for item in parts if item]  # so the ends are text
-        inner, flat = ends[0][0] + ends[-1][-1], False
+        inner, core = ends[0][0] + ends[-1][-1], None
     else:
         core = _text((inner,))
         if not (core or keep_empty):
-            return [" "] if inner else []
-        flat = len(core) <= _FLAT
+            if inner:
+                into.append(" ")
+            return
+        if len(core) > _FLAT:
+            core = None
+        elif core == inner and core:  # no whitespace at either edge
+            into.append(f"{left}{core}{right}")
+            return
     e0 = " " if inner[:1] in _SPACES else ""
     e1 = " " if inner[-1:] in _SPACES else ""
-    if flat:
-        return [f"{e0}{left}{core}{right}{e1}"]
-    return [e0, left, _rope(parts), right, e1]
-
-
-def _flush(run: list, out: list) -> None:
-    """Pending inline pieces at block level -> an implicit paragraph."""
-    text = _text(run) if run else ""
-    run.clear()
-    if text:
-        out.append(text)
-
-
-# ---------------- element kinds ----------------
-# A frame is a tuple (a list for _LIST, whose item count grows), its
-# kind first and its text sink (a parts list, or None when text is
-# dropped) second:
-#   _SPAN/_RAW (kind, parent's parts)   _NONE (kind, None)
-#   _ROOT      (kind, run, blocks, None, depth 0)
-#   _BOX/_PARA/_PRE/_AREA/_HR (kind, parts, out, indent, depth)
-#   _HEAD      (kind, parts, out, indent, "#"s)
-#   _QUOTE     (kind, run, inner blocks, indent, depth, out)
-#   _TABLE     (kind, None, out, indent, rows); _GROUP (kind, None,
-#              None, None, rows); _ROW (kind, None, cells)
-#   _LIST      [kind, None, out, None, lines, depth, ordered,
-#              item's tail (a nested list) or None, items so far,
-#              its items' indent]
-#   _ITEM      (kind, head, list's lines, prefix, tail, depth)
-#   _WRAP/_LINK (kind, parts, parent's parts, mark or href)
-#   _CELL      (kind, parts, row's cells)
-# ``out`` is the block list the element's blocks join; ``indent``,
-# for a block inside a list item, is (item's tail, pad): its lines
-# join the item's tail indented. Kinds up to _GROUP close with no
-# work; _BREAK and _IMAGE act when they open, with a _SKIPPED frame.
-(_SPAN, _RAW, _NONE, _ROOT, _ROW, _GROUP, _WRAP, _LINK, _CELL, _ITEM,
- _BREAK, _IMAGE, _PARA, _HEAD, _PRE, _AREA, _BOX, _HR, _QUOTE, _TABLE,
- _LIST) = range(21)
-
-_SKIPPED = (_NONE, None)
-_INLINE_RULES = {
-    **dict.fromkeys(_SKIP, _NONE), **dict.fromkeys(_MARKS, _WRAP),
-    "br": _BREAK, "img": _IMAGE, "a": _LINK,
-}
-_BLOCK_RULES = {
-    **_INLINE_RULES, **dict.fromkeys(_BLOCK, _BOX),
-    **dict.fromkeys(_HEADINGS, _HEAD), "p": _PARA, "pre": _PRE,
-    "textarea": _AREA, "blockquote": _QUOTE, "hr": _HR, "table": _TABLE,
-    "ul": _LIST, "ol": _LIST,
-}
-_INLINE, _BLOCKS = (_INLINE_RULES, _SPAN), (_BLOCK_RULES, _SPAN)
-_RAW_TEXT, _IGNORED = ({}, _RAW), ({}, _NONE)
-_GROUPS = dict.fromkeys(("thead", "tbody", "tfoot"), _GROUP)
-_TABLE_RULES = ({"tr": _ROW, **_GROUPS}, _NONE)
-# (rules, default) for the children of each frame kind. A list item's
-# children follow the block rules; a ul/ol there is its nested list.
-_RULES = (
-    _INLINE, _RAW_TEXT, _IGNORED, _BLOCKS,  # _SPAN _RAW _NONE _ROOT
-    ({"td": _CELL, "th": _CELL}, _NONE), _TABLE_RULES,  # _ROW _GROUP
-    _INLINE, _INLINE, _INLINE, _BLOCKS,  # _WRAP _LINK _CELL _ITEM
-    None, None,  # _BREAK _IMAGE: never a frame's kind
-    _INLINE, _INLINE, _RAW_TEXT, _RAW_TEXT,  # _PARA _HEAD _PRE _AREA
-    _BLOCKS, _IGNORED, _BLOCKS, _TABLE_RULES,  # _BOX _HR _QUOTE _TABLE
-    ({"li": _ITEM}, _NONE),  # _LIST
-)
-
-
-def _open_block(kind: int, name: str, parent) -> tuple | list:
-    """The frame of a block element whose parent is a block container
-    or a list item."""
-    if parent[0] == _ITEM:
-        depth = parent[5] + 1
-        out, indent, tail = [], (parent[4], "  " * depth), parent[4]
+    if core is None:
+        into += (e0, left, _rope(parts), right, e1)
     else:
-        out, depth, indent, tail = parent[2], parent[4], None, None
-        if parent[1]:
-            _flush(parent[1], out)
-    if kind < _QUOTE:  # _HEAD keeps its "#"s where the others keep depth
-        arg = _HEADINGS[name] if kind == _HEAD else depth
-        return (kind, [], out, indent, arg)
-    if kind == _QUOTE:
-        return (_QUOTE, [], [], indent, depth, out)
-    if kind == _TABLE:
-        return (_TABLE, None, out, indent, [])
-    # in an item, its nested list: its lines join the item's tail
-    return [_LIST, None, out, None, [], depth, name == "ol", tail, 0,
-            "  " * depth]
+        into.append(f"{e0}{left}{core}{right}{e1}")
 
 
-def _close_block(frame) -> None:
-    """Hand a block element's block to its ``out`` (and, inside a list
-    item, on to the item's tail)."""
-    kind, out = frame[0], frame[2]
-    if kind == _PARA or kind == _AREA:
-        text = _text(frame[1])
-    elif kind == _BOX:
-        text = _flush(frame[1], out)
-    elif kind == _LIST:
-        if frame[7] is not None:  # an item's nested list: to its tail,
-            frame[7].extend(frame[4] or ("",))  # or an empty line
-            return
-        text = "\n".join(frame[4])
-    elif kind == _HEAD:
-        text = f"{frame[4]} {_text(frame[1])}".rstrip()
-    elif kind == _TABLE:
-        rows = frame[4]
-        if rows:  # the header's separator row
-            rows.insert(1, ["---"] * len(rows[0]))
-        text = "\n".join(f"| {' | '.join(row)} |" for row in rows)
-    elif kind == _PRE:
-        text = f"```\n{''.join(frame[1])}\n```"
-    elif kind == _QUOTE:
-        _flush(frame[1], out)
-        lines = "\n\n".join(out).split("\n")
-        text = "\n".join(f"> {line}" if line else ">" for line in lines)
-        out = frame[5]
-    else:  # _HR
-        text = "---"
-    if text:
-        out.append(text)
-    if frame[3] is not None:
-        tail, pad = frame[3]
-        tail.extend(pad + line for block in out for line in block.split("\n"))
+def _home(parent: tuple) -> tuple:
+    """(out, depth, indent) of a block element: its parent's block list
+    and depth, with the parent's pending inline run flushed first; in a
+    list item, a list of its own, one level deeper, that joins the
+    item's tail padded."""
+    if parent[0] is _close_item:
+        _, _, _, _, _, depth, tail = parent
+        depth += 1
+        return [], depth, (tail, "  " * depth)
+    _flush(parent[2], parent[3])
+    return parent[3], parent[4], None
+
+
+def _open_box(name: str, attrs: dict, parent: tuple) -> tuple:
+    """A block container: (..., out, depth, indent). A blockquote's
+    children join blocks of its own: (..., its blocks, depth, indent,
+    out)."""
+    out, depth, indent = _home(parent)
+    if name == "blockquote":
+        return (_close_quote, _BLOCKS, [], [], depth, indent, out)
+    return (_close_box, _BLOCKS, [], out, depth, indent)
+
+
+def _close_box(frame: tuple) -> None:
+    _, _, run, out, _, indent = frame
+    _place(_text(run), out, indent)
+
+
+def _close_quote(frame: tuple) -> None:
+    _, _, run, blocks, _, indent, out = frame
+    _flush(run, blocks)
+    lines = "\n\n".join(blocks).split("\n")
+    _place("\n".join(f"> {line}" if line else ">" for line in lines), out, indent)
+
+
+def _open_leaf(name: str, attrs: dict, parent: tuple) -> tuple:
+    """A block element with no block children (p, h1-h6, pre,
+    textarea, hr): (..., out, indent, name)."""
+    close, kids = _LEAVES[name]
+    if parent[2] or parent[0] is _close_item:
+        out, _, indent = _home(parent)
+        return (close, kids, [], out, indent, name)
+    return (close, kids, [], parent[3], None, name)  # _home's common case
+
+
+def _close_para(frame: tuple) -> None:  # p, textarea
+    _, _, parts, out, indent, _ = frame
+    if indent is not None:
+        _place(_text(parts), out, indent)
+    elif parts:  # _place's common case
+        text = _text(parts)
+        if text:
+            out.append(text)
+
+
+def _close_heading(frame: tuple) -> None:
+    _, _, parts, out, indent, name = frame
+    _place(f"{_HEADINGS[name]} {_text(parts)}".rstrip(), out, indent)
+
+
+def _close_pre(frame: tuple) -> None:
+    _, _, parts, out, indent, _ = frame
+    _place(f"```\n{''.join(parts)}\n```", out, indent)
+
+
+def _close_hr(frame: tuple) -> None:
+    _place("---", frame[3], frame[4])
+
+
+def _open_table(name: str, attrs: dict, parent: tuple) -> tuple:
+    out, _, indent = _home(parent)
+    return (_close_table, _TABLE_KIDS, None, [], out, indent)
+
+
+def _close_table(frame: tuple) -> None:
+    _, _, _, rows, out, indent = frame
+    if rows:  # the header's separator row
+        rows.insert(1, ["---"] * len(rows[0]))
+    _place("\n".join(f"| {' | '.join(row)} |" for row in rows), out, indent)
+
+
+def _open_row(name: str, attrs: dict, parent: tuple) -> tuple:
+    """tr: (..., cells), one of its table's rows. thead/tbody/tfoot:
+    (..., rows), its table's rows."""
+    if name != "tr":
+        return (None, _TABLE_KIDS, None, parent[3])
+    cells: list = []
+    parent[3].append(cells)
+    return (None, _ROW_KIDS, None, cells)
+
+
+def _open_cell(name: str, attrs: dict, parent: tuple) -> tuple:
+    return (_close_cell, _INLINE, [], parent[3])
+
+
+def _close_cell(frame: tuple) -> None:
+    frame[3].append(_text(frame[2]).replace("|", "\\|"))
+
+
+def _open_list(name: str, attrs: dict, parent: tuple) -> list:
+    """A list (mutable: it counts its items): [..., lines, depth,
+    ordered, items so far, out, indent, tail]. In a list item it is
+    the item's nested list, whose lines join the item's ``tail``."""
+    if parent[0] is _close_item:
+        out, depth, indent, tail = None, parent[5] + 1, None, parent[6]
+    else:
+        (out, depth, indent), tail = _home(parent), None
+    return [_close_list, _LIST_KIDS, None, [], depth, name == "ol", 0,
+            out, indent, tail]
+
+
+def _close_list(frame: list) -> None:
+    _, _, _, lines, _, _, _, out, indent, tail = frame
+    if tail is not None:  # an item's nested list, or an empty line
+        tail.extend(lines or ("",))
+    else:
+        _place("\n".join(lines), out, indent)
+
+
+def _open_item(name: str, attrs: dict, parent: list) -> tuple:
+    """A list item: (..., head, the list's lines, its line's prefix,
+    the list's depth, tail). Its block children and nested lists
+    render into ``tail``, the lines after its own."""
+    _, _, _, lines, depth, ordered, count, _, _, _ = parent
+    parent[6] = count = count + 1
+    prefix = "  " * depth + (f"{count}. " if ordered else "- ")
+    return (_close_item, _BLOCKS, [], lines, prefix, depth, [])
+
+
+def _close_item(frame: tuple) -> None:
+    _, _, head, lines, prefix, _, tail = frame
+    lines.append(prefix + _text(head))
+    lines.extend(tail)
+
+
+_SKIPPED = (None, ({}, _open_skip), None)
+_IGNORED = _SKIPPED[1]
+_RAW_TEXT = ({}, _open_span)
+_INLINE_OPEN = {
+    **dict.fromkeys(_SKIP, _open_skip), **dict.fromkeys(_MARKS, _open_wrap),
+    "br": _open_void, "img": _open_void, "a": _open_wrap,
+}
+_INLINE = (_INLINE_OPEN, _open_span)
+_LEAVES = {
+    **dict.fromkeys(_HEADINGS, (_close_heading, _INLINE)),
+    "p": (_close_para, _INLINE), "textarea": (_close_para, _RAW_TEXT),
+    "pre": (_close_pre, _RAW_TEXT), "hr": (_close_hr, _IGNORED),
+}
+_BLOCKS = ({
+    **_INLINE_OPEN, **dict.fromkeys(_BLOCK, _open_box),
+    **dict.fromkeys(_LEAVES, _open_leaf),
+    "table": _open_table, "ul": _open_list, "ol": _open_list,
+}, _open_span)
+_TABLE_KIDS = (dict.fromkeys(("tr", "thead", "tbody", "tfoot"), _open_row), _open_skip)
+_ROW_KIDS = ({"td": _open_cell, "th": _open_cell}, _open_skip)
+_LIST_KIDS = ({"li": _open_item}, _open_skip)
 
 
 # ---------------- handler ----------------
@@ -300,75 +413,38 @@ class MarkdownHandler:
         self.on_parser_init(None)
 
     def on_parser_init(self, parser) -> None:
-        self._stack: list = [(_ROOT, [], [], None, 0)]
+        # the root: a block container at depth 0
+        self._stack: list = [(None, _BLOCKS, [], [], 0)]
         self._scope: tuple | None = None  # the first <body>'s root
         self.n_tags = 0
 
     def markdown(self) -> str:
         frame = self._scope or self._stack[0]
-        _flush(frame[1], frame[2])
-        return "\n\n".join(frame[2])
+        _flush(frame[2], frame[3])
+        return "\n\n".join(frame[3])
 
     def on_open_tag(self, name: str, attrs: dict, is_implied: bool) -> None:
         self.n_tags += 1
         stack = self._stack
-        top = stack[-1]
         if name == "body" and self._scope is None:
-            frame = self._scope = (_ROOT, [], [], None, 0)
+            self._scope = frame = (None, _BLOCKS, [], [], 0)
         else:
-            rules, default = _RULES[top[0]]
-            kind = rules.get(name, default)
-            if kind < _NONE:
-                frame = (kind, top[1])
-            elif kind == _NONE:
-                frame = _SKIPPED
-            elif kind >= _PARA:
-                frame = _open_block(kind, name, top)
-            elif kind == _WRAP:
-                frame = (_WRAP, [], top[1], _MARKS[name])
-            elif kind == _LINK:
-                href = attrs.get("href")
-                frame = (_LINK, [], top[1], href) if href else (_SPAN, top[1])
-            elif kind == _ITEM:
-                top[8] += 1
-                marker = f"{top[8]}. " if top[6] else "- "
-                frame = (_ITEM, [], top[4], top[9] + marker, [], top[5])
-            elif kind == _CELL:
-                frame = (_CELL, [], top[2])
-            elif kind == _ROW:
-                frame = (_ROW, None, [])
-                top[4].append(frame[2])
-            elif kind == _GROUP:
-                frame = (_GROUP, None, None, None, top[4])
-            else:  # _BREAK, _IMAGE
-                frame = _SKIPPED
-                alt, src = attrs.get("alt", ""), attrs.get("src", "")
-                top[1].append(_BR if kind == _BREAK else f"![{alt}]({src})")
+            parent = stack[-1]
+            rules, default = parent[1]
+            frame = rules.get(name, default)(name, attrs, parent)
         stack.append(frame)
 
     def on_close_tag(self, name: str, is_implied: bool) -> None:
         stack = self._stack
         # An open tag cut off by EOF ('<a/') closes with no on_open_tag:
         # each close pops one frame, but never the root.
-        frame = stack.pop() if len(stack) > 1 else _SKIPPED
-        kind = frame[0]
-        if kind <= _GROUP:  # nothing to hand on
-            return
-        if kind >= _PARA:
-            _close_block(frame)
-        elif kind == _WRAP:
-            frame[2].extend(_wrapped(frame[1], frame[3], frame[3], False))
-        elif kind == _ITEM:
-            lines = frame[2]
-            lines.append(frame[3] + _text(frame[1]))
-            lines.extend(frame[4])
-        elif kind == _CELL:
-            frame[2].append(_text(frame[1]).replace("|", "\\|"))
-        else:  # _LINK
-            frame[2].extend(_wrapped(frame[1], "[", f"]({frame[3]})", True))
+        if len(stack) > 1:
+            frame = stack.pop()
+            if frame[0] is not None:
+                frame[0](frame)
 
     def on_text(self, data: str) -> None:
-        parts = self._stack[-1][1]
+        parts = self._stack[-1][2]
         if parts is not None:
             parts.append(data.replace(_BR, "") if _BR in data else data)
 
@@ -389,8 +465,7 @@ class MarkdownExtractor:
 
     def __init__(self, **options) -> None:
         self._handler = MarkdownHandler()
-        options = ParserOptions(**options)
-        self._parser = Parser(self._handler, options, batch_text=True)
+        self._parser = Parser(self._handler, ParserOptions(**options), batch_text=True)
 
     def extract(self, doc: str) -> tuple[str, int]:
         """Returns (markdown, n_open_tags)."""
@@ -401,7 +476,6 @@ class MarkdownExtractor:
 _ELEMENT_TYPES = frozenset(("tag", "script", "style"))
 # Comments and directives (and what hangs under them) render nothing.
 _RENDERED = _ELEMENT_TYPES | {"text", "cdata"}
-_IDX = itemgetter("idx_in_parent")
 
 
 def to_markdown(nodes: list[dict]) -> str:
@@ -412,14 +486,11 @@ def to_markdown(nodes: list[dict]) -> str:
     ``idx_in_parent`` order (list order among equal indices). A cdata
     node renders as empty text: its content is a child no rule reads."""
     kids_of: dict = {}
-    for n in nodes:
+    # A stable sort: list order among equal indices.
+    for n in sorted(nodes, key=itemgetter("idx_in_parent")):
         if n["type"] in _RENDERED:
             kids_of.setdefault(n["parent_id"], []).append(n)
-    body = next(
-        (n for n in nodes if n["type"] == "tag" and n["name"] == "body"), None
-    )
-    for sibs in kids_of.values():
-        sibs.sort(key=_IDX)
+    body = next((n for n in nodes if n["type"] == "tag" and n["name"] == "body"), None)
     handler = MarkdownHandler()
     stack = [iter(kids_of.get(-1, ()) if body is None else (body,))]
     while stack:
