@@ -73,6 +73,11 @@ class DomArrayHandler:
         self._stack: list[int] = []  # node_ids of open elements
         self._child_counts: dict[int, int] = {-1: 0}
         self._last_text: int | None = None  # node_id of an open text node
+        # The open text node's data pieces from its second text event
+        # on, joined into the node when the run ends (_join_text, at
+        # every event that resets _last_text and at on_end): an
+        # appending `+=` would copy the node per event.
+        self._text_parts: list[str] = []
         self._in_cdata = False
 
     def attach(self, parser: Parser) -> None:
@@ -119,11 +124,15 @@ class DomArrayHandler:
             k: ("none" if q is NO_VALUE else "unquoted" if q is None else q)
             for k, q in (self.parser._attrib_quotes or {}).items()
         }
+        if self._text_parts:
+            self._join_text()
         node_id = self._add(node_type, name, None, dict(attrs), quotes)
         self._stack.append(node_id)
         self._last_text = None
 
     def on_close_tag(self, name: str, is_implied: bool) -> None:
+        if self._text_parts:
+            self._join_text()
         if self._stack:
             node_id = self._stack.pop()
             if self._with_indices:
@@ -133,27 +142,43 @@ class DomArrayHandler:
         self._last_text = None
 
     def on_text(self, data: str) -> None:
-        if self._last_text is not None:
-            node = self.nodes[self._last_text]
-            node["data"] += data
-            if self._with_indices:
-                node["end_index"] = self.parser.end_index
+        node_id = self._last_text
+        if node_id is None:
+            self._last_text = self._add("text", None, data)
             return
-        self._last_text = self._add("text", None, data)
+        node = self.nodes[node_id]
+        parts = self._text_parts
+        if not parts:
+            parts.append(node["data"])
+        parts.append(data)
+        if self._with_indices:
+            node["end_index"] = self.parser.end_index
+
+    def _join_text(self) -> None:
+        """Write the open text node's pieces into it as its data."""
+        parts = self._text_parts
+        self.nodes[self._last_text]["data"] = "".join(parts)
+        parts.clear()
 
     def on_comment(self, data: str) -> None:
         self._add("comment", None, data)
 
     def on_comment_end(self) -> None:
+        if self._text_parts:
+            self._join_text()
         self._last_text = None
 
     def on_cdata_start(self) -> None:
+        if self._text_parts:
+            self._join_text()
         cdata_id = self._add("cdata", None, None)
         self._stack.append(cdata_id)
         self._last_text = None
         self._in_cdata = True
 
     def on_cdata_end(self) -> None:
+        if self._text_parts:
+            self._join_text()
         if self._in_cdata and self._stack:
             self._stack.pop()
         self._in_cdata = False
@@ -163,7 +188,8 @@ class DomArrayHandler:
         self._add("directive", name, data)
 
     def on_end(self) -> None:
-        pass
+        if self._text_parts:
+            self._join_text()
 
 
 # Old name for DomHandler kept by the reference for back-compat

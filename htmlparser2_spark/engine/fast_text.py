@@ -66,9 +66,11 @@ class _FastHandler:
         ):
             raise _Bail
 
-    # A bare `<name>` arrives as on_light_open_tag(start, end, (), end)
-    # (tokenizer opt-in; light_attrs sends no other light tag): its
-    # on_open_tag_end is a no-op here, so the one event is the name event.
+    # A light open tag (Tokenizer class docstring) arrives as the one
+    # event on_light_open_tag(start, end, attrs, gt) that every Parser
+    # handler gets; its attribute and on_open_tag_end events are no-ops
+    # here, so the one event is the name event. Other tags take the
+    # exact machine, whose attribute events are ignored below.
     on_light_open_tag = on_open_tag_name
 
     # CDATA only tokenizes from literal "<![CDATA[", which in default
@@ -143,7 +145,7 @@ class FastTextExtractor:
 
     def __init__(self) -> None:
         self._fast = _FastHandler()
-        self._tokenizer = Tokenizer(self._fast, light_attrs=True)
+        self._tokenizer = Tokenizer(self._fast)
         self._full = TextHandler()
         self._parser = Parser(self._full, ParserOptions())
         self.n_fallbacks = 0

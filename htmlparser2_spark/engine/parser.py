@@ -567,11 +567,6 @@ class Parser:
         name = self._read_tag_name(start, end)
 
         if not self._is_void(name):
-            if stack and stack[-1] == name:
-                # Common case: closing the innermost element.
-                self._pop_element(False)
-                self.start_index = end + 1
-                return
             try:
                 pos = len(stack) - 1 - stack[::-1].index(name)
             except ValueError:

@@ -32,8 +32,6 @@ from .entities import (
     ATTRIBUTE,
     LEGACY,
     STRICT,
-    _COMMON_HTML,
-    _COMMON_XML,
     decode_at,
     decode_text_span,
 )
@@ -76,18 +74,6 @@ _RE_TAG_SECTION_END = re.compile(r"[ \t\n\f\r/>]")
 _RE_ATTR_NAME_END = re.compile(r"[ \t\n\f\r/>=]")
 _RE_NQ_VALUE_END = re.compile(r"[ \t\n\f\r>&]")
 _RE_NQ_VALUE_END_NODECODE = re.compile(r"[ \t\n\f\r>]")
-# Light-path attribute-section match, entered at the tag-name end (the
-# _RE_TAG_SECTION_END hit) and running to the tag-ending '>'.
-# Attribute-section grammar: quotes are consumable ONLY directly after
-# '=' + optional whitespace — the exact condition under which the
-# attribute machine enters a quoted-value state. Any other quote
-# placement fails the match (no alternative can consume a bare quote)
-# and the caller bails to the exact machine. The alternatives are
-# first-character-disjoint ('=' is excluded from the char class), so
-# the scan is backtrack-free/linear.
-_RE_LIGHT_ATTRS = re.compile(
-    r""">|[ \t\n\f\r/](?:[^>"'=]|=[ \t\n\f\r]*(?:"[^"]*"|'[^']*')?)*>"""
-)
 # Closing-tag scan (entered at the first name char, see _closing_tag):
 # name section (anything that isn't a section-end char), after which
 # AfterClosingTagName skips EVERYTHING up to the terminating '>' — so
@@ -202,16 +188,19 @@ class Tokenizer:
     ``attrs == ()`` and ``gt == name_end``. The event means exactly
     ``on_open_tag_name(name_start, name_end)``, the attribute events the
     exact machine derives from each match, then ``on_open_tag_end(gt)``.
-    Sets without it, and XML mode, get the split events; a
-    ``light_attrs`` tokenizer skips attribute sections whole, so it
-    sends the one event for bare ``<name>`` tags only.
+    Sets without it, and XML mode, get the split events.
+
+    Every character reference, in text, RCDATA or an attribute value,
+    takes one step, :meth:`_entity` (``decode_at``, then the data event
+    for what precedes it and one entity event per code point), except
+    that a callback set with ``on_text_decoded`` gets each
+    entity-carrying text run decoded as one string.
     """
 
     __slots__ = (
         "xml_mode",
         "decode_entities",
         "recognize_self_closing",
-        "light_attrs",
         "cbs",
         "_dry_runs",
     )
@@ -223,7 +212,6 @@ class Tokenizer:
         xml_mode: bool = False,
         decode_entities: bool = True,
         recognize_self_closing: bool | None = None,
-        light_attrs: bool = False,
     ) -> None:
         self.cbs = cbs
         self.xml_mode = xml_mode
@@ -231,14 +219,6 @@ class Tokenizer:
         self.recognize_self_closing = (
             xml_mode if recognize_self_closing is None else recognize_self_closing
         )
-        # light_attrs: callers that ignore attribute events (text-only
-        # extraction) may skip the attribute machine when the tag chunk
-        # is quote-free — the first '>' then provably ends the tag
-        # (unquoted values and names terminate at '>'). Quoted chunks
-        # fall back to the exact per-attribute scan. Only valid when
-        # recognize_self_closing is off (on_self_closing_tag vs
-        # on_open_tag_end indices are not distinguished).
-        self.light_attrs = light_attrs
         self._dry_runs = None  # streaming helper wrappers, built on first use
 
     # ------------------------------------------------------------------
@@ -274,14 +254,13 @@ class Tokenizer:
         # Tag dispatch (class docstring): each open tag's name is
         # classified once, here; a bare `<name>` (HTML, opt-in) and an
         # alphanumeric `</name>` are one event each. Other light open
-        # tags are one event from _light_open_tag, unless light_attrs
-        # already skips their attribute sections.
+        # tags are one event from _light_open_tag.
         on_light_open_tag = (
             None if xml else getattr(cbs, "on_light_open_tag", None)
         )
         special_first = "" if xml else _SPECIAL_FIRST
         open_tag = self._open_tag
-        if on_light_open_tag is not None and not self.light_attrs:
+        if on_light_open_tag is not None:
             open_tag = self._light_open_tag
         helpers = (open_tag, self._closing_tag, self._markup_declaration,
                    self._bogus_comment, self._processing_instruction)
@@ -304,22 +283,13 @@ class Tokenizer:
         # re-confirm it.
         lt = find("<", i)
         amp = find("&", i) if decode else -1
-        # Dominant-entity inline probe: the handful of references that
-        # carry most of the web's escaping (&amp; &lt; &nbsp; …, all
-        # fully ';'-terminated and mode-independent given the table)
-        # resolve with one find + one dict probe right here, skipping
-        # the _entity -> decode_at call chain. A miss falls through to
-        # the exact decoder unchanged.
-        common = _COMMON_XML if text_mode == STRICT else _COMMON_HTML
-        common_get = common.get
-        on_text_entity = cbs.on_text_entity
         # Batched-text opt-in: a handler exposing ``on_text_decoded``
-        # (the fast text path) receives each entity-carrying text run
-        # as ONE pre-decoded string — decode_text_span reproduces the
-        # sequential per-'&' scan exactly (see its docstring for why
-        # the '<' boundary is semantics-preserving) — instead of
-        # alternating on_text/on_text_entity events. Positional
-        # handlers (parser, collectors) keep the exact event stream.
+        # (the fast text path, a batch_text Parser) receives each
+        # entity-carrying text run as ONE pre-decoded string —
+        # decode_text_span reproduces the sequential per-'&' scan
+        # exactly (see its docstring for why the '<' boundary is
+        # semantics-preserving). Other handlers keep the exact event
+        # stream: one _entity step per '&'.
         on_text_decoded = getattr(cbs, "on_text_decoded", None)
         on_close_tag = cbs.on_close_tag
         tag_section_end = _RE_TAG_SECTION_END.search
@@ -344,28 +314,7 @@ class Tokenizer:
                             )
                             i = sec = seg_end
                             continue
-                        semi = find(";", amp + 1, amp + 9)
-                        hit = (
-                            common_get(buf[amp + 1 : semi + 1])
-                            if semi != -1
-                            else None
-                        )
-                        if hit is None:
-                            # Exact decoder, inlined from _entity's text
-                            # branch (the wrapper call was measurable at
-                            # real-web entity densities).
-                            res = decode_at(buf, amp, text_mode)
-                            if res is None:
-                                i = amp + 1  # '&' stays literal; rescan
-                                continue
-                            hit = res
-                        cps, consumed = hit
-                        if amp > sec:
-                            on_text(sec, amp)
-                        end = amp + consumed
-                        for cp in cps:
-                            on_text_entity(cp, end)
-                        i = sec = end
+                        i, sec = self._entity(buf, amp, text_mode, sec, False)
                         continue
                 j = lt
                 if j == -1:
@@ -485,24 +434,6 @@ class Tokenizer:
                     return n, i
             return n, n
         cbs.on_open_tag_name(i, j)
-
-        if self.light_attrs:
-            # One linear regex scan over the attribute section to the
-            # tag-ending '>' (_RE_LIGHT_ATTRS). A quote is a value
-            # delimiter only when preceded by '=' (+ optional ws) — the
-            # exact condition under which the attribute machine enters a
-            # quoted-value state. Any other quote placement (quote in a
-            # name or unquoted value: pathological markup) fails the
-            # match and bails to the exact machine below, as does EOF
-            # inside the tag (the exact machine's EOF paths then drop
-            # the tag). Attribute events are skipped by contract; '/>'
-            # is equivalent to '>' here (recognize_self_closing off).
-            m = _RE_LIGHT_ATTRS.match(buf, j)
-            if m is not None:
-                end = m.end() - 1
-                cbs.on_open_tag_end(end)
-                return self._enter_tag_body(buf, end + 1, special)
-            # No match: fall through to the exact attribute machine.
 
         # Fast path: attribute-less tag (`<p>` — the dominant shape).
         if buf[j] == ">":

@@ -11,6 +11,8 @@ linear body handles any of these documents in well under a second (a
 4-core host reads at most ~0.6 s of CPU per pair), so the bound below
 only trips on super-linear work. The markdown renderer keeps an
 explicit stack, so the nesting cases render like any other page.
+``parse_document``, which takes the exact event stream, gets a larger
+entity soup of its own.
 tests/adversaries.py draws randomized documents of the same kinds.
 """
 
@@ -21,13 +23,20 @@ import time
 import pandas as pd
 import pytest
 
-from htmlparser2_spark.engine.dom import clean_text, inner_text
+from htmlparser2_spark.engine.dom import (
+    clean_text,
+    inner_text,
+    parse_document,
+    text_content,
+)
+from htmlparser2_spark.engine.fast_text import fast_text_content
 from htmlparser2_spark.functions import udfs
 from htmlparser2_spark.functions.udfs import _make_extract, _on_dom
 from htmlparser2_spark.plans import extract_job
 
 from .adversaries import BOUND_S
 
+ENTITY_SOUP = "&amp;&lt&#x41;&#65;&notit;&timesbar;&#;& "
 NESTED = {
     "div_1e3": "<div>" * 1_000 + "x",
     "div_1e4": "<div>" * 10_000 + "x",
@@ -39,7 +48,7 @@ FLAT = {
     "comment_1mb": "<!--" + "x" * 1_000_000,
     # RCDATA with no end tag: an end-tag search per entity was quadratic
     "textarea_1mb": "<textarea>" + "x <y> & " * 125_000,
-    "entities_5e4": "&amp;&lt&#x41;&#65;&notit;&timesbar;&#;& " * 50_000,
+    "entities_5e4": ENTITY_SOUP * 50_000,
 }
 
 
@@ -72,6 +81,19 @@ def test_adversarial_document_returns_in_bounded_time(body, name):
     assert elapsed < BOUND_S, (body, name, elapsed)
     text = result[0] if isinstance(result, tuple) else result
     assert isinstance(text, str)
+
+
+def test_exact_event_parse_of_entity_soup_is_linear():
+    """``parse_document`` takes the exact event stream (no batched
+    text), so each reference of one text run is its own text event: a
+    handler that copied the run's node per event was quadratic."""
+    doc = ENTITY_SOUP * 75_000  # 3.2 MB, ~500k text events in one run
+    t0 = time.process_time()
+    nodes = parse_document(doc)
+    elapsed = time.process_time() - t0
+    assert elapsed < BOUND_S, elapsed
+    assert len(nodes) == 1
+    assert text_content(nodes) == fast_text_content(doc)
 
 
 def _raising_on_bad(mode: str, **options):

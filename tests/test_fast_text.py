@@ -95,6 +95,14 @@ def test_fast_matches_full_fuzz(doc):
         '<img src=x.png data-a="1" />txt',  # quoted + self-closing slash
         "<p a=1 b=2 c=3>deep</p>",          # plain unquoted run
         '<a href="unterminated>t',          # unterminated quote -> dropped
+        '<a href="?a=1&amp;b=2">t</a>',     # '&' in a quoted value
+        "<a title='x &lt; y'>t</a>",        # '&' in a single-quoted value
+        "<a href=x&amp;y>t</a>&amp;",       # '&' in an unquoted value
+        '<a href="&notit;" x=&#65>t</a>',   # legacy refs in both kinds
+        '<p a="1"/>t</p>',                  # quoted, ends in '/>'
+        "<p a=1/>t",                        # '/' inside an unquoted value
+        "<p a / >t",                        # '/' then ws before '>'
+        '<script src="a&amp;b"/>x</script>t',  # special tag, '&', '/>'
     ],
 )
 def test_fast_matches_full_attr_soup(doc):

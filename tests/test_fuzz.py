@@ -44,6 +44,7 @@ from htmlparser2_spark.engine.parser import Parser, ParserOptions
 from htmlparser2_spark.engine.stream import StreamingParser
 
 from .adversaries import BOUND_S, CASES, document_bodies, structural_adversary
+from .fuzz_tokens import TOKENS
 from .markdown_reference import ReferenceExtractor, reference_to_markdown
 from .split_parser import ProbeCheckingParser, SplitParser, ordered_nodes, parsed
 
@@ -53,33 +54,10 @@ _MARKUP_CHARS = st.sampled_from(
 )
 _MARKUP = st.text(alphabet=_MARKUP_CHARS, max_size=200)
 _FREE = st.text(max_size=120)
-# Whole constructs between short _MARKUP runs: single characters rarely
-# spell a complete tag, comment or entity for a chunk cut to split.
+# Whole constructs (tests/fuzz_tokens.py) between short _MARKUP runs.
 _TOKENS = st.lists(
     st.one_of(
-        st.sampled_from([
-            "<p>", "</p>", "<p ", "<b x=1>", "<br/>", "</ div>", "<script>",
-            "</script>", "<title>", "</title>", "<svg>", "</svg>",
-            "<plaintext>", "<!--", "-->", "--!>", "<![CDATA[", "]]>",
-            "<!doctype html>", "<?php ?>", "&amp;", "&amp", "&lt;", "&times",
-            "&timesbar;", "&notin;", "&#x41;", "&#65;", "&#", "a='b'",
-            'c="d"', "x=y", "<form>", "<image>", "</image>", "<math>",
-            "<foreignObject>", "<desc>", "<li>", "<td>", "<tr>", "<h1>",
-            "<P>", "<IMG>", "<input>", "</br>", "<SCRIPT>", "</ScRiPt>",
-            "<TiTle>", "</TITLE >", "<!DocType x>", "</scr\u0130pt>",
-            "</\u017ftyle>", '<a href="x" b>', "<li A='1' a=\"2\" >",
-            '<svg viewBox="0 0">', "</p junk>", "</a b=1>", "</li/>",
-            "<XMP>", "<STYLE>", "<PlainText>", "<svg><title>",
-            "<svg><script>", "<math><style>", "<svg><xmp a='1'>",
-            "<svg><TEXTAREA>", "<iframe>",
-            # the markdown rules' elements
-            "<ul>", "</ul>", "<ol>", "</li>", "<blockquote>",
-            "</blockquote>", "<pre>", "</pre>", "<table>", "</table>",
-            "<thead>", "<tbody>", "<th>", "</tr>", "<code>", "</code>",
-            "<b>", "</b>", "<strong>", "<i>", "</i>", "<em>", "<hr>",
-            "<h2>", "</h2>", '<img alt="t" src="s">', "<br>", "<div>",
-            "</div>", "<span>", "<body>", "</body>", "<textarea>",
-        ]),
+        st.sampled_from(TOKENS),
         st.text(alphabet=_MARKUP_CHARS, max_size=12),
     ),
     max_size=20,

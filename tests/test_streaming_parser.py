@@ -130,7 +130,8 @@ def test_create_document_stream():
         element_callback=lambda node: elements.append(node["name"]),
     )
     sp.write("<div><p>a</p>")
-    sp.write("<p>b</p></div><hr>")
+    sp.write("<p>b</p></div><hr>x&lt;")
+    sp.write("y&amp;z")
     sp.end()
 
     # close order: p, p, div; hr (void) closes implied; html-level EOF.
@@ -138,7 +139,27 @@ def test_create_document_stream():
     assert len(finished) == 1 and finished[0][0] is None
     nodes = finished[0][1]
     texts = [n["data"] for n in nodes if n["type"] == "text"]
-    assert texts == ["a", "b"]
+    # the last run is several text events, joined by on_end
+    assert texts == ["a", "b", "x<y&z"]
+
+
+def test_element_callback_sees_joined_text():
+    """A text run of several events is one node whose data is whole by
+    the time its parent element's callback fires."""
+    from htmlparser2_spark.engine.dom import DomArrayHandler
+    from htmlparser2_spark.engine.parser import Parser
+
+    seen = []
+
+    def on_element(node):
+        seen.append([n["data"] for n in handler.nodes
+                     if n["parent_id"] == node["node_id"]])
+
+    handler = DomArrayHandler(element_callback=on_element)
+    parser = Parser(handler)
+    handler.attach(parser)
+    parser.parse("<p>a&amp;b&lt;c<!--x-->d&gt;</p><b>&amp;&amp;</b>")
+    assert seen == [["a&b<c", "x", "d>"], ["&&"]]
 
 
 def test_element_type_constants():

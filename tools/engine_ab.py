@@ -16,6 +16,10 @@ with the order alternating per rep, one thread. Cases:
 * ``dom_nodes_structured`` - ``parse_document`` on the structured
   pages: Parser and an index-carrying DomArrayHandler, the handler of
   ``dom_nodes_udf``;
+* ``dom_nodes_entity`` - ``parse_document`` on engine_bench's
+  entity-heavy pages (~480 character references each): the exact
+  event stream's text-entity step (``Tokenizer._entity``) and the
+  DomArrayHandler's text runs;
 * ``fast_text_synthetic`` / ``fast_text_realistic`` - FastTextExtractor
   on engine_bench's synthetic and realistic pages;
 * ``fast_text_pages`` - FastTextExtractor on ``sources.pages`` documents
@@ -46,6 +50,7 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 from perfbench.inputs import small_docs, structured_pages  # noqa: E402
 from tools.engine_bench import (  # noqa: E402
     STRUCTURED_SEED,
+    entity_heavy_page,
     realistic_page,
     synthetic_page,
 )
@@ -117,6 +122,7 @@ def cases(engine) -> dict:
         "markdown_realistic": ("realistic", md.extract),
         "parse_structured": ("structured", null_parser.parse),
         "dom_nodes_structured": ("structured", dom.parse_document),
+        "dom_nodes_entity": ("entity_heavy", dom.parse_document),
         "fast_text_synthetic": ("synthetic", fast.extract),
         "fast_text_realistic": ("realistic", fast.extract),
         "fast_text_pages": ("pages", fast.extract),
@@ -137,6 +143,7 @@ def main(parent: str, change: str, reps: int = 30) -> int:
         ],
         "realistic": [realistic_page(i) for i in range(N_DOCS)],
         "synthetic": [synthetic_page(i) for i in range(N_DOCS)],
+        "entity_heavy": [entity_heavy_page(i) for i in range(N_DOCS)],
         "pages": sources_pages(SMALL_SEED, N_PAGES),
     }
     trees = (cases(load_engine(parent, "_ab_parent")),

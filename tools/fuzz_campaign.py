@@ -56,6 +56,7 @@ from tests.adversaries import (  # noqa: E402
     document_bodies,
     structural_adversary,
 )
+from tests.fuzz_tokens import TOKENS  # noqa: E402
 from tests.markdown_reference import (  # noqa: E402
     ReferenceExtractor,
     reference_to_markdown,
@@ -68,28 +69,6 @@ from tests.split_parser import (  # noqa: E402
 )
 
 ALPH = "<>/=&;!?-[]'\" \n\tabcdDATAscriptyleXMP#x0123&amp;lt<!--]]>" + "é€\U0001f600̸"
-TOKENS = [
-    "<script>", "</script>", "<style>", "<p ", "<svg>", "</svg>", "<math>",
-    "<title>", "</title>", "<textarea>", "<!--", "-->", "--!>", "<![CDATA[",
-    "]]>", "<!doctype html>", "&amp;", "&times", "&#x41;", "&#",
-    "&NotGreaterFullEqual;", "a='b'", 'c="d"', "x=y", "<br/>", "</p>",
-    "<li>", "<tr>", "<td>", "<plaintext>", "<?php ?>", "</ div>",
-    "<iframe>", "<noembed>", "<xmp>", "</xmp>", "<form>", "<image>",
-    "</image>", "<foreignObject>", "<desc>", "<h1>", "<P>", "<IMG>",
-    "<input>", "</br>", "<SCRIPT>", "</ScRiPt>", "<TiTle>", "</TITLE >",
-    "<!DocType x>", "</scr\u0130pt>", "</\u017ftyle>", '<a href="x" b>',
-    "<li A='1' a=\"2\" >", '<svg viewBox="0 0">', '<form x="1">',
-    '<image src="s">', '<td class="c">', '<input a="">', "</p junk>",
-    "</a b=1>", "</li/>", "<XMP>", "<STYLE>", "<PlainText>",
-    "<svg><title>", "<svg><script>", "<math><style>", "<svg><xmp a='1'>",
-    "<svg><TEXTAREA>",
-    # the markdown rules' elements
-    "<body>", "</body>", "<ul>", "</ul>", "<ol>", "</li>", "<blockquote>",
-    "</blockquote>", "<pre>", "</pre>", "<table>", "</table>", "<thead>",
-    "<tbody>", "<th>", "</tr>", "<code>", "</code>", "<b>", "</b>",
-    "<strong>", "<i>", "</i>", "<em>", "<hr>", "<h2>", "</h2>",
-    '<img alt="t" src="s">', "<br>", "<div>", "</div>", "<span>",
-]
 # One structural adversary per this many documents.
 ADVERSARY_EVERY = 5000
 
