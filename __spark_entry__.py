@@ -1981,7 +1981,7 @@ def _q_dom_manip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from htmlparser2_spark.operators.domquery import explode_nodes
 
-    nodes = explode_nodes(build_pages(spark, sf_dir))
+    nodes = explode_nodes(build_pages(spark, sf_dir), with_ancestors=True)
     nodes = replace_element(
         nodes, lambda n: F.col("name") == "style",
         {"type": "tag", "name": "nostyle"},

@@ -185,7 +185,10 @@ class DomArrayHandler:
         self._last_text = None
 
     def on_processing_instruction(self, name: str, data: str) -> None:
+        if self._text_parts:
+            self._join_text()
         self._add("directive", name, data)
+        self._last_text = None
 
     def on_end(self) -> None:
         if self._text_parts:

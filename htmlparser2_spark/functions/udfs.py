@@ -179,6 +179,7 @@ class _NodeCountHandler:
 
     def on_processing_instruction(self, name, data) -> None:
         self._inc(name)
+        self._text_open = False
 
 
 def _make_parser(handler, options: dict, *, batch_text: bool = False) -> Parser:

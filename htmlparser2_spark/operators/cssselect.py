@@ -69,6 +69,8 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .domquery import _require_ancestors
+
 __all__ = ["css_select"]
 
 _ELEMENT_TYPES = ("tag", "script", "style")
@@ -349,11 +351,7 @@ def _subtree_text(nodes: DataFrame, key_col: str) -> DataFrame:
     contributors' ``ancestors`` stacks + one within-document shuffle;
     only elements that contain any text get a row (callers coalesce
     to '')."""
-    if "ancestors" not in nodes.columns:
-        raise ValueError(
-            ":contains()/:has() need a nodes table built with "
-            "dom_nodes_udf(with_ancestors=True)"
-        )
+    _require_ancestors(nodes, ":contains()/:has() subtree text")
     contributors = nodes.filter(
         F.col("type").isin("text", "cdata")
         | (F.col("type").isin(*_ELEMENT_TYPES) & (F.col("name") == "br"))
@@ -477,12 +475,9 @@ def css_select(
                         F.col("parent_id").alias("__hid"),
                     )
                 else:
-                    if "ancestors" not in im.columns:
-                        raise ValueError(
-                            ":has() with descendant semantics needs a "
-                            "nodes table built with "
-                            "dom_nodes_udf(with_ancestors=True)"
-                        )
+                    _require_ancestors(
+                        im, ":has() with descendant semantics"
+                    )
                     part = im.select(
                         F.col(key_col).alias("__hkey"),
                         F.explode("ancestors").alias("__hid"),
@@ -543,11 +538,7 @@ def css_select(
                     F.col("parent_id") == F.col("__anchor")
                 )
             else:
-                if "ancestors" not in matches.columns:
-                    raise ValueError(
-                        "descendant combinator needs a nodes table built "
-                        "with dom_nodes_udf(with_ancestors=True)"
-                    )
+                _require_ancestors(matches, "descendant combinator")
                 joined = joined.filter(
                     F.array_contains("ancestors", F.col("__anchor"))
                 )

@@ -27,9 +27,9 @@ consumers (``text_content_per_doc``) are only valid on unmutated tables.
 Scale: each insertion helper costs one per-url max aggregation, one
 broadcastable join of the (small) anchor set, and one window re-rank
 partitioned by (url, parent_id) — all key-local, no cross-document
-shuffle wider than the nodes table itself. ``replace_element`` adds the
-same bounded subtree-descent loop ``remove_elements`` uses (one
-frontier join per tree level).
+shuffle wider than the nodes table itself. ``replace_element`` reads
+subtree membership from the ``ancestors`` column, as ``remove_elements``
+does: one per-url set of matched ids and one join, at any depth.
 """
 
 from __future__ import annotations
@@ -37,6 +37,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .domquery import _drop_subtrees
 
 __all__ = [
     "append_child",
@@ -92,8 +94,8 @@ def _insert(
     references its input three times (rows, per-url max id, anchors),
     so a chain of k mutations over an un-materialized parse would
     re-run the upstream plan O(3^k) times — the checkpoint bounds it
-    to one materialization per mutation (linear in chain length), the
-    same lineage-truncation trade remove_elements already makes."""
+    to one materialization per mutation (linear in chain length). The
+    subtree removal of replace_element makes the same trade."""
     nodes = nodes.localCheckpoint(eager=False)
     anchors = nodes.filter(predicate(nodes))
     sel = [
@@ -192,47 +194,12 @@ def replace_element(nodes: DataFrame, predicate, spec: dict,
     takes the element's position in its parent (same node_id, parent_id,
     idx_in_parent); the old element leaves the tree WITH its subtree
     (domutils swaps the parent's child pointer — the detached element
-    keeps its children, so they are gone from the document)."""
-    from .domquery import _descendant_ids
-
-    # Same recompute bound as _insert: the input feeds the subtree
-    # closure, the anti-join, and the overwrite.
-    nodes = nodes.localCheckpoint(eager=False)
-    matched = nodes.filter(predicate(nodes)).select(
-        F.col(key_col).alias("rm_url"), F.col("node_id").alias("rm_id")
-    )
-    # Doomed = STRICT descendants of matched nodes — seeded from their
-    # children so a matched node nested inside another match stays in
-    # the doomed set and is dropped with the outer subtree.
-    # (_descendant_ids' include_roots=False subtracts ALL roots from
-    # the closure, which would resurrect such inner matches: replacing
-    # ul and li in <ul><li>x</li></ul> must yield one replacement, not
-    # a replacement inside a replacement.)
-    links = nodes.select(
-        F.col(key_col).alias("rm_url"),
-        F.col("parent_id").alias("rm_parent"),
-        F.col("node_id").alias("rm_child"),
-    )
-    seeds = matched.withColumnsRenamed(
-        {"rm_url": "seed_url", "rm_id": "seed_id"}
-    )
-    child_seed = (
-        links.join(
-            seeds,
-            (links.rm_url == seeds.seed_url)
-            & (links.rm_parent == seeds.seed_id),
-        )
-        .select(links.rm_url.alias("rm_url"),
-                F.col("rm_child").alias("rm_id"))
-        .distinct()
-    )
-    doomed = _descendant_ids(nodes, child_seed, key_col=key_col,
-                             include_roots=True)
-    kept = nodes.join(
-        doomed,
-        (nodes[key_col] == doomed.rm_url) & (nodes.node_id == doomed.rm_id),
-        "left_anti",
-    )
+    keeps its children, so they are gone from the document). Requires
+    ``with_ancestors=True`` nodes, like remove_elements."""
+    # An inner match has the outer match in its ancestors, so it goes
+    # with the outer subtree: one replacement, never one inside another.
+    kept = _drop_subtrees(nodes, predicate, key_col, drop_matches=False,
+                          what="replace_element")
     cond = predicate(kept)
     out = kept
     for name, col in _spec_cols(spec).items():

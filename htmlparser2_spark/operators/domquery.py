@@ -306,76 +306,43 @@ def inner_html(pages: DataFrame, *, tag: str = "body", html_col: str = "html",
     return pages.withColumn("inner_html", render(F.col(html_col)))
 
 
-def _descendant_ids(
-    nodes: DataFrame,
-    roots: DataFrame,
-    *,
-    key_col: str = "url",
-    include_roots: bool = True,
-) -> DataFrame:
-    """Subtree closure: ``(rm_url, rm_id)`` rows covering every node at
-    or under the ``roots`` seed rows (same two-column shape). Resolved
-    iteratively (bounded by tree depth) with a self-join per level — the
-    relational analogue of domutils' in-memory pointer walk. Shared by
-    :func:`remove_elements` and dommanip.replace_element.
+def _require_ancestors(nodes: DataFrame, what: str) -> None:
+    """Raise unless ``nodes`` carries the descendant axis ``what`` reads."""
+    if "ancestors" not in nodes.columns:
+        raise ValueError(
+            f"{what} needs a nodes table built with "
+            "dom_nodes_udf(with_ancestors=True)"
+        )
 
-    Each round joins only the FRONTIER (nodes discovered last round) —
-    re-joining the whole accumulated set would redo O(depth x |roots|)
-    work for chain-shaped subtrees. localCheckpoint per round truncates
-    lineage — iterative self-joins otherwise stack plans exponentially.
-    """
-    # Renamed projection avoids ambiguous self-join resolution.
-    links = nodes.select(
-        F.col(key_col).alias("rm_url"),
-        F.col("parent_id").alias("rm_parent"),
-        F.col("node_id").alias("rm_child"),
+
+def _drop_subtrees(nodes: DataFrame, predicate, key_col: str, *,
+                   drop_matches: bool, what: str) -> DataFrame:
+    """Drop each row with a ``predicate`` match of its own document in
+    its ``ancestors`` (with ``drop_matches``, each match too): one
+    per-document set of matched ids and one left join, so any depth
+    costs the same. The lazy localCheckpoint bounds recompute as in
+    dommanip's ``_insert``: the input feeds the aggregate and the join."""
+    _require_ancestors(nodes, what)
+    nodes = nodes.localCheckpoint(eager=False)
+    matched = nodes.filter(predicate(nodes)).groupBy(key_col).agg(
+        F.collect_set("node_id").alias("__rm")
     )
-    seen = roots.localCheckpoint(eager=True)
-    frontier = seen
-    converged = False
-    # Max ~20 levels covers real-world DOM depth; the loop normally ends
-    # earlier, when the frontier empties.
-    for _ in range(21):
-        child_hits = links.join(
-            frontier,
-            (links.rm_url == frontier.rm_url)
-            & (links.rm_parent == frontier.rm_id),
-        ).select(links.rm_url.alias("rm_url"), F.col("rm_child").alias("rm_id"))
-        frontier = (
-            child_hits.join(seen, ["rm_url", "rm_id"], "left_anti")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if frontier.count() == 0:
-            converged = True
-            break
-        seen = seen.unionByName(frontier).localCheckpoint(eager=True)
-    if not converged:
-        # Silent truncation would leave deep descendants alive in
-        # downstream extraction — fail loudly.
-        raise RuntimeError(
-            "subtree expansion did not converge within 20 rounds; a "
-            "matched subtree is deeper than the cap"
-        )
-    if include_roots:
-        return seen
-    return seen.join(roots, ["rm_url", "rm_id"], "left_anti")
+    hit = F.arrays_overlap("ancestors", "__rm")
+    if drop_matches:
+        hit = hit | F.array_contains("__rm", F.col("node_id"))
+    return (
+        nodes.join(matched, key_col, "left")
+        .filter(F.col("__rm").isNull() | ~hit)
+        .select(*nodes.columns)
+    )
 
 
-def remove_elements(nodes: DataFrame, predicate) -> DataFrame:
+def remove_elements(nodes: DataFrame, predicate,
+                    key_col: str = "url") -> DataFrame:
     """removeElement-equivalent: drop matching elements AND their
-    subtrees (subtree closure via :func:`_descendant_ids`)."""
-    doomed = _descendant_ids(
-        nodes,
-        nodes.filter(predicate(nodes)).select(
-            F.col("url").alias("rm_url"), F.col("node_id").alias("rm_id")
-        ),
-    )
-    return nodes.join(
-        doomed,
-        (nodes.url == doomed.rm_url) & (nodes.node_id == doomed.rm_id),
-        "left_anti",
-    )
+    subtrees. Requires ``with_ancestors=True`` nodes."""
+    return _drop_subtrees(nodes, predicate, key_col, drop_matches=True,
+                          what="remove_elements")
 
 
 def find_one_child(nodes: DataFrame, predicate) -> DataFrame:

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .cssselect import _ELEMENT_TYPES, _subtree_text
+from .domquery import _require_ancestors
 
 __all__ = ["table_cells"]
 
@@ -66,11 +67,7 @@ def _nearest(rows: DataFrame, containers: DataFrame, key_col: str,
 def table_cells(nodes: DataFrame, key_col: str = "url") -> DataFrame:
     """nodes (built with ``with_ancestors=True``) ->
     ``(key_col, table_idx, row_idx, col_idx, cell_tag, cell_text)``."""
-    if "ancestors" not in nodes.columns:
-        raise ValueError(
-            "table_cells needs a nodes table built with "
-            "dom_nodes_udf(with_ancestors=True)"
-        )
+    _require_ancestors(nodes, "table_cells")
     elems = nodes.filter(F.col("type").isin(*_ELEMENT_TYPES))
     tables = elems.filter(F.col("name") == "table").select(
         key_col, "node_id",

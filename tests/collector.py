@@ -1,11 +1,11 @@
 """Event collector producing reference-comparable simplified event records.
 
-Mirrors the reference test helper (/root/reference/src/__fixtures__/
-testHelper.ts:16-87): records ``{$event, data, startIndex, endIndex}``
+Mirrors the reference test helper (src/__fixtures__/testHelper.ts:16-87
+in the htmlparser2 sources): records ``{$event, data, startIndex, endIndex}``
 per handler callback, merges adjacent text events, drops the undefined
 quote argument from attribute events, and validates the
-``startIndex <= endIndex`` invariant. Used by the ported golden-snapshot
-tests and the differential checks (tests/test_fuzz.py,
+``startIndex <= endIndex`` invariant. A test oracle: used by the ported
+golden-snapshot tests and the differential checks (tests/test_fuzz.py,
 tests/test_tree_rules.py, tools/fuzz_campaign.py); the event-stream UDF
 (functions/udfs.py ``parser_events_udf``) builds its rows with its own
 ``_EventArrayHandler``.
@@ -13,7 +13,7 @@ tests/test_tree_rules.py, tools/fuzz_campaign.py); the event-stream UDF
 
 from __future__ import annotations
 
-from .parser import NO_VALUE
+from htmlparser2_spark.engine.parser import NO_VALUE
 
 __all__ = ["EventCollector"]
 

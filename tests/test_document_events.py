@@ -10,9 +10,9 @@ import pathlib
 
 import pytest
 
-from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 
+from .collector import EventCollector
 from .fixture_docs import DOCS, requires_docs
 
 GOLDENS = json.loads(

@@ -83,6 +83,28 @@ def test_adjacent_text_merged():
     assert texts[0]["data"] == "a&b"
 
 
+def test_directive_ends_text_run():
+    """A directive ends the open text run, like every other node (each
+    new node ends a domhandler text run): the text after it is a new
+    node, so the DOM keeps document order."""
+    doc = "a<!DOCTYPE html>b"
+    nodes = parse_document(doc)
+    assert [
+        (n["type"], n["data"], n["start_index"], n["end_index"],
+         n["idx_in_parent"])
+        for n in nodes
+    ] == [
+        ("text", "a", 0, 0, 0),
+        ("directive", "!DOCTYPE html", 1, 15, 1),
+        ("text", "b", 16, 16, 2),
+    ]
+    assert serialize(nodes) == doc
+    xml = parse_document("a<?x y?>b", xml_mode=True)
+    assert [(n["type"], n["data"]) for n in xml] == [
+        ("text", "a"), ("directive", "?x y"), ("text", "b"),
+    ]
+
+
 def test_start_end_indices():
     doc = "<p>hi</p>"
     nodes = parse_document(doc)

@@ -2,7 +2,8 @@
 (operators/dommanip.py): mutate -> serialize -> reparse roundtrips.
 
 Reference surface: appendChild / prependChild / append / prepend /
-replaceElement (/root/reference/README.md:166-218, src/index.ts:86).
+replaceElement / removeElement (reference README.md:166-218,
+src/index.ts:86).
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from htmlparser2_spark.operators.dommanip import (
     replace_element,
     serialize_nodes,
 )
-from htmlparser2_spark.operators.domquery import explode_nodes
+from htmlparser2_spark.operators.domquery import explode_nodes, remove_elements
 
 HTML = (
     '<html><body><h1>T</h1><p>one</p><style>x { }</style>'
@@ -35,6 +36,22 @@ def _pages(spark, html=HTML, url="u1"):
     return spark.createDataFrame(
         [(url, bytearray(html.encode()))], "url string, html binary"
     )
+
+
+def _nodes(spark, html=HTML, url="u1"):
+    return explode_nodes(_pages(spark, html, url), with_ancestors=True)
+
+
+def _render(nodes):
+    return {r["url"]: r["manip_html"] for r in serialize_nodes(nodes).collect()}
+
+
+# A matched <section> holding a 25-deep <div> chain: subtree removal
+# must cost the same one join at any depth.
+DEEP = (
+    "<html><body><section>" + "<div>" * 25 + "x" + "</div>" * 25
+    + "</section><p>keep</p></body></html>"
+)
 
 
 def _mutate(nodes):
@@ -62,7 +79,7 @@ def _mutate(nodes):
 
 @pytest.mark.spark
 def test_manip_serialize_roundtrip(spark):
-    nodes = _mutate(explode_nodes(_pages(spark)))
+    nodes = _mutate(_nodes(spark))
     out = serialize_nodes(nodes).collect()
     assert len(out) == 1
     assert out[0]["manip_html"] == EXPECTED
@@ -72,7 +89,7 @@ def test_manip_serialize_roundtrip(spark):
 def test_manip_reparse_fixed_point(spark):
     """Serialized mutated markup reparses to a DOM that serializes
     identically (the serializer contract is a fixed point)."""
-    nodes = _mutate(explode_nodes(_pages(spark)))
+    nodes = _mutate(_nodes(spark))
     rendered = serialize_nodes(nodes).collect()[0]["manip_html"]
     pages2 = _pages(spark, html=rendered)
     again = serialize_nodes(explode_nodes(pages2)).collect()[0]["manip_html"]
@@ -83,7 +100,7 @@ def test_manip_reparse_fixed_point(spark):
 def test_insert_orders_and_ancestors(spark):
     """prepend_child shifts existing children right; inserted rows carry
     correct ancestors when the axis column is present."""
-    nodes = explode_nodes(_pages(spark), with_ancestors=True)
+    nodes = _nodes(spark)
     body_id = (
         nodes.filter(F.col("name") == "body").collect()[0]["node_id"]
     )
@@ -205,16 +222,18 @@ def _doc_order_key(row, rows):
 
 @pytest.mark.spark
 def test_replace_drops_subtree(spark):
-    html = "<html><body><div><p>inner<b>deep</b></p></div><p>keep</p></body></html>"
-    nodes = explode_nodes(_pages(spark, html=html))
-    out = replace_element(
-        nodes, lambda n: F.col("name") == "div",
-        {"type": "tag", "name": "section"},
-    )
-    rendered = serialize_nodes(out).collect()[0]["manip_html"]
-    assert rendered == (
-        "<html><body><section></section><p>keep</p></body></html>"
-    )
+    for html, outer in [
+        ("<html><body><div><p>inner<b>deep</b></p></div><p>keep</p></body>"
+         "</html>", "div"),
+        (DEEP, "section"),
+    ]:
+        out = replace_element(
+            _nodes(spark, html=html), lambda n: F.col("name") == outer,
+            {"type": "tag", "name": "section"},
+        )
+        assert _render(out)["u1"] == (
+            "<html><body><section></section><p>keep</p></body></html>"
+        )
 
 
 @pytest.mark.spark
@@ -224,10 +243,33 @@ def test_replace_nested_match_drops_inner(spark):
     replaced (domutils replaces the outer pointer; the detached
     element keeps its children, inner match included)."""
     html = "<html><body><ul><li>x</li></ul><p>keep</p></body></html>"
-    nodes = explode_nodes(_pages(spark, html=html))
+    nodes = _nodes(spark, html=html)
     out = replace_element(
         nodes, lambda n: F.col("name").isin("ul", "li"),
         {"type": "tag", "name": "gone"},
     )
     rendered = serialize_nodes(out).collect()[0]["manip_html"]
     assert rendered == "<html><body><gone></gone><p>keep</p></body></html>"
+
+
+@pytest.mark.spark
+def test_remove_elements_drops_matches_and_subtrees(spark):
+    """removeElement: each match leaves with its subtree, a match nested
+    in another goes with the outer one, a document without a match is
+    untouched, and any depth takes the same one join."""
+    docs = {
+        "nested": "<html><body><ul><li>a<ul><li>b</li></ul></li></ul>"
+                  "<p>keep</p></body></html>",
+        "none": "<html><body><p>only</p></body></html>",
+        "deep": DEEP,
+    }
+    pages = spark.createDataFrame(list(docs.items()), "url string, html string")
+    nodes = explode_nodes(pages, with_ancestors=True)
+    out = remove_elements(nodes, lambda n: F.col("name").isin("ul", "section"))
+    assert _render(out) == {
+        "nested": "<html><body><p>keep</p></body></html>",
+        "none": docs["none"],
+        "deep": "<html><body><p>keep</p></body></html>",
+    }
+    with pytest.raises(ValueError, match="remove_elements.*with_ancestors"):
+        remove_elements(explode_nodes(pages), lambda n: F.col("name") == "ul")

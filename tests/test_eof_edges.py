@@ -10,9 +10,10 @@ from __future__ import annotations
 
 import pytest
 
-from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 from htmlparser2_spark.engine.stream import StreamingParser
+
+from .collector import EventCollector
 
 
 def events(doc: str, **options):
@@ -213,7 +214,7 @@ def test_eof_implied_close_index_is_len_plus_one():
     handleTrailingCommentLikeData), oncomment advances startIndex to
     endIndex + 1 (Parser.ts:670), and onend copies startIndex into
     endIndex for the close-all loop (Parser.ts:699-708)."""
-    from htmlparser2_spark.engine.collector import EventCollector
+    from .collector import EventCollector
     from htmlparser2_spark.engine.parser import Parser, ParserOptions
 
     for doc, xml in (("<x><!--", True), ("<div><!--x", False)):

@@ -37,13 +37,13 @@ import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.dom import DomArrayHandler, parse_document, text_content
 from htmlparser2_spark.engine.markdown import MarkdownExtractor, to_markdown
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 from htmlparser2_spark.engine.stream import StreamingParser
 
 from .adversaries import BOUND_S, CASES, document_bodies, structural_adversary
+from .collector import EventCollector
 from .fuzz_tokens import TOKENS
 from .markdown_reference import ReferenceExtractor, reference_to_markdown
 from .split_parser import ProbeCheckingParser, SplitParser, ordered_nodes, parsed

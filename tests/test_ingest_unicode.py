@@ -94,7 +94,7 @@ _EXPANDED_DOC = (
 
 
 def _engine_events(doc):
-    from htmlparser2_spark.engine.collector import EventCollector
+    from .collector import EventCollector
     from htmlparser2_spark.engine.parser import Parser
 
     col = EventCollector()

@@ -119,7 +119,7 @@ def test_start_index_never_exceeds_end_index():
 def test_custom_tokenizer_injection():
     """ParserOptions accepts a Tokenizer subclass (Parser.ts:210;
     Parser.spec.ts:238-251)."""
-    from htmlparser2_spark.engine.collector import EventCollector
+    from .collector import EventCollector
     from htmlparser2_spark.engine.parser import Parser, ParserOptions
     from htmlparser2_spark.engine.tokenizer import Tokenizer
 

@@ -14,8 +14,9 @@ import pathlib
 
 import pytest
 
-from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
+
+from .collector import EventCollector
 
 GOLDENS = json.loads(
     (pathlib.Path(__file__).parent / "goldens" / "parser_events.json").read_text()

@@ -29,7 +29,8 @@ def test_extract_text_udf_matches_engine(spark):
 def test_node_counts_matches_dom_nodes_histogram(spark):
     """The tokenizer-only counting handler must reproduce the exploded
     dom_nodes histogram exactly — including merged text runs (one node
-    per run), comments/cdata as null-name nodes, and PI names."""
+    per run, and a directive ends a run), comments/cdata as null-name
+    nodes, and PI names."""
     from htmlparser2_spark.functions.udfs import dom_nodes_udf, node_counts_udf
 
     docs = [
@@ -39,6 +40,7 @@ def test_node_counts_matches_dom_nodes_histogram(spark):
         ("",),
         ("plain text only",),
         ("<!DOCTYPE html><html><body><p>one</p><p>two</p></body></html>",),
+        ("a<!DOCTYPE html>b",),
     ]
     df = spark.createDataFrame(docs, "html string")
     dom = (

@@ -15,11 +15,12 @@ import pathlib
 
 import pytest
 
-from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.dom import DomArrayHandler, parse_document
 from htmlparser2_spark.engine.parser import Parser, ParserOptions
 from htmlparser2_spark.engine.stream import StreamingParser, WritableStreamParser
 from htmlparser2_spark.engine.tokenizer import Tokenizer
+
+from .collector import EventCollector
 
 GOLDENS = json.loads(
     (pathlib.Path(__file__).parent / "goldens" / "parser_events.json").read_text()

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import pytest
 
-from htmlparser2_spark.engine.collector import EventCollector
 from htmlparser2_spark.engine.dom import DomArrayHandler
 from htmlparser2_spark.engine.parser import (
     _FOREIGN_PUSH,
@@ -28,6 +27,7 @@ from htmlparser2_spark.engine.parser import (
     ParserOptions,
 )
 
+from .collector import EventCollector
 from .split_parser import SplitParser, ordered_nodes, parsed
 
 RULED_NAMES = sorted(

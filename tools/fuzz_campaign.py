@@ -41,7 +41,6 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-from htmlparser2_spark.engine.collector import EventCollector  # noqa: E402
 from htmlparser2_spark.engine.dom import (  # noqa: E402
     DomArrayHandler,
     parse_document,
@@ -56,6 +55,7 @@ from tests.adversaries import (  # noqa: E402
     document_bodies,
     structural_adversary,
 )
+from tests.collector import EventCollector  # noqa: E402
 from tests.fuzz_tokens import TOKENS  # noqa: E402
 from tests.markdown_reference import (  # noqa: E402
     ReferenceExtractor,
