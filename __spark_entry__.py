@@ -90,7 +90,8 @@ def _q_title(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_tag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tag histogram via the tokenizer-only counting handler: per-doc
+    """Tag histogram via node_counts_udf (the full Parser feeding a
+    node-name counting handler, no DOM built): per-doc
     (name, cnt) pairs instead of exploded node structs, so shuffle
     volume is bounded by distinct tag names per doc. Tag nodes are
     exactly the non-null names without the parser's '!'/'?' PI

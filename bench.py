@@ -187,7 +187,8 @@ def main(profile: bool = False) -> None:
         ).collect()[0]
         match_rate["extract"] = row["m"] / row["docs"]
 
-    # q2: node-name histogram. Tokenizer-only counting handler: emits
+    # q2: node-name histogram. node_counts_udf runs the full Parser with
+    # a node-name counting handler (no DOM built): emits
     # per-doc (name, cnt) pairs — same result as exploding dom_nodes
     # (parity-pinned in tests/test_spark_ops.py), but transfer and
     # shuffle are bounded by distinct names per doc, not node count.

@@ -1,7 +1,8 @@
 """Vectorized (Arrow-batched) Spark UDFs wrapping the parse engine.
 
-All heavy work happens inside pandas UDFs over Arrow record batches — no
-per-row Python dispatch from Spark's side (BASELINE.json input_hint).
+All heavy work happens inside Arrow UDFs (``F.arrow_udf``) over Arrow
+record batches — no per-row Python dispatch from Spark's side and no
+pandas layer (BASELINE.json input_hint).
 Equivalents of the reference's API surface (/root/reference/src/index.ts):
 
 * ``extract_text_udf``  — parseDocument + DomUtils textContent, fused into
@@ -19,8 +20,10 @@ Equivalents of the reference's API surface (/root/reference/src/index.ts):
 * ``sniff_decode_udf``  — charset sniff + decode of raw bytes
 
 Every factory but ``sniff_decode_udf`` is one :func:`_doc_udf`: the one
-batch loop, which builds a per-document function once per Arrow batch
-and feeds it each cell through :func:`_to_str`, the one decoder. Decode
+batch loop, which builds a per-document function once per Arrow batch,
+feeds it each cell through :func:`_to_str`, the one decoder, and
+returns one ``pa.array`` of the UDF's Spark type. A timestamp value
+must be UTC-aware or naive UTC (see :func:`_doc_udf`). Decode
 policy: NULL is the empty document, a STRING cell is used as is, a
 BINARY cell decodes as UTF-8 with U+FFFD replacement (``parse_pages``'s
 ``sniff_charset`` sniffs BINARY cells instead). Text extractors
@@ -30,8 +33,9 @@ shared with ``plans/extract_job.parse_pages``.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -240,32 +244,32 @@ def _make_extract(mode: str, **options):
 
 
 def _doc_udf(return_type, make):
-    """The one pandas UDF body over an html column. ``make()`` runs once
+    """The one Arrow UDF body over an html column. ``make()`` runs once
     per Arrow batch and returns the per-document function, typically
     closing over one Parser that ``parse()`` resets per document. Every
-    cell reaches it through :func:`_to_str`. For a struct
-    ``return_type`` it returns one dict (DataFrame row) per document.
-    A document whose function raises gets NULL (a struct of NULLs), so
-    one bad document never fails the batch."""
-    names = return_type.names if isinstance(return_type, StructType) else None
-    failed = None if names is None else dict.fromkeys(names)
+    cell reaches it through :func:`_to_str`. Its values become one
+    ``pa.array`` of ``return_type``'s Arrow type: a struct or a map is
+    a dict (a struct's missing keys are NULL fields, extra keys are
+    ignored), an array a list. A timestamp value must be UTC-aware or
+    naive UTC: pyarrow reads an aware datetime's wall clock as UTC and
+    drops its offset. A document whose function raises or returns None
+    gets NULL (a struct of NULLs), so one bad document never fails the
+    batch."""
+    arrow_type = to_arrow_type(return_type)
+    failed = {} if isinstance(return_type, StructType) else None
 
-    # Series -> Series hints select Spark's scalar pandas UDF, which
-    # takes a DataFrame as the value of a struct column.
-    def run(html: pd.Series) -> pd.Series:
+    def run(html: pa.Array) -> pa.Array:
         one = make()
         out = []
-        # Series.__iter__ is slow; pull a plain list once per batch.
-        for v in html.tolist():
+        for v in html.to_pylist():
             try:
-                out.append(one(_to_str(v)))
+                value = one(_to_str(v))
             except Exception:
-                out.append(failed)
-        if names is None:
-            return pd.Series(out, dtype=object)
-        return pd.DataFrame(out, columns=names)
+                value = None
+            out.append(failed if value is None else value)
+        return pa.array(out, type=arrow_type)
 
-    return F.pandas_udf(run, return_type)
+    return F.arrow_udf(run, return_type)
 
 
 def _parsed(new_handler, result, options: dict, *, batch_text: bool = False):
@@ -307,7 +311,7 @@ def _extracted(mode: str, options: dict):
 
 
 # ------------------------------------------------------------------
-# The pandas UDF factories take engine options and return a column fn.
+# The UDF factories take engine options and return a column fn.
 
 
 def extract_text_udf(**options):
@@ -521,24 +525,11 @@ FEED_SCHEMA = StructType(
 )
 
 
-_ITEM_FIELDS = FEED_SCHEMA["items"].dataType.elementType.names
-
-
-def _feed_row(nodes) -> dict:
-    feed = get_feed(nodes)
-    if feed is None:
-        return dict.fromkeys(FEED_SCHEMA.names)
-    row = {name: feed.get(name) for name in FEED_SCHEMA.names}
-    row["items"] = [
-        {**{k: it.get(k) for k in _ITEM_FIELDS}, "media": it.get("media") or []}
-        for it in feed.get("items", [])
-    ]
-    return row
-
-
 def feed_udf():
-    """parseFeed (engine xmlMode): NULL struct for non-feed documents."""
-    return _doc_udf(FEED_SCHEMA, _on_dom(_feed_row, {"xml_mode": True}))
+    """parseFeed (engine xmlMode): a struct of NULLs for non-feed
+    documents. ``updated`` and ``pubDate`` are UTC (``feed.parse_date``
+    converts every offset)."""
+    return _doc_udf(FEED_SCHEMA, _on_dom(get_feed, {"xml_mode": True}))
 
 
 SITEMAP_SCHEMA = StructType(
@@ -584,26 +575,23 @@ def sniff_decode_udf(default: str = "utf-8"):
         ]
     )
 
-    @F.pandas_udf(schema)
-    def _sniff(data: pd.Series) -> pd.DataFrame:
-        rows = [
-            decode_html(v if v is not None else b"", default) for v in data
-        ]
-        return pd.DataFrame(rows, columns=["charset", "decoded"])
+    arrow_type = to_arrow_type(schema)
 
-    return _sniff
+    def sniff(data: pa.Array) -> pa.Array:
+        return pa.array(
+            [decode_html(v if v is not None else b"", default)
+             for v in data.to_pylist()],
+            type=arrow_type,
+        )
 
-
-def _sitemap_row(nodes) -> dict:
-    # Explicit None fields: an empty dict would become NaN and fail the
-    # Arrow conversion of the ``entries`` array.
-    return get_sitemap(nodes) or dict.fromkeys(SITEMAP_SCHEMA.names)
+    return F.arrow_udf(sniff, schema)
 
 
 def sitemap_udf():
     """Sitemap/sitemap-index parse (engine xmlMode, same batch shape
-    as ``feed_udf``): NULL struct for non-sitemap documents."""
-    return _doc_udf(SITEMAP_SCHEMA, _on_dom(_sitemap_row, {"xml_mode": True}))
+    as ``feed_udf``, ``lastmod`` in UTC): a struct of NULLs for
+    non-sitemap documents."""
+    return _doc_udf(SITEMAP_SCHEMA, _on_dom(get_sitemap, {"xml_mode": True}))
 
 
 STATS_SCHEMA = StructType(

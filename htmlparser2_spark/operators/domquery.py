@@ -61,20 +61,25 @@ def explode_nodes(pages: DataFrame, html_col: str = "html", key_col: str = "url"
     ).select(key_col, "node.*")
 
 
+def _first(rows: DataFrame, *group: str, limit: int = 1) -> DataFrame:
+    """The first ``limit`` rows of each ``group`` in document order:
+    node_id is assigned in depth-first emission order, so one
+    ``row_number`` window ordered by it ranks the rows."""
+    w = Window.partitionBy(*group).orderBy("node_id")
+    return (
+        rows.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= limit)
+        .drop("__rn")
+    )
+
+
 def get_elements_by_tag_name(nodes: DataFrame, name: str, *, limit: int | None = None) -> DataFrame:
     """Matching elements; ``limit`` is per document in document order
     (reference getElementsByTagName limit applies per tree), so
     limit=0 returns no rows and limit=1 returns each document's first
     match."""
     out = nodes.filter(F.col("name") == name)
-    if limit is None:
-        return out
-    w = Window.partitionBy("url").orderBy("node_id")
-    return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= limit)
-        .drop("__rn")
-    )
+    return out if limit is None else _first(out, "url", limit=limit)
 
 
 def get_elements_by_tag_type(nodes: DataFrame, node_type: str) -> DataFrame:
@@ -88,9 +93,7 @@ def get_elements_by_tag_type(nodes: DataFrame, node_type: str) -> DataFrame:
 def get_element_by_id(nodes: DataFrame, element_id: str) -> DataFrame:
     """First element with the id per document (ids should be unique; ties
     break on document order like domutils' depth-first search)."""
-    hits = nodes.filter(F.col("attrs")["id"] == element_id)
-    w = Window.partitionBy("url").orderBy("node_id")
-    return hits.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
+    return _first(nodes.filter(F.col("attrs")["id"] == element_id), "url")
 
 
 def find_all(nodes: DataFrame, predicate) -> DataFrame:
@@ -106,13 +109,7 @@ def find_one(nodes: DataFrame, predicate) -> DataFrame:
     over matches is the same element (reference re-export:
     /root/reference/src/index.ts:86).
     """
-    w = Window.partitionBy("url").orderBy("node_id")
-    return (
-        nodes.filter(predicate(nodes))
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .drop("rn")
-    )
+    return _first(nodes.filter(predicate(nodes)), "url")
 
 
 def exists_one(nodes: DataFrame, predicate) -> DataFrame:
@@ -352,13 +349,7 @@ def find_one_child(nodes: DataFrame, predicate) -> DataFrame:
     single child array; partitioning by the parent instead of the url
     gives every parent its own answer in one window pass (reference
     re-export: /root/reference/src/index.ts:86)."""
-    w = Window.partitionBy("url", "parent_id").orderBy("node_id")
-    return (
-        nodes.filter(predicate(nodes))
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .drop("rn")
-    )
+    return _first(nodes.filter(predicate(nodes)), "url", "parent_id")
 
 
 def has_attrib(nodes: DataFrame, attr: str) -> DataFrame:

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import random
 
-import pandas as pd
+import pyarrow as pa
 
 from htmlparser2_spark.functions import udfs
 
@@ -71,7 +71,7 @@ def structural_adversary(rng: random.Random, case: str | None = None) -> str:
 
 def document_bodies() -> dict:
     """Body name -> per-document function: each ``_make_extract`` mode,
-    and each ``_doc_udf`` factory's pandas body on a one-row batch."""
+    and each ``_doc_udf`` factory's Arrow body on a one-row batch."""
     bodies = {
         f"extract_{mode}": udfs._make_extract(mode)
         for mode in ("text", "main", "markdown")
@@ -83,5 +83,5 @@ def document_bodies() -> dict:
         "doc_stats_udf",
     ):
         run = getattr(udfs, name)().func
-        bodies[name] = lambda doc, run=run: run(pd.Series([doc]))
+        bodies[name] = lambda doc, run=run: run(pa.array([doc])).to_pylist()
     return bodies

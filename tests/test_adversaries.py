@@ -21,6 +21,7 @@ from __future__ import annotations
 import time
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from htmlparser2_spark.engine.dom import (
@@ -124,7 +125,7 @@ def test_batch_loops_turn_a_raising_document_into_a_null_row(monkeypatch):
     assert out["error"].tolist() == [None, "ValueError", None]
     assert out["n_tags"].tolist() == [2, 0, 0]
     run = udfs.markdown_udf().func
-    assert run(pd.Series(htmls)).tolist() == ["a **x**", None, ""]
+    assert run(pa.array(htmls)).to_pylist() == ["a **x**", None, ""]
 
     def make():
         def one(doc):
@@ -135,6 +136,6 @@ def test_batch_loops_turn_a_raising_document_into_a_null_row(monkeypatch):
         return one
 
     struct = udfs.StructType([udfs.StructField("n", udfs.IntegerType())])
-    n = udfs._doc_udf(struct, make).func(pd.Series(htmls))["n"]
-    assert n.isna().tolist() == [False, True, False]
-    assert (n[0], n[2]) == (len(htmls[0]), 0)
+    rows = udfs._doc_udf(struct, make).func(pa.array(htmls))
+    assert rows.null_count == 0
+    assert rows.field("n").to_pylist() == [len(htmls[0]), None, 0]

@@ -27,7 +27,8 @@ def test_extract_text_udf_matches_engine(spark):
 
 
 def test_node_counts_matches_dom_nodes_histogram(spark):
-    """The tokenizer-only counting handler must reproduce the exploded
+    """The node-counting handler (the full Parser with
+    ``_NodeCountHandler``) must reproduce the exploded
     dom_nodes histogram exactly — including merged text runs (one node
     per run, and a directive ends a run), comments/cdata as null-name
     nodes, and PI names."""
@@ -96,6 +97,34 @@ def test_feed_udf(spark):
     assert row["title"] == "Example Feed"
     assert row["items"][0]["title"] == "Atom-Powered Robots Run Amok"
     assert row["updated"].year == 2003
+
+
+def test_feed_and_sitemap_timestamps_are_utc(spark):
+    """A dated value with a +02:00 offset reaches Spark as the same
+    instant: 12:00+02:00 is 10:00 UTC. pyarrow reads an aware
+    datetime's wall clock as UTC, so the engine must hand ``_doc_udf``
+    UTC values (feed.parse_date converts)."""
+    from datetime import datetime, timezone
+
+    from htmlparser2_spark.functions.udfs import feed_udf, sitemap_udf
+
+    rss = (
+        "<rss><channel><title>t</title><item><title>i</title>"
+        "<pubDate>Wed, 01 Jan 2020 12:00:00 +0200</pubDate>"
+        "</item></channel></rss>"
+    )
+    sitemap = (
+        "<urlset><url><loc>https://h/a</loc>"
+        "<lastmod>2020-01-01T12:00:00+02:00</lastmod></url></urlset>"
+    )
+    df = spark.createDataFrame([(rss, sitemap)], "rss string, sitemap string")
+    row = df.select(
+        feed_udf()(F.col("rss"))["items"][0]["pubDate"].cast("long").alias("pub"),
+        sitemap_udf()(F.col("sitemap"))["entries"][0]["lastmod"]
+        .cast("long").alias("lastmod"),
+    ).collect()[0]
+    ten_utc = int(datetime(2020, 1, 1, 10, tzinfo=timezone.utc).timestamp())
+    assert (row["pub"], row["lastmod"]) == (ten_utc, ten_utc)
 
 
 # ---------------------------- dedup ----------------------------
@@ -547,18 +576,23 @@ def test_doc_udf_struct_of_nulls_for_failing_document(spark):
         def one(doc):
             if doc == "bad":
                 raise ValueError(doc)
+            if doc == "none":
+                return None
             return {"n": len(doc), "doc": doc}
 
         return one
 
-    df = spark.createDataFrame([("a",), ("bad",), ("ccc",)], "html string")
+    df = spark.createDataFrame(
+        [("a",), ("bad",), ("ccc",), ("none",)], "html string"
+    )
     got = [
         r["s"].asDict()
         for r in df.coalesce(1).select(_doc_udf(schema, make)(F.col("html")).alias("s"))
         .collect()
     ]
     assert got == [
-        {"n": 1, "doc": "a"}, {"n": None, "doc": None}, {"n": 3, "doc": "ccc"}
+        {"n": 1, "doc": "a"}, {"n": None, "doc": None}, {"n": 3, "doc": "ccc"},
+        {"n": None, "doc": None},
     ]
 
 
@@ -983,6 +1017,23 @@ def test_url_fragment_and_ipv6_edge_cases(spark):
     assert got == [want for _, want in cases]
     hosts = [r[0] for r in df.select(url_host("u")).collect()]
     assert hosts[2] == "[2001:db8::1]" and hosts[4] == "[::1]"
+
+
+def test_get_element_by_id_first_match_in_document_order(spark):
+    from htmlparser2_spark.operators.domquery import explode_nodes, get_element_by_id
+
+    pages = spark.createDataFrame(
+        [
+            # The first match is deeper and sorts after the second by
+            # name: only document order picks it.
+            ("u1", '<div><p id="x">first</p></div><a id="x">second</a>'),
+            ("u2", '<ul><li>a</li><li id="x">b</li></ul>'),
+            ("u3", '<p id="y">no x here</p>'),
+        ],
+        "url string, html string",
+    )
+    hits = get_element_by_id(explode_nodes(pages), "x").collect()
+    assert sorted((r["url"], r["name"]) for r in hits) == [("u1", "p"), ("u2", "li")]
 
 
 def test_domutils_helper_completions(spark):
