@@ -470,7 +470,7 @@ def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component clustering over the oracle-checked exact
-    Jaccard >= 0.5 pairs (iterative min-label propagation, the
+    Jaccard >= 0.5 pairs (alternating large-star/small-star rounds, the
     keep-one-per-cluster step of a dedup pipeline); the oracle computes
     the same components with a recursive CTE."""
     from htmlparser2_spark.operators.dedup import (

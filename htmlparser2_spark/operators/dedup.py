@@ -15,6 +15,7 @@ All operators are pure DataFrame compositions (JVM-side, shuffle-aware):
 * :func:`simhash64`            — 64-bit SimHash fingerprint per doc
 * :func:`embedding_dup_pairs`  — near-dup pairs by embedding cosine
 * :func:`duplicate_clusters`   — connected components over dup pairs
+  (large-star/small-star: O(log² n) rounds, no round cap)
 * :func:`frequent_line_removal` — C4-style corpus-level line dedup
 
 MinHash and SimHash signatures are **map-only**: the per-document
@@ -22,14 +23,18 @@ reduction (min over permuted shingle hashes / sign of per-bit sums)
 never needs cross-row state — zero shuffles, a narrow projection over
 the scan (pinned by tests/test_plans.py). At 100 TB the signature
 stage streams through executors with no exchange; only the LSH band
-bucket-groupBy shuffles. MinHash's permutation+min fold is one
-Arrow-batched numpy kernel (see :func:`minhash_signatures`); SimHash
-is one JVM ``aggregate``/``zip_with`` expression.
+bucket-groupBy shuffles. MinHash's permutation+min fold is one numpy
+kernel over each Arrow batch's list buffers (see
+:func:`minhash_signatures`); SimHash is one JVM
+``aggregate``/``zip_with`` expression.
 
 Scale notes: every self-join keys on a hash (shingle hash, band hash,
 bucket), so skew is bounded by real duplicate clusters; MinHash bands
 turn the quadratic pair space into per-bucket groups. ``groupBy``
 paths get map-side partial aggregation from Catalyst for free.
+:func:`duplicate_clusters` is the one iterative operator: one eager
+checkpoint and one ``isEmpty`` probe per round, O(log² n) rounds for
+any component shape, and each node's neighbours in one array row.
 ``ngram_jaccard_pairs`` deliberately keeps its cached exploded-shingle
 table and size joins: a carried-size single-join variant (no cache,
 in-row ``array_distinct``) measured 2x SLOWER because the interpreted
@@ -41,7 +46,7 @@ on LSH candidates, not the full corpus.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -269,9 +274,10 @@ def minhash_signatures(
     **Map-only**: a narrow ``Project`` over the scan, zero shuffles
     (pinned by tests/test_plans.py). Shingle construction and the base
     xxhash64 stay JVM-side, once per shingle; the ``n_perm``
-    universal-hash + min fold runs in ONE Arrow-batched numpy kernel
-    (``(flat_hashes * a + b) % M`` per permutation over the batch's
-    concatenated hash buffer, ``np.minimum.reduceat`` per document).
+    universal-hash + min fold runs in ONE Arrow UDF (``F.arrow_udf``)
+    whose numpy kernel reads the batch's ``list<int64>`` buffers
+    (``(flat_hashes * a + b) % M`` per permutation over the values
+    buffer, ``np.minimum.reduceat`` over each document's offset span).
     A Catalyst ``aggregate``/``zip_with`` fold gives the same output
     but is interpreted and boxes an ``n_perm``-long array per shingle:
     1.99-2.94 s against the kernel's 0.60-1.01 s for 32 permutations
@@ -295,35 +301,35 @@ def _minhash_fold_udf(n_perm: int, seed: int):
 
     Input: one ``array<long>`` column of base shingle hashes, already
     reduced mod ``_MERSENNE`` (so every value is in ``[0, M)`` and
-    ``h * a + b < 2^62`` — no int64 overflow).
+    ``h * a + b < 2^62`` — no int64 overflow). The kernel reads the
+    batch's ``list<int64>`` offsets and values buffers as they are and
+    returns one ``list<int64>`` of ``n_perm`` values per row; an empty
+    or NULL cell gets an all-null signature.
     """
-    from pyspark.sql.functions import pandas_udf
-
     params = _perm_params(n_perm, seed)
     a_vec = np.array([p[0] for p in params], dtype=np.int64)
     b_vec = np.array([p[1] for p in params], dtype=np.int64)
-    null_sig = [None] * n_perm
 
-    @pandas_udf("array<long>")
-    def sig_of(hashes: pd.Series) -> pd.Series:
-        rows = [np.asarray(h, dtype=np.int64) for h in hashes]
-        lens = np.fromiter((len(r) for r in rows), dtype=np.int64,
-                           count=len(rows))
-        nonempty = np.flatnonzero(lens)
-        out = [null_sig] * len(rows)
-        if len(nonempty):
-            flat = np.concatenate([rows[i] for i in nonempty])
-            starts = np.zeros(len(nonempty), dtype=np.int64)
-            np.cumsum(lens[nonempty][:-1], out=starts[1:])
-            mins = np.empty((len(nonempty), n_perm), dtype=np.int64)
-            for p in range(n_perm):
-                permuted = (flat * a_vec[p] + b_vec[p]) % _MERSENNE
-                mins[:, p] = np.minimum.reduceat(permuted, starts)
-            for j, i in enumerate(nonempty):
-                out[i] = mins[j].tolist()
-        return pd.Series(out)
+    def sig_of(hashes: pa.Array) -> pa.Array:
+        offsets = hashes.offsets.to_numpy()
+        lens = np.diff(offsets)
+        keep = (lens > 0) & hashes.is_valid().to_numpy(zero_copy_only=False)
+        # Only the kept cells' spans, back to back: a NULL cell may
+        # still span values, which must not reach its neighbour's min.
+        values = hashes.values.to_numpy()[offsets[0]:offsets[-1]]
+        flat = values[np.repeat(keep, lens)]
+        starts = np.cumsum(lens[keep]) - lens[keep]
+        sig = np.zeros((len(lens), n_perm), dtype=np.int64)
+        sig[keep] = np.stack([
+            np.minimum.reduceat((flat * a + b) % _MERSENNE, starts)
+            for a, b in zip(a_vec, b_vec)
+        ], axis=1)
+        return pa.ListArray.from_arrays(
+            np.arange(len(lens) + 1, dtype=np.int32) * n_perm,
+            pa.array(sig.ravel(), mask=np.repeat(~keep, n_perm)),
+        )
 
-    return sig_of
+    return F.arrow_udf(sig_of, "array<long>")
 
 
 def minhash_lsh_pairs(
@@ -567,89 +573,75 @@ def frequent_line_removal(
     )
 
 
-def duplicate_clusters(
-    pairs: DataFrame,
-    *,
-    max_iter: int = 20,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Connected components over near-dup pairs: (id, cluster_id).
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
+    """Connected components over near-dup pairs ``(id_a, id_b)``:
+    (id, cluster_id), where cluster_id is the component's minimum id —
+    deterministic across partitionings. The canonical step after pair
+    generation in a dedup pipeline (keep one id per component).
 
-    The canonical step after pair generation in a dedup pipeline
-    (keep one representative per component). Implemented as iterative
-    min-label propagation in pure DataFrame ops — the standard
-    large-scale connected-components shape (each round: one join on the
-    symmetrized edge list + one min-aggregate, both map-side combined;
-    no driver-side graph). Converges in O(component diameter) rounds;
-    near-dup clusters are dense/shallow, so a handful of rounds
-    suffices and ``max_iter`` is a diameter cap, checked with one
-    cheap count per round (early exit on fixpoint). cluster_id is the
-    minimum member id — deterministic across partitionings.
+    Alternating large-star / small-star rounds (Kiveris et al.,
+    *Connected Components in MapReduce and Beyond*, SoCC 2014) over one
+    undirected edge per row, ``(x, p)`` with ``p < x``. Large-star
+    links every larger neighbour of ``u`` to ``m``, the minimum of
+    ``u`` and its neighbours; small-star links a node and its smaller
+    neighbours to their minimum. Both keep components intact and
+    converge in O(log² n) rounds for any component shape, so there is
+    no round cap. A round is one eager checkpoint whose ``flag`` marks
+    the edges it moved (``m != u``, or a node with several smaller
+    neighbours); a round that flags nothing has left stars rooted at
+    each component's minimum. A node's neighbours are one array row,
+    so the last round holds a whole component in its root's row (the
+    bound of :func:`minhash_lsh_pairs`' bucket arrays).
 
     Only ids that appear in ``pairs`` are returned; singletons carry no
-    dedup decision and would bloat the output at corpus scale.
+    dedup decision and would bloat the output at corpus scale. An id
+    seen only in a self-pair ``(x, x)`` is its own cluster.
     """
-    # The symmetrized edges are read by every round: materialize them
-    # once, or each round re-runs the whole upstream lineage of
-    # ``pairs``. Both directions come from one pass over ``pairs``.
-    a, b = F.col(id_a), F.col(id_b)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(a.alias("src"), b.alias("dst")),
-                    F.struct(b.alias("src"), a.alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
+    a, b = F.col("id_a"), F.col("id_b")
+    x, p, u = F.col("x"), F.col("p"), F.col("u")
+    # Every round reads the edges: materialize them once, or each round
+    # re-runs the whole upstream lineage of ``pairs``. Split off
+    # self-loops only after the checkpoint: a filter before it is pushed
+    # into the projection and evaluates ``pairs`` twice.
+    given = (
+        pairs.select(F.greatest(a, b).alias("x"), F.least(a, b).alias("p"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
-        "cluster_id", F.col("id")
-    )
-    labels = labels.localCheckpoint(eager=True)
-    # max_iter bounds the label-update rounds; one extra round is
-    # allowed so a diameter-max_iter component can still verify its
-    # fixpoint (the convergence check needs a round that changes
-    # nothing) instead of raising spuriously at the boundary.
-    for _ in range(max_iter + 1):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nb_min"))
+    edges = given.filter(x != p)
+    while True:
+        nbrs = (
+            edges.select(x.alias("u"), p.alias("v"))
+            .unionByName(edges.select(p.alias("u"), x.alias("v")))
+            .groupBy("u")
+            .agg(F.collect_set("v").alias("nb"))
+            .withColumn("m", F.least(u, F.array_min("nb")))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nb_min", F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
+        large = nbrs.select(
+            F.explode(F.filter("nb", lambda v: v > u)).alias("x"),
+            F.col("m").alias("p"),
+            (F.col("m") != u).alias("flag"),
         )
-        # Truncate lineage each round: iterative self-joins otherwise
-        # stack plans exponentially (the classic iterative-algorithm
-        # pitfall on Spark).
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
+        small = large.groupBy("x").agg(
+            F.array_distinct(F.collect_list("p")).alias("ps"),
+            F.max("flag").alias("flag"),
         )
-        labels = new_labels
-        if changed == 0:
+        m = F.array_min("ps")
+        # One checkpoint per round truncates the lineage, which would
+        # otherwise stack every earlier round into each plan.
+        edges = small.select(
+            F.explode(F.array_remove(F.concat(F.array("x"), "ps"), m)).alias("x"),
+            m.alias("p"),
+            (F.col("flag") | (F.size("ps") > 1)).alias("flag"),
+        ).localCheckpoint(eager=True)
+        if edges.filter("flag").isEmpty():
             break
-    else:
-        # Exhausting max_iter without a fixpoint means some component's
-        # diameter exceeds the cap: silently returning would split one
-        # real duplicate cluster into several cluster_ids and dedup
-        # would keep extra copies — fail loudly instead.
-        raise RuntimeError(
-            f"duplicate_clusters did not converge within max_iter={max_iter} "
-            "rounds; a component has larger diameter — raise max_iter"
-        )
-    return labels
+    # A star edge labels its leaf and its root. An id seen only in a
+    # self-pair keeps its own label; any edge gives it its component's
+    # smaller minimum.
+    stars = edges.select("x", "p").unionByName(given.filter(x == p))
+    return (
+        stars.select(F.explode(F.array(x, p)).alias("id"), p.alias("cluster_id"))
+        .groupBy("id")
+        .agg(F.min("cluster_id").alias("cluster_id"))
+    )

@@ -11,9 +11,9 @@ operators into one decision table:
    (:func:`~htmlparser2_spark.operators.dedup.jaccard_verify_pairs`:
    two id-keyed hash joins, in-row set intersection; linear in
    candidate count, never corpus-quadratic).
-4. **cluster** — connected components over verified pairs (iterative
-   min-label propagation with per-round lineage truncation); keep the
-   minimum id per component.
+4. **cluster** — connected components over verified pairs
+   (alternating large-star/small-star rounds, O(log² n) of them, one
+   eager checkpoint each); keep the minimum id per component.
 
 Output is a full-lineage decision table, one row per input document:
 ``(id, status, dup_of)`` with status in {kept, exact_dup, near_dup}
@@ -24,9 +24,8 @@ drop, and in favor of what).
 Scale notes: every stage is keyed on an id or hash (no skew beyond
 real duplicate clusters — exact dedup runs FIRST precisely so
 identical documents, the only unbounded-bucket source, never reach
-LSH); nothing collects to the driver except the clustering
-convergence counters; the final status assembly is one anti-join on
-id.
+LSH); nothing is collected except one ``isEmpty`` probe per
+clustering round; the final status assembly is one anti-join on id.
 """
 
 from __future__ import annotations
@@ -53,7 +52,6 @@ def run_dedup(
     threshold: float = 0.7,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Dedup decision table ``(id, status, dup_of)`` for ``docs``.
 
@@ -95,7 +93,7 @@ def run_dedup(
         text_col=text_col,
         id_col=id_col,
     )
-    clusters = duplicate_clusters(verified, max_iter=max_iter)
+    clusters = duplicate_clusters(verified)
 
     # An exact rep can itself drop as a near_dup; remap through the
     # cluster labels so dup_of ALWAYS names a retained representative

@@ -3,6 +3,8 @@ pipeline (lineage + checkpoint resume), streaming, multimodal, textstats."""
 
 from __future__ import annotations
 
+import random
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -175,11 +177,14 @@ def test_minhash_signatures_match_python_fold(spark, dup_docs):
     )
 
     docs = dup_docs.unionByName(
-        spark.createDataFrame([(999_999, "one two")], "doc_id long, text string")
+        spark.createDataFrame(
+            [(999_997, None), (999_998, ""), (999_999, "one two")],
+            "doc_id long, text string",
+        )
     )
     shingles = {}
     for doc_id, text in docs.collect():
-        toks = text.split(" ")
+        toks = (text or "").split(" ")
         shingles[doc_id] = [" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)]
     distinct = sorted({sh for shs in shingles.values() for sh in shs})
     base = dict(
@@ -195,7 +200,38 @@ def test_minhash_signatures_match_python_fold(spark, dup_docs):
     }
     got = {r["id"]: r["sig"] for r in minhash_signatures(docs).collect()}
     assert got == want
-    assert got[999_999] == [None] * 32  # too short for 3-shingles
+    # NULL, empty and too short for 3-shingles
+    assert got[999_997] == got[999_998] == got[999_999] == [None] * 32
+
+
+def test_minhash_fold_reads_each_cell_span(spark):
+    """The fold kernel reduces each cell over its own offsets span: a
+    NULL cell whose span still holds values leaks none of them into its
+    neighbour, and a sliced batch starts at its first offset."""
+    import pyarrow as pa
+
+    from htmlparser2_spark.operators.dedup import (
+        _MERSENNE,
+        _minhash_fold_udf,
+        _perm_params,
+    )
+
+    fold = _minhash_fold_udf(4, 42).func
+    hashes = pa.ListArray.from_arrays(
+        pa.array([0, 2, 4, 5, 5, 7], type=pa.int32()),
+        pa.array([1, 2, 3, 4, 7, 8, 9], type=pa.int64()),
+        mask=pa.array([False, True, False, False, False]),
+    )
+    params = _perm_params(4, 42)
+
+    def sig(cell):
+        if not cell:
+            return [None] * 4
+        return [min((a * h + b) % _MERSENNE for h in cell) for a, b in params]
+
+    want = [sig([1, 2]), sig(None), sig([7]), sig([]), sig([8, 9])]
+    assert fold(hashes).to_pylist() == want
+    assert fold(hashes.slice(2)).to_pylist() == want[2:]
 
 
 def test_ngram_jaccard_pairs(spark, dup_docs):
@@ -1187,18 +1223,65 @@ def test_resolve_url_differential_vs_urljoin(spark):
         assert out == want, f"urljoin({b!r}, {h!r}) = {want!r}, got {out!r}"
 
 
-def test_duplicate_clusters_raises_when_not_converged(spark):
+def _cluster_jobs(spark, pairs, group):
+    """duplicate_clusters' labels of ``pairs`` (a list of id pairs) and
+    the number of Spark jobs the call ran, counted under a job group of
+    its own."""
     from htmlparser2_spark.operators.dedup import duplicate_clusters
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        duplicate_clusters(chain, max_iter=3)
-    # With enough rounds the same chain converges to one component.
-    rows = {r["id"]: r["cluster_id"]
-            for r in duplicate_clusters(chain, max_iter=31).collect()}
-    assert set(rows.values()) == {0}
+    sc = spark.sparkContext
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    sc.setJobGroup(group, group)
+    try:
+        rows = {r["id"]: r["cluster_id"] for r in duplicate_clusters(df).collect()}
+    finally:
+        sc.setJobGroup("", "")
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_duplicate_clusters_path_graphs_in_log_rounds(spark):
+    """A path's diameter is its length, so min-label propagation would
+    need one round per hop; large-star/small-star needs O(log² n)
+    rounds. Each round costs a few Spark jobs, so a job budget pins the
+    round count: a 64-id path (both id orders) in <= 40 jobs and a
+    shuffled 1000-id path in <= 50."""
+    path = [(i, i + 1) for i in range(63)]
+    for name, pairs in (("up", path), ("down", [(b, a) for a, b in path[::-1]])):
+        rows, jobs = _cluster_jobs(spark, pairs, f"cc_path64_{name}")
+        assert rows == {i: 0 for i in range(64)}
+        assert jobs <= 40, (name, jobs)
+    ids = list(range(1000))
+    random.Random(3).shuffle(ids)
+    rows, jobs = _cluster_jobs(spark, list(zip(ids, ids[1:])), "cc_path1000")
+    assert rows == {i: 0 for i in range(1000)}
+    assert jobs <= 50, jobs
+
+
+def test_duplicate_clusters_random_graphs_match_union_find(spark):
+    """Seeded sparse random graphs (2000 ids, ~1500 edges: many
+    components, some long) plus a few self-pairs give the components
+    of a plain union-find, labelled by their minimum id."""
+
+    def union_find(pairs):
+        parent = {}
+
+        def root(x):
+            while parent.setdefault(x, x) != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in pairs:
+            ra, rb = root(a), root(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        return {x: root(x) for x in parent}
+
+    rng = random.Random(7)
+    for k in range(3):
+        pairs = [(rng.randrange(2000), rng.randrange(2000)) for _ in range(1500)]
+        pairs += [(5000 + k, 5000 + k), (pairs[0][0], pairs[0][0])]
+        rows, _ = _cluster_jobs(spark, pairs, f"cc_random_{k}")
+        assert rows == union_find(pairs), k
 
 
 def test_repetition_stats(spark):
