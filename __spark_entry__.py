@@ -817,7 +817,7 @@ def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ann_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Arrow brute-force engine (BLAS batch scoring + per-batch
-    partial top-k inside mapInPandas) against the SAME oracle as
+    partial top-k inside mapInArrow) against the SAME oracle as
     q_ann_topk: the partial/global top-k decomposition is exact, and
     on this data the einsum sims round identically at 4dp to the
     sequential fold (parity margin ~1e-7 vs the 5e-5 boundary)."""

@@ -176,7 +176,7 @@ def main(profile: bool = False) -> None:
 
     timings: dict[str, float] = {}
 
-    # q1: full extraction pipeline (repartition + mapInPandas parse +
+    # q1: full extraction pipeline (repartition + mapInArrow parse +
     # byte-identical check + lineage rollup)
     match_rate = {}
 

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: binary media + typed metadata over Spark.
 
 Images/audio/video are opaque ``binary`` columns with typed metadata
-structs. The Spark-side plumbing — schemas, mapInPandas batch shape,
+structs. The Spark-side plumbing — schemas, mapInArrow batch shape,
 partition sizing — is real and tested. Header decoding is REAL for
 PNG/GIF/JPEG images (IHDR / screen descriptor / SOF frame parsers) and
 WAV audio (RIFF chunk walk); other formats fall back to clearly-marked
@@ -18,9 +18,10 @@ import hashlib
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -177,41 +178,39 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
     )
 
 
-def image_features(df: DataFrame, *, dim: int = 16) -> DataFrame:
-    """Decode + featurize images via mapInPandas (Arrow batches).
+def _featurize(df: DataFrame, schema: StructType, decode, dim: int) -> DataFrame:
+    """One ``mapInArrow`` over ``(media_id, payload)``: ``decode(payload)``
+    gives the schema's fields between ``media_id`` and ``embedding``,
+    and a ``ValueError`` from it NULLs them all instead of failing the
+    task."""
+    names = schema.names[1:]
+    arrow_schema = to_arrow_schema(schema)
 
-    The batch shape is the production contract: one pandas DataFrame per
-    Arrow batch, payload bytes in, fixed-width feature rows out. Decode
+    def worker(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            out = {name: [] for name in names}
+            for payload in batch.column("payload").to_pylist():
+                try:
+                    row = (*decode(bytes(payload or b"")), _feature_stub(payload, dim))
+                except ValueError:
+                    row = (None,) * len(names)
+                for name, value in zip(names, row):
+                    out[name].append(value)
+            out["media_id"] = batch.column("media_id")
+            yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
+
+    return df.select("media_id", "payload").mapInArrow(worker, schema)
+
+
+def image_features(df: DataFrame, *, dim: int = 16) -> DataFrame:
+    """Decode + featurize images via mapInArrow (Arrow batches).
+
+    The batch shape is the production contract: one Arrow record batch
+    in and one out, payload bytes in, fixed-width feature rows out. Decode
     failures yield NULL dimensions rather than failing the task (lineage
     keeps the error count observable).
     """
-
-    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {
-                "media_id": batch["media_id"],
-                "width": [],
-                "height": [],
-                "channels": [],
-                "embedding": [],
-            }
-            for payload in batch["payload"]:
-                try:
-                    w, h, c = _decode_image(bytes(payload or b""))
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["channels"].append(c)
-                    out["embedding"].append(_feature_stub(bytes(payload), dim))
-                except ValueError:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["channels"].append(None)
-                    out["embedding"].append(None)
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "payload").mapInPandas(
-        worker, IMAGE_FEATURES_SCHEMA
-    )
+    return _featurize(df, IMAGE_FEATURES_SCHEMA, _decode_image, dim)
 
 
 def _parse_wav_header(payload: bytes) -> tuple[int, int] | None:
@@ -255,7 +254,7 @@ def _decode_audio(payload: bytes) -> tuple[int, int]:
 
 
 def audio_features(df: DataFrame, *, dim: int = 16) -> DataFrame:
-    """Decode + featurize audio via mapInPandas (Arrow batches).
+    """Decode + featurize audio via mapInArrow (Arrow batches).
 
     Same production contract as :func:`image_features`: payload bytes
     in, fixed-width feature rows out, decode failures -> NULLs instead
@@ -263,29 +262,8 @@ def audio_features(df: DataFrame, *, dim: int = 16) -> DataFrame:
     forward pass.
     """
 
-    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {
-                "media_id": batch["media_id"],
-                "sample_rate": [],
-                "n_samples": [],
-                "duration_s": [],
-                "embedding": [],
-            }
-            for payload in batch["payload"]:
-                try:
-                    rate, n = _decode_audio(bytes(payload or b""))
-                    out["sample_rate"].append(rate)
-                    out["n_samples"].append(n)
-                    out["duration_s"].append(n / rate)
-                    out["embedding"].append(_feature_stub(bytes(payload), dim))
-                except ValueError:
-                    out["sample_rate"].append(None)
-                    out["n_samples"].append(None)
-                    out["duration_s"].append(None)
-                    out["embedding"].append(None)
-            yield pd.DataFrame(out)
+    def decode(payload: bytes) -> tuple[int, int, float]:
+        rate, n = _decode_audio(payload)
+        return rate, n, n / rate
 
-    return df.select("media_id", "payload").mapInPandas(
-        worker, AUDIO_FEATURES_SCHEMA
-    )
+    return _featurize(df, AUDIO_FEATURES_SCHEMA, decode, dim)

@@ -4,7 +4,7 @@ The north rule lists "PDF/layout parse" alongside HTML extraction. No
 PDF library is a dependency, so the decode step is a minimal
 content-stream parser (FlateDecode streams inflated with stdlib zlib)
 with a clearly marked deterministic stub fallback, behind the same
-mapInPandas contract the HTML path uses — swap
+``mapInArrow`` contract the HTML path uses — swap
 ``_extract_pdf_text_stub`` for pdfminer/pypdf and every schema, batch
 shape, and downstream operator stays unchanged.
 
@@ -21,8 +21,9 @@ import re
 import zlib
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -239,16 +240,21 @@ def _extract_pdf_text_stub(payload: bytes) -> list[dict]:
 
 
 def pdf_spans(df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
-    """Explode PDF payloads into layout spans (mapInPandas, Arrow batches).
+    """Explode PDF payloads into layout spans (mapInArrow, Arrow batches).
 
     Invalid payloads yield zero spans (observable as missing doc_ids)
     rather than failing the task.
     """
 
-    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    schema = to_arrow_schema(SPAN_SCHEMA)
+
+    def worker(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            rows = {f.name: [] for f in SPAN_SCHEMA.fields}
-            for doc_id, payload in zip(batch[id_col], batch[payload_col]):
+            rows = {name: [] for name in schema.names}
+            for doc_id, payload in zip(
+                batch.column(id_col).to_pylist(),
+                batch.column(payload_col).to_pylist(),
+            ):
                 try:
                     spans = _extract_pdf_text_stub(bytes(payload or b""))
                 except ValueError:
@@ -257,9 +263,9 @@ def pdf_spans(df: DataFrame, *, id_col: str = "doc_id", payload_col: str = "payl
                     rows["doc_id"].append(doc_id)
                     for k, v in span.items():
                         rows[k].append(v)
-            yield pd.DataFrame(rows)
+            yield pa.RecordBatch.from_pydict(rows, schema=schema)
 
-    return df.select(id_col, payload_col).mapInPandas(worker, SPAN_SCHEMA)
+    return df.select(id_col, payload_col).mapInArrow(worker, SPAN_SCHEMA)
 
 
 def pdf_text(spans: DataFrame) -> DataFrame:

@@ -19,16 +19,19 @@ Equivalents of the reference's API surface (/root/reference/src/index.ts):
 * ``doc_stats_udf``     — per-document node/text/event counters
 * ``sniff_decode_udf``  — charset sniff + decode of raw bytes
 
-Every factory but ``sniff_decode_udf`` is one :func:`_doc_udf`: the one
-batch loop, which builds a per-document function once per Arrow batch,
-feeds it each cell through :func:`_to_str`, the one decoder, and
-returns one ``pa.array`` of the UDF's Spark type. A timestamp value
+Every factory but ``sniff_decode_udf`` is one :func:`_doc_udf`, which
+builds a per-document function once per Arrow batch, runs it over the
+batch with :func:`_each_doc`, the one per-document loop (each cell
+decoded by :func:`_to_str`, the one decoder), and returns one
+``pa.array`` of the UDF's Spark type (``sniff_decode_udf`` is a
+:func:`_cell_udf`, the plain per-value form). A timestamp value
 must be UTC-aware or naive UTC (see :func:`_doc_udf`). Decode
 policy: NULL is the empty document, a STRING cell is used as is, a
 BINARY cell decodes as UTF-8 with U+FFFD replacement (``parse_pages``'s
 ``sniff_charset`` sniffs BINARY cells instead). Text extractors
 (``text``, ``main``, ``markdown``) come from :func:`_make_extract`,
-shared with ``plans/extract_job.parse_pages``.
+shared with ``plans/extract_job.parse_pages``, whose ``mapInArrow``
+pass runs the same loop.
 """
 
 from __future__ import annotations
@@ -243,11 +246,36 @@ def _make_extract(mode: str, **options):
     raise ValueError(f"unknown extract mode: {mode!r}")
 
 
+def _each_doc(html: pa.Array, one, sniff: bool = False):
+    """The one per-document loop: ``one(doc)`` for every cell of the
+    Arrow html column, decoded by :func:`_to_str`. Yields
+    ``(value, None)``, or ``(None, error class name)`` for a document
+    whose call raises, so one bad document never fails the batch."""
+    for v in html.to_pylist():
+        try:
+            yield one(_to_str(v, sniff)), None
+        except Exception as exc:
+            yield None, type(exc).__name__
+
+
+def _cell_udf(fn, return_type):
+    """A per-value Arrow UDF: ``fn`` of every cell of its one column
+    (NULL arrives as None), the values leaving as one ``pa.array`` of
+    ``return_type``'s Arrow type (a struct is a dict, an array a
+    list)."""
+    arrow_type = to_arrow_type(return_type)
+
+    def run(cells: pa.Array) -> pa.Array:
+        return pa.array([fn(v) for v in cells.to_pylist()], type=arrow_type)
+
+    return F.arrow_udf(run, return_type)
+
+
 def _doc_udf(return_type, make):
     """The one Arrow UDF body over an html column. ``make()`` runs once
     per Arrow batch and returns the per-document function, typically
-    closing over one Parser that ``parse()`` resets per document. Every
-    cell reaches it through :func:`_to_str`. Its values become one
+    closing over one Parser that ``parse()`` resets per document, which
+    :func:`_each_doc` runs over the batch. Its values become one
     ``pa.array`` of ``return_type``'s Arrow type: a struct or a map is
     a dict (a struct's missing keys are NULL fields, extra keys are
     ignored), an array a list. A timestamp value must be UTC-aware or
@@ -259,15 +287,11 @@ def _doc_udf(return_type, make):
     failed = {} if isinstance(return_type, StructType) else None
 
     def run(html: pa.Array) -> pa.Array:
-        one = make()
-        out = []
-        for v in html.to_pylist():
-            try:
-                value = one(_to_str(v))
-            except Exception:
-                value = None
-            out.append(failed if value is None else value)
-        return pa.array(out, type=arrow_type)
+        return pa.array(
+            [failed if value is None else value
+             for value, _ in _each_doc(html, make())],
+            type=arrow_type,
+        )
 
     return F.arrow_udf(run, return_type)
 
@@ -574,17 +598,7 @@ def sniff_decode_udf(default: str = "utf-8"):
             StructField("decoded", StringType()),
         ]
     )
-
-    arrow_type = to_arrow_type(schema)
-
-    def sniff(data: pa.Array) -> pa.Array:
-        return pa.array(
-            [decode_html(v if v is not None else b"", default)
-             for v in data.to_pylist()],
-            type=arrow_type,
-        )
-
-    return F.arrow_udf(sniff, schema)
+    return _cell_udf(lambda v: decode_html(v if v is not None else b"", default), schema)
 
 
 def sitemap_udf():

@@ -66,9 +66,11 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
+
+from ..functions.udfs import _cell_udf
 
 __all__ = [
     "WORD_PATTERN",
@@ -245,17 +247,10 @@ def _encode_udf(merges: list[tuple[int, str, str, int]], pattern: str):
     ranks = {(lhs, rhs): rank for rank, lhs, rhs, _cnt in merges}
     cache: dict[str, str] = {}
 
-    @F.pandas_udf("string")
-    def _enc(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                encode_text_py(t, ranks, pattern=pattern, cache=cache)
-                for t in texts
-            ],
-            dtype="object",
-        )
-
-    return _enc
+    return _cell_udf(
+        lambda t: encode_text_py(t, ranks, pattern=pattern, cache=cache),
+        StringType(),
+    )
 
 
 def encode_bpe(

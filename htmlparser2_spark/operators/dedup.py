@@ -162,10 +162,13 @@ def ngram_jaccard_pairs(
     Jaccard from set sizes. Returns (id_a, id_b, jaccard) with id_a <
     id_b and jaccard rounded to 4 decimals.
     """
+    # A lazy localCheckpoint, not cache(): computed once for the three
+    # readers below, and its blocks go with the DataFrame instead of
+    # staying pinned in the session's cache manager.
     sh = (
         word_shingles(df, n=n, text_col=text_col, id_col=id_col)
         .select("id", F.xxhash64("shingle").alias("sh"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.withColumnsRenamed({"id": "id_a"})

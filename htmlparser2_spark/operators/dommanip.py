@@ -34,7 +34,7 @@ does: one per-url set of matched ids and one join, at any depth.
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -216,7 +216,7 @@ def serialize_nodes(
 ) -> DataFrame:
     """Render each document's adjacency rows back to markup —
     getOuterHTML over the *relational* table, the mutate→serialize leg
-    of the manipulation roundtrip. One ``applyInPandas`` group per
+    of the manipulation roundtrip. One ``applyInArrow`` group per
     document (Arrow-batched; grouping shuffles only the nodes table,
     keyed by document, so partitions stay document-local at any scale).
     Sibling order follows idx_in_parent via the engine serializer."""
@@ -225,22 +225,25 @@ def serialize_nodes(
     cols = [key_col, "node_id", "parent_id", "idx_in_parent",
             "type", "name", "attrs", "attr_quotes", "data"]
 
-    def render(pdf: pd.DataFrame) -> pd.DataFrame:
-        recs = pdf.to_dict("records")
+    schema = pa.schema([(key_col, pa.string()), (out_col, pa.string())])
+
+    def render(table: pa.Table) -> pa.Table:
+        recs = table.to_pylist()
         for r in recs:
             # Arrow delivers MapType cells as lists of (k, v) tuples.
             for m in ("attrs", "attr_quotes"):
                 v = r[m]
                 r[m] = dict(v) if isinstance(v, (list, tuple)) else v
-        return pd.DataFrame(
+        return pa.table(
             {
-                key_col: [pdf[key_col].iloc[0]],
+                key_col: [recs[0][key_col]],
                 out_col: [serialize(recs, xml_mode=xml_mode)],
-            }
+            },
+            schema=schema,
         )
 
     return (
         nodes.select(*cols)
         .groupBy(key_col)
-        .applyInPandas(render, f"{key_col} string, {out_col} string")
+        .applyInArrow(render, f"{key_col} string, {out_col} string")
     )

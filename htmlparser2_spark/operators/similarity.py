@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import random
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -93,7 +93,7 @@ def brute_force_topk(
       the scale operators are validated against; keep it the default).
     * ``engine="arrow"``: the fast path. The (small, broadcast-by-
       contract) query side is collected ONCE into an ``nq x dim``
-      numpy matrix and closure-shipped into a ``mapInPandas`` over the
+      numpy matrix and closure-shipped into a ``mapInArrow`` over the
       corpus: per batch one BLAS matmul scores every (query, corpus)
       pair, and a per-batch **partial top-k** emits only ``nq * k``
       candidate rows per batch — so the exchange feeding the final
@@ -158,11 +158,11 @@ def _brute_force_topk_arrow(
     kk = k
 
     def partial_topk(batches):
-        for pdf in batches:
-            if not len(pdf) or q_mat is None:
+        for batch in batches:
+            if not len(batch) or q_mat is None:
                 continue
-            c_ids = pdf["_nid"].to_numpy(dtype=np.int64)
-            c_mat = np.array(list(pdf["_cv"]), dtype=np.float64)
+            c_ids = batch.column("_nid").to_numpy()
+            c_mat = np.array(batch.column("_cv").to_pylist(), dtype=np.float64)
             c_norm = np.linalg.norm(c_mat, axis=1)
             # dot / (|a| * |b|), the same arithmetic as _cosine
             # (normalizing the vectors first would add a second
@@ -185,7 +185,7 @@ def _brute_force_topk_arrow(
                 out_q.append(np.full(take, q_ids[j]))
                 out_n.append(c_ids[sel])
                 out_s.append(sims[sel, j])
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "query_id": np.concatenate(out_q),
                     "neighbor_id": np.concatenate(out_n),
@@ -197,7 +197,7 @@ def _brute_force_topk_arrow(
         F.col(id_col).cast("long").alias("_nid"),
         _as_double(F.col(vec_col)).alias("_cv"),
     )
-    partial = prepared.mapInPandas(
+    partial = prepared.mapInArrow(
         partial_topk, "query_id long, neighbor_id long, sim double"
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -626,14 +626,16 @@ def pq_encode(
 
     cb = np.asarray(codebooks, dtype=np.float64)  # (m, k, subdim)
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _codes(vecs: pd.Series) -> pd.Series:
-        arr = np.asarray(list(vecs), dtype=np.float64)  # (n, dim)
+    @F.arrow_udf(ArrayType(IntegerType()))
+    def _codes(vecs: pa.Array) -> pa.Array:
+        arr = np.asarray(vecs.to_pylist(), dtype=np.float64)  # (n, dim)
         subs = arr.reshape(len(arr), m, subdim)  # (n, m, subdim)
         # (n, m, k): squared distance of each sub-vector to each codeword
         d = ((subs[:, :, None, :] - cb[None, :, :, :]) ** 2).sum(axis=3)
         codes = d.argmin(axis=2).astype("int32")  # first minimum on ties
-        return pd.Series(list(codes))
+        return pa.ListArray.from_arrays(
+            np.arange(len(arr) + 1, dtype=np.int32) * m, pa.array(codes.ravel())
+        )
 
     return df.withColumn(code_col, _codes(F.col(vec_col)))
 

@@ -2,7 +2,7 @@
 
 The cluster-scale shape of the reference's streaming parse (SURVEY.md §3
 "Spark lifecycle"): explicit repartitioning by url hash, oversized-document
-isolation, one ``mapInPandas`` pass that parses each document and carries
+isolation, one ``mapInArrow`` pass that parses each document and carries
 per-partition lineage, and checkpoint-resumable bucketed writes.
 
 Scale design notes
@@ -26,8 +26,13 @@ Scale design notes
   handled separately by routing oversized documents (> ``jumbo_bytes``)
   into their own url-hash-partitioned branch so one 100MB page cannot
   stall a 2048-row Arrow batch.
-* The parse is a single ``mapInPandas`` over Arrow batches: one
-  JVM->Python transfer per batch, no per-row dispatch, no collect().
+* The parse is a single ``mapInArrow`` over Arrow batches: one
+  JVM->Python transfer per batch, no per-row dispatch, no collect(),
+  no pandas layer. ``url`` and ``lang`` pass through as the batch's
+  own Arrow arrays and ``html_bytes`` is ``binary_length`` of the html
+  column; only the extracted text, ``n_tags`` and ``error`` are built
+  from Python values. It stays its own map pass: a ``select`` over
+  ``_doc_udf`` plans as ArrowEvalPython and measured slower (CLAUDE.md).
 * Output is written bucketed by ``pmod(xxhash64(url), n_buckets)``; a
   JSON manifest records completed buckets, and :func:`run_extract` with
   ``resume=True`` filters them out of the input scan (partition pruning
@@ -43,9 +48,9 @@ Scale design notes
 * No document fails the task: a document whose extraction raises gets
   a NULL ``extracted``, 0 ``n_tags`` and the exception's class name in
   ``error``, and the batch goes on.
-* Documents are decoded and extracted by functions/udfs.py's
-  ``_to_str`` and ``_make_extract``, the same decoder and extractors
-  as the HTML UDFs.
+* Documents run through functions/udfs.py's ``_each_doc`` (the one
+  per-document loop, decoding with ``_to_str``) and ``_make_extract``,
+  the same loop, decoder and extractors as the HTML UDFs.
 """
 
 from __future__ import annotations
@@ -55,9 +60,11 @@ import os
 import time
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -66,7 +73,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.udfs import _make_extract, _to_str
+from ..functions.udfs import _each_doc, _make_extract
 
 __all__ = ["parse_pages", "run_extract", "partition_metrics"]
 
@@ -92,10 +99,12 @@ _UDF_INPUTS = ("url", "html", "text", "lang")
 
 
 def _parse_batches_fn(mode: str, sniff_charset: bool = False):
+    schema = to_arrow_schema(PARSED_SCHEMA)
+
     def _parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        """mapInPandas worker: parse every document in every Arrow batch."""
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        """mapInArrow worker: parse every document in every Arrow batch."""
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
@@ -103,67 +112,45 @@ def _parse_batches_fn(mode: str, sniff_charset: bool = False):
 
         extract = _make_extract(mode)
         for batch in batches:
-            # Series.__iter__ is slow; pull plain python lists once per
-            # batch.
-            htmls = batch["html"].tolist()
-            # Real crawls carry no expected-extraction column;
-            # golden_match is then reported as 0 matches over 0 checks
-            # (sum stays usable). In mode="main"/"markdown" the golden
-            # column is the FULL-extraction text, so matches stay 0 by
-            # design.
-            goldens = (
-                batch["text"].tolist()
-                if "text" in batch.columns
-                else [None] * len(htmls)
+            html = batch.column("html")
+            extracted, n_tags, errors = [], [], []
+            for value, error in _each_doc(html, extract, sniff_charset):
+                text, tags = value or (None, 0)
+                extracted.append(text)
+                n_tags.append(tags)
+                errors.append(error)
+            extracted = pa.array(extracted, pa.string())
+            n_tags = pa.array(n_tags, pa.int32())
+            # golden_match compares the output with whatever ``text``
+            # holds; real crawls carry no such column, and a NULL
+            # ``text`` never matches, so the sum stays usable.
+            n = len(batch)
+            golden = (
+                batch.column("text")
+                if "text" in batch.schema.names
+                else pa.nulls(n, pa.string())
             )
-            extracted_col = []
-            match_col = []
-            tags_col = []
-            events_col = []
-            bytes_col = []
-            error_col = []
-            for html, golden in zip(htmls, goldens):
-                # NULL payloads (fetch failures in real crawls) parse as
-                # empty documents instead of failing the task. With
-                # sniff_charset, BINARY payloads go through the BOM +
-                # meta prescan decoder (engine/encoding.py) instead of
-                # assumed-UTF-8. A document that raises is one NULL row
-                # carrying its error class (module notes).
-                try:
-                    extracted, n_tags = extract(_to_str(html, sniff_charset))
-                    error = None
-                except Exception as exc:
-                    extracted, n_tags, error = None, 0, type(exc).__name__
-                error_col.append(error)
-                extracted_col.append(extracted)
-                match_col.append(
-                    1 if golden is not None and extracted == golden else 0
-                )
-                tags_col.append(n_tags)
-                # Not a count: opens+closes pair up, so event volume is
-                # estimated as 2 x tags (exact counting lives in
-                # doc_stats_udf).
-                events_col.append(2 * n_tags)
-                # UTF-8 bytes for STRING payloads: octet_length(html),
-                # the measure jumbo_bytes routes on.
-                bytes_col.append(
-                    0 if html is None
-                    else len(html.encode()) if isinstance(html, str)
-                    else len(html)
-                )
-            yield pd.DataFrame(
+            # from_pydict casts each array to its field's Arrow type:
+            # mapInArrow reads the batch as it is and coerces nothing.
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "url": batch["url"],
-                    "lang": batch["lang"],
-                    "extracted": extracted_col,
-                    "golden_match": match_col,
-                    "n_tags": tags_col,
-                    "n_events": events_col,
-                    "html_bytes": bytes_col,
-                    "pid": pid,
-                    "wall_ms": int((time.perf_counter() - t0) * 1000),
-                    "error": error_col,
-                }
+                    "url": batch.column("url"),
+                    "lang": batch.column("lang"),
+                    "extracted": extracted,
+                    "golden_match": pc.fill_null(pc.equal(extracted, golden), False),
+                    "n_tags": n_tags,
+                    # Not a count: opens+closes pair up, so event volume
+                    # is estimated as 2 x tags (exact counting lives in
+                    # doc_stats_udf).
+                    "n_events": pc.multiply(n_tags, 2),
+                    # octet_length(html), the measure jumbo_bytes routes
+                    # on: bytes for BINARY, UTF-8 bytes for STRING.
+                    "html_bytes": pc.fill_null(pc.binary_length(html), 0),
+                    "pid": pa.repeat(pid, n),
+                    "wall_ms": pa.repeat(int((time.perf_counter() - t0) * 1000), n),
+                    "error": pa.array(errors, pa.string()),
+                },
+                schema=schema,
             )
 
     return _parse_batches
@@ -178,7 +165,7 @@ def parse_pages(
     mode: str = "text",
     sniff_charset: bool = False,
 ) -> DataFrame:
-    """Parse a pages DataFrame with one ``mapInPandas`` pass.
+    """Parse a pages DataFrame with one ``mapInArrow`` pass.
 
     ``html`` may be a BINARY or a STRING column. NULL parses as the
     empty document; BINARY decodes as UTF-8 with U+FFFD replacement, or
@@ -222,6 +209,7 @@ def parse_pages(
     pages = pages.select(*[c for c in _UDF_INPUTS if c in pages.columns])
     spark = pages.sparkSession
     n = n_partitions or spark.sparkContext.defaultParallelism
+    parse = _parse_batches_fn(mode, sniff_charset)
     if jumbo_bytes is not None:
         # octet_length measures bytes for BINARY and UTF-8 bytes for
         # STRING columns; length() would count characters for strings,
@@ -235,11 +223,7 @@ def parse_pages(
             sniff_charset=sniff_charset,
         )
         jumbo = pages.filter(is_jumbo).repartition(n, F.xxhash64("url"))
-        return normal.unionByName(
-            jumbo.mapInPandas(
-                _parse_batches_fn(mode, sniff_charset), PARSED_SCHEMA
-            )
-        )
+        return normal.unionByName(jumbo.mapInArrow(parse, PARSED_SCHEMA))
     if repartition is None:
         # Read the file count from the plan rather than df.rdd (which
         # converts the whole logical plan to an RDD on every call just
@@ -253,9 +237,7 @@ def parse_pages(
         repartition = n_in < n
     if repartition:
         pages = pages.repartition(n, F.xxhash64("url"))
-    return pages.mapInPandas(
-        _parse_batches_fn(mode, sniff_charset), PARSED_SCHEMA
-    )
+    return pages.mapInArrow(parse, PARSED_SCHEMA)
 
 
 def partition_metrics(parsed: DataFrame) -> DataFrame:
@@ -290,8 +272,9 @@ def run_extract(
 
     ``mode="main"`` runs the readability-lite main-content selection,
     ``mode="markdown"`` the structure-keeping Markdown rendering,
-    instead of full textContent (golden matches stay 0 in both — the
-    pages golden is the full extraction). ``sniff_charset=True`` routes
+    instead of full textContent; ``golden_match`` compares the output
+    with whatever the input's ``text`` column holds, in every mode.
+    ``sniff_charset=True`` routes
     input bytes through the BOM + meta-prescan decoder instead of
     assumed-UTF-8 (mixed-encoding crawls). Returns a summary dict
     (docs, matches, buckets written/skipped).

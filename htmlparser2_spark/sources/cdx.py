@@ -22,10 +22,11 @@ tooling. The driver oracle stays on the hex default.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
+from ..functions.udfs import _cell_udf
 from ..functions.urls import surt_key
 
 __all__ = ["cdx_index", "DIGEST_FORMATS"]
@@ -41,15 +42,12 @@ def _sha1_b32_udf():
     import base64
     import hashlib
 
-    @F.pandas_udf("string")
-    def _digest(payload: pd.Series) -> pd.Series:
-        return payload.map(
-            lambda b: None
-            if b is None
-            else base64.b32encode(hashlib.sha1(b).digest()).decode("ascii")
-        )
-
-    return _digest
+    return _cell_udf(
+        lambda b: None
+        if b is None
+        else base64.b32encode(hashlib.sha1(b).digest()).decode("ascii"),
+        StringType(),
+    )
 
 
 def cdx_index(

@@ -18,8 +18,6 @@ the parse is oracle-checked end-to-end (q_warc_roundtrip).
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -28,6 +26,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..functions.udfs import _cell_udf
 
 __all__ = [
     "WARC_RECORD_SCHEMA",
@@ -119,11 +119,7 @@ def warc_record_udf():
     """binary WARC record (plain or a gzip member) -> struct (see
     WARC_RECORD_SCHEMA)."""
 
-    @F.pandas_udf(WARC_RECORD_SCHEMA)
-    def _parse(rec: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame([_parse_record(r) for r in rec])
-
-    return _parse
+    return _cell_udf(_parse_record, WARC_RECORD_SCHEMA)
 
 
 def _split_warc_file(data: bytes) -> list[bytes]:
@@ -171,13 +167,9 @@ def warc_file_records_udf():
     ("binaryFile")`` for raw-crawl ingestion; a corrupt tail yields
     the records before it rather than failing the task."""
 
-    @F.pandas_udf(ArrayType(BinaryType()))
-    def _split(files: pd.Series) -> pd.Series:
-        return files.map(
-            lambda d: [] if d is None else _split_warc_file(bytes(d))
-        )
-
-    return _split
+    return _cell_udf(
+        lambda d: [] if d is None else _split_warc_file(d), ArrayType(BinaryType())
+    )
 
 
 def warc_pages_expr(dialect: str) -> str:

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import time
 
-import pandas as pd
 import pyarrow as pa
 import pytest
 
@@ -116,14 +115,14 @@ def test_batch_loops_turn_a_raising_document_into_a_null_row(monkeypatch):
     monkeypatch.setattr(extract_job, "_make_extract", _raising_on_bad)
     monkeypatch.setattr(udfs, "_make_extract", _raising_on_bad)
     htmls = ["<p>a <b>x</b></p>", "bad", None]
-    batch = pd.DataFrame(
+    batch = pa.RecordBatch.from_pydict(
         {"url": ["u0", "u1", "u2"], "html": htmls, "lang": ["en"] * 3}
     )
     parse = extract_job._parse_batches_fn("markdown")
-    out = pd.concat(list(parse(iter([batch]))))
-    assert out["extracted"].tolist() == ["a **x**", None, ""]
-    assert out["error"].tolist() == [None, "ValueError", None]
-    assert out["n_tags"].tolist() == [2, 0, 0]
+    out = pa.Table.from_batches(list(parse(iter([batch]))))
+    assert out["extracted"].to_pylist() == ["a **x**", None, ""]
+    assert out["error"].to_pylist() == [None, "ValueError", None]
+    assert out["n_tags"].to_pylist() == [2, 0, 0]
     run = udfs.markdown_udf().func
     assert run(pa.array(htmls)).to_pylist() == ["a **x**", None, ""]
 

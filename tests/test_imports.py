@@ -7,6 +7,7 @@ F.array(F.lit(...)) in operators/contamination.py broke
 `import htmlparser2_spark.plans.curate_job` on a cold interpreter.
 """
 
+import ast
 import pathlib
 import subprocess
 import sys
@@ -32,3 +33,40 @@ def test_all_modules_import_without_spark_context():
         text=True,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+# pandas boundaries that have an Arrow form (arrow_udf, mapInArrow,
+# applyInArrow). applyInPandasWithState has none, so streaming/stateful.py
+# is the one module that may use pandas.
+_PANDAS_CALLS = {"pandas_udf", "mapInPandas", "applyInPandas"}
+_PANDAS_ALLOWED = {"htmlparser2_spark/streaming/stateful.py"}
+
+
+def _pandas_uses(tree) -> list[str]:
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            found += [a.name for a in node.names if a.name.split(".")[0] == "pandas"]
+        elif isinstance(node, ast.ImportFrom):
+            if (node.module or "").split(".")[0] == "pandas":
+                found.append(node.module)
+        elif isinstance(node, ast.Attribute) and node.attr in _PANDAS_CALLS:
+            found.append(node.attr)
+        elif isinstance(node, ast.Name) and node.id in _PANDAS_CALLS:
+            found.append(node.id)
+    return found
+
+
+def test_no_pandas_layer_outside_stateful_streaming():
+    """Every Python boundary of the package is Arrow: no module but
+    streaming/stateful.py imports pandas or uses a pandas UDF form."""
+    offenders = {}
+    for path in sorted((REPO / "htmlparser2_spark").rglob("*.py")):
+        rel = path.relative_to(REPO).as_posix()
+        uses = _pandas_uses(ast.parse(path.read_text(), rel))
+        if uses and rel not in _PANDAS_ALLOWED:
+            offenders[rel] = uses
+    assert offenders == {}
+    assert _pandas_uses(ast.parse("import pandas as pd\ndf.mapInPandas(f, s)")) == [
+        "pandas", "mapInPandas"
+    ]

@@ -62,7 +62,7 @@ def test_parse_pipeline_has_no_shuffle_when_scan_partitioned(spark, page_scans):
     parsed = parse_pages(build_pages(spark, SF), repartition=False)
     p = plan(parsed)
     assert "Exchange" not in p  # scan partitioning carries through
-    assert "mapInPandas" in p or "MapInPandas" in p
+    assert "MapInArrow" in p
 
     par = spark.sparkContext.defaultParallelism
     parsed = parse_pages(spark.read.parquet(page_scans[0]))
@@ -244,7 +244,7 @@ def test_ivf_broadcasts_probe_side_with_pushdown(spark):
 
 
 def test_jumbo_branch_is_union_of_two_parse_passes(spark):
-    """Size-skew routing: one Union of two MapInPandas branches; no
+    """Size-skew routing: one Union of two MapInArrow branches; no
     extra shuffle beyond the two explicit url-hash repartitions."""
     from htmlparser2_spark.plans.extract_job import parse_pages
     from htmlparser2_spark.sources.pages import build_pages
@@ -254,7 +254,7 @@ def test_jumbo_branch_is_union_of_two_parse_passes(spark):
     )
     p = plan(parsed)
     assert "Union" in p
-    assert p.count("MapInPandas") >= 2
+    assert p.count("MapInArrow") >= 2
 
 
 def test_ivf_seed_selection_has_no_global_sort(spark):

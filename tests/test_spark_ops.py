@@ -246,6 +246,16 @@ def test_ngram_jaccard_pairs(spark, dup_docs):
         assert 0.5 <= pairs[(i, i + 20_000)] < 1.0
 
 
+def test_ngram_jaccard_pairs_leaves_cache_manager_empty(spark, dup_docs):
+    """The shingle table is read three times but never cached: after a
+    call and an action the session's cache manager is empty."""
+    from htmlparser2_spark.operators.dedup import ngram_jaccard_pairs
+
+    spark.catalog.clearCache()
+    assert ngram_jaccard_pairs(dup_docs, threshold=0.5).count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_jaccard_verify_matches_full_jaccard_on_pairs(spark, dup_docs):
     """The candidate-only verify stage must produce the same jaccard
     values as the full self-join operator on every shared pair."""
@@ -760,7 +770,7 @@ def test_image_audio_features_real_bytes(spark):
 
 def test_pdf_real_text_through_spark(spark):
     """An uncompressed PDF with genuine text operators extracts its real
-    text (reading order preserved) through the mapInPandas path."""
+    text (reading order preserved) through the mapInArrow path."""
     from htmlparser2_spark.functions.pdf import pdf_spans, pdf_text
 
     content = b"BT 72 700 Td (First line) Tj 0 -14 TD (Second line) Tj ET"
@@ -848,6 +858,65 @@ def test_parse_pages_null_payloads(spark):
     assert rows["u1"]["extracted"] == "ok" and rows["u1"]["golden_match"] == 1
     assert rows["u2"]["extracted"] == "" and rows["u2"]["html_bytes"] == 0
     assert rows["u2"]["golden_match"] == 0
+
+
+@pytest.mark.parametrize("html_type", ["string", "binary"])
+def test_parse_pages_output_types_and_values(spark, monkeypatch, html_type):
+    """Both parse_pages branches (the default pass, and jumbo_bytes'
+    two passes) give PARSED_SCHEMA exactly, over STRING and BINARY
+    html, NULL html and a raising document: html_bytes is
+    octet_length(html) (0 for NULL), n_events is 2 x n_tags, and a
+    raising document is a NULL extraction with its class in error."""
+    from htmlparser2_spark.functions import udfs
+    from htmlparser2_spark.plans import extract_job
+
+    def raising_extract(mode, **options):
+        # Captured with the worker function when parse_pages plans it.
+        extract = udfs._make_extract(mode, **options)
+
+        def one(doc):
+            if "raise" in doc:
+                raise ValueError(doc)
+            return extract(doc)
+
+        return one
+
+    monkeypatch.setattr(extract_job, "_make_extract", raising_extract)
+    docs = {
+        "u1": ("<p>é <b>x</b></p>", "é x"),
+        "u2": (None, None),
+        "u3": ("<p>raise</p>", "raise"),
+        "u4": ("<div>raise " + "y" * 40 + "</div>", None),
+        "u5": ("<p>" + "long " * 10 + "</p>", "wrong"),
+    }
+    pages = spark.createDataFrame(
+        [(u, h, t, "en") for u, (h, t) in docs.items()],
+        "url string, html string, text string, lang string",
+    ).withColumn("html", F.col("html").cast(html_type)).coalesce(1)
+    octets = {
+        r["url"]: r["n"]
+        for r in pages.select(
+            "url", F.coalesce(F.octet_length("html"), F.lit(0)).alias("n")
+        ).collect()
+    }
+    text = udfs._make_extract("text")
+    for kwargs in ({}, {"jumbo_bytes": 30}):
+        parsed = extract_job.parse_pages(pages, repartition=False, **kwargs)
+        assert parsed.schema == extract_job.PARSED_SCHEMA
+        rows = {r["url"]: r for r in parsed.collect()}
+        assert sorted(rows) == sorted(docs)
+        for url, (html, golden) in docs.items():
+            r = rows[url]
+            raises = html is not None and "raise" in html
+            extracted, n_tags = (None, 0) if raises else text(html or "")
+            assert r["lang"] == "en"
+            assert r["extracted"] == extracted
+            assert r["error"] == ("ValueError" if raises else None)
+            assert r["n_tags"] == n_tags and r["n_events"] == 2 * n_tags
+            assert r["html_bytes"] == octets[url]
+            assert r["golden_match"] == int(golden is not None and golden == extracted)
+            assert r["pid"] >= 0 and r["wall_ms"] >= 0
+    assert octets["u1"] == len(docs["u1"][0].encode()) > len(docs["u1"][0])
 
 
 def test_ivf_topk_recall_vs_brute_force(spark):

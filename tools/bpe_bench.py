@@ -1,7 +1,7 @@
 """Single-thread BPE-encode kernel throughput (no Spark).
 
 Measures the per-core work of ``encode_bpe``'s Arrow kernel
-(``encode_text_py`` — the exact per-row function the pandas UDF runs)
+(``encode_text_py`` — the exact per-row function the Arrow UDF runs)
 at a REALISTIC merge-table depth (8k+): per distinct word the cost is
 pair-rank dict lookups, never one string scan per merge, so encode
 cost does not grow with the table's depth.

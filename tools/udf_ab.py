@@ -1,4 +1,4 @@
-"""Spark A/B of the document UDFs of two source trees.
+"""Spark A/B of the document UDFs and ``parse_pages`` of two source trees.
 
 Each rep starts one fresh Spark JVM per tree, in a child process whose
 ``htmlparser2_spark`` (driver and Python workers) comes from that tree,
@@ -13,7 +13,12 @@ parquet with one file per core:
 * ``explode_nodes`` - ``operators.domquery.explode_nodes``: the
   ``dom_nodes_udf`` rows (list<struct<map>>) exploded to one row per
   node;
-* ``extract_text_udf`` and ``markdown_udf`` - one string per page.
+* ``extract_text_udf`` and ``markdown_udf`` - one string per page;
+* ``parse_pages_text`` and ``parse_pages_markdown`` -
+  ``plans.extract_job.parse_pages`` in that mode: the batch loop both
+  ``perfbench`` workloads run, over every ``PARSED_SCHEMA`` column
+  (``wall_ms`` enters the fingerprint only as ``wall_ms >= 0``, since
+  its value differs from run to run).
 
 Every run ends in one aggregate over all output columns (row count and
 a sum of per-row hashes; maps go through ``to_json``, since Spark does
@@ -43,7 +48,10 @@ import tempfile
 import time
 
 SEED = 521
-CASES = ("explode_nodes", "extract_text_udf", "markdown_udf")
+CASES = (
+    "explode_nodes", "extract_text_udf", "markdown_udf",
+    "parse_pages_text", "parse_pages_markdown",
+)
 METRICS = ("python_cpu_s", "jvm_cpu_s", "wall_s")
 
 
@@ -67,6 +75,12 @@ def case_frames(pages) -> dict:
 
     from htmlparser2_spark.functions.udfs import extract_text_udf, markdown_udf
     from htmlparser2_spark.operators.domquery import explode_nodes
+    from htmlparser2_spark.plans.extract_job import parse_pages
+
+    def parsed(mode: str):
+        df = parse_pages(pages, mode=mode)
+        cols = [F.col(c) for c in df.columns if c != "wall_ms"]
+        return df, cols + [F.col("wall_ms") >= 0]
 
     nodes = explode_nodes(pages)
     node_cols = [
@@ -83,6 +97,8 @@ def case_frames(pages) -> dict:
             pages.select("url", markdown_udf()(F.col("html")).alias("t")),
             [F.col("url"), F.col("t")],
         ),
+        "parse_pages_text": parsed("text"),
+        "parse_pages_markdown": parsed("markdown"),
     }
 
 
