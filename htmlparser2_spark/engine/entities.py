@@ -8,7 +8,7 @@ Three decoding modes (see /root/reference/src/Tokenizer.ts:825-863):
 * ``STRICT``    — XML: named refs limited to the five predefined XML
   entities, and every reference (named or numeric) must end with ``;``.
 * ``LEGACY``    — HTML text content: named refs without ``;`` decode iff
-  they are in the spec's legacy set (the ~106 semicolon-less table keys),
+  they are in the spec's legacy set (the 106 semicolon-less table keys),
   using longest-prefix matching (``&timesbar`` -> ``×bar``).
 * ``ATTRIBUTE`` — like LEGACY, but a semicolon-less named match is NOT
   decoded when the next character is ``=`` or alphanumeric
@@ -17,8 +17,17 @@ Three decoding modes (see /root/reference/src/Tokenizer.ts:825-863):
 
 Numeric references: decimal/hex, ``;`` optional outside STRICT; zero
 digits back out entirely (``&#x;`` stays literal); code points are
-remapped per the spec (NUL and out-of-range -> U+FFFD, C1 range via the
-windows-1252 table).
+remapped per the spec (NUL, surrogates and anything past U+10FFFF ->
+U+FFFD, however many digits; C1 range via the windows-1252 table).
+
+One resolver, like the reference's single ``EntityDecoder``: a named
+reference resolves against one per-mode table of every ``;``-terminated
+name (or, semicolon-less, the legacy set), and a numeric one through
+one parser, :func:`_codepoint`. :func:`decode_at` is that resolver for
+one ``&`` (the tokenizer's per-reference step). A text span
+(:func:`decode_text_span`) either takes the replace-chain, where every
+reference is ``;``-terminated and resolved whole by those same two
+steps, or runs the sequential ``decode_at`` scan (:func:`decode_text`).
 
 This module is pure Python (no Spark imports) so it can run inside
 Arrow-batched UDF workers with zero per-row setup cost.
@@ -36,8 +45,7 @@ STRICT = 0
 LEGACY = 1
 ATTRIBUTE = 2
 
-# The five predefined XML entities; STRICT mode additionally requires the
-# terminating semicolon, so only the ';'-keys are reachable.
+# The five predefined XML entities: STRICT mode's whole named table.
 _XML_ENTITIES = {
     "amp;": "&",
     "apos;": "'",
@@ -81,228 +89,89 @@ _C1_REMAP = {
 }
 
 
-def _build_trie(table: dict[str, str]) -> dict:
-    """Build a nested-dict trie over entity names (';' included in keys).
+# Every ';'-terminated name a mode decodes, indexed by mode. Entity
+# names are [a-zA-Z][a-zA-Z0-9]* (html.entities.html5's keys, with an
+# optional trailing ';'), so a ';'-terminated match always ends at the
+# first ';' after the '&', and a probe there is the longest match.
+_HTML_TERMINATED = {k: v for k, v in _HTML5.items() if k[-1] == ";"}
+_TERMINATED = (_XML_ENTITIES, _HTML_TERMINATED, _HTML_TERMINATED)
+_NAME_MAX = max(map(len, _HTML_TERMINATED))
+# The semicolon-less (legacy) names, each a prefix of its own
+# ';'-terminated name: matched longest-first when no terminated name
+# does (LEGACY and ATTRIBUTE only).
+_LEGACY = {k: v for k, v in _HTML5.items() if k[-1] != ";"}
+_LEGACY_MAX = max(map(len, _LEGACY))
 
-    A node is ``{char: child, ...}`` with the sentinel key ``None``
-    holding the replacement string for names that terminate there.
-    """
-    root: dict = {}
-    for name, value in table.items():
-        node = root
-        for ch in name:
-            node = node.setdefault(ch, {})
-        node[None] = value
-    return root
-
-
-_HTML_TRIE = _build_trie(_HTML5)
-_XML_TRIE = _build_trie(_XML_ENTITIES)
+_RE_NUMERIC = re.compile(r"#(?:([0-9]+)|[xX]([0-9a-fA-F]+))(;?)")
 
 
-def _replace_codepoint(cp: int) -> int:
-    if 0xD800 <= cp <= 0xDFFF or cp > 0x10FFFF:
-        return 0xFFFD
-    return _C1_REMAP.get(cp, cp)
+def _codepoint(digits: str, base: int) -> str:
+    """The character a numeric reference's digit run names: the one
+    numeric parser. NUL, surrogates and anything past U+10FFFF give
+    U+FFFD, the C1 range remaps via windows-1252.
 
-
-_HEX_DIGITS = set("0123456789abcdefABCDEF")
-_DEC_DIGITS = set("0123456789")
-
-# Fast path for the handful of references that dominate real HTML.
-# Maps the exact text following '&' to (codepoints, consumed-from-&).
-# Only safe entries: fully-terminated (';') references whose decode is
-# mode-independent apart from STRICT's name restriction.
-_COMMON = {
-    "amp;": ([38], 5),
-    "lt;": ([60], 4),
-    "gt;": ([62], 4),
-    "quot;": ([34], 6),
-    "apos;": ([39], 6),
-}
-_COMMON_XML = _COMMON
-_COMMON_HTML = {
-    **_COMMON,
-    "nbsp;": ([0xA0], 6),
-    "copy;": ([0xA9], 6),
-    "mdash;": ([0x2014], 7),
-    "ndash;": ([0x2013], 7),
-    "rsquo;": ([0x2019], 7),
-    "lsquo;": ([0x2018], 7),
-    "rdquo;": ([0x201D], 7),
-    "ldquo;": ([0x201C], 7),
-    "hellip;": ([0x2026], 8),
-    "#39;": ([39], 5),
-    "#034;": ([34], 6),
-    "#038;": ([38], 6),
-}
+    A run with more significant digits than U+10FFFF has (7 decimal, 6
+    hex) is past it, however long: ``int()`` never sees it (its string
+    limit would raise past 4300 digits)."""
+    if len(digits) > 6:
+        digits = digits.lstrip("0") or "0"
+        if len(digits) > (7 if base == 10 else 6):
+            return "\ufffd"
+    cp = int(digits, base)
+    if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
+        return "\ufffd"
+    return chr(_C1_REMAP.get(cp, cp))
 
 
 def decode_at(s: str, amp: int, mode: int):
     """Try to decode a character reference starting at ``s[amp] == '&'``.
 
-    Returns ``(codepoints, consumed)`` where ``consumed`` counts from the
-    ``&`` inclusive, or ``None`` when no reference matches (the ``&`` and
-    everything after it remain literal text; the caller rescans from
-    ``amp + 1``).
+    Returns ``(replacement, consumed)`` where ``consumed`` counts from
+    the ``&`` inclusive, or ``None`` when no reference matches (the
+    ``&`` and everything after it remain literal text; the caller
+    rescans from ``amp + 1``).
     """
-    n = len(s)
     i = amp + 1
-    if i >= n:
-        return None
-    c = s[i]
-
-    # Dominant references resolve with one dict probe (longest common
-    # entry is 8 chars; a probe hit is always the longest match since
-    # every entry ends in ';').
-    table = _COMMON_XML if mode == STRICT else _COMMON_HTML
-    semi = s.find(";", i, i + 8)
+    if s.startswith("#", i):
+        # Numeric: zero digits back out ("&#x;", "&#anchor").
+        m = _RE_NUMERIC.match(s, i)
+        if m is None:
+            return None
+        dec, hexa, semi = m.groups()
+        if not semi and mode == STRICT:
+            return None
+        char = _codepoint(dec, 10) if dec is not None else _codepoint(hexa, 16)
+        return char, m.end() - amp
+    semi = s.find(";", i, i + _NAME_MAX)
     if semi != -1:
-        hit = table.get(s[i : semi + 1])
-        if hit is not None:
-            return hit
-
-    if c == "#":
-        # Numeric reference.
-        i += 1
-        hexmode = False
-        if i < n and (s[i] == "x" or s[i] == "X"):
-            hexmode = True
-            i += 1
-        digits_start = i
-        allowed = _HEX_DIGITS if hexmode else _DEC_DIGITS
-        while i < n and s[i] in allowed:
-            i += 1
-        if i == digits_start:
-            # No digits: back out fully ("&#x;", "&#anchor").
-            return None
-        has_semi = i < n and s[i] == ";"
-        if mode == STRICT and not has_semi:
-            return None
-        value = int(s[digits_start:i], 16 if hexmode else 10)
-        if has_semi:
-            i += 1
-        return ([_replace_codepoint(value)], i - amp)
-
-    # Named reference: walk the trie, remembering the last terminal node.
-    node = _XML_TRIE if mode == STRICT else _HTML_TRIE
-    best_value: str | None = None
-    best_end = i
-    best_semi = False
-    j = i
-    while j < n:
-        node = node.get(s[j])
-        if node is None:
-            break
-        j += 1
-        value = node.get(None)
+        value = _TERMINATED[mode].get(s[i : semi + 1])
         if value is not None:
-            best_value = value
-            best_end = j
-            best_semi = s[j - 1] == ";"
-    if best_value is None:
+            return value, semi + 1 - amp
+    if mode == STRICT:
         return None
-    if not best_semi:
-        if mode == STRICT:
+    n = len(s)
+    for end in range(min(i + _LEGACY_MAX, n), i + 1, -1):
+        value = _LEGACY.get(s[i:end])
+        if value is not None:
+            break
+    else:
+        return None
+    if mode == ATTRIBUTE and end < n:
+        # A semicolon-less named match followed by '=' or an ASCII
+        # alphanumeric character stays literal (legacy URL params).
+        nxt = s[end]
+        if nxt == "=" or (nxt.isascii() and nxt.isalnum()):
             return None
-        if mode == ATTRIBUTE:
-            # A semicolon-less named match followed by '=' or an
-            # alphanumeric character stays literal (legacy URL params).
-            if best_end < n:
-                nxt = s[best_end]
-                if nxt == "=" or (
-                    "0" <= nxt <= "9" or "a" <= nxt <= "z" or "A" <= nxt <= "Z"
-                ):
-                    return None
-    return ([ord(ch) for ch in best_value], best_end - amp)
+    return value, end - amp
 
 
 # Every syntactic shape a character reference can take: numeric
 # (dec/hex, optional ';') or a named candidate (alnum run, optional
-# ';'). Entity names are strictly alphanumeric (html.entities.html5
-# keys are [a-zA-Z][a-zA-Z0-9]* with an optional trailing ';'), so the
-# maximal-munch alnum run always covers the longest possible trie
-# match, and the matched text can never contain another '&' — which is
-# what makes single-pass re.sub equivalent to the tokenizer's
-# sequential rescan-past-'&' semantics.
+# ';'). A match never contains another '&', and two ';'-terminated
+# matches can never overlap or nest.
 _RE_ANY_REF = re.compile(
     r"&(#[0-9]+;?|#[xX][0-9a-fA-F]+;?|[a-zA-Z][a-zA-Z0-9]*;?)"
 )
-
-# Full terminated-name tables for the one-probe fast path: name
-# (with ';') -> replacement. Covers every spec entity, not just the
-# dominant handful, so a callable hit is one dict lookup.
-_FULL_HTML_SEMI = {k: v for k, v in _HTML5.items() if k.endswith(";")}
-_FULL_XML_SEMI = dict(_XML_ENTITIES)
-
-
-def _make_span_repl(mode: int):
-    """Build the re.sub callable for ``mode``: one dict probe for any
-    fully-terminated named reference, inline int() for numerics, and
-    the trie walker (:func:`decode_at`) only for the rare legacy /
-    longest-prefix / attribute-lookahead cases. When decode_at
-    consumes fewer characters than the regex matched (prefix match),
-    the undecoded tail is appended literally — it is pure alnum/';'
-    and cannot itself start a reference, so this reproduces the
-    sequential scan exactly.
-
-    A memo cache keyed on the full match text front-runs everything:
-    the result is a pure function of the matched text in STRICT/LEGACY
-    (decode never looks past the maximal-munch match), and in
-    ATTRIBUTE for ';'-terminated matches (a prefix match's lookahead
-    char is inside the match; only a semicolon-LESS full match looks
-    at the following character, so those are never cached). Bounded to
-    keep adversarial all-distinct numeric streams from growing it."""
-    table = _FULL_XML_SEMI if mode == STRICT else _FULL_HTML_SEMI
-    table_get = table.get
-    strict = mode == STRICT
-    attr = mode == ATTRIBUTE
-    cache: dict[str, str] = {}
-    cache_get = cache.get
-
-    def repl(m: re.Match) -> str:
-        g = m.group(0)
-        hit = cache_get(g)
-        if hit is not None:
-            return hit
-        name = g[1:]
-        if name[0] != "#":
-            out = None
-            if name[-1] == ";":
-                out = table_get(name)
-            if out is None:
-                # Legacy semicolon-less / unknown-name longest-prefix
-                # / ATTRIBUTE lookahead: delegate to the trie walker
-                # against the full subject string (lookahead may need
-                # the char right after the match, e.g. '&amp=' in
-                # attribute mode).
-                res = decode_at(m.string, m.start(), mode)
-                if res is None:
-                    out = g
-                else:
-                    cps, consumed = res
-                    out = "".join(map(chr, cps)) + g[consumed:]
-        else:
-            # Numeric: the regex already validated the digit body.
-            has_semi = name[-1] == ";"
-            if strict and not has_semi:
-                out = g
-            else:
-                body = name[1:-1] if has_semi else name[1:]
-                value = int(body[1:], 16) if body[0] in "xX" else int(body)
-                out = chr(_replace_codepoint(value))
-        if (not attr or g[-1] == ";") and len(cache) < (1 << 16):
-            cache[g] = out
-        return out
-
-    return repl
-
-
-_SPAN_REPL = {
-    STRICT: _make_span_repl(STRICT),
-    LEGACY: _make_span_repl(LEGACY),
-    ATTRIBUTE: _make_span_repl(ATTRIBUTE),
-}
 
 
 def decode_text_span(s: str, start: int, end: int, mode: int) -> str:
@@ -310,36 +179,34 @@ def decode_text_span(s: str, start: int, end: int, mode: int) -> str:
     tokenizer's sequential per-'&' scan would (failed references stay
     literal, rescan past the '&').
 
-    One pass of a precompiled alternation regex over the span: the C
-    regex engine skips between references (plain '&'s never enter
-    Python), and each match resolves with a single dict probe in the
-    dominant fully-terminated case — this replaced a per-'&' Python
-    find/probe loop and roughly doubled entity-dense throughput
-    (tools/engine_bench.py ``entity_heavy`` corpus).
+    A span with no reference-shaped '&' is returned as is. When every
+    '&' starts a ';'-terminated reference that ``decode_at`` consumes
+    whole, each distinct reference is resolved once and spliced in
+    with ``str.replace``, at C speed; any other span runs the
+    sequential scan, :func:`decode_text`.
 
     The span boundary is semantics-preserving: ``end`` is either
     ``len(s)`` or the position of a ``<`` (the tokenizer's text-run
-    terminator), and no reference can extend across ``<`` — trie edges
-    are alphanumeric/';' and numeric bodies are digits. The ATTRIBUTE
+    terminator), and no reference can extend across ``<`` — names are
+    alphanumeric plus ';' and numeric bodies are digits. The ATTRIBUTE
     lookahead at the span edge is likewise exact: the character after
     the span is '<' when ``end < len(s)``, which never blocks a legacy
     match, same as end-of-string.
     """
     span = s[start:end] if start or end != len(s) else s
-    if "&" not in span:
+    names = _RE_ANY_REF.findall(span)
+    if not names:
         return span
-    # C-speed bulk path: when EVERY '&' in the span belongs to a
-    # fully-terminated, directly-decodable reference, decoding is a
-    # handful of str.replace passes (one per distinct reference).
-    # Guards that make replace-chains provably equal to the
+    # Guards that make the replace-chain provably equal to the
     # sequential scan:
     #   * no stray '&' (count == matches) — a literal '&' directly
     #     before a reference could otherwise combine with a
     #     replacement to fabricate a new reference ('&&#108;t;' must
     #     stay '&lt;'-literal, not decode);
-    #   * every distinct name ends in ';' and resolves via the full
-    #     table / numeric parse — exact-consumption, mode-pure (the
-    #     ATTRIBUTE lookahead only applies to semicolon-less names);
+    #   * every distinct reference ends in ';' and decode_at consumes
+    #     all of it (a table hit or a numeric) — exact-consumption,
+    #     mode-pure (the ATTRIBUTE lookahead only applies to
+    #     semicolon-less names);
     #   * reference texts can never overlap or nest ('&'+alnum+';'
     #     admits no substring relation), so replace order is free —
     #     EXCEPT a replacement containing '&' (the amp family) could
@@ -347,44 +214,44 @@ def decode_text_span(s: str, start: int, end: int, mode: int) -> str:
     #     reference is allowed and it runs last;
     #   * distinct count bounded so adversarial all-distinct streams
     #     can't turn this into O(distinct * len) scanning.
-    names = _RE_ANY_REF.findall(span)
     distinct = set(names)
     if len(distinct) <= 32 and span.count("&") == len(names):
-        table = _FULL_XML_SEMI if mode == STRICT else _FULL_HTML_SEMI
+        table = _TERMINATED[mode]
         repls: list[tuple[str, str]] = []
         amp_ref = None
-        simple = True
         for name in distinct:
             if name[-1] != ";":
-                simple = False
                 break
-            if name[0] == "#":
-                body = name[1:-1]
-                value = int(body[1:], 16) if body[0] in "xX" else int(body)
-                rep = chr(_replace_codepoint(value))
-            else:
+            # decode_at's own steps for a ';'-terminated candidate: its
+            # probe (a hit is consumed whole; a miss could only prefix
+            # match) or the numeric parser (consumes the whole match).
+            if name[0] != "#":
                 rep = table.get(name)
                 if rep is None:
-                    simple = False
                     break
+            elif name[1] in "xX":
+                rep = _codepoint(name[2:-1], 16)
+            else:
+                rep = _codepoint(name[1:-1], 10)
+            ref = "&" + name
             if "&" in rep:
                 if amp_ref is not None:
-                    simple = False
                     break
-                amp_ref = ("&" + name, rep)
+                amp_ref = (ref, rep)
             else:
-                repls.append(("&" + name, rep))
-        if simple:
+                repls.append((ref, rep))
+        else:
             for ref, rep in repls:
                 span = span.replace(ref, rep)
             if amp_ref is not None:
                 span = span.replace(amp_ref[0], amp_ref[1])
             return span
-    return _RE_ANY_REF.sub(_SPAN_REPL[mode], span)
+    return decode_text(span, mode)
 
 
 def decode_text(s: str, mode: int = LEGACY) -> str:
-    """Decode all character references in ``s`` (helper for tests/feeds)."""
+    """Decode all character references in ``s``: the sequential
+    ``decode_at`` scan, the definition of a span's decode."""
     out = []
     pos = 0
     while True:
@@ -397,8 +264,8 @@ def decode_text(s: str, mode: int = LEGACY) -> str:
             out.append(s[pos : amp + 1])
             pos = amp + 1
         else:
-            cps, consumed = res
+            rep, consumed = res
             out.append(s[pos:amp])
-            out.append("".join(map(chr, cps)))
+            out.append(rep)
             pos = amp + consumed
     return "".join(out)

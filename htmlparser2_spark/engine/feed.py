@@ -118,16 +118,20 @@ def _media(kids: dict, roots: list[dict]) -> list[dict]:
             "lang": attrs.get("lang"),
         }
         for f in _MEDIA_INT_FIELDS:
-            raw = attrs.get(f)
-            if raw is not None:
-                try:
-                    media[f] = int(raw)
-                except ValueError:
-                    media[f] = None
-            else:
-                media[f] = None
+            media[f] = _long(attrs.get(f))
         out.append(media)
     return out
+
+
+def _long(raw: str | None) -> int | None:
+    """``raw`` as a LongType value: None when absent, unparseable or
+    outside the signed 64-bit range (one such value would otherwise
+    fail the whole Arrow batch, not just its document)."""
+    try:
+        value = int(raw)
+    except (TypeError, ValueError):
+        return None
+    return value if -(1 << 63) <= value < (1 << 63) else None
 
 
 def get_feed(nodes: list[dict]) -> dict | None:

@@ -399,19 +399,19 @@ class Tokenizer:
         if res is None:
             # No reference: '&' stays literal, rescan after it.
             return amp + 1, sec
-        cps, consumed = res
+        rep, consumed = res
         cbs = self.cbs
         end = amp + consumed
         if in_attr:
             if sec < amp:
                 cbs.on_attrib_data(sec, amp)
-            for cp in cps:
-                cbs.on_attrib_entity(cp)
+            for ch in rep:
+                cbs.on_attrib_entity(ord(ch))
         else:
             if sec < amp:
                 cbs.on_text(sec, amp)
-            for cp in cps:
-                cbs.on_text_entity(cp, end)
+            for ch in rep:
+                cbs.on_text_entity(ord(ch), end)
         return end, end
 
     # ------------------------------------------------------------------

@@ -129,6 +129,32 @@ def test_feed_and_sitemap_timestamps_are_utc(spark):
     assert (row["pub"], row["lastmod"]) == (ten_utc, ten_utc)
 
 
+def test_feed_udf_media_integer_beyond_long_is_null(spark):
+    """A media:content integer outside LongType's range is NULL, like an
+    unparseable one: it neither fails the Arrow batch nor touches the
+    other fields or the other feed in it."""
+    from htmlparser2_spark.functions.udfs import feed_udf
+
+    def rss(title: str, file_size: str) -> str:
+        return (
+            f"<rss><channel><title>{title}</title><item><title>i</title>"
+            f'<media:content url="https://h/{title}.mp4" '
+            f'fileSize="{file_size}" width="640"/></item></channel></rss>'
+        )
+
+    df = spark.createDataFrame(
+        [(0, rss("big", "99999999999999999999")), (1, rss("ok", "12345"))],
+        "id int, rss string",
+    ).coalesce(1)
+    rows = df.select("id", feed_udf()(F.col("rss")).alias("f")).orderBy("id").collect()
+    feeds = [r["f"] for r in rows]
+    assert [f["title"] for f in feeds] == ["big", "ok"]
+    media = [f["items"][0]["media"][0] for f in feeds]
+    assert [m["fileSize"] for m in media] == [None, 12345]
+    assert [m["width"] for m in media] == [640, 640]
+    assert media[0]["url"] == "https://h/big.mp4"
+
+
 # ---------------------------- dedup ----------------------------
 
 @pytest.fixture(scope="module")

@@ -22,6 +22,8 @@ with the order alternating per rep, one thread. Cases:
   DomArrayHandler's text runs;
 * ``fast_text_synthetic`` / ``fast_text_realistic`` - FastTextExtractor
   on engine_bench's synthetic and realistic pages;
+* ``fast_text_entity`` - FastTextExtractor on the entity-heavy pages:
+  the batched span decoder (``decode_text_span``) on every text run;
 * ``fast_text_pages`` - FastTextExtractor on ``sources.pages`` documents
   of all three template variants, the pages the ``small_pages_text``
   workload parses, built by DuckDB from ``oracle_pages_cte()`` over
@@ -125,6 +127,7 @@ def cases(engine) -> dict:
         "dom_nodes_entity": ("entity_heavy", dom.parse_document),
         "fast_text_synthetic": ("synthetic", fast.extract),
         "fast_text_realistic": ("realistic", fast.extract),
+        "fast_text_entity": ("entity_heavy", fast.extract),
         "fast_text_pages": ("pages", fast.extract),
     }
 
